@@ -6,10 +6,11 @@ import org.apache.spark.sql.SparkSession
   * queries (or a pushdown/broadcast/codegen summary for all with no args).
   *
   * Usage: runMain graft.Explain [sfDir] [queryName...]
-  *        runMain graft.Explain write [sfDir] [outDir]   — dump EVERY
-  *          registered query's formatted plan to <outDir>/<name>.txt
-  *          (committed under explain/ so pushdown, broadcast choices and
-  *          join strategies are reviewable facts, not claims)
+  *        runMain graft.Explain write [sfDir] [outDir] [queryName...]
+  *          — dump EVERY registered query's formatted plan (or only the
+  *          named ones) to <outDir>/<name>.txt (committed under explain/
+  *          so pushdown, broadcast choices and join strategies are
+  *          reviewable facts, not claims)
   */
 object Explain {
 
@@ -145,7 +146,7 @@ object Explain {
     } finally thresholds.unpersist()
   }
 
-  private def writeArtifacts(sfDir: String, outDir: String): Unit = {
+  private def writeArtifacts(sfDir: String, outDir: String, only: Seq[String]): Unit = {
     // the SAME session config every real run uses — artifacts generated
     // under a drifting hand-built config would be claims, not facts
     val spark = graft.core.GraftSession.builder("graft-explain", "local[4]")
@@ -157,7 +158,8 @@ object Explain {
     // skipped because its plan is embarrassing?" (q69's generic artifact
     // is overwritten below by the bespoke per-round one, which is the
     // plan that actually matters for the iterative kernel).
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+    val names = if (only.nonEmpty) only else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       // EXECUTE before explaining: the artifact must show the AQE-final
       // plan (isFinalPlan=true) — the runtime join-strategy choices are
@@ -171,8 +173,12 @@ object Explain {
         s"== $name (sfDir=$sfDir, executed: AQE-final plan) ==\n\n" + txt)
       println(s"wrote $outDir/$name.txt")
     }
-    writeQ69Artifact(spark, sfDir, outDir)
-    appendPreCheckpointPlans(spark, sfDir, outDir)
+    // the bespoke artifacts rewrite or append to their own files, so they
+    // belong to full runs only
+    if (only.isEmpty) {
+      writeQ69Artifact(spark, sfDir, outDir)
+      appendPreCheckpointPlans(spark, sfDir, outDir)
+    }
     spark.stop()
   }
 
@@ -180,7 +186,8 @@ object Explain {
     if (args.headOption.contains("write")) {
       writeArtifacts(
         args.lift(1).getOrElse("/root/testdata/sf0.01"),
-        args.lift(2).getOrElse("explain"))
+        args.lift(2).getOrElse("explain"),
+        args.drop(3).toSeq)
       return
     }
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")

@@ -26,6 +26,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rules: rewrite rewritable builtin shapes onto the
     // codegen'd custom expressions (see each rule's scaladoc)
     ext.injectOptimizerRule(_ => IntersectCountRewrite)
+    // the word-count aggregate onto the fused map-side counter, and the
+    // strategy that plans the counter's logical node
+    ext.injectOptimizerRule(_ => TokenCountRewrite)
+    ext.injectPlannerStrategy(_ => TokenCountStrategy)
   }
 }
 

@@ -125,16 +125,6 @@ object Multimodal {
   private val phashCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), (DataFrame, Long)]
 
-  /** Drop memoized dHash band frames (unpersisting live ones) — same
-    * contract as [[graft.ops.Dedup.invalidateSignatureCache]].
-    */
-  def invalidatePhashCache(): Unit = phashCache.synchronized {
-    phashCache.values.foreach { case (df, _) =>
-      try df.unpersist() catch { case _: Throwable => () }
-    }
-    phashCache.clear()
-  }
-
   private[graft] val BandsN = 8
 
   /** Session conf key bounding the rep count under which the corpus

@@ -140,16 +140,6 @@ object Similarity {
   private val hardNegCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, Int, String), DataFrame]
 
-  /** Drop memoized hard-negative frames — the [[invalidateExactTopKCache]]
-    * contract for q166's predicate-keyed memo.
-    */
-  def invalidateHardNegCache(): Unit = hardNegCache.synchronized {
-    hardNegCache.values.foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    }
-    hardNegCache.clear()
-  }
-
   /** HARD-NEGATIVE MINING (q166) — for each anchor (q40's `vec_id % 50`
     * query set), the top-k most-similar candidates with a DIFFERENT
     * label: the "hard negatives" a contrastive/metric-learning trainer

@@ -19,9 +19,12 @@ import org.apache.spark.sql.graft.Bridge
 object TextOps {
 
   /** The reference query, Spark-native: tokenize → count per token →
-    * sort. Partial aggregation gives the map-side combine the reference
-    * lacks (it shuffles every (word,1) pair — SURVEY §2 op#4); Zipfian
-    * token skew is absorbed by that partial agg.
+    * sort. [[graft.core.TokenCountRewrite]] plans the explode + count as
+    * one map-side operator ([[graft.functions.PartialTokenCount]]) that
+    * emits a partial count per distinct token of each partition — the
+    * map-side combine the reference lacks (it shuffles every (word,1)
+    * pair — SURVEY §2 op#4); Zipfian token skew is absorbed there, and
+    * Spark's shuffle + final aggregate sum the partial counts.
     */
   def q20WordCount(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
@@ -924,7 +927,8 @@ object TextOps {
     * vocabulary, occurrences weight them). The top pair is the first
     * BPE merge; iterating = training. One vocabulary-sized groupBy then
     * a pair-sized groupBy — both orders of magnitude smaller than the
-    * corpus, so the expensive explode happens exactly once (q20's).
+    * corpus, so the corpus is tokenized exactly once, by the same fused
+    * map-side counter as q20 (the `length >= 2` filter stays above it).
     */
   def q106BpePairs(s: SparkSession, d: String, k: Int = 30): DataFrame = {
     val vocab = Tables.documents(s, d)
@@ -1029,17 +1033,6 @@ object TextOps {
         contentChunksOf(Tables.documents(s, d))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     }
-
-  /** Drop the memoized chunk frames (the chunk-side analog of
-    * [[graft.ops.Dedup.invalidateSignatureCache]]; single lock, takes
-    * no other).
-    */
-  def invalidateChunkCache(): Unit = chunkCache.synchronized {
-    chunkCache.values.foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    }
-    chunkCache.clear()
-  }
 
   def q108ContentChunks(s: SparkSession, d: String): DataFrame =
     contentChunks(s, d)

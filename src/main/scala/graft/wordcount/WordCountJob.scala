@@ -10,9 +10,14 @@ import graft.functions.TextFunctions.tokens
   * Semantics pinned to the reference (SURVEY §2):
   *  - tokenize on the single char U+0020, no empty tokens
   *    (`MapClass.java:22`, StringTokenizer semantics — §2.4);
-  *  - count per token (`ReduceClass.java:15-22`) — Spark's
-  *    HashAggregateExec does partial+final aggregation, i.e. the map-side
-  *    combine the reference never registers (`WordCount.java:41-42`);
+  *  - count per token (`ReduceClass.java:15-22`). [[count]] keeps the
+  *    reference-readable `explode → groupBy → count(1)`; the session's
+  *    [[graft.core.TokenCountRewrite]] plans it as one map-side operator
+  *    that counts tokens straight off each line's bytes
+  *    ([[graft.functions.PartialTokenCount]]), with Spark's shuffle and
+  *    final HashAggregate summing the partial counts on top — the
+  *    map-side combine the reference never registers
+  *    (`WordCount.java:41-42`), without a row per token occurrence;
   *  - total-order sort in UTF-8 BYTE order (`Text.Comparator`, §2.6):
   *    sort on `encode(word, "UTF-8")` (BinaryType sorts byte-wise) —
   *    plain string orderBy would diverge for supplementary-plane chars;

@@ -328,4 +328,30 @@ class PlanSpec extends AnyFunSuite {
     assert(stale.isEmpty,
       s"count-guarded allowlist entries with no coalesce(1) left: ${stale.mkString(", ")}")
   }
+
+  test("WordCount, q20 and q117 execute the fused token counter and no Generate") {
+    // TokenCountRewrite is worth ~a third of WordCount's wall time; if a
+    // refactor of the job or the rule stops the match, the plan falls
+    // back to explode + HashAggregate and still answers correctly, so
+    // only a plan check catches it
+    import java.nio.file.Files
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.functions.PartialTokenCountExec
+    object plans extends AdaptiveSparkPlanHelper
+    val in = Files.createTempDirectory("plan_wc_in")
+    Files.writeString(in.resolve("a.txt"), "a b  a\nc a\n")
+    val cases = Seq(
+      "WordCountJob.count" -> graft.wordcount.WordCountJob.count(spark, spark.read.text(in.toString)),
+      "q20_wordcount" -> SparkEntry.queries("q20_wordcount")(spark, sf),
+      "q117_sql_wordcount" -> SparkEntry.queries("q117_sql_wordcount")(spark, sf))
+    for ((name, df) <- cases) {
+      df.collect() // the AQE-final plan is the one that ran
+      val plan = df.queryExecution.executedPlan
+      assert(plans.collect(plan) { case p: PartialTokenCountExec => p }.nonEmpty,
+        s"$name: no PartialTokenCount in the executed plan\n$plan")
+      assert(plans.collect(plan) { case g: GenerateExec => g }.isEmpty,
+        s"$name: Generate in the executed plan\n$plan")
+    }
+  }
 }

@@ -3,9 +3,10 @@ package graft
 import java.util.StringTokenizer
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, TokenCountTable}
 
 /** Pins tokenization to the reference mapper's semantics
   * (`MapClass.java:22`: `new StringTokenizer(line, " ")`) — SURVEY §2.4.
@@ -42,15 +43,46 @@ class TokenizeSpec extends AnyFunSuite {
     }
   }
 
-  test("property: engine tokenizer ≡ java.util.StringTokenizer(line, \" \") on random lines") {
-    val rng = new scala.util.Random(42)
+  // multi-space runs, leading/trailing spaces, empty lines, tabs inside
+  // tokens, 2/3/4-byte UTF-8
+  private def randomLines(seed: Int, n: Int, maxAtoms: Int): Seq[String] = {
+    val rng = new scala.util.Random(seed)
     val atoms = Seq(" ", " ", "\t", "é", "中", "😀", ",", ".", "ab", "Xy9", "—")
-    val lines = Seq.fill(200) {
-      Seq.fill(rng.nextInt(12))(atoms(rng.nextInt(atoms.length))).mkString
+    Seq.fill(n) {
+      Seq.fill(rng.nextInt(maxAtoms))(atoms(rng.nextInt(atoms.length))).mkString
     }
+  }
+
+  test("property: engine tokenizer ≡ java.util.StringTokenizer(line, \" \") on random lines") {
+    val lines = randomLines(42, 200, 12)
     val got = engineTokens(lines)
     lines.zip(got).foreach { case (line, actual) =>
       assert(actual == oracleTokens(line), s"input=<$line>")
+    }
+  }
+
+  /** (token, partial count) rows of the fused map-side counter. */
+  private def kernelPartials(lines: Seq[String], table: TokenCountTable): Seq[(String, Long)] =
+    TokenCountTable.partialCounts(
+      lines.iterator.map(l => if (l == null) null else UTF8String.fromString(l)), table) { (t, e) =>
+      (new String(t.arena, t.offset(e), t.length(e), "UTF-8"), t.count(e))
+    }.toSeq
+
+  test("token-count kernel ≡ StringTokenizer counts, at default and tiny table bounds") {
+    val lines = randomLines(7, 400, 24) ++ Seq("", "   ", null, "a a a", " b  b ")
+    val want = lines.filter(_ != null).flatMap(oracleTokens).groupMapReduce(identity)(_ => 1L)(_ + _)
+    // tiny bounds force the flush-and-re-merge path, including flushes
+    // in the middle of a line and a token longer than the whole arena
+    val bounds = Seq((TokenCountTable.MaxEntries, TokenCountTable.MaxArenaBytes),
+      (1, 1), (2, 3), (3, 64), (64, 5))
+    for ((entries, arena) <- bounds) {
+      val partial = kernelPartials(lines, new TokenCountTable(entries, arena))
+      val clue = s"maxEntries=$entries maxArenaBytes=$arena"
+      // summed per token, as the final aggregate does
+      assert(partial.groupMapReduce(_._1)(_._2)(_ + _) == want, clue)
+      // one row per distinct token unless the table filled and drained early
+      if (entries == TokenCountTable.MaxEntries) assert(partial.length == want.size, clue)
+      else assert(partial.length > want.size, clue)
     }
   }
 }

@@ -139,4 +139,51 @@ class WordCountSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.graft.marker") == "round3")
     assert(!spark.sparkContext.isStopped)
   }
+
+  test("invariance: single-file output is byte-identical across shuffle partitions 1/7/N and AQE on/off") {
+    // several input files (several scan partitions), a Zipf-ish
+    // vocabulary so map-side partial counts repeat across partitions,
+    // and the tokenizer's edge cases: space runs, edge spaces, empty
+    // lines, tabs inside tokens, 2/3/4-byte UTF-8
+    val in = Files.createTempDirectory("wc_in_inv")
+    val rng = new scala.util.Random(3)
+    val vocab = (0 until 300).map(i => Seq("w", "é", "中", "😀", "a\tb")(i % 5) + i)
+    for (f <- 0 until 5) {
+      val lines = Seq.fill(400) {
+        Seq.fill(rng.nextInt(9))(vocab(math.min(rng.nextInt(300), rng.nextInt(300))))
+          .mkString(if (rng.nextBoolean()) " " else "  ")
+      } ++ Seq("", "   ", " lead trail ")
+      Files.write(in.resolve(s"part$f.txt"), lines.asJava)
+    }
+    val want = {
+      val lines = Files.list(in).iterator().asScala.toSeq
+        .flatMap(p => Files.readAllLines(p).asScala)
+      val counts = lines.flatMap { l =>
+        val st = new java.util.StringTokenizer(l, " ")
+        Iterator.continually(st).takeWhile(_.hasMoreTokens).map(_.nextToken())
+      }.groupMapReduce(identity)(_ => 1L)(_ + _)
+      val utf8 = Ordering.by[String, Iterable[Byte]](_.getBytes("UTF-8").toSeq)(
+        Ordering.Iterable(Ordering.by[Byte, Int](_ & 0xff)))
+      counts.toSeq.sortBy(_._1)(utf8).map { case (w, c) => s"$w\t$c\n" }.mkString
+    }
+    val n = spark.sparkContext.defaultParallelism
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (parts <- Seq(1, 7, n); aqe <- Seq(true, false)) {
+        spark.conf.set("spark.sql.shuffle.partitions", parts.toLong)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        val out = Files.createTempDirectory("wc_out_inv").resolve("out")
+        WordCountJob.run(spark, in.toString, out.toString)
+        val part = Files.list(out).iterator().asScala
+          .filter(_.getFileName.toString.startsWith("part-")).toSeq
+        assert(part.size == 1)
+        assert(new String(Files.readAllBytes(part.head), "UTF-8") == want,
+          s"shuffle.partitions=$parts adaptive=$aqe")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
