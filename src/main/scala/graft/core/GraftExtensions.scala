@@ -27,7 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // codegen'd custom expressions (see each rule's scaladoc)
     ext.injectOptimizerRule(_ => IntersectCountRewrite)
     // the word-count aggregate onto the fused map-side counter, and the
-    // strategy that plans the counter's logical node
+    // strategy that plans the counter and the Final-mode sum above it
     ext.injectOptimizerRule(_ => TokenCountRewrite)
     ext.injectPlannerStrategy(_ => TokenCountStrategy)
   }

@@ -1,11 +1,13 @@
 package graft.core
 
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Explode, Expression, KnownNotNull, Literal, NamedExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Sum}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Explode, Expression, KnownNotNull, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Partial, Sum}
+import org.apache.spark.sql.catalyst.planning.PhysicalAggregation
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.{AGGREGATE, GENERATE}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.aggregate.{AggUtils, BaseAggregateExec}
 import org.apache.spark.sql.types.LongType
 
 import graft.functions.{PartialTokenCount, PartialTokenCountExec}
@@ -18,11 +20,12 @@ import graft.functions.expressions.StringTokens
   * The builtin plan materializes every token occurrence as a row and
   * probes Spark's partial hash aggregate once per token;
   * [[PartialTokenCount]] counts tokens straight off each line's bytes and
-  * hands the partial aggregate one row per distinct token of the
-  * partition. Spark's own shuffle and final aggregate run on top
-  * unchanged, so the answer is the builtin's: `c` keeps its exprId and
-  * stays a non-null bigint (every group holds at least one partial row,
-  * so the sum is never null).
+  * emits one row per distinct token of the partition.
+  * [[TokenCountStrategy]] plans the `sum` over it as Spark's shuffle and
+  * Final-mode aggregate alone (the counter is the partial aggregate), so
+  * the answer is the builtin's: `c` keeps its exprId and stays a
+  * non-null bigint (every group holds at least one partial row, so the
+  * sum is never null).
   *
   * Matches only that shape: a single grouping key that is the explode's
   * output; outputs computed from that key and `count` of a non-null
@@ -82,9 +85,58 @@ object TokenCountRewrite extends Rule[LogicalPlan] {
     }
 }
 
-/** Plans [[PartialTokenCount]]. */
+/** Plans [[PartialTokenCount]], and the aggregate [[TokenCountRewrite]]
+  * puts over it in Final mode only.
+  *
+  * The counter already emits one `(token, cnt)` row per distinct token
+  * of its partition (more only when its bounded table flushes early), so
+  * Spark's Partial-mode aggregate would only re-hash combined rows. The
+  * aggregate is planned as Spark plans it, then its Partial-mode operator
+  * is replaced by a projection that renames `(token, cnt)` to the partial
+  * output `(key, sum buffer)`; `EnsureRequirements` still inserts the
+  * hash exchange, and the Final-mode aggregate sums whatever duplicates
+  * an early flush sent. Only `sum(cnt)` grouped by the token, with a
+  * one-slot bigint buffer, is planned this way; anything else (no match
+  * here) plans as usual over a planned [[PartialTokenCountExec]].
+  */
 object TokenCountStrategy extends SparkStrategy {
+
+  /** The counter under `p`, looking through the rule's token Filters. */
+  private def counter(p: LogicalPlan): Option[PartialTokenCount] = p match {
+    case Filter(_, c) => counter(c)
+    case c: PartialTokenCount => Some(c)
+    case _ => None
+  }
+
+  /** `agg` is `sum(cnt)` of `pc`, with one bigint buffer slot. */
+  private def sumsCounts(agg: AggregateExpression, pc: PartialTokenCount): Boolean = agg match {
+    case AggregateExpression(s @ Sum(c: Attribute, _), Complete, false, None, _) =>
+      c.exprId == pc.cnt.exprId && s.aggBufferAttributes.map(_.dataType) == Seq(LongType)
+    case _ => false
+  }
+
+  /** `a` over the counter `pc` as Final mode only, or Nil if `a` is not
+    * `sum(cnt)` grouped by the token. Spark's own plan of `a` is the
+    * Final-mode aggregate over the Partial-mode one; the latter becomes
+    * the renaming projection.
+    */
+  private def finalOnly(a: Aggregate, pc: PartialTokenCount): Seq[SparkPlan] = a match {
+    case PhysicalAggregation(Seq(key: Attribute), Seq(agg), results, child)
+        if key.exprId == pc.token.exprId && sumsCounts(agg, pc) =>
+      AggUtils.planAggregateWithoutDistinct(Seq(key), Seq(agg), results, planLater(child))
+        .map(_.mapChildren {
+          case partial: BaseAggregateExec if partial.aggregateExpressions.forall(_.mode == Partial) =>
+            val renamed = partial.output.zip(child.output).map { case (out, in) =>
+              if (out.exprId == in.exprId) in else Alias(in, out.name)(out.exprId)
+            }
+            ProjectExec(renamed, partial.child)
+          case other => other
+        })
+    case _ => Nil
+  }
+
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case a: Aggregate => counter(a.child).fold[Seq[SparkPlan]](Nil)(finalOnly(a, _))
     case PartialTokenCount(text, token, cnt, child) =>
       PartialTokenCountExec(text, token, cnt, planLater(child)) :: Nil
     case _ => Nil

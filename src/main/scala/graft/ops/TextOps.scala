@@ -24,7 +24,7 @@ object TextOps {
     * emits a partial count per distinct token of each partition — the
     * map-side combine the reference lacks (it shuffles every (word,1)
     * pair — SURVEY §2 op#4); Zipfian token skew is absorbed there, and
-    * Spark's shuffle + final aggregate sum the partial counts.
+    * Spark's shuffle + a Final-mode aggregate sum the partial counts.
     */
   def q20WordCount(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)

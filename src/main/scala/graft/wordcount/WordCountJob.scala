@@ -14,10 +14,12 @@ import graft.functions.TextFunctions.tokens
   *    reference-readable `explode → groupBy → count(1)`; the session's
   *    [[graft.core.TokenCountRewrite]] plans it as one map-side operator
   *    that counts tokens straight off each line's bytes
-  *    ([[graft.functions.PartialTokenCount]]), with Spark's shuffle and
-  *    final HashAggregate summing the partial counts on top — the
-  *    map-side combine the reference never registers
-  *    (`WordCount.java:41-42`), without a row per token occurrence;
+  *    ([[graft.functions.PartialTokenCount]]); the counter stands in for
+  *    Spark's partial aggregate, and only the shuffle and a Final-mode
+  *    HashAggregate sum its per-partition counts
+  *    ([[graft.core.TokenCountStrategy]]) — the map-side combine the
+  *    reference never registers (`WordCount.java:41-42`), without a row
+  *    per token occurrence;
   *  - total-order sort in UTF-8 BYTE order (`Text.Comparator`, §2.6):
   *    sort on `encode(word, "UTF-8")` (BinaryType sorts byte-wise) —
   *    plain string orderBy would diverge for supplementary-plane chars;
@@ -28,27 +30,42 @@ import graft.functions.TextFunctions.tokens
   *    (`WordCount.java:25-28`).
   *
   * Scale: `singleFile = true` reproduces the reference's 1-reducer single
-  * output file (`coalesce(1)` at the SINK only — the aggregation still
-  * runs at full parallelism). At 100 TB you run `singleFile = false`:
-  * the global sort range-partitions, part files are globally ordered by
-  * part index — same total order, concatenation-compatible (cf. the
-  * reference's vendored `FileUtil.copyMerge`, `FileUtil.java:194-228`).
+  * output file: the aggregation runs at full parallelism, then one hash
+  * exchange into a single partition feeds one task that sorts and
+  * writes — the one reducer, with no range-sort sampling job. At 100 TB
+  * you run `singleFile = false`: the global sort range-partitions, part
+  * files are globally ordered by part index — same total order,
+  * concatenation-compatible (cf. the reference's vendored
+  * `FileUtil.copyMerge`, `FileUtil.java:194-228`). [[count]] keeps the
+  * global sort as well.
   */
 object WordCountJob {
 
-  /** word → count, sorted by UTF-8 byte order of the word. */
-  def count(spark: SparkSession, input: DataFrame): DataFrame =
+  /** word → count, unsorted. */
+  private def counts(input: DataFrame): DataFrame =
     input
       .select(explode(tokens(col("value"))).as("word"))
       .groupBy("word")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("count"))
-      .orderBy(encode(col("word"), "UTF-8"))
+
+  /** The reference's sort key: the word's UTF-8 bytes. */
+  private def byteOrder = encode(col("word"), "UTF-8")
+
+  /** word → count, sorted by UTF-8 byte order of the word. */
+  def count(spark: SparkSession, input: DataFrame): DataFrame =
+    counts(input).orderBy(byteOrder)
 
   def run(spark: SparkSession, in: String, out: String, singleFile: Boolean = true): Unit = {
-    val counted = count(spark, spark.read.text(in))
-    val lines = counted.select(concat_ws("\t", col("word"), col("count")).as("value"))
-    val sink = if (singleFile) lines.coalesce(1) else lines
-    sink.write.mode(SaveMode.ErrorIfExists).text(out)
+    val counted = counts(spark.read.text(in))
+    // one task writes the single file, so it sorts too: one hash exchange
+    // into one partition instead of a range exchange and its sampler job
+    // (round-robin `repartition(1)` would add a local sort per upstream
+    // task, `sortBeforeRepartition`)
+    val sorted =
+      if (singleFile) counted.repartition(1, col("word")).sortWithinPartitions(byteOrder)
+      else counted.orderBy(byteOrder)
+    sorted.select(concat_ws("\t", col("word"), col("count")).as("value"))
+      .write.mode(SaveMode.ErrorIfExists).text(out)
   }
 
   def main(args: Array[String]): Unit = sys.exit(execute(args))

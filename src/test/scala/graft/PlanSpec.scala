@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.PartialTokenCountExec
 
 /** Physical-plan assertions: facts the scale story depends on, checked
   * mechanically so they can't silently regress.
@@ -333,12 +340,10 @@ class PlanSpec extends AnyFunSuite {
     // TokenCountRewrite is worth ~a third of WordCount's wall time; if a
     // refactor of the job or the rule stops the match, the plan falls
     // back to explode + HashAggregate and still answers correctly, so
-    // only a plan check catches it
+    // only a plan check catches it. The counter is the partial
+    // aggregate, so none of these plans has a Partial-mode one either
     import java.nio.file.Files
     import org.apache.spark.sql.execution.GenerateExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import graft.functions.PartialTokenCountExec
-    object plans extends AdaptiveSparkPlanHelper
     val in = Files.createTempDirectory("plan_wc_in")
     Files.writeString(in.resolve("a.txt"), "a b  a\nc a\n")
     val cases = Seq(
@@ -348,10 +353,71 @@ class PlanSpec extends AnyFunSuite {
     for ((name, df) <- cases) {
       df.collect() // the AQE-final plan is the one that ran
       val plan = df.queryExecution.executedPlan
-      assert(plans.collect(plan) { case p: PartialTokenCountExec => p }.nonEmpty,
+      assert(aqe.collect(plan) { case p: PartialTokenCountExec => p }.nonEmpty,
         s"$name: no PartialTokenCount in the executed plan\n$plan")
-      assert(plans.collect(plan) { case g: GenerateExec => g }.isEmpty,
+      assert(aqe.collect(plan) { case g: GenerateExec => g }.isEmpty,
         s"$name: Generate in the executed plan\n$plan")
+      assert(partialAggs(plan).isEmpty,
+        s"$name: Partial-mode HashAggregate in the executed plan\n$plan")
     }
+  }
+
+  test("no Partial-mode aggregate over the fused counter (q106); WordCount's single-file sink has no range exchange") {
+    // both only cost time: a partial aggregate re-hashes the counter's
+    // already-combined rows, and a range exchange in front of the one
+    // writing task adds a sampling job that re-runs the final aggregate
+    import java.nio.file.Files
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+
+    val q106 = SparkEntry.queries("q106_bpe_pairs")(spark, sf)
+    q106.collect()
+    val q106Plan = q106.queryExecution.executedPlan
+    assert(aqe.collect(q106Plan) { case p: PartialTokenCountExec => p }.nonEmpty,
+      s"q106: no PartialTokenCount in the executed plan\n$q106Plan")
+    assert(partialAggs(q106Plan).forall(a => !readsCounter(a)),
+      s"q106: Partial-mode HashAggregate over the counter\n$q106Plan")
+
+    val in = Files.createTempDirectory("plan_wc_run_in")
+    Files.writeString(in.resolve("a.txt"), "a b  a\nc a\n")
+    val out = Files.createTempDirectory("plan_wc_run_out").resolve("out")
+    val written = new LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (aqe.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined) {
+          written.put(qe.executedPlan)
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plan = try {
+      graft.wordcount.WordCountJob.run(spark, in.toString, out.toString)
+      written.poll(60, TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plan != null, "WordCountJob.run: no write reached the QueryExecutionListener")
+    assert(aqe.collect(plan) { case p: PartialTokenCountExec => p }.nonEmpty,
+      s"WordCountJob.run: no PartialTokenCount in the executed plan\n$plan")
+    assert(partialAggs(plan).isEmpty,
+      s"WordCountJob.run: Partial-mode HashAggregate in the executed plan\n$plan")
+    assert(aqe.collect(plan) {
+      case e: ShuffleExchangeLike if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }.isEmpty, s"WordCountJob.run: range exchange in the single-file write\n$plan")
+  }
+
+  private object aqe extends AdaptiveSparkPlanHelper
+
+  private def partialAggs(plan: SparkPlan): Seq[HashAggregateExec] = aqe.collect(plan) {
+    case a: HashAggregateExec if a.aggregateExpressions.exists(_.mode == Partial) => a
+  }
+
+  /** `p` reads a PartialTokenCount within its own stage. */
+  private def readsCounter(p: SparkPlan): Boolean = p match {
+    case _: PartialTokenCountExec => true
+    case _: Exchange | _: QueryStageExec => false
+    case _ => p.children.exists(readsCounter)
   }
 }

@@ -1,12 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, Final, Max, Sum}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Tables
+import graft.core.{Tables, TokenCountStrategy}
 import graft.functions.PartialTokenCount
 import graft.functions.TextFunctions.{tokens, tokensHof}
 import graft.wordcount.WordCountJob
@@ -122,5 +126,27 @@ class TokenCountRewriteSpec extends AnyFunSuite {
       assert(!fires(df), s"$name: rule fired\n${df.queryExecution.optimizedPlan}")
       assert(df.count() > 0, s"$name: empty answer")
     }
+  }
+
+  test("strategy plans the aggregate over the counter Final-only, for one sum(cnt) by the token alone") {
+    val text = AttributeReference("text", StringType)()
+    val word = AttributeReference("word", StringType)()
+    val cnt = AttributeReference("cnt", LongType, nullable = false)()
+    val counter = PartialTokenCount(text, word, cnt, LocalRelation(text))
+    def planned(key: Attribute, fns: AggregateFunction*): Seq[SparkPlan] =
+      TokenCountStrategy(Aggregate(Seq(key),
+        key +: fns.zipWithIndex.map { case (f, i) => Alias(f.toAggregateExpression(), s"a$i")() },
+        counter))
+    val fin = planned(word, Sum(cnt))
+    assert(fin.size == 1)
+    assert(fin.head.collect { case a: BaseAggregateExec => a.aggregateExpressions.map(_.mode) }
+      .flatten == Seq(Final), fin.head)
+    assert(fin.head.collect { case p: ProjectExec => p }.size == 1, fin.head)
+    // anything else is left to Spark's own aggregate planning
+    for ((name, p) <- Seq(
+        "sum and max" -> planned(word, Sum(cnt), Max(cnt)),
+        "max" -> planned(word, Max(cnt)),
+        "grouped by cnt" -> planned(cnt, Sum(cnt))))
+      assert(p.isEmpty, s"$name: planned by the strategy\n${p.mkString("\n")}")
   }
 }

@@ -15,6 +15,21 @@ import graft.wordcount.WordCountJob
 class WordCountSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** The reference's output for the files in `in`, computed with
+    * StringTokenizer and a UTF-8 byte-order sort.
+    */
+  private def oracle(in: Path): String = {
+    val lines = Files.list(in).iterator().asScala.toSeq
+      .flatMap(p => Files.readAllLines(p).asScala)
+    val counts = lines.flatMap { l =>
+      val st = new java.util.StringTokenizer(l, " ")
+      Iterator.continually(st).takeWhile(_.hasMoreTokens).map(_.nextToken())
+    }.groupMapReduce(identity)(_ => 1L)(_ + _)
+    val utf8 = Ordering.by[String, Iterable[Byte]](_.getBytes("UTF-8").toSeq)(
+      Ordering.Iterable(Ordering.by[Byte, Int](_ & 0xff)))
+    counts.toSeq.sortBy(_._1)(utf8).map { case (w, c) => s"$w\t$c\n" }.mkString
+  }
+
   private def runJob(lines: Seq[String]): Seq[String] = {
     val in = Files.createTempDirectory("wc_in")
     val out = Files.createTempDirectory("wc_out_parent").resolve("out")
@@ -155,17 +170,7 @@ class WordCountSpec extends AnyFunSuite {
       } ++ Seq("", "   ", " lead trail ")
       Files.write(in.resolve(s"part$f.txt"), lines.asJava)
     }
-    val want = {
-      val lines = Files.list(in).iterator().asScala.toSeq
-        .flatMap(p => Files.readAllLines(p).asScala)
-      val counts = lines.flatMap { l =>
-        val st = new java.util.StringTokenizer(l, " ")
-        Iterator.continually(st).takeWhile(_.hasMoreTokens).map(_.nextToken())
-      }.groupMapReduce(identity)(_ => 1L)(_ + _)
-      val utf8 = Ordering.by[String, Iterable[Byte]](_.getBytes("UTF-8").toSeq)(
-        Ordering.Iterable(Ordering.by[Byte, Int](_ & 0xff)))
-      counts.toSeq.sortBy(_._1)(utf8).map { case (w, c) => s"$w\t$c\n" }.mkString
-    }
+    val want = oracle(in)
     val n = spark.sparkContext.defaultParallelism
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     val saved = keys.map(k => k -> spark.conf.getOption(k))
@@ -185,5 +190,33 @@ class WordCountSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("overflow: one partition with more distinct tokens than the counter's table holds") {
+    // one file is one scan partition; past TokenCountTable.MaxEntries
+    // distinct tokens the counter flushes early and emits some tokens
+    // twice, and only the Final-mode aggregate behind the shuffle merges
+    // those duplicates
+    import graft.functions.{PartialTokenCountExec, TokenCountTable}
+    val in = Files.createTempDirectory("wc_in_overflow")
+    val distinct = TokenCountTable.MaxEntries + TokenCountTable.MaxEntries / 4
+    val rng = new scala.util.Random(5)
+    val words = (0 until distinct).map(i => s"o$i")
+    Files.write(in.resolve("input.txt"),
+      (words ++ rng.shuffle(words).take(distinct / 2)).grouped(12).map(_.mkString(" ")).toSeq.asJava)
+    val counted = WordCountJob.count(spark, spark.read.text(in.toString))
+    counted.collect()
+    object aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val emitted = aqe.collect(counted.queryExecution.executedPlan) {
+      case p: PartialTokenCountExec => p.metrics("numOutputRows").value
+    }
+    assert(emitted.size == 1 && emitted.head > distinct,
+      s"the counter did not flush early: emitted $emitted rows for $distinct tokens")
+    val out = Files.createTempDirectory("wc_out_overflow").resolve("out")
+    WordCountJob.run(spark, in.toString, out.toString)
+    val part = Files.list(out).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    assert(part.size == 1)
+    assert(new String(Files.readAllBytes(part.head), "UTF-8") == oracle(in))
   }
 }
