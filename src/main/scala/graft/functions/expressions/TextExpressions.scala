@@ -552,6 +552,137 @@ object WinnowFingerprints {
     "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 }
 
+/** The tokens of `tokens` that no interval of `cuts` covers, in
+  * position order: `cuts` is `array<struct<lo bigint, hi bigint>>` of
+  * INCLUSIVE 0-based position intervals. The one rewrite kernel of the
+  * repeated-span family (q149, q151) and the decontamination rewrite
+  * (q152 and its ingest twin): callers build a document's cut intervals
+  * with one doc-keyed `collect_list`, and `n_kept` / `kept_md5` are
+  * `size` / `md5(array_join(_, " "))` of the result.
+  *
+  * For cuts with non-null bounds, identical to the built-ins formulation
+  * `filter(tokens, (t, i) -> NOT exists(cuts, c -> c.lo <= i AND i <= c.hi))`
+  * (spec-pinned in ExpressionsSpec), which is O(tokens × cuts) and runs
+  * interpreted; the linear built-ins alternative — posexplode every
+  * token, anti-join the covered positions, re-collect — is a per-token
+  * shuffle. Here the intervals merge through a difference array over
+  * the token positions: +1 at `lo`, −1 after `hi`, one prefix sum, and
+  * a token is kept iff its running depth is 0 — O(tokens + cuts), and
+  * correct for ANY interval order, overlap, nesting or adjacency.
+  * Intervals are clipped to the token range (a cut past the end covers
+  * nothing there); a null cut, or one with a null bound, covers
+  * nothing. Null `tokens` or null `cuts` → null.
+  *
+  * Real codegen (`doGenCode`), not CodegenFallback: it sits in the
+  * rewrite's projection next to size/md5, so one generated loop keeps
+  * the whole projection in the stage's compiled code.
+  */
+case class KeptTokens(left: Expression, right: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+    with ExpectsInputTypes {
+
+  // wrong-typed input is an ANALYSIS error, not a runtime ClassCastException
+  override def inputTypes: Seq[Bridge.AbstractType] =
+    Seq(ArrayType(StringType), ArrayType(KeptTokens.CutType))
+
+  override def dataType: DataType = left.dataType
+
+  override def prettyName: String = "kept_tokens"
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val toks = a.asInstanceOf[ArrayData]
+    val cuts = b.asInstanceOf[ArrayData]
+    val n = toks.numElements()
+    val depth = new Array[Int](n + 1)
+    var i = 0
+    while (i < cuts.numElements()) {
+      if (!cuts.isNullAt(i)) {
+        val c = cuts.getStruct(i, 2)
+        if (!c.isNullAt(0) && !c.isNullAt(1)) {
+          val lo = math.max(c.getLong(0), 0L)
+          val hi = math.min(c.getLong(1), n - 1L)
+          if (lo <= hi) {
+            depth(lo.toInt) += 1
+            depth(hi.toInt + 1) -= 1
+          }
+        }
+      }
+      i += 1
+    }
+    val out = new java.util.ArrayList[AnyRef](n)
+    var d = 0
+    var j = 0
+    while (j < n) {
+      d += depth(j)
+      if (d == 0) out.add(if (toks.isNullAt(j)) null else toks.getUTF8String(j))
+      j += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val n = ctx.freshName("n")
+      val depth = ctx.freshName("depth")
+      val i = ctx.freshName("i")
+      val c = ctx.freshName("c")
+      val lo = ctx.freshName("lo")
+      val hi = ctx.freshName("hi")
+      val nKept = ctx.freshName("nKept")
+      val d = ctx.freshName("d")
+      val j = ctx.freshName("j")
+      val k = ctx.freshName("k")
+      val out = ctx.freshName("out")
+      s"""
+         |int $n = $a.numElements();
+         |int[] $depth = new int[$n + 1];
+         |for (int $i = 0; $i < $b.numElements(); $i++) {
+         |  if (!$b.isNullAt($i)) {
+         |    org.apache.spark.sql.catalyst.InternalRow $c = $b.getStruct($i, 2);
+         |    if (!$c.isNullAt(0) && !$c.isNullAt(1)) {
+         |      long $lo = java.lang.Math.max($c.getLong(0), 0L);
+         |      long $hi = java.lang.Math.min($c.getLong(1), $n - 1L);
+         |      if ($lo <= $hi) {
+         |        $depth[(int) $lo]++;
+         |        $depth[(int) $hi + 1]--;
+         |      }
+         |    }
+         |  }
+         |}
+         |int $nKept = 0;
+         |int $d = 0;
+         |for (int $j = 0; $j < $n; $j++) {
+         |  $d += $depth[$j];
+         |  $depth[$j] = $d;
+         |  if ($d == 0) $nKept++;
+         |}
+         |Object[] $out = new Object[$nKept];
+         |int $k = 0;
+         |for (int $j = 0; $j < $n; $j++) {
+         |  if ($depth[$j] == 0) {
+         |    $out[$k++] = $a.isNullAt($j) ? null : $a.getUTF8String($j);
+         |  }
+         |}
+         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object KeptTokens {
+  /** Element type of the `cuts` argument: one inclusive interval. */
+  val CutType: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("lo", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("hi", org.apache.spark.sql.types.LongType)))
+}
+
 object TextExpressions {
   /** Column API for [[TokenShingles]]. */
   def tokenShingles(toks: Column, n: Int): Column =
@@ -580,4 +711,8 @@ object TextExpressions {
   /** Column API for [[WinnowFingerprints]]. */
   def winnowFingerprints(text: Column, w: Int): Column =
     Bridge.column(WinnowFingerprints(Bridge.expression(text), w))
+
+  /** Column API for [[KeptTokens]]. */
+  def keptTokens(tokens: Column, cuts: Column): Column =
+    Bridge.column(KeptTokens(Bridge.expression(tokens), Bridge.expression(cuts)))
 }

@@ -1897,13 +1897,18 @@ object TextOps {
     * exactly 3 survive and runs of 4 are cut, so both regimes of the
     * threshold are exercised by the gate.
     *
-    * Runs come from [[contaminationIslandRuns]] — the SAME seeds,
-    * window, and islands q143 aggregates, so "what is a run" has one
-    * definition — with run START positions; covered positions are the
-    * exact interval union (q148's distinct-expansion move), and the
-    * rewrite is the q149/q151 kernel. Same two-sided contraction and
-    * scale shape as q143: bench side broadcast, train side never
-    * shuffles for the seed join, islands window keyed on (pair, diag).
+    * Plan: runs come from [[contaminationIslandRuns]] — the SAME
+    * seeds, window, and islands q143 aggregates, so "what is a run" has
+    * one definition — with run START positions. Each run becomes one
+    * inclusive token interval [start_t, start_t + run_grams + 1]; ONE
+    * train-doc-keyed `collect_list` gathers a doc's intervals, and the
+    * rewrite is [[graft.functions.expressions.KeptTokens]] over the
+    * doc's tokens — the same kernel as q149/q151, so overlapping runs
+    * (several bench docs, several diagonals) merge inside the kernel
+    * and no token is ever exploded or shuffled. Same two-sided
+    * contraction and scale shape as q143: bench side broadcast, train
+    * side never shuffles for the seed join, islands window keyed on
+    * (pair, diag).
     */
   /** The decontamination-rewrite kernel over explicit frames — ONE
     * definition shared by batch [[q152DecontaminateRewrite]] (fed
@@ -1915,17 +1920,13 @@ object TextOps {
     */
   private[graft] def decontaminateRewriteCore(docs: DataFrame,
       benchGrams: DataFrame, minRun: Int): DataFrame = {
-    val runs = contaminationIslandRuns(
+    val cuts = contaminationIslandRuns(
       positionedGrams(docs, "train_doc", "pos_t"), benchGrams)
       .filter(col("run_grams") + lit(2L) >= lit(minRun.toLong))
-    val covered = runs
-      .select(col("train_doc").as("doc_id"),
-        explode(sequence(col("start_t"), col("start_t") + col("run_grams") + 1L))
-          .as("pos"))
-      .distinct()
-    finishRewrite(docs, keptRewrite(docPosToks(docs), covered))
-      .select(col("rep").as("doc_id"), col("n_tokens"), col("n_kept"),
-        col("kept_md5"))
+      .groupBy(col("train_doc").as("doc_id"))
+      .agg(collect_list(
+        cut(col("start_t"), col("start_t") + col("run_grams") + 1L)).as("cuts"))
+    cutRewrite(docs, cuts)
   }
 
   def q152DecontaminateRewrite(s: SparkSession, d: String,
@@ -1943,16 +1944,17 @@ object TextOps {
   }
 
   /** Positioned 3-gram hashes of a (doc_id, text) frame — (idCol,
-    * posCol, h) — the seed coordinate space of [[q143ContaminationSpans]]
-    * and its streaming twin.
+    * posCol, h, carry…) — the seed coordinate space of
+    * [[q143ContaminationSpans]] and its streaming twin, and the
+    * repeated-span family's ([[repeatedStartFrames]] carries `copies`).
     */
   private[graft] def positionedGrams(docs: DataFrame, idCol: String,
-      posCol: String): DataFrame =
+      posCol: String, carry: String*): DataFrame =
     docs
-      .select(col("doc_id"),
-        posexplode(shingles3(tokens(col("text")))).as(Seq("pos", "sh")))
-      .select(col("doc_id").as(idCol), col("pos").cast("long").as(posCol),
-        md5(col("sh")).as("h"))
+      .select(col("doc_id") +: carry.map(col) :+
+        posexplode(shingles3(tokens(col("text")))).as(Seq("pos", "sh")): _*)
+      .select(Seq(col("doc_id").as(idCol), col("pos").cast("long").as(posCol),
+        md5(col("sh")).as("h")) ++ carry.map(col): _*)
 
   /** STOP-GRAM GUARD over a positioned bench gram frame (the q143
     * family's bench side): drop every gram hash whose bench DOCUMENT
@@ -2153,8 +2155,8 @@ object TextOps {
       .agg(min("min_margin_milli").as("threshold_milli"))
   }
 
-  /** Shared frames of the CORPUS-INTERNAL repeated-substring family
-    * (q148/q149) — the suffix-array exact-substring-dedup question
+  /** Shared frame of the CORPUS-INTERNAL repeated-substring family
+    * (q148/q149/q151) — the suffix-array exact-substring-dedup question
     * ("which token spans appear more than once ANYWHERE in the corpus",
     * Lee et al. 2022) re-expressed in the q143 positioned-gram
     * coordinate space: a position (doc, pos) is REPEATED iff its
@@ -2162,7 +2164,7 @@ object TextOps {
     * another doc or another position of the same doc; a repeated
     * substring of L ≥ 3 tokens is then L−2 consecutive repeated starts.
     * No doc-vs-doc pair space exists anywhere: the corpus-wide
-    * repetition test is ONE gram-keyed count, which is what makes this
+    * repetition test is ONE gram-keyed window, which is what makes this
     * formulation linear where the naive "join every doc against every
     * doc sharing a gram" is quadratic in duplication.
     *
@@ -2173,21 +2175,32 @@ object TextOps {
     * grams explode once per DISTINCT text, counts weight by
     * multiplicity, and members inherit the rep's row closed-form.
     *
+    * Plan: ONE explode of positioned 3-gram hashes over the reps,
+    * carrying `copies`, and ONE window partitioned by the gram hash `h`
+    * that computes both the corpus-wide count `cnt = sum(copies)` and
+    * the canonical (corpus-first) occurrence `canon = min(struct(doc_id,
+    * pos))` — q151's keep-first key; consumers that do not read it have
+    * it pruned. Rows with cnt ≥ 2 are the repeated starts. Skew trade:
+    * every occurrence of a hot gram lands in one window partition
+    * (which spills past memory) where a gram-keyed count + join back
+    * could have had its join split by AQE's skew handling.
+    *
     * Returns (repDocs, membership, starts): reps with their texts and
-    * copy counts; (rep → doc_id) membership; repeated (doc_id=rep,
-    * pos) starts.
+    * copy counts; (rep → doc_id) membership; repeated
+    * (doc_id=rep, pos, h, canon) starts.
     */
   private def repeatedStartFrames(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
     val (repDocs, membership) = textContraction(s, d)
-    val pg = positionedGrams(repDocs, "doc_id", "pos")
+    val w = Window.partitionBy("h")
     // corpus-wide occurrence count: per-rep occurrences × copy count
     // (the un-contracted corpus's exact total)
-    val repeatedHashes = pg
-      .join(repDocs.select("doc_id", "copies"), Seq("doc_id"))
-      .groupBy("h").agg(sum("copies").as("cnt"))
-      .filter(col("cnt") >= 2L).select("h")
-    val starts = pg.join(repeatedHashes, Seq("h")).select("doc_id", "pos", "h")
+    val starts = positionedGrams(repDocs, "doc_id", "pos", "copies")
+      .withColumn("cnt", sum("copies").over(w))
+      .withColumn("canon", min(struct(col("doc_id"), col("pos"))).over(w))
+      .filter(col("cnt") >= 2L)
+      .select("doc_id", "pos", "h", "canon")
     (repDocs, membership, starts)
   }
 
@@ -2238,17 +2251,35 @@ object TextOps {
       })
     }
 
-  /** Repeated-start positions expanded to the token positions they
-    * cover ([pos, pos+2] per 3-gram start), distinct — the EXACT
-    * interval union, so adjacent and overlapping repeated grams never
-    * double-count a token (a sum of island lengths would: two islands
-    * whose starts are 2 apart overlap at one token).
+  /** One inclusive [lo, hi] token-position interval — the element of
+    * [[graft.functions.expressions.KeptTokens]]' cuts.
     */
-  private def coveredPositions(starts: DataFrame): DataFrame =
-    starts
-      .select(col("doc_id"),
-        explode(sequence(col("pos"), col("pos") + 2)).as("pos"))
-      .distinct()
+  private def cut(lo: Column, hi: Column): Column =
+    struct(lo.as("lo"), hi.as("hi"))
+
+  /** The tokens `ts` keeps after removing the `cuts` intervals. A doc
+    * with no cut row (null `cuts` from the left join) keeps every token.
+    */
+  private def keptTokens(ts: Column, cuts: Column): Column =
+    coalesce(graft.functions.expressions.TextExpressions.keptTokens(ts, cuts), ts)
+
+  /** (n_kept, kept_md5) of a kept-token array: a doc with nothing kept
+    * rewrites to the empty string (0, md5('')).
+    */
+  private def keptSummary(kept: Column): Seq[Column] =
+    Seq(size(kept).cast("long").as("n_kept"),
+      md5(array_join(kept, " ")).as("kept_md5"))
+
+  /** Each doc of a (doc_id, text) frame rewritten without the token
+    * intervals of a (doc_id, cuts) frame → (doc_id, n_tokens, n_kept,
+    * kept_md5); the rewrite of q149 and q152.
+    */
+  private def cutRewrite(docs: DataFrame, cuts: DataFrame): DataFrame =
+    docs.select(col("doc_id"), tokens(col("text")).as("ts"))
+      .join(cuts, Seq("doc_id"), "left")
+      .select(col("doc_id"), size(col("ts")).cast("long").as("n_tokens"),
+        keptTokens(col("ts"), col("cuts")).as("kept"))
+      .select(Seq(col("doc_id"), col("n_tokens")) ++ keptSummary(col("kept")): _*)
 
   /** REPEATED-SPAN PROFILE per document (q148) — the measurement side
     * of exact substring dedup: how much of each doc's text appears
@@ -2271,29 +2302,39 @@ object TextOps {
     * n_kept + n_dup_tokens = n_tokens), which no start-level count
     * can provide.
     *
-    * Plan: one gram explode over DISTINCT texts, one gram-keyed count,
-    * one gram-keyed equality join back, then doc-keyed window + aggs —
-    * every shuffle keyed, everything linear in gram count; the
-    * contraction makes the whole pipeline dup-count-invariant (the
-    * 20× dup-heavy stress corpus pays reps, not copies).
+    * Plan: the repeated starts ([[repeatedStartFrames]]: one gram
+    * explode over DISTINCT texts, one gram-keyed window), then ONE
+    * doc-keyed `collect_list` into each rep's sorted position array,
+    * and all three statistics in ONE linear `aggregate` pass over it:
+    * a run continues while p = prev + 1 (islands), and the interval
+    * union of the [p, p+2] spans grows by min(3, p − prev) per start
+    * (the first start by 3). No doc-keyed window, no position explode,
+    * no distinct; the contraction makes the whole pipeline
+    * dup-count-invariant (the 20× dup-heavy stress corpus pays reps,
+    * not copies).
     */
   def q148RepeatedSpans(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (repDocs, membership, starts) = repeatedStartFrames(s, d)
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val runs = starts
-      .withColumn("isl", col("pos") - row_number().over(w))
-      .groupBy("doc_id", "isl").agg(count(lit(1)).as("run_grams"))
-      .groupBy("doc_id")
-      .agg(sum("run_grams").as("n_rep_grams"),
-        (max("run_grams") + lit(2L)).as("longest_rep_run"))
-    val covered = coveredPositions(starts)
-      .groupBy("doc_id").agg(count(lit(1)).as("n_dup_tokens"))
+    // prev starts 3 below position 0, so the first start opens a run
+    // and covers its full 3 tokens
+    val zero = struct(lit(-3L).as("prev"), lit(0L).as("run"),
+      lit(0L).as("best"), lit(0L).as("cov"))
+    val stats = starts
+      .groupBy("doc_id").agg(array_sort(collect_list(col("pos"))).as("ps"))
+      .select(col("doc_id"), size(col("ps")).cast("long").as("n_rep_grams"),
+        aggregate(col("ps"), zero, (acc, p) => {
+          val run = when(p === acc("prev") + 1L, acc("run") + 1L).otherwise(lit(1L))
+          struct(p.as("prev"), run.as("run"),
+            greatest(acc("best"), run).as("best"),
+            (acc("cov") + least(p - acc("prev"), lit(3L))).as("cov"))
+        }).as("f"))
+      .select(col("doc_id"), col("n_rep_grams"),
+        (col("f.best") + 2L).as("longest_rep_run"),
+        col("f.cov").as("n_dup_tokens"))
     val perRep = repDocs
       .select(col("doc_id"), tokenCount(col("text")).cast("long").as("n_tokens"))
       .filter(col("n_tokens") >= 3L)
-      .join(runs, Seq("doc_id"), "left")
-      .join(covered, Seq("doc_id"), "left")
+      .join(stats, Seq("doc_id"), "left")
       .select(col("doc_id").as("rep"), col("n_tokens"),
         coalesce(col("n_rep_grams"), lit(0L)).as("n_rep_grams"),
         coalesce(col("longest_rep_run"), lit(0L)).as("longest_rep_run"),
@@ -2313,52 +2354,20 @@ object TextOps {
     * more than once", verifiable without shipping the text itself.
     * A fully-duplicated doc rewrites to the empty string (md5('')).
     *
-    * Plan: kept tokens = positions anti-joined against the covered
-    * set (doc-keyed equality anti-join), then ONE doc-keyed agg whose
-    * state is the kept tokens of one document (doc-bounded, the
-    * collect_list+array_sort reassembly idiom) — no self-join, no
-    * per-pair work; the q148 contraction applies unchanged since the
-    * rewrite is a pure function of the text.
+    * Plan: the repeated starts ([[repeatedStartFrames]]), ONE
+    * doc-keyed `collect_list` of their [pos, pos+2] intervals, then
+    * [[graft.functions.expressions.KeptTokens]] over each rep's tokens
+    * in the rep's own row (a linear interval merge) — no token explode,
+    * no anti-join, no per-token shuffle or reassembly; the q148
+    * contraction applies unchanged since the rewrite is a pure function
+    * of the text.
     */
-  /** (doc_id, pos, tok) positions of a (doc_id, text) frame — the
-    * q149/q151 rewrite coordinate space.
-    */
-  private def docPosToks(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "tok")))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("tok"))
-
-  /** The rewrite kernel shared by q149 and q151: drop `covered`
-    * positions (doc-keyed equality anti-join), reassemble the kept
-    * tokens in position order inside ONE doc-keyed agg (state =
-    * one document's kept tokens, doc-bounded) → (doc_id, n_kept,
-    * kept_md5). Docs with nothing kept produce no row — callers
-    * left-join and default to (0, md5('')).
-    */
-  private def keptRewrite(posToks: DataFrame, covered: DataFrame): DataFrame =
-    posToks.join(covered, Seq("doc_id", "pos"), "left_anti")
-      .groupBy("doc_id").agg(
-        count(lit(1)).as("n_kept"),
-        md5(concat_ws(" ",
-          transform(array_sort(collect_list(struct(col("pos"), col("tok")))),
-            x => x("tok")))).as("kept_md5"))
-
-  /** Attach n_tokens and the empty-doc defaults to a [[keptRewrite]]
-    * result, keyed as `rep` for membership expansion.
-    */
-  private def finishRewrite(repDocs: DataFrame, kept: DataFrame): DataFrame =
-    repDocs
-      .select(col("doc_id"), tokenCount(col("text")).cast("long").as("n_tokens"))
-      .join(kept, Seq("doc_id"), "left")
-      .select(col("doc_id").as("rep"), col("n_tokens"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("kept_md5"), md5(lit(""))).as("kept_md5"))
-
   def q149DedupRewrite(s: SparkSession, d: String): DataFrame = {
     val (repDocs, membership, starts) = repeatedStartFrames(s, d)
-    val perRep = finishRewrite(repDocs,
-      keptRewrite(docPosToks(repDocs), coveredPositions(starts)))
-    perRep.join(membership, Seq("rep"))
+    val cuts = starts.groupBy("doc_id")
+      .agg(collect_list(cut(col("pos"), col("pos") + 2L)).as("cuts"))
+    cutRewrite(repDocs, cuts).withColumnRenamed("doc_id", "rep")
+      .join(membership, Seq("rep"))
       .select(col("doc_id"), col("n_tokens"), col("n_kept"), col("kept_md5"))
       .orderBy("doc_id")
   }
@@ -2367,49 +2376,59 @@ object TextOps {
     * dedup actually performs (q149 removes EVERY occurrence of
     * repeated text; real pipelines keep one): a repeated gram
     * occurrence is REMOVABLE iff it is not the corpus-wide FIRST
-    * occurrence of its gram (lexicographic (doc_id, pos) — one
-    * gram-keyed min), and only removable occurrences' positions are
-    * cut. Exact copies behave exactly as dedup should: the first copy
-    * survives INTACT (it holds every canonical occurrence), later
-    * copies rewrite to empty. Honesty note, spec-pinned: at gram
-    * granularity the keep-first guarantee is per-GRAM, not per-string —
-    * a canonical occurrence's tokens can still be cut when overlapped
-    * by a DIFFERENT gram's non-canonical occurrence (cross-doc partial
-    * overlap chains; the spec plants one), so content shared by
-    * partially-overlapping docs retains each gram somewhere but not
-    * necessarily contiguously. q151.n_kept ≥ q149.n_kept pointwise
-    * (keep-first removes a strict subset), spec-pinned corpus-wide.
+    * occurrence of its gram (lexicographic (doc_id, pos) — the
+    * `canon` of [[repeatedStartFrames]]' gram-keyed window), and only
+    * removable occurrences' positions are cut. Exact copies behave
+    * exactly as dedup should: the first copy survives INTACT (it holds
+    * every canonical occurrence), later copies rewrite to empty.
+    * Honesty note, spec-pinned: at gram granularity the keep-first
+    * guarantee is per-GRAM, not per-string — a canonical occurrence's
+    * tokens can still be cut when overlapped by a DIFFERENT gram's
+    * non-canonical occurrence (cross-doc partial overlap chains; the
+    * spec plants one), so content shared by partially-overlapping docs
+    * retains each gram somewhere but not necessarily contiguously.
+    * q151.n_kept ≥ q149.n_kept pointwise (keep-first removes a strict
+    * subset), spec-pinned corpus-wide.
     *
     * Contraction correctness (same frames as q148/q149): the global
     * first occurrence of any gram always lives in a REP (a rep is its
     * group's min doc_id and copies hold identical positions), so
     * canonical resolution needs only rep-level occurrences. A non-rep
     * copy can never hold a canonical occurrence — its removable set is
-    * ALL its repeated positions (exactly q149's covered set) — so the
-    * group expands as two closed-form row shapes: the rep's
-    * keep-first row and the shared fully-removed member row; the
-    * member-variant rewrite only runs over multi-copy reps.
+    * ALL its repeated positions (exactly q149's cut set).
+    *
+    * Plan: ONE doc-keyed agg collects both cut sets per rep — the
+    * non-canonical starts (the rep's own row) and every start (its
+    * copies' rows) — and [[graft.functions.expressions.KeptTokens]]
+    * rewrites the rep's tokens under each (the copy variant only for
+    * multi-copy reps); the membership join then picks the rep variant
+    * for the rep itself and the copy variant for every other member.
+    * One arm, no union, no anti-join, no per-token shuffle.
     */
   def q151DedupKeepFirst(s: SparkSession, d: String): DataFrame = {
     val (repDocs, membership, starts) = repeatedStartFrames(s, d)
-    val canon = starts.groupBy("h")
-      .agg(min(struct(col("doc_id"), col("pos"))).as("c"))
-      .select(col("h"), col("c.doc_id").as("doc_id"), col("c.pos").as("pos"))
-    val removable = starts.join(canon, Seq("h", "doc_id", "pos"), "left_anti")
-    val posToks = docPosToks(repDocs)
-    val repRows = finishRewrite(repDocs,
-      keptRewrite(posToks, coveredPositions(removable)))
-      .select(col("rep").as("doc_id"), col("n_tokens"), col("n_kept"),
-        col("kept_md5"))
-    // non-rep copies: removable = every repeated position (they hold no
-    // canonical occurrence) — computed only over multi-copy groups
-    val multiReps = repDocs.filter(col("copies") >= 2L).select("doc_id")
-    val memberRows = finishRewrite(repDocs.join(multiReps, Seq("doc_id")),
-      keptRewrite(posToks.join(multiReps, Seq("doc_id")),
-        coveredPositions(starts.join(multiReps, Seq("doc_id")))))
-      .join(membership.filter(col("doc_id") =!= col("rep")), Seq("rep"))
-      .select(col("doc_id"), col("n_tokens"), col("n_kept"), col("kept_md5"))
-    repRows.unionByName(memberRows).orderBy("doc_id")
+    val span = cut(col("pos"), col("pos") + 2L)
+    val nonCanon = col("canon.doc_id") =!= col("doc_id") ||
+      col("canon.pos") =!= col("pos")
+    val cuts = starts.groupBy("doc_id").agg(
+      collect_list(when(nonCanon, span)).as("rep_cuts"),
+      collect_list(span).as("all_cuts"))
+    val perRep = repDocs
+      .select(col("doc_id"), col("copies"), tokens(col("text")).as("ts"))
+      .join(cuts, Seq("doc_id"), "left")
+      .select(col("doc_id").as("rep"), size(col("ts")).cast("long").as("n_tokens"),
+        keptTokens(col("ts"), col("rep_cuts")).as("rep_kept"),
+        when(col("copies") >= 2L, keptTokens(col("ts"), col("all_cuts")))
+          .as("copy_kept"))
+      .select(col("rep"), col("n_tokens"),
+        struct(keptSummary(col("rep_kept")): _*).as("r"),
+        struct(keptSummary(col("copy_kept")): _*).as("c"))
+    perRep.join(membership, Seq("rep"))
+      .select(col("doc_id"), col("n_tokens"),
+        when(col("doc_id") === col("rep"), col("r")).otherwise(col("c")).as("k"))
+      .select(col("doc_id"), col("n_tokens"), col("k.n_kept").as("n_kept"),
+        col("k.kept_md5").as("kept_md5"))
+      .orderBy("doc_id")
   }
 
   /** ONE definition of the BPE greedy-left merge scan, shared by

@@ -5,6 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{TextFunctions, VectorFunctions}
 
+/** One inclusive token interval of a [[graft.functions.expressions.KeptTokens]]
+  * cut set (top level so Spark can derive its encoder).
+  */
+case class KeptCut(lo: Option[Long], hi: Option[Long])
+
 /** The custom Catalyst expressions must be BIT-IDENTICAL to the
   * composable built-ins formulations they replace (the DuckDB oracle
   * mirrors the built-ins semantics).
@@ -469,5 +474,101 @@ class ExpressionsSpec extends AnyFunSuite {
         .kcenterNearest(col("mvec"), centers).as("kn"))
       .collect()
     assert(nul.head.isNullAt(0), "null vector must give null assignment")
+  }
+
+  /** Runs `body` under both evaluation paths of a custom expression:
+    * whole-stage codegen (`doGenCode`) and the interpreted projection
+    * (`nullSafeEval`).
+    */
+  private def bothEvalModes(body: String => Unit): Unit =
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", mode == "CODEGEN_ONLY")
+      try body(mode)
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+
+  /** The built-ins formulation KeptTokens replaces: O(tokens × cuts),
+    * interpreted higher-order functions.
+    */
+  private def keptTokensSpec(ts: org.apache.spark.sql.Column,
+      cuts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    filter(ts, (_, i) => !exists(cuts, c => c("lo") <= i && i <= c("hi")))
+
+  test("KeptTokens ≡ filter/exists formulation on fixture docs with random cut sets") {
+    import spark.implicits._
+    import graft.functions.expressions.TextExpressions.keptTokens
+    val rnd = new scala.util.Random(148)
+    val texts = graft.core.Tables.documents(spark, TestSpark.sf)
+      .select("text").as[String].collect().toSeq
+    // cut sets in random order: overlapping, nested, adjacent, empty
+    // (hi = lo − 1), starting before 0 and ending past the last token
+    val rows = texts.map { t =>
+      val n = t.split(" ").count(_.nonEmpty)
+      val cuts = Seq.fill(rnd.nextInt(7)) {
+        val lo = rnd.nextInt(n + 4).toLong - 2L
+        KeptCut(Some(lo), Some(lo + rnd.nextInt(6) - 1L))
+      }
+      (t, cuts)
+    }
+    assert(rows.exists(_._2.isEmpty) && rows.exists(_._2.size >= 5))
+    val df = rows.toDF("text", "cuts")
+      .select(TextFunctions.tokens(col("text")).as("ts"), col("cuts"))
+    bothEvalModes { mode =>
+      val cmp = df.select(keptTokens(col("ts"), col("cuts")).as("fast"),
+        keptTokensSpec(col("ts"), col("cuts")).as("spec"), col("ts"))
+      assert(cmp.filter(!(col("fast") <=> col("spec"))).count() == 0L, mode)
+      // the random sets genuinely cut: some docs lose tokens, some keep all
+      assert(cmp.filter(size(col("fast")) < size(col("ts"))).count() > 0L, mode)
+    }
+  }
+
+  test("KeptTokens edge cases: empty tokens, no cuts, past-the-end, overlap, adjacency, nesting, unsorted, null") {
+    import spark.implicits._
+    import graft.functions.expressions.TextExpressions.keptTokens
+    val abcdef = Some(Seq("a", "b", "c", "d", "e", "f"))
+    def c(lo: Long, hi: Long) = KeptCut(Some(lo), Some(hi))
+    val cases: Seq[(Option[Seq[String]], Option[Seq[KeptCut]], Option[Seq[String]])] = Seq(
+      (Some(Seq()), Some(Seq(c(0, 2))), Some(Seq())),            // empty tokens
+      (abcdef, Some(Seq()), abcdef),                             // no cuts
+      (abcdef, Some(Seq(c(10, 12))), abcdef),                    // wholly past the end
+      (abcdef, Some(Seq(c(4, 99))), Some(Seq("a", "b", "c", "d"))), // clipped at the end
+      (abcdef, Some(Seq(c(-5, 1))), Some(Seq("c", "d", "e", "f"))), // clipped at 0
+      (abcdef, Some(Seq(c(0, 2), c(1, 3))), Some(Seq("e", "f"))),   // overlapping
+      (abcdef, Some(Seq(c(0, 1), c(2, 3))), Some(Seq("e", "f"))),   // adjacent
+      (abcdef, Some(Seq(c(0, 5), c(2, 3))), Some(Seq())),           // nested
+      (abcdef, Some(Seq(c(4, 5), c(0, 1))), Some(Seq("c", "d"))),   // unsorted
+      (abcdef, Some(Seq(c(3, 2))), abcdef),                      // hi < lo: empty
+      (None, Some(Seq(c(0, 1))), None),                          // null tokens
+      (abcdef, None, None))                                      // null cuts
+    val df = cases.map(x => (x._1, x._2)).toDF("ts", "cuts")
+    bothEvalModes { mode =>
+      val got = df.select(keptTokens(col("ts"), col("cuts")))
+        .as[Option[Seq[String]]].collect().toSeq
+      assert(got == cases.map(_._3), mode)
+      // the kernel's contract is order-free: every non-null case also
+      // equals the built-ins formulation
+      val spec = df.filter(col("ts").isNotNull && col("cuts").isNotNull)
+        .select(keptTokensSpec(col("ts"), col("cuts")))
+        .as[Seq[String]].collect().toSeq
+      assert(spec == cases.filter(x => x._1.isDefined && x._2.isDefined)
+        .map(_._3.get), mode)
+      // a null cut, or a cut with a null bound, covers nothing (the
+      // built-ins form would drop EVERY token there: exists → null)
+      val nullCuts = Seq((abcdef, Seq(null, KeptCut(None, Some(5L)),
+          KeptCut(Some(0L), None), c(1, 1))))
+        .toDF("ts", "cuts")
+        .select(keptTokens(col("ts"), col("cuts")))
+        .as[Seq[String]].head()
+      assert(nullCuts == Seq("a", "c", "d", "e", "f"), mode)
+    }
+    // wrong-typed cuts fail at analysis
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Seq((Seq("a"), Seq(1L))).toDF("ts", "cuts")
+        .select(keptTokens(col("ts"), col("cuts"))).collect()
+    }
   }
 }

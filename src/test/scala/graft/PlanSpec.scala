@@ -408,6 +408,49 @@ class PlanSpec extends AnyFunSuite {
     }.isEmpty, s"WordCountJob.run: range exchange in the single-file write\n$plan")
   }
 
+  test("repeated-span family and q152: no per-token explode or anti-join; q148 no doc-keyed window; q151 no union") {
+    // the rewrite runs in each document's row (KeptTokens over collected
+    // cut intervals); a plan that explodes every token again and
+    // shuffles it by (doc_id, pos) still answers correctly, so only a
+    // plan check catches the regression
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, PosExplode}
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    import org.apache.spark.sql.execution.{GenerateExec, UnionExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.functions.expressions.StringTokens
+    val offences = Seq("q148_repeated_spans", "q149_dedup_rewrite",
+        "q151_dedup_keep_first", "q152_decontaminate_rewrite").flatMap { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect() // the AQE-final plan is the one that ran
+      val plan = df.queryExecution.executedPlan
+      def found(what: String)(pf: PartialFunction[SparkPlan, SparkPlan]) =
+        if (aqe.collect(plan)(pf).nonEmpty) Some(s"$name: $what") else None
+      Seq(
+        found("posexplode(string_tokens(...))") {
+          case g @ GenerateExec(PosExplode(_: StringTokens), _, _, _, _) => g
+        },
+        found("LeftAnti join") {
+          case j: BaseJoinExec if j.joinType == LeftAnti => j
+        },
+        if (name != "q148_repeated_spans") None
+        else found("doc_id-partitioned Window") {
+          case w: WindowExec if w.partitionSpec.exists {
+            case a: Attribute => a.name == "doc_id"
+            case _ => false
+          } => w
+        },
+        // AQE drops a union arm that runs empty (no multi-copy text in
+        // the fixture), so the optimized logical plan is checked too
+        if (name != "q151_dedup_keep_first") None
+        else found("Union") { case u: UnionExec => u }.orElse(
+          if (df.queryExecution.optimizedPlan.collectFirst { case u: Union => u }.isEmpty) None
+          else Some(s"$name: Union in the optimized plan"))).flatten
+    }
+    assert(offences.isEmpty, offences.mkString("; "))
+  }
+
   private object aqe extends AdaptiveSparkPlanHelper
 
   private def partialAggs(plan: SparkPlan): Seq[HashAggregateExec] = aqe.collect(plan) {

@@ -2610,4 +2610,75 @@ class TextDedupSimSpec extends AnyFunSuite {
       .filter(col("n_kept") + col("n_dup_tokens") =!= col("n_tokens"))
       .count() == 0L)
   }
+
+  /** A dup-heavy corpus for the repeated-span family: 240 docs over a
+    * 24-word vocabulary (short grams repeat by chance), with exact
+    * copies, intra-doc repeats, docs splicing a slice of an earlier doc
+    * (shared runs, partially overlapping across docs), collapsed spaces,
+    * empty and sub-gram docs, and bench docs (doc_id % 100 = 0) whose
+    * slices the train side copies — runs both above and below q152's
+    * threshold.
+    */
+  private def dupHeavyCorpus(): String = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(151)
+    def fresh(n: Int): String =
+      Seq.fill(n)(s"w${rnd.nextInt(24)}").mkString(" ")
+    val texts = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (i <- 0 until 240) {
+      val earlier = if (i > 0) texts(rnd.nextInt(i)) else ""
+      val r = rnd.nextDouble()
+      texts += (
+        if (i % 100 == 0) fresh(24)
+        else if (r < 0.30) earlier
+        else if (r < 0.40) { val t = fresh(4 + rnd.nextInt(5)); s"$t $t" }
+        else if (r < 0.70) {
+          val ts = (if (rnd.nextBoolean()) texts(100 * rnd.nextInt(i / 100 + 1)) else earlier)
+            .split(" ").filter(_.nonEmpty)
+          val from = if (ts.isEmpty) 0 else rnd.nextInt(ts.length)
+          val slice = ts.slice(from, from + 2 + rnd.nextInt(6)).mkString(" ")
+          s"${fresh(rnd.nextInt(4))}  $slice ${fresh(rnd.nextInt(4))}"
+        }
+        else if (r < 0.75) fresh(rnd.nextInt(3))
+        else fresh(3 + rnd.nextInt(12)))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("repspan_dupheavy").toString
+    texts.toSeq.zipWithIndex
+      .map { case (t, i) => (i.toLong, t, "en", "s0", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("q148/q149/q151/q152 equal their pre-KeptTokens plans on the fixture corpus and a dup-heavy corpus") {
+    val dupDir = dupHeavyCorpus()
+    for (dir <- Seq(sf, dupDir)) {
+      val pairs = Seq(
+        "q148" -> (TextOps.q148RepeatedSpans(spark, dir),
+          RepeatedSpanReference.q148RepeatedSpans(spark, dir)),
+        "q149" -> (TextOps.q149DedupRewrite(spark, dir),
+          RepeatedSpanReference.q149DedupRewrite(spark, dir)),
+        "q151" -> (TextOps.q151DedupKeepFirst(spark, dir),
+          RepeatedSpanReference.q151DedupKeepFirst(spark, dir)),
+        "q152" -> (TextOps.q152DecontaminateRewrite(spark, dir),
+          RepeatedSpanReference.q152DecontaminateRewrite(spark, dir)))
+      for ((name, (got, want)) <- pairs) {
+        val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+        assert(g.nonEmpty && g.sortBy(_.getLong(0)) == w.sortBy(_.getLong(0)),
+          s"$name on $dir: ${g.diff(w).take(5)} vs ${w.diff(g).take(5)}")
+      }
+    }
+    // the dup-heavy corpus exercises every regime the plans distinguish:
+    // copies and partial repeats (q148), keep-first keeping more than
+    // remove-all (q151 vs q149), and q152 cutting runs
+    val q148 = TextOps.q148RepeatedSpans(spark, dupDir)
+    assert(q148.filter(col("dup_fraction") === 1.0).count() > 0L)
+    assert(q148.filter(col("dup_fraction") > 0.0 && col("dup_fraction") < 1.0).count() > 0L)
+    assert(q148.filter(col("n_dup_tokens") === 0L).count() > 0L)
+    val kf = TextOps.q151DedupKeepFirst(spark, dupDir).select(col("doc_id"), col("n_kept").as("kf"))
+    val ka = TextOps.q149DedupRewrite(spark, dupDir).select(col("doc_id"), col("n_kept").as("ka"))
+    assert(kf.join(ka, Seq("doc_id")).filter(col("kf") > col("ka")).count() > 0L)
+    val q152 = TextOps.q152DecontaminateRewrite(spark, dupDir)
+    assert(q152.filter(col("n_kept") < col("n_tokens")).count() > 0L)
+  }
 }
