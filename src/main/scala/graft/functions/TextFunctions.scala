@@ -93,13 +93,23 @@ object TextFunctions {
     *
     * Bit j of the fingerprint is set iff the sum over tokens of
     * (+1 if the (j+1)-th hex digit of md5(token) has odd ASCII code,
-    * else -1) is strictly positive. Engine-portable: md5 and ASCII are
-    * identical everywhere, so the DuckDB oracle reproduces it exactly.
+    * else -1) is strictly positive; null or empty input gives 0.
+    * Engine-portable: md5 and ASCII are identical everywhere, so the
+    * DuckDB oracle reproduces it exactly. Evaluated by the custom
+    * [[graft.functions.expressions.SimHash16]] expression (one md5 per
+    * token feeding all 16 counters); [[simhash16Hof]] is the
+    * built-ins-only formulation it is bit-equivalent to.
     */
+  def simhash16(toks: Column): Column =
+    graft.functions.expressions.TextExpressions.simHash16(toks)
+
   def simhashBitContrib(tok: Column, j: Int): Column =
     when(ascii(substring(md5(tok), j + 1, 1)) % 2 === 1, lit(1L)).otherwise(lit(-1L))
 
-  def simhash16(toks: Column): Column = {
+  /** Spec formulation of [[simhash16]] from composable built-ins: one
+    * transform/aggregate pass, and one md5 per token, per bit.
+    */
+  def simhash16Hof(toks: Column): Column = {
     val bitCols = (0 until 16).map { j =>
       val s = aggregate(transform(toks, t => simhashBitContrib(t, j)), lit(0L), (a, b) => a + b)
       when(s > 0, lit(1L << j)).otherwise(lit(0L))

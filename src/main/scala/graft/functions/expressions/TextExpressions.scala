@@ -683,6 +683,81 @@ object KeptTokens {
       org.apache.spark.sql.types.StructField("hi", org.apache.spark.sql.types.LongType)))
 }
 
+/** 16-bit SimHash of a token array from md5 hex-digit parity, with ONE
+  * md5 per token.
+  *
+  * Bit j is set iff, summed over the tokens, (+1 if the (j+1)-th hex
+  * digit of md5(token) has an odd ASCII code, else −1) is strictly
+  * positive — the contract of `TextFunctions.simhash16Hof` (the spec /
+  * oracle mirror, pinned in ExpressionsSpec). That formulation runs 16
+  * interpreted transform/aggregate passes per row, each hashing every
+  * token again; here one digest per token feeds all 16 counters. Hex
+  * digit j is the high (even j) or low (odd j) nibble `v` of digest
+  * byte j/2, and its ASCII code ('0'..'9' = 48..57, 'a'..'f' = 97..102)
+  * is odd iff (v < 10) == (v is odd).
+  *
+  * Tokens are counted as given (no dedup inside the kernel). A null
+  * token contributes −1 to every bit, as md5(null) does in the spec
+  * formulation. Null or empty input → 0, never null.
+  *
+  * CodegenFallback for the usual reason: one call per document ROW.
+  */
+case class SimHash16(child: Expression)
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+
+  // wrong-typed input is an ANALYSIS error, not a runtime ClassCastException
+  override def inputTypes: Seq[Bridge.AbstractType] = Seq(ArrayType(StringType))
+
+  override def dataType: DataType = org.apache.spark.sql.types.LongType
+
+  override def nullable: Boolean = false
+
+  override def prettyName: String = "simhash16"
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) 0L else SimHash16.hash(v.asInstanceOf[ArrayData])
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object SimHash16 {
+  // a MessageDigest is stateful: one per task thread
+  private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  def hash(toks: ArrayData): Long = {
+    val md = md5.get()
+    val votes = new Array[Int](16)
+    var i = 0
+    while (i < toks.numElements()) {
+      if (toks.isNullAt(i)) {
+        var j = 0
+        while (j < 16) { votes(j) -= 1; j += 1 }
+      } else {
+        val digest = md.digest(toks.getUTF8String(i).getBytes)
+        var j = 0
+        while (j < 16) {
+          val b = digest(j >> 1)
+          val v = if ((j & 1) == 0) (b >> 4) & 0xF else b & 0xF
+          votes(j) += (if ((v < 10) == ((v & 1) == 1)) 1 else -1)
+          j += 1
+        }
+      }
+      i += 1
+    }
+    var out = 0L
+    var j = 0
+    while (j < 16) {
+      if (votes(j) > 0) out |= 1L << j
+      j += 1
+    }
+    out
+  }
+}
+
 object TextExpressions {
   /** Column API for [[TokenShingles]]. */
   def tokenShingles(toks: Column, n: Int): Column =
@@ -715,4 +790,8 @@ object TextExpressions {
   /** Column API for [[KeptTokens]]. */
   def keptTokens(tokens: Column, cuts: Column): Column =
     Bridge.column(KeptTokens(Bridge.expression(tokens), Bridge.expression(cuts)))
+
+  /** Column API for [[SimHash16]]. */
+  def simHash16(tokens: Column): Column =
+    Bridge.column(SimHash16(Bridge.expression(tokens)))
 }

@@ -1374,7 +1374,10 @@ object Dedup {
 
   /** SimHash fingerprints (16-bit, md5-digit-parity construction — see
     * TextFunctions.simhash16) over each document's distinct token set.
-    * Computed entirely map-side (array fold per row, no shuffle).
+    * Computed entirely map-side, in each document's row: the
+    * [[graft.functions.expressions.SimHash16]] kernel hashes each
+    * distinct token once and feeds all 16 bit counters from that digest.
+    * The only exchange is the final sort's.
     */
   def q33SimHash(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 
@@ -160,36 +160,77 @@ object Layout {
     "l_orderkey", "l_linenumber", "l_quantity",
     "l_extendedprice", "l_discount", "l_tax")
 
+  /** ANALYZE-style TABLE STATISTICS of lineitem's [[StatsColumns]] —
+    * see [[tableStats]].
+    */
+  def q91TableStats(s: SparkSession, d: String): DataFrame =
+    tableStats(Tables.lineitem(s, d), StatsColumns)
+
   /** ANALYZE-style TABLE STATISTICS — per-column row/null/distinct
     * counts and min/max, the stats a cost-based optimizer and a layout
-    * planner (file skipping, bucketing decisions) feed on. ONE scan
-    * pass: all per-column aggregates run in a single agg (the multi-
-    * countDistinct plans as one Expand — 6 aliased streams of the same
-    * scan, partial-aggregated map-side before the single exchange), and
-    * the 1-row result is unpivoted driver-free to long format.
+    * planner (file skipping, bucketing decisions) feed on. One row per
+    * column of `cols` (integral or floating-point), ordered by name:
+    * `(col_name, n_rows, n_nulls, n_distinct, min_v, max_v)`, min/max
+    * as double.
+    *
+    * ONE scan pass and two plain aggregates: each row unpivots into one
+    * `(col_name, l, d)` cell per column — integral values in the bigint
+    * `l`, floating-point values in the double `d` — and
+    * `groupBy(col_name, l, d).count` deduplicates the cells map-side,
+    * so the only corpus-sized shuffle carries the distinct
+    * (column, value) pairs with one count each. `groupBy(col_name)`
+    * then folds each column's pairs: n_rows = Σ n, n_nulls = n of the
+    * null-value pair, n_distinct = the number of non-null pairs,
+    * min/max over the values. Grouping normalizes floating-point keys
+    * as `countDistinct` does (−0.0 = 0.0, one NaN). Every column also
+    * gets a zero-count null-value pair, so a table without rows still
+    * reports each column (n_rows 0, min/max null), as the oracle's
+    * GROUP BY-free aggregates do.
+    *
+    * No `countDistinct`: several in one aggregate plan as an Expand
+    * that copies each row once per column plus once more, every copy
+    * carrying all columns' aggregate buffers, and the rewrite's column
+    * order is not stable, so its generated code recompiles on every
+    * run. This plan is the same on every run, so Spark's codegen cache
+    * hits.
     *
     * 100 TB note: EXACT ndv is deliberate here because the oracle needs
-    * bit-equality; a production ANALYZE at corpus scale swaps
-    * countDistinct for approx_count_distinct (the q38 HLL family) and
-    * keeps everything else — same plan, sketch-sized agg state instead
-    * of distinct-sized.
+    * bit-equality; a production ANALYZE at corpus scale swaps the pair
+    * shuffle for an approx_count_distinct sketch per column (the q38
+    * HLL family) — sketch-sized state instead of distinct-sized.
     */
-  def q91TableStats(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    val aggs = count(lit(1)).as("n_rows") +: StatsColumns.flatMap(c => Seq(
-      count(col(c)).as(s"nn_$c"),
-      countDistinct(col(c)).as(s"ndv_$c"),
-      min(col(c)).cast("double").as(s"min_$c"),
-      max(col(c)).cast("double").as(s"max_$c")))
-    li.agg(aggs.head, aggs.tail: _*)
-      .select(explode(array(StatsColumns.map(c => struct(
-        lit(c).as("col_name"),
-        col("n_rows"),
-        (col("n_rows") - col(s"nn_$c")).as("n_nulls"),
-        col(s"ndv_$c").as("n_distinct"),
-        col(s"min_$c").as("min_v"),
-        col(s"max_$c").as("max_v"))): _*)).as("st"))
-      .select("st.*")
+  def tableStats(df: DataFrame, cols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val cells = cols.map { c =>
+      val (l, v) = df.schema(c).dataType match {
+        case ByteType | ShortType | IntegerType | LongType =>
+          (col(c).cast("bigint"), lit(null).cast("double"))
+        case FloatType | DoubleType =>
+          (lit(null).cast("bigint"), col(c).cast("double"))
+        case t => throw new IllegalArgumentException(
+          s"tableStats: column $c is ${t.simpleString}, not integral or floating-point")
+      }
+      struct(lit(c).as("col_name"), l.as("l"), v.as("d"))
+    }
+    val pairs = df.select(explode(array(cells: _*)).as("cell"))
+      .select("cell.*")
+      .groupBy("col_name", "l", "d")
+      .agg(count(lit(1)).as("n"))
+    val noRows = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(cols.map(c => Row(c, null, null, 0L)): _*), pairs.schema)
+    val isNull = col("l").isNull && col("d").isNull
+    // the zero-count pair puts a non-null n in every group; coalesce
+    // only tells Catalyst so (non-nullable counts, as in the oracle's)
+    def total(n: Column): Column = coalesce(sum(n), lit(0L))
+    pairs.union(noRows)
+      .groupBy("col_name")
+      .agg(
+        total(col("n")).as("n_rows"),
+        total(when(isNull, col("n"))).as("n_nulls"),
+        count(when(!isNull, lit(1))).as("n_distinct"),
+        coalesce(min("l").cast("double"), min("d")).as("min_v"),
+        coalesce(max("l").cast("double"), max("d")).as("max_v"))
+      .coalesce(1) // ≤ |cols| rows: sort them in one task, no range sampler
       .orderBy("col_name")
   }
 

@@ -246,6 +246,52 @@ class ExpressionsSpec extends AnyFunSuite {
       Some(Seq(("a", 3), ("b", 1))), None))
   }
 
+  test("SimHash16 ≡ simhash16Hof (16 transform/aggregate passes) on fixture distinct token sets") {
+    val d = graft.core.Tables.documents(spark, TestSpark.sf)
+      .select(array_distinct(TextFunctions.tokens(col("text"))).as("ts"))
+    bothEvalModes { mode =>
+      val cmp = d.select(TextFunctions.simhash16(col("ts")).as("fast"),
+        TextFunctions.simhash16Hof(col("ts")).as("spec"))
+      assert(cmp.filter(!(col("fast") <=> col("spec"))).count() == 0L, mode)
+      // the fingerprints spread over the 16 bits, not a degenerate constant
+      assert(cmp.select("fast").distinct().count() > 10L, mode)
+    }
+  }
+
+  test("SimHash16 edge cases: empty, null, multibyte, repeated and null tokens") {
+    import spark.implicits._
+    // bit j votes +1 iff hex digit j of md5(token) has an odd ASCII code
+    def votes(t: String): Seq[Int] = java.security.MessageDigest.getInstance("MD5")
+      .digest(t.getBytes("UTF-8")).flatMap(b => Seq((b >> 4) & 0xF, b & 0xF))
+      .take(16).map(v => if ("0123456789abcdef".charAt(v).toInt % 2 == 1) 1 else -1)
+      .toSeq
+    def ref(ts: Seq[String]): Long = ts.map(votes)
+      .foldLeft(Seq.fill(16)(0))((a, b) => a.zip(b).map(p => p._1 + p._2))
+      .zipWithIndex.collect { case (v, j) if v > 0 => 1L << j }.sum
+    // two tokens whose votes disagree on some bit the first one sets
+    val vocab = (0 until 64).map(i => s"t$i")
+    val (a, b) = (for (x <- vocab; y <- vocab
+        if votes(x).zip(votes(y)).exists(p => p._1 > 0 && p._2 < 0)) yield (x, y)).head
+    val cases: Seq[Option[Seq[String]]] = Seq(
+      Some(Seq()), None,
+      Some(Seq("héllo", "wörld", "😀", "漢字")),
+      Some(Seq(a, b)),
+      Some(Seq(a, a, b)), // no dedup inside the kernel: a outvotes b
+      Some(Seq(a, null, b)))
+    val df = cases.toDF("ts")
+    bothEvalModes { mode =>
+      val got = df.select(TextFunctions.simhash16(col("ts"))).as[Long].collect().toSeq
+      val spec = df.select(TextFunctions.simhash16Hof(col("ts"))).as[Long].collect().toSeq
+      assert(got == spec, mode)
+      assert(got.take(5) == Seq(0L, 0L) ++ cases.slice(2, 5).map(c => ref(c.get)), mode)
+      assert(got(4) == ref(Seq(a)) && got(4) != got(3), mode)
+    }
+    assert(!df.select(TextFunctions.simhash16(col("ts"))).schema.head.nullable)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Seq(Tuple1(Seq(1L))).toDF("ts").select(TextFunctions.simhash16(col("ts"))).collect()
+    }
+  }
+
   test("input type contracts: wrong-typed input fails at analysis, not execution") {
     import spark.implicits._
     val df = Seq((1, Array(1, 2))).toDF("n", "ints")

@@ -130,6 +130,100 @@ class LayoutSpec extends AnyFunSuite {
     }
   }
 
+  /** `tableStats` ≡ the Expand formulation it replaced: same schema,
+    * same rows. `zeros` compares −0.0 and 0.0 as equal: both plans'
+    * min/max may report either when a column holds both (Spark orders
+    * them as equal).
+    */
+  private def assertSameStats(df: org.apache.spark.sql.DataFrame, cols: Seq[String],
+      clue: String, zeros: Boolean = false): Array[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.Row
+    val got = Layout.tableStats(df, cols)
+    val ref = TableStatsReference.tableStats(df, cols)
+    assert(got.schema == ref.schema, clue)
+    def rows(x: org.apache.spark.sql.DataFrame) = x.collect().map { r =>
+      if (!zeros) r
+      else Row.fromSeq(r.toSeq.map { case v: Double if v == 0.0 => 0.0; case v => v })
+    }
+    val g = rows(got)
+    assert(g.toSeq == rows(ref).toSeq, clue)
+    g
+  }
+
+  test("tableStats ≡ the Expand formulation: fixture, nulls in every column, empty table") {
+    val li = graft.core.Tables.lineitem(spark, TestSpark.sf)
+    val cols = Layout.StatsColumns
+    assertSameStats(li, cols, "fixture")
+    // every column nulled on its own row pattern, plus two all-null rows
+    val holey = li.select(cols.zipWithIndex.map { case (c, i) =>
+      when((col("l_linenumber") + i) % 3 === 0, lit(null)).otherwise(col(c)).as(c)
+    }: _*)
+    val withNulls = holey.union(holey.limit(2).select(cols.map(c =>
+      lit(null).cast(li.schema(c).dataType).as(c)): _*))
+    val nulls = assertSameStats(withNulls, cols, "nulls")
+    assert(nulls.forall(_.getAs[Long]("n_nulls") > 2L))
+    // a table without rows still reports every column (GROUP BY-free oracle)
+    for ((empty, what) <- Seq(li.filter(col("l_orderkey") < 0L) -> "filtered scan",
+        li.limit(0) -> "limit 0")) {
+      val got = assertSameStats(empty, cols, what)
+      assert(got.map(_.getAs[String]("col_name")).toSeq == cols.sorted, what)
+      got.foreach { r =>
+        assert(r.getAs[Long]("n_rows") == 0L && r.getAs[Long]("n_nulls") == 0L &&
+          r.getAs[Long]("n_distinct") == 0L && r.isNullAt(4) && r.isNullAt(5), s"$what: $r")
+      }
+    }
+    intercept[IllegalArgumentException] {
+      Layout.tableStats(graft.core.Tables.lineitem(spark, TestSpark.sf), Seq("l_returnflag"))
+    }
+  }
+
+  test("tableStats: -0.0, 0.0 and NaN count as countDistinct normalizes them") {
+    import spark.implicits._
+    val otherNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    val df = Seq[(Long, Option[Double], Option[Float])](
+      (1L, Some(-0.0), Some(-0.0f)), (2L, Some(0.0), Some(0.0f)),
+      (3L, Some(Double.NaN), Some(Float.NaN)), (4L, Some(otherNaN), None),
+      (5L, Some(1.5), Some(-2.5f)), (6L, None, Some(0.0f)))
+      .toDF("k", "x", "f")
+    val got = assertSameStats(df, Seq("k", "x", "f"), "signed zeros, NaNs", zeros = true)
+      .map(r => r.getString(0) -> r).toMap
+    // (col_name, n_rows, n_nulls, n_distinct, min_v, max_v)
+    assert(got("x").getLong(3) == 3L) // 0, NaN, 1.5
+    assert(got("f").getLong(3) == 3L) // 0, NaN, -2.5
+    assert(got("x").getDouble(5).isNaN && got("x").getLong(2) == 1L)
+  }
+
+  test("tableStats is invariant to shuffle partitions (1, 7, N) and AQE on or off") {
+    val li = graft.core.Tables.lineitem(spark, TestSpark.sf)
+    val base = assertSameStats(li, Layout.StatsColumns, "default confs").toSeq
+    val n = spark.sparkContext.defaultParallelism
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    for (parts <- Seq(1, 7, n); aqe <- Seq(true, false)) {
+      spark.conf.set(keys(0), parts.toLong)
+      spark.conf.set(keys(1), aqe)
+      try {
+        val got = assertSameStats(li, Layout.StatsColumns, s"partitions=$parts aqe=$aqe")
+        assert(got.toSeq == base, s"partitions=$parts aqe=$aqe")
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
+  test("q91 compiles no new generated classes when it runs a second time") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Layout.q91TableStats(spark, TestSpark.sf).write.format("noop").mode("overwrite").save()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    run()
+    val second = run()
+    assert(second == 0L, s"second q91 run compiled $second classes")
+  }
+
   test("upsert: changed rows win, unchanged rows survive, inserts land — keys stay unique") {
     import spark.implicits._
     val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")

@@ -451,6 +451,28 @@ class PlanSpec extends AnyFunSuite {
     assert(offences.isEmpty, offences.mkString("; "))
   }
 
+  test("q91 plans no Expand; q33 plans no per-bit array transform/aggregate") {
+    // both answer correctly in their old shapes: q91 as a multi-
+    // countDistinct Expand (19 aggregate buffers per expanded row, its
+    // generated code recompiled every run), q33 as 16 interpreted
+    // transform/aggregate passes with one md5 per token each
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform}
+    import org.apache.spark.sql.execution.ExpandExec
+    def executed(name: String): SparkPlan = {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect() // the AQE-final plan is the one that ran
+      df.queryExecution.executedPlan
+    }
+    val q91 = executed("q91_table_stats")
+    assert(aqe.collect(q91) { case e: ExpandExec => e }.isEmpty,
+      s"q91: Expand in the executed plan\n$q91")
+    val q33 = executed("q33_simhash")
+    val hofs = aqe.flatMap(q33)(_.expressions.flatMap(_.collect {
+      case e @ (_: ArrayAggregate | _: ArrayTransform) => e
+    }))
+    assert(hofs.isEmpty, s"q33: ${hofs.map(_.prettyName).distinct.mkString(", ")} in the executed plan\n$q33")
+  }
+
   private object aqe extends AdaptiveSparkPlanHelper
 
   private def partialAggs(plan: SparkPlan): Seq[HashAggregateExec] = aqe.collect(plan) {
