@@ -3,12 +3,11 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** Cheap content fingerprint for a parquet table under a fixture dir:
-  * the sorted (path, length, mtime) listing, hashed. Session memos
-  * (LSH signature frames, candidate-pair frames, IVF quantizers and
-  * indexes) key on this so that files changing under a cached dir
+  * the sorted (path, length, mtime) listing, hashed. It is part of every
+  * [[SessionMemo]] key, so files changing under a cached dir
   * mid-session — a streaming ingest landing docs, a stress-corpus
   * regeneration in a reused session — are DETECTED (stale entry
-  * evicted, fresh one built) instead of silently served stale.
+  * released, fresh one built) instead of silently served stale.
   * Listing + mtimes is a metadata-only pass: no file contents are
   * read, so taking the fingerprint costs microseconds even on wide
   * tables.
@@ -22,9 +21,7 @@ import org.apache.spark.sql.SparkSession
   * Known granularity limit (inherent to metadata-only): an in-place
   * rewrite that preserves every file's length within the filesystem's
   * mtime granularity is undetected. Callers needing stronger
-  * guarantees should call the explicit invalidate hooks
-  * ([[graft.ops.Dedup.invalidateSignatureCache]],
-  * [[graft.ops.Similarity.invalidateIvfCache]]).
+  * guarantees should call [[SessionMemo.invalidate]].
   */
 object Fingerprint {
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionMemo, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.Round._
 
@@ -107,28 +107,12 @@ object Dedup {
   // it, so the candidate join + exact Jaccard verify runs once per
   // (session, dir, corpus version) rather than once per consumer
   // (measured ~15 s per re-pay at the 20× stress corpus: q31 15.9 s,
-  // q137/q147 each re-verifying under their iterations). epairCache's
-  // fingerprint-staleness pattern verbatim; in the memo lock total
-  // order it sits between compCache and candCache (its build takes
-  // candCache → sigCache while holding its own lock, like compCache's
-  // build does; nothing takes vpairCache while holding candCache).
-  private val vpairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  // q137/q147 each re-verifying under their iterations)
+  private val vpairMemo = SessionMemo.frame("verified-pairs", "documents")
 
   private def verifiedPairsShared(s: SparkSession, d: String): DataFrame =
-    vpairCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents")
-      vpairCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach { stale =>
-          vpairCache.remove(stale).foreach { df =>
-            try df.unpersist() catch { case _: Throwable => () }
-          }
-        }
-      vpairCache.getOrElseUpdate((s, d, fp),
-        verifiedPairsRaw(s, d, 0.6)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    vpairMemo(s, d)(verifiedPairsRaw(s, d, 0.6)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def verifiedPairsRaw(s: SparkSession, d: String,
       threshold: Double): DataFrame =
@@ -421,19 +405,16 @@ object Dedup {
   }
 
   /** Memoized, persisted SET-CONTRACTION + qualified-rep-pair frames at
-    * (dir, tS): membership(doc_id, rep), groups(rep, members) and
+    * (dir, tS): membership(doc_id, rep), groups(setkey, rep, members) and
     * repPairs(ra, rb, na, nb, common). q121 (member-level view) and
     * q141 (rep-level artifact) both READ these — the production shape,
     * where contraction and the qualified-pair computation land as
     * tables and every containment consumer probes them instead of
     * recomputing (measured: the shared core was ~4 s of the two
-    * queries' 9.3 s at sf0.1 before this memo). Fingerprint-keyed
-    * staleness like every other session memo; this lock is standalone
-    * (never takes another cache's lock; Fingerprint.of does filesystem
-    * listing only).
+    * queries' 9.3 s at sf0.1 before this memo).
     */
   /** The containment family's shared memo payload: membership
-    * (doc_id, rep), groups (rep, members), qualified rep pairs
+    * (doc_id, rep), groups (setkey, rep, members), qualified rep pairs
     * (ra, rb, na, nb, common), per-rep sorted member-id lists
     * (rep, mids) for closed-form member expansion, and two MEASURED
     * counts — total docs (= Σ|mids|, the member-list frames' broadcast
@@ -466,57 +447,42 @@ object Dedup {
     if (nDocs <= limit) broadcast(df) else df.hint("shuffle_hash")
   }
 
-  private val repPairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long, String), ContainmentFrames]
+  private val repPairMemo = SessionMemo[ContainmentFrames](
+      "containment", "documents") { f =>
+    SessionMemo.unpersist(f.membership, f.groups, f.pairs, f.memberLists)
+  }
 
   private def containmentRepFrames(s: SparkSession, d: String, tS: Long)
-      : ContainmentFrames = repPairCache.synchronized {
-    val fp = graft.core.Fingerprint.of(s, d, "documents")
-    // evict ALL stale-fingerprint entries for this (session, dir) —
-    // including ones memoized under other thresholds, which would
-    // otherwise hold executor storage until that threshold is queried
-    // again
-    repPairCache.keys
-      .filter(k => k._1 == s && k._2 == d && k._4 != fp)
-      .foreach { stale =>
-        repPairCache.remove(stale).foreach { f =>
-          Seq(f.membership, f.groups, f.pairs, f.memberLists).foreach(df =>
-            try df.unpersist() catch { case _: Throwable => () })
-        }
-      }
-    repPairCache.getOrElseUpdate((s, d, tS, fp), {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val docsToks = Tables.documents(s, d)
-        .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
-        .filter(size(col("toks")) > 0)
-      // tokens are whitespace-split, so no token can contain U+0001
-      val keyed = docsToks.withColumn("setkey",
-        md5(array_join(array_sort(col("toks")), "\u0001")))
-      val groups = keyed.groupBy("setkey")
-        .agg(min("doc_id").as("rep"), count(lit(1)).as("members"))
-        .persist(lvl)
-      val membership = keyed.select("doc_id", "setkey")
-        .join(groups.select("setkey", "rep"), Seq("setkey"))
-        .select(col("doc_id"), col("rep")).persist(lvl)
-      // per-rep SORTED member-id lists — the member-expansion frame:
-      // rep-count rows, Σ|mids| = corpus doc count. Sorted so the
-      // within-group position order (i < j) is also id order.
-      val memberLists = membership.groupBy("rep")
-        .agg(sort_array(collect_list(col("doc_id"))).as("mids"))
-        .persist(lvl)
-      // the materializing counts double as MEASURED plan inputs —
-      // nDocs is the broadcast payload (one long per doc) for
-      // memberListGated, nDocs/nReps the mean expansion factor for
-      // q121's rebalance gate; both frames persist here anyway
-      val nDocs = membership.count()
-      val nReps = memberLists.count()
-      val repToks = docsToks
-        .join(groups.select(col("rep").as("doc_id")), Seq("doc_id"))
-      val pairs = qualifiedSetPairs(repToks, tS).persist(lvl)
-      ContainmentFrames(membership,
-        groups.select(col("rep"), col("members")), pairs, memberLists,
-        nDocs, nReps)
-    })
+      : ContainmentFrames = repPairMemo(s, d, tS) {
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val docsToks = Tables.documents(s, d)
+      .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
+      .filter(size(col("toks")) > 0)
+    // tokens are whitespace-split, so no token can contain U+0001
+    val keyed = docsToks.withColumn("setkey",
+      md5(array_join(array_sort(col("toks")), "\u0001")))
+    val groups = keyed.groupBy("setkey")
+      .agg(min("doc_id").as("rep"), count(lit(1)).as("members"))
+      .persist(lvl)
+    val membership = keyed.select("doc_id", "setkey")
+      .join(groups.select("setkey", "rep"), Seq("setkey"))
+      .select(col("doc_id"), col("rep")).persist(lvl)
+    // per-rep SORTED member-id lists — the member-expansion frame:
+    // rep-count rows, Σ|mids| = corpus doc count. Sorted so the
+    // within-group position order (i < j) is also id order.
+    val memberLists = membership.groupBy("rep")
+      .agg(sort_array(collect_list(col("doc_id"))).as("mids"))
+      .persist(lvl)
+    // the materializing counts double as MEASURED plan inputs —
+    // nDocs is the broadcast payload (one long per doc) for
+    // memberListGated, nDocs/nReps the mean expansion factor for
+    // q121's rebalance gate; both frames persist here anyway
+    val nDocs = membership.count()
+    val nReps = memberLists.count()
+    val repToks = docsToks
+      .join(groups.select(col("rep").as("doc_id")), Seq("doc_id"))
+    val pairs = qualifiedSetPairs(repToks, tS).persist(lvl)
+    ContainmentFrames(membership, groups, pairs, memberLists, nDocs, nReps)
   }
 
   def q121ContainmentExact(s: SparkSession, d: String,
@@ -679,6 +645,21 @@ object Dedup {
     * distinct — every step shuffle-partitioned by key, no cross join,
     * which is exactly the 100 TB formulation.
     */
+  private val sigMemo = SessionMemo.frame("signatures", "documents")
+  private val candMemo = SessionMemo.frame("candidates", "documents")
+  private val hashMemo = SessionMemo.frame("content-hashes", "documents")
+
+  /** Memoized, persisted (doc_id, content md5) frame — the exact-dup
+    * half of the signature table: q76's exact check and the q69/q71
+    * contraction pre-pass (docReps) both consume it, so corpus text is
+    * md5-scanned once per (session, dir, fingerprint) rather than once
+    * per call.
+    */
+  def contentHashes(s: SparkSession, d: String): DataFrame =
+    hashMemo(s, d)(Tables.documents(s, d)
+      .select(col("doc_id"), md5(col("text")).as("h"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
   /** Memoized, persisted (doc_id, band, sig) LSH signature frames, keyed
     * by (session, dir, bands): q31, q32 and q39 all start from the same
     * signatures, so within one session the explode + min-agg subtree runs
@@ -687,112 +668,10 @@ object Dedup {
     * is #docs × #bands rows — tiny next to the corpus — so MEMORY_AND_DISK
     * persistence is safe at any scale the executors can hold the corpus.
     */
-  // key carries a content fingerprint of the documents table (listing +
-  // mtimes, graft.core.Fingerprint) so a corpus changing under a cached
-  // dir is DETECTED: the next lookup sees a new fingerprint, evicts the
-  // stale snapshot, and rebuilds — staleness is enforced, not documented
-  private val sigCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, String), DataFrame]
-  private val candCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, String), DataFrame]
-  private val hashCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
-  /** Memoized, persisted (doc_id, content md5) frame — the exact-dup
-    * half of the signature table: q76's exact check and the q69/q71
-    * contraction pre-pass (docReps) both consume it, so corpus text is
-    * md5-scanned once per (session, dir, fingerprint) rather than once
-    * per call. Same fingerprint-keyed staleness discipline as the other
-    * memos; hashCache is the INNERMOST lock (taken under compCache via
-    * docReps and directly by q76; never takes another).
-    */
-  def contentHashes(s: SparkSession, d: String): DataFrame =
-    hashCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents")
-      hashCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach { stale =>
-          hashCache.remove(stale).foreach { df =>
-            try df.unpersist() catch { case _: Throwable => () }
-          }
-        }
-      hashCache.getOrElseUpdate((s, d, fp),
-        Tables.documents(s, d)
-          .select(col("doc_id"), md5(col("text")).as("h"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
-
-  /** Drop every memoized signature AND candidate-pair frame (unpersisting
-    * live ones). Call when the documents under a cached dir change within
-    * a session (e.g. after a streaming ingest lands new files) or when
-    * embedding the engine in a long-lived JVM that cycles sessions — the
-    * memos are per-(session, dir) SNAPSHOTS and hold session references
-    * until cleared. Lock order is repPairCache (outermost), then
-    * triCache, then epairCache, then compCache, then prEdgeCache, then
-    * vpairCache, then candCache, then sigCache, then hashCache
-    * (innermost) — the same total order the builds take
-    * (components and verified pairs build candidates, candidates build
-    * signatures, each while holding its own lock; the embedding-pair
-    * build touches no other memo), so invalidation cannot deadlock
-    * against a build.
-    */
-  def invalidateSignatureCache(): Unit = repPairCache.synchronized {
-    triCache.synchronized {
-      epairCache.synchronized {
-        compCache.synchronized {
-          prEdgeCache.synchronized {
-           vpairCache.synchronized {
-            candCache.synchronized {
-              sigCache.synchronized {
-                hashCache.synchronized {
-                  (triCache.values ++ epairCache.values ++ compCache.values ++
-                    prEdgeCache.values.flatMap { case (e, ri) =>
-                      Seq(e, ri) } ++
-                    vpairCache.values ++
-                    candCache.values ++ sigCache.values ++ hashCache.values ++
-                    repPairCache.values.flatMap(f =>
-                      Seq(f.membership, f.groups, f.pairs, f.memberLists)))
-                    .foreach { df =>
-                      try df.unpersist() catch { case _: Throwable => () }
-                    }
-                  triCache.clear()
-                  epairCache.clear()
-                  compCache.clear()
-                  prEdgeCache.clear()
-                  vpairCache.clear()
-                  candCache.clear()
-                  sigCache.clear()
-                  hashCache.clear()
-                  repPairCache.clear()
-                }
-              }
-            }
-           }
-          }
-        }
-      }
-    }
-  }
-
-  // the synchronized block makes invalidate atomic against in-flight
-  // lookups (an unsynchronized getOrElseUpdate racing clear() could
-  // re-insert a stale frame, or persist one the clear never unpersists);
-  // building the lazy DataFrame holds the lock only briefly — no Spark
-  // job runs inside it
   def lshSignatures(s: SparkSession, d: String, bands: Int = 8): DataFrame =
-    sigCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents")
-      sigCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 == bands && k._4 != fp)
-        .foreach { stale =>
-          sigCache.remove(stale).foreach { df =>
-            try df.unpersist() catch { case _: Throwable => () }
-          }
-        }
-      sigCache.getOrElseUpdate((s, d, bands, fp),
-        signaturesFor(Tables.documents(s, d).select("doc_id", "text"), bands)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    sigMemo(s, d, bands)(
+      signaturesFor(Tables.documents(s, d).select("doc_id", "text"), bands)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** The LSH signature construction over an explicit (doc_id, text)
     * frame — the memo-free body of [[lshSignatures]], shared with the
@@ -847,25 +726,15 @@ object Dedup {
     * band count). Group-by produces exactly the distinct pair set.
     */
   def lshCandidateCounts(s: SparkSession, d: String, bands: Int = 8): DataFrame =
-    candCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents")
-      candCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 == bands && k._4 != fp)
-        .foreach { stale =>
-          candCache.remove(stale).foreach { df =>
-            try df.unpersist() catch { case _: Throwable => () }
-          }
-        }
-      candCache.getOrElseUpdate((s, d, bands, fp), {
-        val sig = lshSignatures(s, d, bands)
-        val a = sig.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-        val b = sig.select(col("doc_id").as("doc_b"), col("band"), col("sig"))
-        a.join(b, Seq("band", "sig"))
-          .filter(col("doc_a") < col("doc_b"))
-          .groupBy("doc_a", "doc_b")
-          .agg(count(lit(1)).as("n_match_bands"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    candMemo(s, d, bands) {
+      val sig = lshSignatures(s, d, bands)
+      val a = sig.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
+      val b = sig.select(col("doc_id").as("doc_b"), col("band"), col("sig"))
+      a.join(b, Seq("band", "sig"))
+        .filter(col("doc_a") < col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(count(lit(1)).as("n_match_bands"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def lshCandidatePairs(s: SparkSession, d: String, bands: Int = 8): DataFrame =
@@ -949,30 +818,14 @@ object Dedup {
   // (doc_id, component) labels, and the CC pass behind them is the
   // dominant cost of both at 20x (the production shape is identical —
   // component labels land in a table once per corpus version, every
-  // resolution/keeper pass reads it)
-  private val compCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  // resolution/keeper pass reads it). Unlike the sig/cand memos (whose
+  // builds only CONSTRUCT a lazy plan), this build runs the CC loop's
+  // jobs; a second thread asking for components waits for that result.
+  private val compMemo = SessionMemo.frame("components", "documents")
 
-  // unlike the sig/cand memos (whose builds only CONSTRUCT a lazy plan),
-  // building this entry runs the CC loop's jobs while holding the comp
-  // lock — intentional build-once semantics: a second thread asking for
-  // components has nothing useful to do but wait for the same result.
-  // Lock order stays comp → cand → sig (the loop consumes the candidate
-  // memo), so no deadlock against the other builders or invalidate.
   private def propagationComponents(s: SparkSession, d: String): DataFrame =
-    compCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents")
-      compCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach { stale =>
-          compCache.remove(stale).foreach { df =>
-            try df.unpersist() catch { case _: Throwable => () }
-          }
-        }
-      compCache.getOrElseUpdate((s, d, fp),
-        contractedComponents(s, d, connectedComponents(_, 20))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    compMemo(s, d)(contractedComponents(s, d, connectedComponents(_, 20))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   def q69DedupComponents(s: SparkSession, d: String, maxIters: Int = 20): DataFrame =
     // non-default maxIters bypasses the memo (it would change the labels
@@ -1424,26 +1277,12 @@ object Dedup {
   // q34 orders it, q87 closes over it, q157 reconciles it against the
   // media fingerprint graph, so the banded candidate join +
   // exact cosine verify runs once per (session, dir, corpus version)
-  // rather than once per consumer. Fingerprint-keyed like the doc-side
-  // memos; independent lock (builds touch no other memo, so it slots
-  // outermost in invalidate's total order without deadlock risk).
-  private val epairCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  // rather than once per consumer
+  private val epairMemo = SessionMemo.frame("embedding-pairs", "embeddings")
 
   private[graft] def embeddingNearDupPairs(s: SparkSession, d: String): DataFrame =
-    epairCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "embeddings")
-      epairCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach { stale =>
-          epairCache.remove(stale).foreach { df =>
-            try df.unpersist() catch { case _: Throwable => () }
-          }
-        }
-      epairCache.getOrElseUpdate((s, d, fp),
-        embeddingNearDupRaw(s, d, 0.4, 8, 8)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    epairMemo(s, d)(embeddingNearDupRaw(s, d, 0.4, 8, 8)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def embeddingNearDupRaw(s: SparkSession, d: String, threshold: Double,
       bands: Int, bitsPerBand: Int): DataFrame = {
@@ -1595,12 +1434,9 @@ object Dedup {
   // memoized, persisted expansion frame — q102 and q103 are two
   // projections of the SAME contracted-graph computation, so the
   // verify-join + triangle enumeration runs once per (session, dir,
-  // threshold, fingerprint). OUTERMOST lock in the memo order (its
-  // build calls contractedCandidatePairs → candCache/sigCache and
-  // docReps → compCache/hashCache while held; nothing takes it back).
-  // The frame is doc-sized (one stats row per doc) — safe to persist.
-  private val triCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Double, String), DataFrame]
+  // threshold, fingerprint). The frame is doc-sized (one stats row per
+  // doc) — safe to persist.
+  private val triMemo = SessionMemo.frame("triangles", "documents")
 
   /** The contracted verified near-dup graph + group map both graph
     * metrics run on: shingle-eligible docs grouped by content hash,
@@ -1608,23 +1444,9 @@ object Dedup {
     * expression once per GROUP pair, expanded via [[expandTriangles]].
     */
   private def expandedTriangleStats(s: SparkSession, d: String,
-      threshold: Double): DataFrame = triCache.synchronized {
-    val fp = graft.core.Fingerprint.of(s, d, "documents")
-    // stale-fp eviction must ignore the threshold: an entry cached
-    // under ANY threshold for this (session, dir) is stale once the
-    // fingerprint moves, and would otherwise stay persisted until an
-    // explicit invalidate
-    triCache.keys
-      .filter(k => k._1 == s && k._2 == d && k._4 != fp)
-      .foreach { stale =>
-        triCache.remove(stale).foreach { df =>
-          try df.unpersist() catch { case _: Throwable => () }
-        }
-      }
-    triCache.getOrElseUpdate((s, d, threshold, fp),
-      expandedTriangleStatsRaw(s, d, threshold)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+      threshold: Double): DataFrame =
+    triMemo(s, d, threshold)(expandedTriangleStatsRaw(s, d, threshold)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def expandedTriangleStatsRaw(s: SparkSession, d: String,
       threshold: Double): DataFrame = {
@@ -2000,51 +1822,38 @@ object Dedup {
     * re-persisted, not evicted here). Rep pairs verify through the ONE
     * shared [[verifyJaccardPairs]] over [[contractedCandidatePairs]],
     * so "verified pair" cannot diverge between q31's member frame and
-    * this graph. In the memo lock order prEdgeCache sits directly above
-    * vpairCache.
+    * this graph.
     */
-  private val prEdgeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (DataFrame, DataFrame)]
+  private val prEdgeMemo = SessionMemo[(DataFrame, DataFrame)](
+      "pagerank-graph", "documents") { case (e, ri) => SessionMemo.unpersist(e, ri) }
 
   private def pagerankGraph(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val membership = graft.ops.TextOps.textContraction(s, d)._2
-    val (redges, repInfo) = prEdgeCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents")
-      prEdgeCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach { stale =>
-          prEdgeCache.remove(stale).foreach { case (e, ri) =>
-            Seq(e, ri).foreach { df =>
-              try df.unpersist() catch { case _: Throwable => () }
-            }
-          }
-        }
-      prEdgeCache.getOrElseUpdate((s, d, fp), {
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val (repDocs, _) = graft.ops.TextOps.textContraction(s, d)
-        val repToks = repDocs
-          .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
-        val repPairs = verifyJaccardPairs(
-          contractedCandidatePairs(s, d), repToks, 0.6)
-          .select("doc_a", "doc_b")
-        val redges = symmetrizeEdges(repPairs)
-          .repartition(col("doc_a"))
-          .persist(lvl)
-        val copies = repDocs.select(col("doc_id").as("rep"), col("copies"))
-        val nbr = redges
-          .join(copies.select(col("rep").as("doc_b"), col("copies").as("cb")),
-            Seq("doc_b"))
-          .groupBy(col("doc_a").as("rep"))
-          .agg(sum("cb").as("nbr_copies"))
-        val repInfo = copies.join(nbr, Seq("rep"), "left")
-          .select(col("rep"), col("copies"),
-            (coalesce(col("nbr_copies"), lit(0L)) + col("copies") - lit(1L))
-              .as("deg"))
-          .persist(lvl)
-        repInfo.count()
-        (redges, repInfo)
-      })
+    val (redges, repInfo) = prEdgeMemo(s, d) {
+      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      val (repDocs, _) = graft.ops.TextOps.textContraction(s, d)
+      val repToks = repDocs
+        .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
+      val repPairs = verifyJaccardPairs(
+        contractedCandidatePairs(s, d), repToks, 0.6)
+        .select("doc_a", "doc_b")
+      val redges = symmetrizeEdges(repPairs)
+        .repartition(col("doc_a"))
+        .persist(lvl)
+      val copies = repDocs.select(col("doc_id").as("rep"), col("copies"))
+      val nbr = redges
+        .join(copies.select(col("rep").as("doc_b"), col("copies").as("cb")),
+          Seq("doc_b"))
+        .groupBy(col("doc_a").as("rep"))
+        .agg(sum("cb").as("nbr_copies"))
+      val repInfo = copies.join(nbr, Seq("rep"), "left")
+        .select(col("rep"), col("copies"),
+          (coalesce(col("nbr_copies"), lit(0L)) + col("copies") - lit(1L))
+            .as("deg"))
+        .persist(lvl)
+      repInfo.count()
+      (redges, repInfo)
     }
     (redges, repInfo, membership)
   }

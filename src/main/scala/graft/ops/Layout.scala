@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionMemo, Tables}
 
 /** Data-LAYOUT operators: multi-dimensional clustering (Z-order) and
   * small-file compaction — the table-maintenance half of running a
@@ -76,26 +76,10 @@ object Layout {
         min("sx").as("sx_min"), max("sx").as("sx_max"))
       .orderBy("zbucket")
 
-  // compacted-copy memo, fingerprint-keyed like every other session memo
-  // (a corpus changing under a cached dir is detected and re-compacted)
-  // key carries targetRecordsPerFile too: a non-default file-size request
-  // must build its own copy, not silently serve the default layout
-  private val compactCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, Long), String]
-
-  // per-JVM path component: two JVMs (parallel bench/test runs) sharing
-  // java.io.tmpdir must not Overwrite-compact onto a directory the other
-  // is actively reading; the session identity hash further separates
-  // cycled sessions inside one long-lived JVM
-  private val jvmNonce: String =
-    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      .replaceAll("[^A-Za-z0-9]", "_")
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val sub = f.listFiles()
-    if (sub != null) sub.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
+  // compacted-copy memo; the key carries targetRecordsPerFile too: a
+  // non-default file-size request must build its own copy, not silently
+  // serve the default layout
+  private val compactMemo = SessionMemo[String]("compact", "documents")(_ => ())
 
   /** Compact a parquet directory into ~`targetRecordsPerFile`-row files,
     * range-clustered and sorted by `rangeCol`: one count to size the
@@ -128,24 +112,9 @@ object Layout {
     */
   def q80CompactRoundtrip(s: SparkSession, d: String,
       targetRecordsPerFile: Long = 200): DataFrame = {
-    val out = compactCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents")
-      compactCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach { stale =>
-          // a stale fingerprint means the corpus changed: the superseded
-          // compacted copy is unreachable (path carries the fingerprint)
-          // — delete it rather than leak tmpdir space for the JVM's life
-          compactCache.remove(stale)
-            .foreach(p => deleteRecursively(new java.io.File(p)))
-        }
-      compactCache.getOrElseUpdate((s, d, fp, targetRecordsPerFile), {
-        val p = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft-compact/$jvmNonce/${System.identityHashCode(s)}/" +
-            s"${fp.replace("-", "").take(16)}-t$targetRecordsPerFile").getAbsolutePath
-        compact(Tables.documents(s, d), p, targetRecordsPerFile, "doc_id")
-        p
-      })
+    val out = compactMemo.onDisk(s, d, targetRecordsPerFile) { dir =>
+      compact(Tables.documents(s, d), dir, targetRecordsPerFile, "doc_id")
+      dir
     }
     s.read.parquet(out)
       .select("doc_id", "text", "lang", "source", "n_chars")

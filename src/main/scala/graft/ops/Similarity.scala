@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{SessionMemo, Tables}
 import graft.functions.VectorFunctions._
 import graft.functions.Round._
 
@@ -31,24 +31,12 @@ object Similarity {
   // q132/q140/q142 (k=3) each consume it, and before this memo each
   // PAID it (three full brute-force scans per bench sweep at k=3 alone).
   // The memoized frame is |queries|·k rows — trivially persistable at
-  // any scale the q40 broadcast caveat already admits. Standalone lock:
-  // the build touches no other memo, and no other memo takes this one.
-  private val exactCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, String), DataFrame]
-
-  /** Drop memoized exact-top-k frames (unpersisting live ones) — same
-    * contract as [[invalidateIvfCache]].
-    */
-  def invalidateExactTopKCache(): Unit = exactCache.synchronized {
-    exactCache.values.foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    }
-    exactCache.clear()
-  }
+  // any scale the q40 broadcast caveat already admits.
+  private val exactMemo = SessionMemo.frame("exact-topk", "embeddings")
 
   /** Brute-force cosine top-k for a deterministic query subset
     * (vec_id % 50 == 0), excluding self-matches. Memoized per
-    * (session, dir, k, corpus-fingerprint) — see `exactCache` above.
+    * (session, dir, k, corpus-fingerprint) — see `exactMemo` above.
     *
     * SCALE ASSUMPTION (do not lift this pattern blindly): `broadcast(q)`
     * is correct only because the QUERY SET is assumed bounded (a fixed
@@ -70,19 +58,8 @@ object Similarity {
     * discipline).
     */
   def q40CosineTopK(s: SparkSession, d: String, k: Int = 5): DataFrame =
-    exactCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "embeddings")
-      exactCache.keys
-        .filter(key => key._1 == s && key._2 == d && key._4 != fp)
-        .foreach { stale =>
-          exactCache.remove(stale).foreach { df =>
-            try df.unpersist() catch { case _: Throwable => () }
-          }
-        }
-      exactCache.getOrElseUpdate((s, d, k, fp),
-        buildExactTopK(s, d, k)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    exactMemo(s, d, k)(buildExactTopK(s, d, k)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def buildExactTopK(s: SparkSession, d: String, k: Int): DataFrame = {
     import s.implicits._
@@ -128,7 +105,7 @@ object Similarity {
       .orderBy("query_id")
   }
 
-  // q166's memo — the exactCache discipline keyed on the PREDICATE
+  // q166's memo — q40's memo keyed on the PREDICATE
   // (this is the label-filtered variant of the exact scan): the r12
   // verdict's alternative of one shared scan at k' = k + max label
   // multiplicity is ruled out by the data — labels are 10-ary with
@@ -137,8 +114,7 @@ object Similarity {
   // most of the pair space. Instead the filtered scan pays once per
   // (session, corpus) and every later execution reads the persisted
   // |Q|·k frame — same build-once/probe-many economics as q40's memo.
-  private val hardNegCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, String), DataFrame]
+  private val hardNegMemo = SessionMemo.frame("hard-negatives", "embeddings")
 
   /** HARD-NEGATIVE MINING (q166) — for each anchor (q40's `vec_id % 50`
     * query set), the top-k most-similar candidates with a DIFFERENT
@@ -151,19 +127,8 @@ object Similarity {
     * the scale paths for the scan itself remain q41/q48.
     */
   def q166HardNegatives(s: SparkSession, d: String, k: Int = 3): DataFrame =
-    hardNegCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "embeddings")
-      hardNegCache.keys
-        .filter(key => key._1 == s && key._2 == d && key._4 != fp)
-        .foreach { stale =>
-          hardNegCache.remove(stale).foreach { df =>
-            try df.unpersist() catch { case _: Throwable => () }
-          }
-        }
-      hardNegCache.getOrElseUpdate((s, d, k, fp),
-        buildHardNegatives(s, d, k)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    hardNegMemo(s, d, k)(buildHardNegatives(s, d, k)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def buildHardNegatives(s: SparkSession, d: String, k: Int): DataFrame = {
     import s.implicits._
@@ -270,11 +235,8 @@ object Similarity {
     * longs per iteration) — the same bounded-artifact discipline as
     * q153's merge table.
     */
-  // key carries a content fingerprint of the embeddings table (listing +
-  // mtimes, graft.core.Fingerprint) so a corpus changing under a cached
-  // dir evicts the stale quantizer instead of silently probing it
-  private val ivfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, String), (Array[Array[Long]], Long)]
+  private val ivfMemo =
+    SessionMemo[(Array[Array[Long]], Long)]("ivf-quantizer", "embeddings")(_ => ())
 
   /** Lloyd iteration CAP — the oracle unrolls exactly this many
     * assignment+update CTE blocks and picks the stop iteration from
@@ -290,13 +252,6 @@ object Similarity {
     * corpora nor keep refining on hard ones.
     */
   private[graft] val IvfConvergeEps = 1000L
-
-  /** Drop memoized quantizers — the IVF analog of
-    * [[graft.ops.Dedup.invalidateSignatureCache]]; call it for the same
-    * reasons (corpus changed under a cached dir, or session cycling in
-    * a long-lived JVM).
-    */
-  def invalidateIvfCache(): Unit = ivfCache.synchronized { ivfCache.clear() }
 
   /** Embedding → integer micro-unit vector (the q88 scaling idiom,
     * element-wise). Exact: float→double is exact, and the floor lands
@@ -387,14 +342,8 @@ object Similarity {
     val e = Tables.embeddings(s, d)
       .withColumn("nrm", norm(col("embedding")))
       .withColumn("mvec", microVec(col("embedding")))
-    val (cents, nIters) = ivfCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "embeddings")
-      ivfCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 == nCentroids && k._4 != fp)
-        .foreach(ivfCache.remove)
-      ivfCache.getOrElseUpdate((s, d, nCentroids, fp),
-        fitKMeans(e.select("vec_id", "mvec"), nCentroids))
-    }
+    val (cents, nIters) =
+      ivfMemo(s, d, nCentroids)(fitKMeans(e.select("vec_id", "mvec"), nCentroids))
     (cents, nIters, withAssignment(e, cents)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("centroid")))
   }
@@ -561,15 +510,18 @@ object Similarity {
       k: Int = 3): DataFrame =
     ivfProbe(s.table(table), s.table(table + "_centroids"), nProbe, k)
 
-  // build-once memo for q70's index table, keyed like every other session
-  // memo (fingerprint detects a corpus changing under a cached dir; the
-  // table NAME carries the fingerprint, so a stale entry can never be
-  // probed by name collision either)
-  private val indexTableCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, String), String]
+  // build-once memo for q70's index table, held with its session (the
+  // release drops the tables there): the table name is the last
+  // component of the key's scratch dir, so no two keys (another
+  // geometry, corpus version or session) share a table or its files
+  private val indexTableMemo = SessionMemo[(SparkSession, String)](
+      "ivf-index", "embeddings") { case (s, tbl) =>
+    Seq(tbl, tbl + "_centroids").foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+  }
 
   /** The persisted-index probe as a driver-visible query: build the
-    * bucketed index table once per (session, corpus fingerprint) — the
+    * bucketed index table once per (session, nCentroids, corpus
+    * fingerprint) — the
     * production build-once half — then answer ENTIRELY from the table
     * via [[ivfProbeIndexed]] (no KMeans fit on the probe path; the
     * quantizer is read from `<table>_centroids`). Output is identical to
@@ -590,27 +542,14 @@ object Similarity {
     */
   private[graft] def ivfIndexTable(s: SparkSession, d: String,
       nCentroids: Int = 8): String =
-    indexTableCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "embeddings")
-      indexTableCache.keys
-        .filter(t => t._1 == s && t._2 == d && t._3 == nCentroids && t._4 != fp)
-        .foreach { stale =>
-          indexTableCache.remove(stale).foreach { tbl =>
-            s.sql(s"DROP TABLE IF EXISTS $tbl")
-            s.sql(s"DROP TABLE IF EXISTS ${tbl}_centroids")
-          }
-        }
-      indexTableCache.getOrElseUpdate((s, d, nCentroids, fp), {
-        val tbl = "graft_ivf_" + fp.replace("-", "").take(16)
-        val loc = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft-ivf/$tbl").getAbsolutePath
-        // Overwrite: the in-memory catalog starts empty per session, but
-        // a previous session's files may linger at the external location
-        buildIvfIndex(s, d, tbl, nCentroids, buckets = 8,
-          mode = org.apache.spark.sql.SaveMode.Overwrite, path = Some(loc))
-        tbl
-      })
-    }
+    indexTableMemo.onDisk(s, d, nCentroids) { dir =>
+      val tbl = "graft_ivf_" + new java.io.File(dir).getName
+      // Overwrite: the in-memory catalog starts empty per session, but
+      // a previous JVM's files may linger at the external location
+      buildIvfIndex(s, d, tbl, nCentroids, buckets = 8,
+        mode = org.apache.spark.sql.SaveMode.Overwrite, path = Some(s"$dir/index"))
+      (s, tbl)
+    }._2
 
   /** Probe a persisted IVF index with an EXTERNAL query frame
     * (vec_id, embedding) — the per-batch computation of the at-ingest
@@ -1237,11 +1176,10 @@ object Similarity {
     */
   private[graft] val PqSubK = 16
 
-  // fingerprint-keyed like ivfCache; holds (codebooks(m)(code)(dim),
-  // per-subspace residual-stop iteration counts, subDim)
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String),
-      (Array[Array[Array[Long]]], Array[Long], Int)]
+  // holds (codebooks(m)(code)(dim), per-subspace residual-stop
+  // iteration counts, subDim)
+  private val pqMemo = SessionMemo[(Array[Array[Array[Long]]], Array[Long], Int)](
+    "pq-codebooks", "embeddings")(_ => ())
 
   /** Fit-or-fetch the PQ codebooks at `d`: PqM independent
     * [[fitKMeans]] runs over the micro-unit subvector slices. The seed
@@ -1251,23 +1189,17 @@ object Similarity {
     */
   private[graft] def pqCodebooks(s: SparkSession, d: String)
       : (Array[Array[Array[Long]]], Array[Long], Int) =
-    pqCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "embeddings")
-      pqCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach(pqCache.remove)
-      pqCache.getOrElseUpdate((s, d, fp), {
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id"), microVec(col("embedding")).as("mvec"))
-        val dims = e.select(size(col("mvec"))).head().getInt(0)
-        require(dims % PqM == 0, s"PQ: dims=$dims not divisible by PqM=$PqM")
-        val subDim = dims / PqM
-        val fits = (0 until PqM).map { m =>
-          fitKMeans(e.select(col("vec_id"),
-            slice(col("mvec"), m * subDim + 1, subDim).as("mvec")), PqSubK)
-        }
-        (fits.map(_._1).toArray, fits.map(_._2).toArray, subDim)
-      })
+    pqMemo(s, d) {
+      val e = Tables.embeddings(s, d)
+        .select(col("vec_id"), microVec(col("embedding")).as("mvec"))
+      val dims = e.select(size(col("mvec"))).head().getInt(0)
+      require(dims % PqM == 0, s"PQ: dims=$dims not divisible by PqM=$PqM")
+      val subDim = dims / PqM
+      val fits = (0 until PqM).map { m =>
+        fitKMeans(e.select(col("vec_id"),
+          slice(col("mvec"), m * subDim + 1, subDim).as("mvec")), PqSubK)
+      }
+      (fits.map(_._1).toArray, fits.map(_._2).toArray, subDim)
     }
 
   /** The encode as an un-ordered frame (one row per (vec, subspace)):
@@ -1485,27 +1417,16 @@ object Similarity {
     */
   final case class HybridIndex(postings: DataFrame, dfTable: DataFrame,
       totals: DataFrame, membership: DataFrame, corpus: DataFrame) {
-    def unpersist(): Unit =
-      Seq(postings, dfTable).foreach { f =>
-        try { f.unpersist(); (): Unit } catch { case _: Throwable => () }
-      }
+    def unpersist(): Unit = SessionMemo.unpersist(postings, dfTable)
   }
 
-  // fingerprint-keyed session memo for the batch surfaces (q172 and the
-  // bench re-runs) — the exactCache discipline; the streaming twin
-  // builds its own caller-owned index instead
-  private val hybridCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), HybridIndex]
+  // session memo for the batch surfaces (q172 and the bench re-runs);
+  // the streaming twin builds its own caller-owned index instead
+  private val hybridMemo = SessionMemo[HybridIndex](
+    "hybrid-index", "documents", "embeddings")(_.unpersist())
 
   private[graft] def hybridIndex(s: SparkSession, d: String): HybridIndex =
-    hybridCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents") + ":" +
-        graft.core.Fingerprint.of(s, d, "embeddings")
-      hybridCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach(stale => hybridCache.remove(stale).foreach(_.unpersist()))
-      hybridCache.getOrElseUpdate((s, d, fp), buildHybridIndex(s, d))
-    }
+    hybridMemo(s, d)(buildHybridIndex(s, d))
 
   private[graft] def buildHybridIndex(s: SparkSession, d: String)
       : HybridIndex = {
@@ -1816,27 +1737,16 @@ object Similarity {
     * query. At 100 TB the cost is the two corpus scans, independent of
     * |Q|, exactly what a feature-fetch stage costs in production.
     */
-  // fingerprint-keyed memo of q172's fused top-10 — the |Q|·10-row
+  // memo of q172's fused top-10 — the |Q|·10-row
   // frame q175 consumes (the q166-rides-the-q40-memo discipline: a
   // rerank stage consumes the retrieval stage's PERSISTED output, it
   // does not recompute retrieval per scoring pass; localCheckpoint is
   // allowed here because the frame is memo-shared, the round-13 leak
   // rule). q172 itself stays a live registered plan.
-  private val fusedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  private val fusedMemo = SessionMemo.frame("fused-top10", "documents", "embeddings")
 
   private[graft] def fusedTop10(s: SparkSession, d: String): DataFrame =
-    fusedCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents") + ":" +
-        graft.core.Fingerprint.of(s, d, "embeddings")
-      fusedCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach(stale => fusedCache.remove(stale).foreach { f =>
-          try { f.unpersist(); (): Unit } catch { case _: Throwable => () }
-        })
-      fusedCache.getOrElseUpdate((s, d, fp),
-        q172HybridQueryRrf(s, d).localCheckpoint(false))
-    }
+    fusedMemo(s, d)(q172HybridQueryRrf(s, d).localCheckpoint(false))
 
   def q175CeRerank(s: SparkSession, d: String): DataFrame = {
     import graft.functions.TextFunctions.tokens
@@ -1950,23 +1860,15 @@ object Similarity {
   /** The driver-held k-center model: (rk, vec_id, sel_d2, micro-vector)
     * per selected exemplar plus the coverage radius — the whole state
     * q171, q173 and the ingest drift monitor share. Memoized like the
-    * quantizer ([[ivfCache]] discipline): k·dims longs, fit once per
-    * (session, corpus, k).
+    * quantizer: k·dims longs, fit once per (session, corpus, k).
     */
-  private val kcCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, String),
-      (Vector[(Long, Long, Option[Long], Array[Long])], Long)]
+  private val kcMemo =
+    SessionMemo[(Vector[(Long, Long, Option[Long], Array[Long])], Long)](
+      "kcenter", "embeddings")(_ => ())
 
   private[graft] def kcenterFit(s: SparkSession, d: String, k: Int)
       : (Vector[(Long, Long, Option[Long], Array[Long])], Long) =
-    kcCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "embeddings")
-      kcCache.keys
-        .filter(key => key._1 == s && key._2 == d && key._3 == k &&
-          key._4 != fp)
-        .foreach(kcCache.remove)
-      kcCache.getOrElseUpdate((s, d, k, fp), runKcenterFit(s, d, k))
-    }
+    kcMemo(s, d, k)(runKcenterFit(s, d, k))
 
   private def runKcenterFit(s: SparkSession, d: String, k: Int)
       : (Vector[(Long, Long, Option[Long], Array[Long])], Long) = {

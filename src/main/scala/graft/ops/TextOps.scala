@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{SessionMemo, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.Round._
 import org.apache.spark.sql.graft.Bridge
@@ -1016,23 +1016,11 @@ object TextOps {
   // (~1/3 of corpus bytes) — at 100 TB this persists as a LANDED TABLE
   // (the production shape: chunk once, every dedup pass reads it), and
   // MEMORY_AND_DISK spills the in-session equivalent to local disk.
-  private val chunkCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  private val chunkMemo = SessionMemo.frame("chunks", "documents")
 
   private def contentChunks(s: SparkSession, d: String): DataFrame =
-    chunkCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents")
-      chunkCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach { stale =>
-          chunkCache.remove(stale).foreach { df =>
-            try df.unpersist() catch { case _: Throwable => () }
-          }
-        }
-      chunkCache.getOrElseUpdate((s, d, fp),
-        contentChunksOf(Tables.documents(s, d))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    chunkMemo(s, d)(contentChunksOf(Tables.documents(s, d))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   def q108ContentChunks(s: SparkSession, d: String): DataFrame =
     contentChunks(s, d)
@@ -1855,33 +1843,23 @@ object TextOps {
   // memoized like [[textContraction]]'s frames: FOUR queries consume
   // the bench-split contraction (q143, q152, q74, q86) — one build per
   // (session, dir, corpus version), both frames persisted.
-  private val benchContractionCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (DataFrame, DataFrame)]
+  private val benchContractionMemo = SessionMemo[(DataFrame, DataFrame)](
+      "bench-contraction", "documents") { case (a, b) => SessionMemo.unpersist(a, b) }
 
   private def benchSideContraction(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    benchContractionCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents")
-      benchContractionCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach { stale =>
-          benchContractionCache.remove(stale).foreach { case (a, b) =>
-            try { a.unpersist(); b.unpersist() } catch { case _: Throwable => () }
-          }
-        }
-      benchContractionCache.getOrElseUpdate((s, d, fp), {
-        val base = Tables.documents(s, d)
-          .select(col("doc_id"), col("text"),
-            (col("doc_id") % 100 === 0).as("is_bench"), md5(col("text")).as("h"))
-        val reps = base.groupBy("is_bench", "h").agg(min("doc_id").as("rep"))
-        val membership = base.select("is_bench", "h", "doc_id")
-          .join(reps, Seq("is_bench", "h"))
-          .select(col("is_bench"), col("doc_id"), col("rep"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val g = base.join(reps.select(col("rep").as("doc_id")), Seq("doc_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (g, membership)
-      })
+    benchContractionMemo(s, d) {
+      val base = Tables.documents(s, d)
+        .select(col("doc_id"), col("text"),
+          (col("doc_id") % 100 === 0).as("is_bench"), md5(col("text")).as("h"))
+      val reps = base.groupBy("is_bench", "h").agg(min("doc_id").as("rep"))
+      val membership = base.select("is_bench", "h", "doc_id")
+        .join(reps, Seq("is_bench", "h"))
+        .select(col("is_bench"), col("doc_id"), col("rep"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val g = base.join(reps.select(col("rep").as("doc_id")), Seq("doc_id"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (g, membership)
     }
 
   /** DECONTAMINATION REWRITE (q152) — the intervention the
@@ -2221,34 +2199,24 @@ object TextOps {
   // md5-groupBy + membership join even on dup-free corpora — the memo
   // makes the no-dup overhead a one-off per session instead of
   // per-query. Both frames persist; eviction unpersists both.
-  private val contractionCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (DataFrame, DataFrame)]
+  private val contractionMemo = SessionMemo[(DataFrame, DataFrame)](
+      "contraction", "documents") { case (a, b) => SessionMemo.unpersist(a, b) }
 
   private[ops] def textContraction(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    contractionCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents")
-      contractionCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach { stale =>
-          contractionCache.remove(stale).foreach { case (a, b) =>
-            try { a.unpersist(); b.unpersist() } catch { case _: Throwable => () }
-          }
-        }
-      contractionCache.getOrElseUpdate((s, d, fp), {
-        val base = Tables.documents(s, d)
-          .select(col("doc_id"), col("text"), md5(col("text")).as("h_text"))
-        val reps = base.groupBy("h_text")
-          .agg(min("doc_id").as("rep"), count(lit(1)).as("copies"))
-        val membership = base.select("h_text", "doc_id")
-          .join(reps.select("h_text", "rep"), Seq("h_text"))
-          .select(col("rep"), col("doc_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val repDocs = base
-          .join(reps.select(col("rep").as("doc_id"), col("copies")), Seq("doc_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (repDocs, membership)
-      })
+    contractionMemo(s, d) {
+      val base = Tables.documents(s, d)
+        .select(col("doc_id"), col("text"), md5(col("text")).as("h_text"))
+      val reps = base.groupBy("h_text")
+        .agg(min("doc_id").as("rep"), count(lit(1)).as("copies"))
+      val membership = base.select("h_text", "doc_id")
+        .join(reps.select("h_text", "rep"), Seq("h_text"))
+        .select(col("rep"), col("doc_id"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val repDocs = base
+        .join(reps.select(col("rep").as("doc_id"), col("copies")), Seq("doc_id"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (repDocs, membership)
     }
 
   /** One inclusive [lo, hi] token-position interval — the element of
@@ -3102,25 +3070,12 @@ object TextOps {
   // memoized, persisted per-source sketch frame — q160 AND q161 consume
   // it, and without the memo each paid the full corpus scan + shingle
   // explode (measured 7.2 s + 7.4 s at the 20× stress corpus for a
-  // #sources-row result). Fingerprint-keyed like every session memo;
-  // standalone lock (the build touches no other memo).
-  private val kmvCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+  // #sources-row result).
+  private val kmvMemo = SessionMemo.frame("kmv-sketches", "documents")
 
   private def kmvSketches(s: SparkSession, d: String): DataFrame =
-    kmvCache.synchronized {
-      val fp = graft.core.Fingerprint.of(s, d, "documents")
-      kmvCache.keys
-        .filter(k => k._1 == s && k._2 == d && k._3 != fp)
-        .foreach { stale =>
-          kmvCache.remove(stale).foreach { df =>
-            try df.unpersist() catch { case _: Throwable => () }
-          }
-        }
-      kmvCache.getOrElseUpdate((s, d, fp),
-        kmvSketchesRaw(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    }
+    kmvMemo(s, d)(kmvSketchesRaw(s, d)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   private def kmvSketchesRaw(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

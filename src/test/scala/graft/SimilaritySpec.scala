@@ -126,6 +126,37 @@ class SimilaritySpec extends AnyFunSuite {
       inSession.exceptAll(again).count() == 0L)
   }
 
+  test("q70 index memo: a second geometry for the corpus does not replace the first's index") {
+    val at8 = Similarity.q70IvfProbeIndexed(spark, sf, nCentroids = 8).collect().toSeq
+    Similarity.q70IvfProbeIndexed(spark, sf, nCentroids = 16).collect()
+    val again8 = Similarity.q70IvfProbeIndexed(spark, sf, nCentroids = 8).collect().toSeq
+    val fresh8 = Similarity.q70IvfProbeIndexed(spark.newSession(), sf, nCentroids = 8)
+      .collect().toSeq
+    val at16 = Similarity.q48IvfAnn(spark, sf, nCentroids = 16).collect().toSeq
+    assert(again8.sortBy(_.toString) == fresh8.sortBy(_.toString),
+      "the nCentroids = 8 entry served another geometry's index")
+    assert(at8.sortBy(_.toString) == fresh8.sortBy(_.toString))
+    assert(at16.sortBy(_.toString) != fresh8.sortBy(_.toString),
+      "the fixture must tell the two geometries apart")
+  }
+
+  test("q70 index memo: a rewritten corpus deletes the superseded index directory") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("ivf_memo").toString
+    def write(n: Int): Unit =
+      graft.core.Tables.embeddings(spark, sf).filter($"vec_id" < n).write.mode("overwrite")
+        .parquet(s"$dir/embeddings.parquet")
+    def indexDir(): java.nio.file.Path = java.nio.file.Path.of(new java.net.URI(
+      spark.table(Similarity.ivfIndexTable(spark, dir)).inputFiles.head)).getParent
+    write(400)
+    val old = indexDir()
+    assert(java.nio.file.Files.exists(old))
+    write(300)
+    val fresh = indexDir()
+    assert(fresh != old && !java.nio.file.Files.exists(old),
+      s"superseded index directory $old is left on disk")
+  }
+
   test("persisted IVF index: probe-from-table equals the in-session q48 result") {
     val warehouse = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     Seq("ivf_idx", "ivf_idx_centroids").foreach { t =>

@@ -442,9 +442,13 @@ class TextDedupSimSpec extends AnyFunSuite {
   }
 
   test("signature cache: invalidate unpersists and clears the memo") {
-    ops.Dedup.lshSignatures(spark, sf) // populate
+    val sig = ops.Dedup.lshSignatures(spark, sf) // populate
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
-    ops.Dedup.invalidateSignatureCache()
+    graft.core.SessionMemo.invalidate()
+    assert(sig.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "invalidate left the signature frame persisted")
+    assert(!(ops.Dedup.lshSignatures(spark, sf) eq sig),
+      "invalidate left the signature memo entry in place")
     // re-running after invalidation recomputes and re-persists cleanly
     assert(ops.Dedup.q32MinHashLsh(spark, sf).count() >= 0L)
   }
@@ -572,7 +576,7 @@ class TextDedupSimSpec extends AnyFunSuite {
     assert(want156.nonEmpty)
     // band-vector memo staleness: the corpus changing under the cached
     // dir must evict the persisted frame, not serve it stale (the
-    // contraction-memo discipline, applied to phashCache)
+    // contraction-memo discipline, applied to the phash memo)
     Thread.sleep(1100) // mtime granularity
     Seq((0L, base, "en", "s0", base.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
