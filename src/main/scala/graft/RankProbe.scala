@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Measurement probe for [[graft.ops.ScalarSuites.rankWithKnownCount]]'s
-  * size guard (r17): times [[graft.ops.ScalarSuites.boundedRank]]'s
-  * single-task sort against [[graft.ops.ScalarSuites.globalRank]]'s
-  * distributed rank on synthetic unique-key frames of growing size,
-  * timing with the noop sink (guide §1.4 — count() would let the
+/** Measurement probe for [[graft.ops.ScalarSuites.rank]]'s single-task
+  * bound (r17): times its single-task sort (a known row bound) against
+  * its range path (no bound) on synthetic unique-key frames of growing
+  * size, timing with the noop sink (guide §1.4 — count() would let the
   * optimizer prune the rank itself). Not a registered query; the
-  * committed evidence for graft.rank.boundedMaxRows' default lives in
-  * OPTIMIZATION_r17.md §rank-crossover.
+  * committed evidence for [[graft.ops.ScalarSuites.SingleTaskMaxRows]]
+  * lives in OPTIMIZATION_r17.md §rank-crossover.
   *
   * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.RankProbe"
   */
@@ -37,18 +36,19 @@ object RankProbe {
 
     val sizes = Seq(17, 19, 21, 22, 23, 24).map(b => 1L << b)
     // warm codegen/classloading on a small frame
-    Seq(
-      () => ScalarSuites.boundedRank(frame(1000), Seq(col("v"), col("id"))),
-      () => ScalarSuites.globalRank(frame(1000), Seq(col("v"), col("id")))
-    ).foreach(f => timeNoop(f()))
+    val sort = Seq(col("v"), col("id"))
+    def singleTask(df: org.apache.spark.sql.DataFrame) =
+      ScalarSuites.rank(df, sort, maxRows = Some(1L))
+    def range(df: org.apache.spark.sql.DataFrame) = ScalarSuites.rank(df, sort)
+    Seq(singleTask(frame(1000)), range(frame(1000))).foreach(timeNoop(_))
     val rows = sizes.map { n =>
       val df = frame(n)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count() // materialize so both variants read the same cache
       val tb = (1 to 3).map(_ =>
-        timeNoop(ScalarSuites.boundedRank(df, Seq(col("v"), col("id"))))).min
+        timeNoop(singleTask(df))).min
       val tg = (1 to 3).map(_ =>
-        timeNoop(ScalarSuites.globalRank(df, Seq(col("v"), col("id"))))).min
+        timeNoop(range(df))).min
       df.unpersist()
       f"""{"n":$n,"bounded_sec":$tb%.3f,"global_sec":$tg%.3f}"""
     }

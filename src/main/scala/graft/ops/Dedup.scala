@@ -356,12 +356,11 @@ object Dedup {
     val nReps = repToks.count()
     if (vocab <= 2048 && nReps <= 20000) {
       val nw = math.max(((vocab + 63) / 64).toInt, 1)
-      // dictionary ids via boundedRank (r16) — V is guard-bounded
-      // (≤ 2048), exactly the k-bounded contract: a single-task sort of
-      // ≤ 2048 tokens beats the distributed rank's exchange machinery,
-      // and no no-key window enters the plan either way
+      // dictionary ids: V is guard-bounded (≤ 2048), so rank takes its
+      // single-task sort — cheaper than the range path's exchange
+      // machinery at 2048 tokens, and no no-key window either way
       val ids = ScalarSuites
-        .boundedRank(dfreq.select("token"), Seq(col("token")), "rank")
+        .rank(dfreq.select("token"), Seq(col("token")), maxRows = Some(vocab))
         .select(col("token"), (col("rank") - 1L).cast("int").as("id"))
       val masks = tok.join(broadcast(ids), Seq("token"))
         .groupBy("doc_id").agg(collect_set(col("id")).as("ids"),
@@ -1435,8 +1434,12 @@ object Dedup {
   // projections of the SAME contracted-graph computation, so the
   // verify-join + triangle enumeration runs once per (session, dir,
   // threshold, fingerprint). The frame is doc-sized (one stats row per
-  // doc) — safe to persist.
-  private val triMemo = SessionMemo.frame("triangles", "documents")
+  // doc) — safe to persist. The entry also holds the two checkpoint
+  // frames the expansion reads and releases them with it: nothing else
+  // unpersists them, and something outside the memo keeps their RDDs
+  // reachable, so GC never frees them either.
+  private val triMemo = SessionMemo[(DataFrame, DataFrame, DataFrame)](
+      "triangles", "documents") { case (t, g, e) => SessionMemo.unpersist(t, g, e) }
 
   /** The contracted verified near-dup graph + group map both graph
     * metrics run on: shingle-eligible docs grouped by content hash,
@@ -1445,11 +1448,18 @@ object Dedup {
     */
   private def expandedTriangleStats(s: SparkSession, d: String,
       threshold: Double): DataFrame =
-    triMemo(s, d, threshold)(expandedTriangleStatsRaw(s, d, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    triMemo(s, d, threshold) {
+      val (groups, repEdges) = triangleGraph(s, d, threshold)
+      (expandTriangles(repEdges, groups)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+        groups, repEdges)
+    }._1
 
-  private def expandedTriangleStatsRaw(s: SparkSession, d: String,
-      threshold: Double): DataFrame = {
+  /** (groups, repEdges): the group map and the verified contracted
+    * edges, both lazily checkpointed.
+    */
+  private def triangleGraph(s: SparkSession, d: String,
+      threshold: Double): (DataFrame, DataFrame) = {
     val eligible = Tables.documents(s, d)
       .select(col("doc_id"),
         size(shingles3(tokens(col("text")))).as("nsh"))
@@ -1485,7 +1495,7 @@ object Dedup {
       // kernels checkpoint at); eager=false so the memo's persist is
       // the materializing action.
       .localCheckpoint(eager = false)
-    expandTriangles(repEdges, groups)
+    (groups, repEdges)
   }
 
   /** Exact per-doc triangle counts of the BLOWN-UP graph from its
@@ -1670,12 +1680,10 @@ object Dedup {
       .select("source", "effective", "quota")
     val draw = elig
       .withColumn("hk", md5(concat(col("doc_id").cast("string"), lit("-dmix"))))
-    // hk is an md5 hex key → the hash-bucket rank applies (r17): one
-    // hash exchange, no range-sampler pass over the component join
-    ScalarSuites.groupedRank(draw, Seq("source"),
-        Seq(col("hk"), col("doc_id")), rankCol = "rk",
-        bucket = Some(ScalarSuites.hexPrefixBucket(col("hk"),
-          ScalarSuites.rankBuckets(s))))
+    // hk is an md5 hex key → the hash-bucket rank (r17): one hash
+    // exchange, no range-sampler pass over the component join
+    ScalarSuites.rank(draw, Seq(col("hk"), col("doc_id")), "rk",
+        groupCols = Seq("source"), md5Lead = true)
       .join(broadcast(quota), Seq("source"))
       .filter(col("rk") <= col("quota"))
       .select(col("source"), col("doc_id"), col("rk"), col("effective"),
@@ -2016,8 +2024,8 @@ object Dedup {
     * multi-pass diagnostic: a pair found by only one key is the
     * blind-spot evidence for the other).
     *
-    * Scale shape: the rank is [[graft.ops.ScalarSuites.globalRank]]
-    * (range-partitioned sort + zipWithIndex — NOT a no-key window; the
+    * Scale shape: the rank is [[graft.ops.ScalarSuites.rank]]'s range
+    * path (range-partitioned sort + row positions — NOT a no-key window; the
     * frame carries (24-char key, id) only, never text). Window pairs
     * come from an EQUALITY join on rank blocks of B = 64 ≥ w: block b
     * joins candidates from blocks b and b−1, then filters to rank
@@ -2052,8 +2060,8 @@ object Dedup {
         expr("substring(lt, greatest(length(lt) - 23, 1), 24)").as("k2"))
     // BOTH passes ride ONE rank (r17): the two key orders are disjoint
     // sort domains, so unioning them with a pass-id group key and
-    // ranking per group (ScalarSuites.groupedRank — within-pass ranks
-    // identical to two separate globalRanks) halves the rank machinery:
+    // ranking per group (ScalarSuites.rank — within-pass ranks
+    // identical to two separate global ranks) halves the rank machinery:
     // one range sampler + one exchange + one block join where r16 paid
     // two of each. Same bytes through the one exchange as through the
     // two (the union is both key frames), strictly fewer jobs/stages;
@@ -2063,8 +2071,8 @@ object Dedup {
       .select(col("doc_id"), col("k1").as("k"), lit(1).as("p"))
       .unionByName(keyed
         .select(col("doc_id"), col("k2").as("k"), lit(2).as("p")))
-    val ranked = ScalarSuites.groupedRank(keyedU, Seq("p"),
-        Seq(col("k"), col("doc_id")), "rnk")
+    val ranked = ScalarSuites.rank(keyedU, Seq(col("k"), col("doc_id")), "rnk",
+        groupCols = Seq("p"))
       .select(col("p"), col("doc_id"), col("rnk"))
     val a = ranked.select(col("p"), col("doc_id").as("id_a"),
       col("rnk").as("ra"), expr(s"rnk div $B").as("blk"))

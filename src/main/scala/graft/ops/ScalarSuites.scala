@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.Round._
@@ -176,7 +178,6 @@ object ScalarSuites {
     * (ts, event_id) ordering.
     */
   def q61WindowValues(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ordered = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val full = ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     Tables.events(s, d)
@@ -231,414 +232,223 @@ object ScalarSuites {
       .orderBy("band")
   }
 
-  /** Distributed total-order rank: global range-partitioned sort with
-    * per-partition offsets — the standard scale-safe formulation of a
-    * global rank. Spark's no-key `Window.orderBy(...)` computes the
-    * same thing by moving EVERY row into a single partition (WindowExec
-    * warns exactly this), which is the one unbounded-hazard plan shape
-    * this engine bans (PlanSpec). Since r16 this is ONE lazy Catalyst
-    * plan, structured like [[groupedRank]]'s range path but implemented
-    * separately (a `lit(1)` group key would constant-fold back to the
-    * banned no-key window): a pinned-width range exchange read by a
-    * per-partition stats branch and the output branch, with prefix
-    * offsets folded over the ≤ #partitions stats rows. Sort keys must
-    * be UNIQUE for deterministic ranks.
+  /** `row_number() over (partition by groupCols order by sortCols)` as
+    * the BIGINT column `rankCol`, with neither a no-key window (every
+    * row in one task) nor a `Window.partitionBy(group)` (a dominant
+    * group sorted in one task) — the two plan shapes PlanSpec bans. The
+    * reference job's total-order sort is the no-group case. Sort keys
+    * must be UNIQUE within a group, or tied rows rank arbitrarily. A
+    * null group key ranks as a group of its own, as with
+    * `Window.partitionBy`: the per-group offsets attach through a
+    * null-safe join.
     *
-    * CORRECTNESS PRECONDITIONS (not just performance notes):
-    *  - the stats branch and the output branch must read the SAME
-    *    physical shuffle (exchange reuse / AQE stage reuse, both on by
-    *    default). If each branch executed its own RangePartitioner, the
-    *    two samplers could draw different bounds and the pid-keyed
-    *    offsets join would assemble ranks from misaligned partitions
-    *    with no error. Do not run this operator with
-    *    spark.sql.exchange.reuse disabled.
-    *  - `monotonically_increasing_id` must be CONSECUTIVE within a
-    *    partition (rank = mid − min(mid) + off + 1). Spark's API
-    *    contract only promises monotone+unique; consecutiveness is an
-    *    implementation property (pid<<33 | rowIndex) a Spark upgrade
-    *    could silently drop — OpsSpec pins this operator directly
-    *    against window semantics so an upgrade fails loud.
-    * [[groupedRank]]'s hash-bucket mode has neither hazard (its bucket
-    * is a deterministic COLUMN); this operator keeps the range form
-    * because a total order over an arbitrary key domain needs sampled
-    * bounds.
+    * The caller states facts about its input, not a mechanism, and the
+    * facts pick one of three bodies:
+    *  - '''Single-task sort''': no `groupCols` and a known row bound
+    *    `maxRows` (a `limit(k)`, a guarded dictionary, a count already
+    *    in hand) of at most [[SingleTaskMaxRows]]. `coalesce(1)`, one
+    *    local sort, the position. Below the bound this beats the range
+    *    path's exchange, stats branch and broadcast (r16: q170 2.030 →
+    *    0.852 s at sf0.1). PlanSpec checks that every such coalesce(1)
+    *    has its bound in the plan or is on its count-guarded list.
+    *  - '''Hash-bucket path''': `groupCols` and `md5Lead` — the leading
+    *    sort key is an ascending lowercase md5 hex string. Its first 8
+    *    hex chars give a bucket that is uniform, a pure function of the
+    *    row, and monotone in the sort order (fixed-width hex sorts as
+    *    its value), so a prefix tie never straddles two buckets. One
+    *    hash exchange on the bucket clusters the rows, a (bucket, group)
+    *    window ranks each run, and per-group prefix offsets over the
+    *    ≤ [[BucketsPerPartition]]·P run-stats rows per group (P the
+    *    shuffle width) lift run ranks to group ranks. No sampler pass,
+    *    no exchange reuse, no row ids. `cumSums` — inclusive running
+    *    sums `(srcCol → outCol)` of non-null BIGINT columns in sort
+    *    order — exist on this path only.
+    *  - '''Range path''': everything else. One range exchange on
+    *    (groupCols, sortCols) at the pinned width P, sorted within
+    *    partitions; a run is one (partition, group), and rank = position
+    *    in the run + the exclusive prefix count of the group's earlier
+    *    runs, from a stats branch that partial-aggregates the same
+    *    exchange to ≤ P rows per group. Bounds over an arbitrary key
+    *    domain must be sampled: the quantile-sketch problem of
+    *    ''Approximation Algorithms for Large Scale Data Analysis''
+    *    (PODS 2021), solved here by Spark's RangePartitioner.
+    *
+    * Range-path preconditions (correctness, not performance):
+    *  - Both branches read ONE physical range exchange. Executed twice,
+    *    the exchange would sample twice and could draw other bounds,
+    *    and the partition-keyed offsets would then belong to other rows.
+    *    The stats branch needs only keys and row ids, so column pruning
+    *    would cut the other columns below its copy of the exchange, the
+    *    two copies would differ, and Spark would run both (measured:
+    *    7–8k of 10k ranks wrong for a frame with one column outside the
+    *    sort keys, AQE on or off). The local sort therefore lists
+    *    those columns after the unique keys, where they never compare,
+    *    and both copies stay equal. Reuse itself is a session setting:
+    *    with `spark.sql.exchange.reuse=false` neither the planner nor
+    *    AQE shares the exchange, so the range path refuses it. The
+    *    width is pinned, not left to AQE, because two reads of one
+    *    exchange could coalesce differently.
+    *  - `monotonically_increasing_id` is CONSECUTIVE within a partition
+    *    (pid<<33 | row index). Spark promises only monotone and unique;
+    *    OpsSpec pins consecutiveness against `row_number`, so an upgrade
+    *    that drops it fails there.
     */
-  def globalRank(df: DataFrame, sortCols: Seq[org.apache.spark.sql.Column],
-      rankCol: String = "rank"): DataFrame = {
+  def rank(df: DataFrame, sortCols: Seq[Column], rankCol: String = "rank",
+      groupCols: Seq[String] = Nil, maxRows: Option[Long] = None,
+      md5Lead: Boolean = false, cumSums: Seq[(String, String)] = Nil): DataFrame = {
+    val bucketed = md5Lead && groupCols.nonEmpty
+    require(cumSums.isEmpty || bucketed,
+      "running sums need group columns and an md5 hex leading sort key")
+    if (groupCols.isEmpty && maxRows.exists(_ <= SingleTaskMaxRows))
+      df.coalesce(1).sortWithinPartitions(sortCols: _*)
+        .withColumn(rankCol, monotonically_increasing_id() + lit(1L))
+    else if (bucketed) bucketRank(df, sortCols, rankCol, groupCols, cumSums)
+    else rangeRank(df, sortCols, rankCol, groupCols)
+  }
+
+  /** The largest known row bound [[rank]] sorts in one task: the r17
+    * measured crossover (RankProbe, RANK_CROSSOVER_r17.json,
+    * OPTIMIZATION_r17.md). The one-task sort wins up to ~2^19 rows
+    * (0.23 vs 0.59 s at 524k, local[32]) and loses from ~2^21 (1.08 vs
+    * 0.69 s); the bound sits at the 2^20 midpoint. A 1M-row partition
+    * is tens of MB, far under executor memory.
+    */
+  val SingleTaskMaxRows: Long = 1L << 20
+
+  /** Hash-bucket path buckets per shuffle partition (rounded up to a
+    * power of two): many more keys than partitions keeps the expected
+    * max/median partition load of the one hash exchange under ~1.4,
+    * while the offsets frame stays ≤ 32·P rows per group.
+    */
+  private val BucketsPerPartition = 32
+
+  private def shuffleWidth(df: DataFrame): Int =
+    math.max(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt, 1)
+
+  private def rangeRank(df: DataFrame, sortCols: Seq[Column], rankCol: String,
+      groupCols: Seq[String]): DataFrame = {
+    require(df.sparkSession.conf.get("spark.sql.exchange.reuse", "true") != "false",
+      "rank's range path needs spark.sql.exchange.reuse: its two branches " +
+        "must read one range exchange, or each samples its own bounds")
     val pid = "__gr_pid"
     val mid = "__gr_mid"
-    val nParts = math.max(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt, 1)
-    val base = df.repartitionByRange(nParts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
+    val sortExprs = groupCols.map(col) ++ sortCols
+    // the local sort also lists every column no sort key reads: behind
+    // the unique keys they never compare, but column pruning then keeps
+    // them below the exchange in the stats branch too, so both branches
+    // plan one exchange and Spark reuses it
+    val keyed = df.sortWithinPartitions(sortExprs: _*).queryExecution.analyzed
+      .collectFirst { case s: Sort => s.references.map(_.name).toSet }.get
+    val rest = df.columns.filterNot(keyed.contains).map(col)
+    // only the partition ASSIGNMENT must be range-monotone; the local
+    // sort orders each run, and the row id above it (nondeterministic,
+    // so the optimizer cannot move it below the sort) encodes (pid,
+    // position) — deterministic here because the shuffle output is
+    // materialized and the sort keys are unique
+    val base = df.repartitionByRange(shuffleWidth(df), sortExprs: _*)
+      .sortWithinPartitions(sortExprs ++ rest: _*)
       .withColumn(pid, spark_partition_id())
       .withColumn(mid, monotonically_increasing_id())
-    val stats = base.groupBy(col(pid))
-      .agg(count(lit(1L)).as("n"), min(col(mid)).as("m0"))
-    // per-partition exclusive prefix offsets WITHOUT a window (a global
-    // prefix would need a no-key window — the banned shape — and a
-    // constant partition key gets constant-folded back to no-key): the
-    // stats frame is ≤ #partitions rows, so it collapses to ONE array
-    // row and the prefix is a higher-order-function fold over that
-    // array — interpreted, but over #partitions elements exactly once.
-    val offs = stats
-      .agg(sort_array(collect_list(struct(
-        col(pid).as("p"), col("n"), col("m0")))).as("arr"))
-      .select(explode(expr(
-        "transform(arr, (x, i) -> struct(x.p AS p, " +
-          "aggregate(slice(arr, 1, i), CAST(0 AS BIGINT), (a, y) -> a + y.n) AS off, " +
-          "x.m0 AS m0))")).as("o"))
-      .select(col("o.p").as(pid), col("o.off").as("__gr_off"),
-        col("o.m0").as("__gr_m0"))
-    base.join(broadcast(offs), Seq(pid))
+    val stats = base.groupBy((col(pid) +: groupCols.map(col)): _*)
+      .agg(count(lit(1L)).as("__gr_n"), min(col(mid)).as("__gr_m0"))
+    base.join(broadcast(runOffsets(stats, pid, groupCols, Nil, Seq("__gr_m0"))),
+        runJoin(pid, groupCols))
       .select(df.columns.map(col).toSeq :+
         (col(mid) - col("__gr_m0") + col("__gr_off") + lit(1L)).as(rankCol): _*)
   }
 
-  /** Total-order rank for a provably K-BOUNDED frame (a post-`limit(k)`
-    * list, a guard-bounded dictionary): one `coalesce(1)` + local sort +
-    * position. A single-task sort is exactly the shape this engine bans
-    * for corpus-sized frames — here the input is bounded by construction
-    * (callers document the bound), and the k-row sort costs less than
-    * [[globalRank]]'s exchange + stats-branch + broadcast machinery,
-    * which is pure overhead at k rows (measured r16 at sf0.1: q170
-    * 2.030 → 0.852 s when its three k-row ranks ride this instead of
-    * the distributed rank, 1.015 s at the old RDD formulation). Same
-    * contract: sort keys must be UNIQUE for deterministic ranks.
-    */
-  def boundedRank(df: DataFrame, sortCols: Seq[org.apache.spark.sql.Column],
-      rankCol: String = "rank"): DataFrame =
-    df.coalesce(1).sortWithinPartitions(sortCols: _*)
-      .withColumn(rankCol, monotonically_increasing_id() + lit(1L))
-
-  /** Conf key + default for [[rankWithKnownCount]]'s size guard: the
-    * largest row count routed through [[boundedRank]]'s single-task
-    * sort. Default from the r17 measured crossover (RankProbe,
-    * RANK_CROSSOVER_r17.json; details in OPTIMIZATION_r17.md): the
-    * one-task sort wins up to ~2^19 rows (0.23 vs 0.59 s at 524k,
-    * local[32]) and loses from ~2^21 (1.08 vs 0.69 s), so the guard
-    * sits at the 2^20 midpoint. A 1M-row single partition is ~tens of
-    * MB, far under executor memory at any deployment size.
-    */
-  val BoundedRankMaxRowsConf = "graft.rank.boundedMaxRows"
-  val BoundedRankMaxRowsDefault = 1048576L
-
-  /** Size-adaptive total-order rank for callers that already HOLD the
-    * frame's row count (q60 needs n for its closed forms, q150 for its
-    * top-k cutoff — the count is already paid for): dimension-table-
-    * sized frames take [[boundedRank]]'s single-task sort, where the
-    * distributed rank's exchange + stats-branch + broadcast machinery
-    * is pure overhead (measured r17: q60 0.566 → ~0.25 s at sf0.1);
-    * anything larger takes [[globalRank]] unchanged — the guard is the
-    * measured crossover, not a local-mode tune (see
-    * [[BoundedRankMaxRowsConf]]). Same contract as both: unique sort
-    * keys.
-    */
-  def rankWithKnownCount(df: DataFrame, n: Long,
-      sortCols: Seq[org.apache.spark.sql.Column],
-      rankCol: String = "rank"): DataFrame = {
-    val limit = df.sparkSession.conf
-      .get(BoundedRankMaxRowsConf, BoundedRankMaxRowsDefault.toString).toLong
-    if (n <= limit) boundedRank(df, sortCols, rankCol)
-    else globalRank(df, sortCols, rankCol)
-  }
-
-  /** Skew-safe PER-GROUP rank — `row_number() over (partition by
-    * groupCols order by sortCols)` without the single-task-per-group
-    * sort. `Window.partitionBy(lowCardKey)` hashes each group onto ONE
-    * task; with a dominant group (one web-crawl source in a mixed
-    * corpus) that is a single-executor sort of most of the input — the
-    * skewed sibling of the no-key window hazard, and the reason
-    * PlanSpec bans corpus-sized low-cardinality-key windows. This
-    * formulation is [[globalRank]]'s, expressed as ONE lazy Catalyst
-    * plan (r16): a single explicit-width range exchange on (groupCols,
-    * sortCols) — a dominant group spreads over many partitions — read
-    * by two branches that ReuseExchange/AQE-stage-reuse compute once:
-    * (a) a partial-aggregated per-(partition, group) run-stats frame
-    * (≤ #partitions rows per group) from which exclusive prefix
-    * offsets and group totals are derived, and (b) the output branch,
-    * where a (partition-id, group)-keyed window — executor-bounded
-    * runs whatever the skew — computes within-run rank/running sums
-    * that the broadcast offsets lift to per-group values. All codegen,
-    * no driver collect, no InternalRow⇄Row hop. (The previous RDD
-    * two-pass formulation executed the full upstream lineage twice —
-    * three times counting the range sampler — because pass 1's collect
-    * and pass 2's output job could not share the sort.)
-    *
-    * Same contract as [[globalRank]]: sort keys must be UNIQUE within a
-    * group for deterministic ranks, and group keys must be NON-NULL
-    * (the offsets join is an equi-join). Spark has no skew-safe
-    * per-group rank primitive (`InferWindowGroupLimit` rescues only
-    * constant-limit top-k, not full rankings / running sums).
-    *
-    * Also emitted in the SAME two passes (no extra jobs):
-    *  - `totalCol`   — the group's total row count on every row (the
-    *    `count(*) over (partition by g)` twin, known to the count pass);
-    *  - `cumSums`    — inclusive running sums `(srcCol → outCol)` of
-    *    non-null BIGINT columns in sort order (the
-    *    `sum(x) over (partition by g order by … rows unbounded
-    *    preceding)` twin).
-    *
-    * `bucket` (r17): when the caller can derive a deterministic,
-    * ~uniform, sort-monotone bucket column from the leading sort key
-    * (md5 draw keys via [[hexPrefixBucket]]), the operator takes
-    * [[groupedRankBucketed]] instead — one hash exchange, no sampling
-    * pass, no second exchange on the running-sum path, and no
-    * dependence on exchange reuse or id consecutiveness. The range
-    * path below remains for arbitrary key domains, where bounds must
-    * be sampled.
-    */
-  def groupedRank(df: DataFrame, groupCols: Seq[String],
-      sortCols: Seq[org.apache.spark.sql.Column], rankCol: String = "rank",
-      totalCol: Option[String] = None,
-      cumSums: Seq[(String, String)] = Nil,
-      bucket: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    if (bucket.isDefined)
-      return groupedRankBucketed(df, groupCols, sortCols, rankCol,
-        totalCol, cumSums, bucket.get)
-    import org.apache.spark.sql.expressions.Window
-    val pid = "__gr_pid"
-    // ONE explicit-width range exchange on (group, sort): a dominant
-    // group spreads over many partitions, and only the partition
-    // ASSIGNMENT must be range-monotone — the within-run ordering is
-    // re-established by the (pid, group)-keyed window below on
-    // executor-bounded runs, so the within-partition sort an orderBy
-    // would add here is skipped. The width is pinned (not left to AQE)
-    // because BOTH branches below key on the partition index: AQE
-    // coalescing decides per consumer (AQEShuffleRead), and two
-    // consumers of the reused exchange could in principle coalesce
-    // differently, silently misaligning pids between the stats branch
-    // and the output branch.
-    val mid = "__gr_mid"
-    val nParts = math.max(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt, 1)
-    val sortExprs = groupCols.map(col) ++ sortCols
-    // Strategy split: rank/total come for free from within-partition
-    // POSITION over the range-sorted layout (monotonically_increasing_id
-    // above the local sort encodes (pid, position) — nondeterministic-
-    // flagged, so the optimizer cannot reorder it below the Sort; the
-    // value itself is deterministic here because the shuffle output is
-    // materialized and the sort keys are unique). Running sums need a
-    // true per-row prefix, which only a window provides — that path
-    // pays one more (pid, group)-keyed exchange.
-    val base =
-      if (cumSums.isEmpty)
-        df.repartitionByRange(nParts, sortExprs: _*)
-          .sortWithinPartitions(sortExprs: _*)
-          .withColumn(pid, spark_partition_id())
-          .withColumn(mid, monotonically_increasing_id())
-      else
-        df.repartitionByRange(nParts, sortExprs: _*)
-          .withColumn(pid, spark_partition_id())
-    // per-(pid, group) run stats — the "lightweight count pass", now a
-    // sibling BRANCH of the same lazy plan: partial aggregation shrinks
-    // map output to one row per run, and ReuseExchange/AQE stage reuse
-    // computes the range exchange ONCE for both branches. (The previous
-    // RDD formulation ran pass 1 as a separate collect job and pass 2
-    // as a second full job, so the entire upstream lineage — scans,
-    // tokenization, md5 — executed twice, three times counting the
-    // range sampler, with two InternalRow⇄Row conversions on top.)
-    val statAggs = (count(lit(1L)).as("__gr_n") +:
-      (if (cumSums.isEmpty) Seq(min(col(mid)).as("__gr_m0")) else Nil)) ++
-      cumSums.map { case (src, _) => sum(col(src)).as(s"__gr_s_$src") }
-    val stats = base.groupBy((col(pid) +: groupCols.map(col)): _*)
-      .agg(statAggs.head, statAggs.tail: _*)
-    // exclusive per-(pid, group) prefix offsets + group totals over the
-    // run-stats frame (≤ #partitions rows per group — partition-count-
-    // bounded, never corpus-sized). The group columns are RENAMED to
-    // internal names before the tiny window: PlanSpec's low-cardinality
-    // window gate matches attribute NAMES (source/lang/label) because it
-    // cannot see frame sizes, and this window is exactly the bounded
-    // exception the gate's comment carves out.
-    val gRen = groupCols.zipWithIndex.map { case (g, i) => g -> s"__gr_g$i" }
-    val statsRen = gRen.foldLeft(stats) { case (f, (g, r)) => f.withColumnRenamed(g, r) }
-    val wOrd = Window.partitionBy(gRen.map(p => col(p._2)): _*).orderBy(col(pid))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy(gRen.map(p => col(p._2)): _*)
-    val offCols =
-      (coalesce(sum(col("__gr_n")).over(wOrd), lit(0L)).as("__gr_off") +:
-        (if (cumSums.isEmpty) Seq(col("__gr_m0")) else Nil)) ++
-      totalCol.map(_ => sum(col("__gr_n")).over(wAll).as("__gr_tot")).toSeq ++
-      cumSums.map { case (src, _) =>
-        coalesce(sum(col(s"__gr_s_$src")).over(wOrd), lit(0L)).as(s"__gr_o_$src") }
-    val offs = statsRen.select((col(pid) +: gRen.map(p => col(p._2))) ++ offCols: _*)
-    val offsBack = gRen.foldLeft(offs) { case (f, (g, r)) => f.withColumnRenamed(r, g) }
-    val joined =
-      if (cumSums.isEmpty) {
-        // rank = prefix offset + within-run position, both from the ONE
-        // range exchange — no second full-data exchange at all
-        base.join(broadcast(offsBack), pid +: groupCols)
-      } else {
-        // within-run rank / running sums: one (pid, group)-keyed window —
-        // high-cardinality key (the partition index rides in it), runs
-        // bounded by the range partition size whatever the group skew.
-        val wRun = Window.partitionBy((col(pid) +: groupCols.map(col)): _*)
-          .orderBy(sortCols: _*)
-        val wRunCum = wRun.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val withRun = base
-          .withColumn("__gr_rk", row_number().over(wRun).cast("long"))
-        cumSums.foldLeft(withRun) { case (f, (src, _)) =>
-          f.withColumn(s"__gr_c_$src", sum(col(src)).over(wRunCum))
-        }.join(broadcast(offsBack), pid +: groupCols)
-      }
-    val rankExpr =
-      if (cumSums.isEmpty) col(mid) - col("__gr_m0") + col("__gr_off") + lit(1L)
-      else col("__gr_rk") + col("__gr_off")
-    val outCols = df.columns.map(col).toSeq ++
-      Seq(rankExpr.as(rankCol)) ++
-      totalCol.map(t => col("__gr_tot").as(t)).toSeq ++
-      cumSums.map { case (src, out) =>
-        (col(s"__gr_c_$src") + col(s"__gr_o_$src")).as(out) }
-    joined.select(outCols: _*)
-  }
-
-  /** Conf key + default for the hash-bucket rank's bucket count factor:
-    * nBuckets = next power of two ≥ factor × shuffle partitions. The
-    * factor trades key-collision balance in the ONE hash exchange
-    * (buckets land on partitions by hash — guide-standard many-more-
-    * keys-than-partitions spreading; 32× keeps the expected max/median
-    * partition load under ~1.4) against the offsets frame's size
-    * (nBuckets × #groups rows, windowed tiny and broadcast — at 32×
-    * and 10² sources that is still ≤ a few hundred thousand rows on a
-    * 100k-partition deployment). Override per job at extreme partition
-    * counts.
-    */
-  val RankBucketFactorConf = "graft.rank.bucketFactor"
-  val RankBucketFactorDefault = 32
-
-  /** Deterministic uniform monotone bucket over a fixed-width lowercase
-    * HEX key column (the engine's md5-derived draw/sort keys): the
-    * first 8 hex chars as an integer, scaled to [0, nBuckets). For
-    * fixed-width lowercase hex, lexicographic string order equals
-    * numeric order of the value, so the bucket is monotone
-    * non-decreasing in the column's sort order — the contract
-    * [[groupedRank]]'s `bucket` parameter requires — and md5 keys make
-    * it uniform. Rows whose first 8 chars tie land in the same bucket
-    * by construction, so a bucket boundary can never split a tie.
-    */
-  def hexPrefixBucket(hexCol: org.apache.spark.sql.Column,
-      nBuckets: Int): org.apache.spark.sql.Column = {
-    require(nBuckets > 0 && (nBuckets & (nBuckets - 1)) == 0 &&
-      nBuckets <= (1 << 30), s"nBuckets must be a power of two, got $nBuckets")
-    val shift = 32 - Integer.numberOfTrailingZeros(nBuckets)
-    shiftrightunsigned(conv(substring(hexCol, 1, 8), 16, 10).cast("long"),
-      shift)
-  }
-
-  /** The bucket count [[hexPrefixBucket]] callers should use: factor ×
-    * the session's shuffle width, rounded up to a power of two (see
-    * [[RankBucketFactorConf]]).
-    */
-  def rankBuckets(s: SparkSession): Int = {
-    val nParts = math.max(
-      s.conf.get("spark.sql.shuffle.partitions", "200").toInt, 1)
-    val factor = s.conf
-      .get(RankBucketFactorConf, RankBucketFactorDefault.toString).toInt
-    Integer.highestOneBit(math.max(nParts * factor - 1, 1)) * 2
-  }
-
-  /** [[groupedRank]]'s HASH-BUCKET mode (r17) — taken when the caller
-    * supplies a `bucket` column satisfying: (1) deterministic pure
-    * function of the leading sort key(s), (2) monotone non-decreasing
-    * along the sort order within every group, (3) ~uniform over
-    * [0, nBuckets) ([[hexPrefixBucket]] over an md5 draw key is the
-    * canonical instance — q124/q128/q134). Then the range exchange is
-    * unnecessary: ONE hash exchange on the bucket column clusters the
-    * data, and because the bucket is a REAL deterministic column (not
-    * `spark_partition_id()`), the within-run rank/running-sum window
-    * keyed on (bucket, group) is satisfied by that single exchange's
-    * HashPartitioning — Spark inserts NO further full-data exchange —
-    * while the run-stats branch partial-aggregates BELOW its own
-    * model-sized exchange. Versus the range path this removes (a) the
-    * RangePartitioner's SAMPLING pass (a whole extra execution of the
-    * input lineage — the stats branch's pruned re-scan replaces it at
-    * strictly lower cost), (b) the cumSums path's second full-data
-    * (pid, group) exchange, and (c) both range-path correctness
-    * hazards: nothing here depends on exchange reuse (a recomputed
-    * bucket column is byte-identical), and no
-    * monotonically_increasing_id is used at all.
-    *
-    * Same output contract as the range path (OpsSpec pins both against
-    * true window semantics): unique sort keys per group, NON-NULL group
-    * keys (the offsets attach by equi-join, which drops null-keyed rows
-    * — same documented contract as the range path; every caller groups
-    * by a non-null source column).
-    */
-  private def groupedRankBucketed(df: DataFrame, groupCols: Seq[String],
-      sortCols: Seq[org.apache.spark.sql.Column], rankCol: String,
-      totalCol: Option[String], cumSums: Seq[(String, String)],
-      bucket: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  private def bucketRank(df: DataFrame, sortCols: Seq[Column], rankCol: String,
+      groupCols: Seq[String], cumSums: Seq[(String, String)]): DataFrame = {
     val bk = "__gr_bk"
-    val nParts = math.max(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt, 1)
+    val nParts = shuffleWidth(df)
+    val nBuckets = Integer.highestOneBit(math.max(nParts * BucketsPerPartition - 1, 1)) * 2
+    val pre = df.withColumn(bk, shiftrightunsigned(
+      conv(substring(sortCols.head, 1, 8), 16, 10).cast("long"),
+      32 - Integer.numberOfTrailingZeros(nBuckets)))
     // explicit width like the range path: AQE coalescing would be
-    // CORRECT here (runs key on the bucket column, not the physical
-    // partition) but would shrink local parallelism on this workload's
-    // small exchanges (the r14/r15 advisory-size finding); at cluster
-    // scale shuffle.partitions/AQE governs instead — see
-    // OPTIMIZATION_r17.md.
-    val pre = df.withColumn(bk, bucket)
+    // correct here (runs key on the bucket column, not the partition)
+    // but shrinks local parallelism on small exchanges (r14/r15)
     val base = pre.repartition(nParts, col(bk))
-    // within-run rank / running sums: the (bucket, group) window's
-    // ClusteredDistribution is satisfied by the hash exchange itself —
-    // WindowExec adds only the within-partition sort
+    // the (bucket, group) window's distribution is satisfied by the
+    // hash exchange itself: WindowExec adds only the local sort
     val wRun = Window.partitionBy((col(bk) +: groupCols.map(col)): _*)
       .orderBy(sortCols: _*)
     val wRunCum = wRun.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withRun0 = base.withColumn("__gr_rk", row_number().over(wRun).cast("long"))
-    val withRun = cumSums.foldLeft(withRun0) { case (f, (src, _)) =>
-      f.withColumn(s"__gr_c_$src", sum(col(src)).over(wRunCum)) }
-    // per-(bucket, group) run stats, aggregated BELOW any exchange: the
-    // bucket is a pure column, so the stats branch needs no particular
-    // partitioning at all — partial aggregation collapses each map
-    // partition to ≤ one row per run before its exchange, which
-    // therefore carries ≤ (map partitions × runs) stat rows, never the
-    // corpus. The branch re-executes the pruned input lineage once —
-    // the same extra pass the range path's RangePartitioner sampler
-    // paid, but bought here with a column-pruned scan and a model-sized
-    // exchange instead of a full sampling job. (Sharing the big
-    // exchange between the two branches — r16's ReusedExchange — does
-    // not survive this mode: with no nondeterministic columns pinning
-    // the projection, each branch prunes differently and the exchange
-    // subtrees stop being equal; the tiny-exchange form is cheaper than
-    // un-pruning to force reuse.)
-    val statAggs = count(lit(1L)).as("__gr_n") +:
-      cumSums.map { case (src, _) => sum(col(src)).as(s"__gr_s_$src") }
+    val withRun = cumSums.foldLeft(
+        base.withColumn("__gr_rk", row_number().over(wRun).cast("long"))) {
+      case (f, (src, _)) => f.withColumn(s"__gr_c_$src", sum(col(src)).over(wRunCum))
+    }
+    // run stats aggregate BELOW any exchange: the bucket is a pure
+    // column, so partial aggregation collapses each map partition to
+    // ≤ one row per run. The branch re-reads the column-pruned input
+    // once — cheaper than the range sampler's pass it replaces. (The
+    // big exchange is not shared: with no nondeterministic column
+    // pinning the projection, each branch prunes differently.)
     val stats = pre.groupBy((col(bk) +: groupCols.map(col)): _*)
-      .agg(statAggs.head, statAggs.tail: _*)
-    // exclusive prefix offsets + group totals over the run-stats frame
-    // (≤ nBuckets rows per group — bucket-count-bounded, never
-    // corpus-sized). Group columns renamed to __gr_g* before the tiny
-    // window: PlanSpec's low-cardinality gate recognizes the pattern
-    // and verifies it sits above an Aggregate (the structural bound).
-    val gRen = groupCols.zipWithIndex.map { case (g, i) => g -> s"__gr_g$i" }
-    val statsRen = gRen.foldLeft(stats) { case (f, (g, r)) => f.withColumnRenamed(g, r) }
-    val wOrd = Window.partitionBy(gRen.map(p => col(p._2)): _*).orderBy(col(bk))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy(gRen.map(p => col(p._2)): _*)
-    val offCols =
-      coalesce(sum(col("__gr_n")).over(wOrd), lit(0L)).as("__gr_off") +:
-        (totalCol.map(_ => sum(col("__gr_n")).over(wAll).as("__gr_tot")).toSeq ++
-          cumSums.map { case (src, _) =>
-            coalesce(sum(col(s"__gr_s_$src")).over(wOrd), lit(0L))
-              .as(s"__gr_o_$src") })
-    val offs = statsRen.select((col(bk) +: gRen.map(p => col(p._2))) ++ offCols: _*)
-    val offsBack = gRen.foldLeft(offs) { case (f, (g, r)) => f.withColumnRenamed(r, g) }
-    val joined = withRun.join(broadcast(offsBack), bk +: groupCols)
-    val outCols = df.columns.map(col).toSeq ++
-      Seq((col("__gr_rk") + col("__gr_off")).as(rankCol)) ++
-      totalCol.map(t => col("__gr_tot").as(t)).toSeq ++
-      cumSums.map { case (src, out) =>
-        (col(s"__gr_c_$src") + col(s"__gr_o_$src")).as(out) }
-    joined.select(outCols: _*)
+      .agg(count(lit(1L)).as("__gr_n"),
+        cumSums.map { case (src, _) => sum(col(src)).as(s"__gr_s_$src") }: _*)
+    withRun.join(broadcast(runOffsets(stats, bk, groupCols, cumSums.map(_._1), Nil)),
+        runJoin(bk, groupCols))
+      .select(df.columns.map(col).toSeq ++
+        Seq((col("__gr_rk") + col("__gr_off")).as(rankCol)) ++
+        cumSums.map { case (src, out) =>
+          (col(s"__gr_c_$src") + col(s"__gr_o_$src")).as(out) }: _*)
   }
+
+  /** Exclusive prefix offsets per group over a run-stats frame keyed by
+    * (run, groupCols) with a `__gr_n` row count and `__gr_s_<src>`
+    * sums: `__gr_off` counts the rows of the group's earlier runs and
+    * `__gr_o_<src>` sums their src; `carry` columns ride along. The run
+    * key comes back as `__gr_orun` and the group keys as `__gr_g<i>`,
+    * so the frame joins the data by [[runJoin]] without name clashes.
+    *
+    * With groups, the offsets are a window over the renamed group keys:
+    * its input is an aggregate (≤ #runs rows per group), the bounded
+    * exception PlanSpec's low-cardinality-window gate allows above an
+    * Aggregate. Without groups that window would have no key — the
+    * banned shape, and a constant key would be folded back to it — so
+    * the ≤ P stats rows collapse to one array row and each run's offset
+    * is a fold over its prefix: O(P²) over P elements, once. Only the
+    * range path ranks without groups.
+    */
+  private def runOffsets(stats: DataFrame, run: String, groupCols: Seq[String],
+      sums: Seq[String], carry: Seq[String]): DataFrame =
+    if (groupCols.isEmpty)
+      stats
+        .agg(sort_array(collect_list(struct(
+          (col(run).as("p") +: col("__gr_n").as("n") +: carry.map(col)): _*))).as("arr"))
+        .select(explode(expr(
+          "transform(arr, (x, i) -> struct(x.p AS p, " +
+            "aggregate(slice(arr, 1, i), CAST(0 AS BIGINT), (a, y) -> a + y.n) AS off" +
+            carry.map(c => s", x.$c AS $c").mkString + "))")).as("o"))
+        .select((col("o.p").as("__gr_orun") +: col("o.off").as("__gr_off") +:
+          carry.map(c => col(s"o.$c").as(c))): _*)
+    else {
+      val gRen = groupCols.indices.map(i => s"__gr_g$i")
+      val renamed = groupCols.zip(gRen).foldLeft(stats) {
+        case (f, (g, r)) => f.withColumnRenamed(g, r) }
+      val wOrd = Window.partitionBy(gRen.map(col): _*).orderBy(col(run))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      renamed.select((col(run).as("__gr_orun") +: gRen.map(col)) ++
+        (coalesce(sum(col("__gr_n")).over(wOrd), lit(0L)).as("__gr_off") +:
+          carry.map(col)) ++
+        sums.map(src => coalesce(sum(col(s"__gr_s_$src")).over(wOrd), lit(0L))
+          .as(s"__gr_o_$src")): _*)
+    }
+
+  /** Attach [[runOffsets]] to the rows of each run: equal run key, and
+    * null-safe equal group keys so a null group keeps its rows.
+    */
+  private def runJoin(run: String, groupCols: Seq[String]): Column =
+    groupCols.zipWithIndex.foldLeft(col(run) === col("__gr_orun")) {
+      case (c, (g, i)) => c && (col(g) <=> col(s"__gr_g$i"))
+    }
 
   /** Ranking-distribution windows: ntile quartiles, percent_rank,
     * cume_dist over a UNIQUE ordering key (balance-cents, custkey) —
     * ties on raw balance would make ntile's bucket split engine-defined.
     *
-    * Built on [[globalRank]], not a no-key window: with unique keys the
+    * Built on [[rank]], not a no-key window: with unique keys the
     * SQL definitions collapse to closed forms of the total rank —
     * percent_rank = (rank−1)/(n−1), cume_dist = rank/n, and ntile(k)'s
     * first n mod k buckets carry ⌈n/k⌉ rows (computed with integer
@@ -655,12 +465,12 @@ object ScalarSuites {
     val base = n / k
     val rem = n % k
     val cut = rem * (base + 1) // rows in the ⌈n/k⌉-sized leading buckets
-    // n is already in hand for the closed forms, so the size-adaptive
-    // rank costs nothing extra: the customer frame is dimension-table-
-    // sized at any SF this harness runs (the r16 verdict measured the
-    // distributed rank 2.3× worse here), and past the measured
-    // crossover the guard falls back to globalRank unchanged
-    val ranked = rankWithKnownCount(cc, n, Seq(col("bal_c"), col("c_custkey")))
+    // n is already in hand for the closed forms, so it bounds the rank
+    // for free: the customer frame is dimension-table-sized at any SF
+    // this harness runs (the r16 verdict measured the range path 2.3×
+    // worse here), and past the single-task bound rank takes the range
+    // path
+    val ranked = rank(cc, Seq(col("bal_c"), col("c_custkey")), maxRows = Some(n))
     val quartile =
       if (base == 0) col("rank") // degenerate n < k: one row per bucket
       else when(col("rank") <= cut, expr(s"(rank - 1) div ${base + 1}"))

@@ -818,20 +818,20 @@ object Similarity {
       .select(col("vec_id").as("doc_id"),
         r6(cosinePrenormed(dot(col("embedding"), col("q_emb")),
           col("nrm"), col("q_norm"))).as("sim6"))
-    // k-row frame after the limit → boundedRank (r16): the distributed
-    // rank's exchange/stats machinery is pure overhead at k rows
-    val semTop = ScalarSuites.boundedRank(
+    // k-row frame after the limit → rank's single-task sort (r16): the
+    // range path's exchange/stats machinery is pure overhead at k rows
+    val semTop = ScalarSuites.rank(
       sem.orderBy(col("sim6").desc, col("doc_id")).limit(k),
-      Seq(col("sim6").desc, col("doc_id")), "sem_rank")
+      Seq(col("sim6").desc, col("doc_id")), "sem_rank", maxRows = Some(k.toLong))
       .select(col("doc_id"), col("sem_rank"))
     val rrfOf = (rank: String) => coalesce(
       expr(s"CAST(1000000 AS BIGINT) div ($kRrf + $rank)"), lit(0L))
     val fused = lex.join(semTop, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("lex_rank"), col("sem_rank"),
         (rrfOf("lex_rank") + rrfOf("sem_rank")).as("rrf_micro"))
-    // fused = full-outer of two k-row lists → ≤ 2k rows, boundedRank
-    ScalarSuites.boundedRank(fused,
-      Seq(col("rrf_micro").desc, col("doc_id")), "rank")
+    // fused = full-outer of two k-row lists → ≤ 2k rows
+    ScalarSuites.rank(fused,
+      Seq(col("rrf_micro").desc, col("doc_id")), maxRows = Some(2L * k))
       .select("rank", "doc_id", "lex_rank", "sem_rank", "rrf_micro")
       .orderBy("rank")
   }
@@ -1897,7 +1897,7 @@ object Similarity {
       val selected = centers.map(_._2)
       val far = state.filter(!col("vec_id").isin(selected: _*))
         .orderBy(col("mind").desc, col("vec_id")).limit(1).head()
-      if (prev != null) { prev.unpersist(); (): Unit }
+      if (prev != null) SessionMemo.unpersist(prev)
       prev = state
       val fmv = far.getSeq[Long](1).toArray
       centers :+= ((t.toLong, far.getLong(0), Some(far.getLong(2)), fmv))
@@ -1911,8 +1911,7 @@ object Similarity {
     // the model is fully driver-held from here; nothing reads the fit
     // frames again (q171/q173 assign via literal-center map passes), so
     // the last two rounds' blocks go too
-    if (prev != null) { prev.unpersist(); (): Unit }
-    state.unpersist()
+    SessionMemo.unpersist(Option(prev).toSeq :+ state: _*)
     (centers, radius)
   }
 

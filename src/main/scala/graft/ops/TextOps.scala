@@ -1454,8 +1454,8 @@ object TextOps {
     * remainder allocation — a 20-row driver-side fixup at any scale).
     *
     * Plan shape at 100 TB: the weight/quota frame is #sources rows
-    * (broadcast); the draw rank is [[ScalarSuites.groupedRank]] — one
-    * range-partitioned sort on (source, hk, doc_id) with executor-
+    * (broadcast); the draw rank is [[ScalarSuites.rank]]'s hash-bucket
+    * path — one hash exchange on an md5-prefix bucket with executor-
     * bounded partitions, so a dominant source never lands on a single
     * task (the `Window.partitionBy("source")` hazard PlanSpec bans;
     * the quota is a per-source COLUMN, so `InferWindowGroupLimit`
@@ -1473,12 +1473,10 @@ object TextOps {
     val draw = Tables.documents(s, d)
       .select(col("source"), col("doc_id"))
       .withColumn("hk", md5(concat(col("doc_id").cast("string"), lit("-mix"))))
-    // hk is an md5 hex key → the hash-bucket rank applies (r17): one
-    // hash exchange, no range-sampler pass over the scan lineage
-    ScalarSuites.groupedRank(draw, Seq("source"),
-        Seq(col("hk"), col("doc_id")), rankCol = "rk",
-        bucket = Some(ScalarSuites.hexPrefixBucket(col("hk"),
-          ScalarSuites.rankBuckets(s))))
+    // hk is an md5 hex key → the hash-bucket rank (r17): one hash
+    // exchange, no range-sampler pass over the scan lineage
+    ScalarSuites.rank(draw, Seq(col("hk"), col("doc_id")), "rk",
+        groupCols = Seq("source"), md5Lead = true)
       .join(broadcast(quota), Seq("source"))
       .filter(col("rk") <= col("quota"))
       .select(col("source"), col("doc_id"), col("rk"), col("cnt"), col("quota"))
@@ -1574,10 +1572,10 @@ object TextOps {
     * matter.
     *
     * Plan shape at 100 TB: rank AND running sum ride one
-    * [[ScalarSuites.groupedRank]] pass — a single range-partitioned
-    * sort on (source, hk, doc_id) with executor-bounded partitions and
-    * per-group offsets (count + token prefix) from its lightweight
-    * count pass; no joins at all — cheaper than q124 (no quota frame),
+    * [[ScalarSuites.rank]] pass on its hash-bucket path — one hash
+    * exchange on an md5-prefix bucket with executor-bounded partitions
+    * and per-group offsets (count + token prefix) from its run-stats
+    * branch; no data joins — cheaper than q124 (no quota frame),
     * and a dominant source never sorts on one task (the
     * `Window.partitionBy("source")` hazard PlanSpec bans; a running
     * sum has no `InferWindowGroupLimit` rescue at all).
@@ -1588,14 +1586,11 @@ object TextOps {
       .select(col("source"), col("doc_id"),
         tokenCount(col("text")).cast("long").as("n_tokens"),
         md5(concat(col("doc_id").cast("string"), lit("-budget"))).as("hk"))
-    // hk is an md5 hex key → the hash-bucket rank applies (r17): one
-    // hash exchange total — the range path's running-sum branch paid a
-    // second full-data (pid, group) exchange plus the sampler pass
-    ScalarSuites.groupedRank(base, Seq("source"),
-        Seq(col("hk"), col("doc_id")), rankCol = "rk",
-        cumSums = Seq("n_tokens" -> "cum_tokens"),
-        bucket = Some(ScalarSuites.hexPrefixBucket(col("hk"),
-          ScalarSuites.rankBuckets(s))))
+    // hk is an md5 hex key → the hash-bucket rank (r17): one hash
+    // exchange total, running sum included, and no sampler pass
+    ScalarSuites.rank(base, Seq(col("hk"), col("doc_id")), "rk",
+        groupCols = Seq("source"), md5Lead = true,
+        cumSums = Seq("n_tokens" -> "cum_tokens"))
       .filter(col("cum_tokens") - col("n_tokens") < budget)
       .select("source", "rk", "doc_id", "n_tokens", "cum_tokens")
       .orderBy("source", "rk")
@@ -2058,8 +2053,8 @@ object TextOps {
     * arithmetic, and within a source the docs at one margin value
     * occupy a CONSECUTIVE rank interval [off+1, off+c] (sort order is
     * margin desc with doc_id merely tie-breaking inside the interval).
-    * So instead of ranking every corpus row (r16: groupedRank's full
-    * range-partitioned sort of the corpus — 2 full-data exchanges
+    * So instead of ranking every corpus row (r16: the grouped rank's
+    * full range-partitioned sort of the corpus — 2 full-data exchanges
     * counting the sampler), aggregate to the distinct
     * (source, margin_milli) frame first — VALUE-RANGE-BOUNDED, not
     * corpus-bounded: margins are BIGINT sums of per-token milli-weights
@@ -2540,7 +2535,7 @@ object TextOps {
         .groupBy("seq").agg(sum("freq").as("freq"))
         .select(lit("p").as("kind"), col("seq"), col("freq")))
     }.localCheckpoint(true)
-    wordsCk.unpersist()
+    SessionMemo.unpersist(wordsCk)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     for (i <- 1 to merges) {
       val top = (if (recount)
@@ -2600,11 +2595,11 @@ object TextOps {
         // at the gated merges=3; at probe depth (BpeProbe, merges=256)
         // it is an accumulating block-manager leak otherwise, the
         // exact failure mode the r13 bench degradation traced to.
-        state.unpersist()
+        SessionMemo.unpersist(state)
         state = next
       }
     }
-    state.unpersist()
+    SessionMemo.unpersist(state)
     out.toSeq.toDF("iter", "pair", "merged", "cnt").orderBy("iter")
   }
 
@@ -2694,7 +2689,7 @@ object TextOps {
     * raw counts in the same pass), totals from that table (single-row
     * broadcast), the ratio table BROADCAST back against the exploded
     * features, one doc-keyed partial-agg sum, then the
-    * range-partitioned [[ScalarSuites.globalRank]] for top-K — never a
+    * count-bounded [[ScalarSuites.rank]] for top-K — never a
     * no-key window. The model is bucket-bounded everywhere — corpus
     * cardinality only ever crosses the wire keyed by doc.
     */
@@ -2793,17 +2788,17 @@ object TextOps {
     // absolute threshold, which degenerates when the target's
     // vocabulary coverage is small — measured: zero raw docs of the
     // gate fixture clear mean ≥ 1): keep the top 10%, deterministic
-    // tie-break by doc_id, no-evidence docs ranked last. globalRank is
-    // the range-partitioned idiom — no no-key window.
+    // tie-break by doc_id, no-evidence docs ranked last — no no-key
+    // window.
     val n = scored.count()
     val k = (n + 9L) / 10L
-    // the cutoff count doubles as the size guard (verdict r16 item 5:
-    // the rank's stats branch re-read the persisted frame the count had
-    // already scanned): under the measured crossover the rank is one
-    // single-task sort over the cached frame — no sampler job, no
-    // exchange, no stats branch; past it, globalRank unchanged
-    ScalarSuites.rankWithKnownCount(scored, n,
-      Seq(col("mean_ratio_micro").desc_nulls_last, col("doc_id")), "rank")
+    // the cutoff count doubles as the rank's row bound (verdict r16
+    // item 5: the range path's stats branch re-read the persisted frame
+    // the count had already scanned): under the single-task bound the
+    // rank is one sort over the cached frame — no sampler job, no
+    // exchange, no stats branch; past it, the range path
+    ScalarSuites.rank(scored,
+      Seq(col("mean_ratio_micro").desc_nulls_last, col("doc_id")), maxRows = Some(n))
       .withColumn("selected", col("rank") <= lit(k))
       .orderBy("doc_id")
   }
@@ -2919,10 +2914,10 @@ object TextOps {
       .join(membership, Seq("rep"))
       .select(col("doc_id"), col("n_terms"), col("score_micro"))
     // (score, doc_id) is a unique sort key: limit is deterministic and
-    // the rank runs over k rows, not the corpus — boundedRank (r16)
-    ScalarSuites.boundedRank(
+    // the rank runs over k rows, not the corpus — a single-task sort
+    ScalarSuites.rank(
       scored.orderBy(col("score_micro").desc, col("doc_id")).limit(k),
-      Seq(col("score_micro").desc, col("doc_id")), "rank")
+      Seq(col("score_micro").desc, col("doc_id")), maxRows = Some(k.toLong))
       .select("rank", "doc_id", "n_terms", "score_micro")
       .orderBy("rank")
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.SessionMemo
 import graft.functions.TextFunctions.{shingles3, tokens}
 
 /** Structured Streaming twins of the batch operators (SURVEY §2.2:
@@ -292,10 +293,7 @@ object StreamingOps {
     */
   final case class CorpusDedupIndex(exactRep: DataFrame,
       bucketMin: Map[Int, DataFrame]) {
-    def unpersist(): Unit =
-      (exactRep :: bucketMin.values.toList).foreach { df =>
-        try df.unpersist() catch { case _: Throwable => () }
-      }
+    def unpersist(): Unit = SessionMemo.unpersist(exactRep :: bucketMin.values.toList: _*)
   }
 
   def buildCorpusDedupIndex(corpus: DataFrame, bands: Int = 8): CorpusDedupIndex = {
@@ -444,8 +442,7 @@ object StreamingOps {
     */
   final case class ContaminationIndex(benchHashes: DataFrame,
       bloom: Array[Byte]) {
-    def unpersist(): Unit =
-      try { benchHashes.unpersist(); () } catch { case _: Throwable => () }
+    def unpersist(): Unit = SessionMemo.unpersist(benchHashes)
   }
 
   def buildContaminationIndex(bench: DataFrame, fpp: Double = 0.03)
@@ -881,10 +878,7 @@ object StreamingOps {
     */
   final case class MediaPhashIndex(bands: DataFrame, members: DataFrame,
       repCount: Long) {
-    def unpersist(): Unit =
-      Seq(bands, members).foreach { df =>
-        try df.unpersist() catch { case _: Throwable => () }
-      }
+    def unpersist(): Unit = SessionMemo.unpersist(bands, members)
   }
 
   def buildMediaPhashIndex(corpus: DataFrame): MediaPhashIndex = {
@@ -1263,8 +1257,7 @@ object StreamingOps {
     */
   final case class SemdedupIndex(base: DataFrame,
       cents: Array[Array[Long]], nIters: Long) {
-    def unpersist(): Unit =
-      try { base.unpersist(); (): Unit } catch { case _: Throwable => () }
+    def unpersist(): Unit = SessionMemo.unpersist(base)
   }
 
   def buildSemdedupIndex(s: SparkSession, corpusDir: String,
@@ -1414,8 +1407,7 @@ object StreamingOps {
   final case class PqServingIndex(postings: DataFrame,
       centroids: DataFrame, books: Array[Array[Array[Long]]],
       subDim: Int, nIters: Long) {
-    def unpersist(): Unit =
-      try { postings.unpersist(); (): Unit } catch { case _: Throwable => () }
+    def unpersist(): Unit = SessionMemo.unpersist(postings)
   }
 
   /** Build the compressed ADC serving index over the corpus at
@@ -1631,17 +1623,13 @@ object StreamingOps {
         added: Long): Unit = {
       val fresh = Seq(newReps, newMem, newSigs, newToks, newEdges)
         .map(_.localCheckpoint(true))
-      Seq(repsByHash, membership, repSigs, repToks, redges).foreach { df =>
-        try df.unpersist() catch { case _: Throwable => () }
-      }
+      unpersist()
       repsByHash = fresh(0); membership = fresh(1); repSigs = fresh(2)
       repToks = fresh(3); redges = fresh(4)
       nDocs += added
     }
     def unpersist(): Unit =
-      Seq(repsByHash, membership, repSigs, repToks, redges).foreach { df =>
-        try df.unpersist() catch { case _: Throwable => () }
-      }
+      SessionMemo.unpersist(repsByHash, membership, repSigs, repToks, redges)
   }
 
   /** Build [[RepGraphState]] over the corpus at `corpusDir` — the
@@ -1715,7 +1703,7 @@ object StreamingOps {
     val b = batch.select(col("doc_id"), col("text"), md5(col("text")).as("h"))
       .localCheckpoint(true)
     val added = b.count()
-    if (added == 0) { b.unpersist(); return 0L }
+    if (added == 0) { SessionMemo.unpersist(b); return 0L }
     val bAgg = b.groupBy("h")
       .agg(min("doc_id").as("bmin"), count(lit(1)).as("bcnt"))
       .localCheckpoint(true)
@@ -1756,9 +1744,7 @@ object StreamingOps {
     val edgesAll = relabel(state.redges, Seq("doc_a", "doc_b"))
       .unionByName(dedup.symmetrizeEdges(verified))
     state.swapAll(updatedReps, memUpdated, allSigs, allToks, edgesAll, added)
-    Seq(b, bAgg, relabels).foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    }
+    SessionMemo.unpersist(b, bAgg, relabels)
     added
   }
 
@@ -1835,8 +1821,11 @@ object StreamingOps {
           .as("deg"))
       .localCheckpoint(true)
     scratch += repInfo
-    var pr = repInfo.select(col("rep"), lit(p0).as("pr"))
+    // prCk is the checkpoint frame behind pr: a projection of a
+    // checkpoint does not release it
+    var prCk = repInfo.select(col("rep"), lit(p0).as("pr"))
       .localCheckpoint(true)
+    var pr = prCk
     var it = 0
     var resid = Long.MaxValue
     while (it < maxIters && resid > tol) {
@@ -1845,18 +1834,17 @@ object StreamingOps {
         .localCheckpoint(true)
       resid = next.agg(max(abs(col("pr") - col("prev"))).as("r"))
         .head().getLong(0)
-      try pr.unpersist() catch { case _: Throwable => () }
+      SessionMemo.unpersist(prCk)
+      prCk = next
       pr = next.select("rep", "pr")
       it += 1
     }
-    scratch += pr
+    scratch += prCk
     val out = state.membership
       .join(pr.join(repInfo.select("rep", "deg"), Seq("rep")), Seq("rep"))
       .select(col("doc_id"), col("deg").as("degree"),
         col("pr").as("pr_mass"), lit(it.toLong).as("n_iters"))
-    (out, () => scratch.foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    })
+    (out, () => SessionMemo.unpersist(scratch.toSeq: _*))
   }
 
   /** INCREMENTAL GRAPH MAINTENANCE AT INGEST — the streaming twin of

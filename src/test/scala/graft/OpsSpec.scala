@@ -144,53 +144,52 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("groupedRank: window semantics (rank, group total, running sum) under skew, layout-independent") {
+  test("rank: per-group semantics on both paths under skew, null group included") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     // deliberately skewed groups: "a" dominates (the shape the operator
-    // exists for — a Window.partitionBy would sort it on one task)
+    // exists for — a Window.partitionBy would sort it on one task); a
+    // null group must rank as its own group, as Window.partitionBy does
     val rows = (1 to 500).map { i =>
-      val g = if (i % 97 == 0) "c" else if (i % 10 == 0) "b" else "a"
+      val g = if (i % 97 == 0) "c" else if (i % 13 == 0) null
+        else if (i % 10 == 0) "b" else "a"
       (g, i.toLong, (i * 37 % 101 + 1).toLong)
     }
     val keyed = rows.toDF("g", "id", "v")
       .withColumn("hk", md5(col("id").cast("string")))
     val w = Window.partitionBy("g").orderBy(col("hk"), col("id"))
-    val want = keyed
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("g")))
-      .withColumn("cum_v", sum("v").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    def check(in: org.apache.spark.sql.DataFrame,
-        bucket: Option[org.apache.spark.sql.Column] = None): Unit = {
-      val got = ScalarSuites.groupedRank(in, Seq("g"),
-        Seq(col("hk"), col("id")), rankCol = "rk",
-        totalCol = Some("n"), cumSums = Seq("v" -> "cum_v"),
-        bucket = bucket)
+    val want = keyed.withColumn("rk", row_number().over(w).cast("long"))
+    val wantCum = want.withColumn("cum_v", sum("v").over(
+      w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    def check(got: org.apache.spark.sql.DataFrame,
+        want: org.apache.spark.sql.DataFrame): Unit = {
       assert(got.count() == 500)
       assert(got.exceptAll(want).count() == 0 &&
         want.exceptAll(got).count() == 0)
     }
-    check(keyed)              // natural layout
-    check(keyed.repartition(7)) // membership must not depend on layout
-    check(keyed.coalesce(1))    // degenerate single-partition input
-    // hash-bucket mode (r17): same window semantics through the
-    // single-exchange path, bucket derived from the md5 sort key — more
-    // buckets than rows exercises empty buckets and run fragmentation
-    for (nb <- Seq(4, 64, 1024)) {
-      val b = Some(ScalarSuites.hexPrefixBucket(col("hk"), nb))
-      check(keyed, b)
-      check(keyed.repartition(7), b)
-      check(keyed.coalesce(1), b)
+    for (in <- Seq(keyed, keyed.repartition(7), keyed.coalesce(1))) {
+      // range path
+      check(ScalarSuites.rank(in, Seq(col("hk"), col("id")), "rk",
+        groupCols = Seq("g")), want)
+      // hash-bucket path with a running sum, at 32, 128 and 1024
+      // buckets: more buckets than rows exercises empty buckets and run
+      // fragmentation
+      for (p <- Seq(1, 4, 32)) {
+        spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+        try check(ScalarSuites.rank(in, Seq(col("hk"), col("id")), "rk",
+            groupCols = Seq("g"), md5Lead = true, cumSums = Seq("v" -> "cum_v")),
+          wantCum)
+        finally spark.conf.unset("spark.sql.shuffle.partitions")
+      }
     }
   }
 
-  test("globalRank: pinned directly against window row_number semantics (unique keys)") {
-    // ADVICE r16: globalRank's rank arithmetic assumes
-    // monotonically_increasing_id is CONSECUTIVE within a partition —
-    // an implementation property, not API contract. This pins the
-    // operator itself (not just query-level hashes) so a Spark upgrade
-    // that drops consecutiveness fails loud here.
+  test("rank: range path without groups pinned against row_number (unique keys)") {
+    // the range path's rank arithmetic assumes monotonically_increasing_id
+    // is CONSECUTIVE within a partition — an implementation property,
+    // not API contract. This pins the operator itself (not just
+    // query-level hashes) so a Spark upgrade that drops consecutiveness
+    // fails loud here.
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val rows = (1 to 700).map(i => (i.toLong, (i * 31 % 211).toLong))
@@ -199,13 +198,13 @@ class OpsSpec extends AnyFunSuite {
     val want = df.withColumn("rank",
       row_number().over(Window.orderBy(col("v"), col("id"))).cast("long"))
     for (in <- Seq(df, df.repartition(5), df.coalesce(1))) {
-      val got = ScalarSuites.globalRank(in, Seq(col("v"), col("id")))
+      val got = ScalarSuites.rank(in, Seq(col("v"), col("id")))
       assert(got.exceptAll(want).count() == 0 &&
         want.exceptAll(got).count() == 0)
     }
   }
 
-  test("rankWithKnownCount routes by the measured-crossover guard and both routes agree") {
+  test("rank: a known row bound picks the single-task sort, and every body agrees") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.{Repartition => LRepartition}
     val df = (1 to 300).map(i => (i.toLong, (i * 17 % 97).toLong)).toDF("id", "v")
@@ -214,18 +213,45 @@ class OpsSpec extends AnyFunSuite {
       f.queryExecution.optimizedPlan.collectFirst {
         case r: LRepartition if r.numPartitions == 1 && !r.shuffle => r
       }.isDefined
-    // n under the guard → boundedRank's coalesce(1)
-    assert(hasCoalesce1(ScalarSuites.rankWithKnownCount(df, 300L, sort)))
-    // n over the guard → globalRank (no single-task collapse) — forced
-    // via the conf so the routing itself is what's tested
-    spark.conf.set(ScalarSuites.BoundedRankMaxRowsConf, "100")
-    try {
-      val big = ScalarSuites.rankWithKnownCount(df, 300L, sort)
-      assert(!hasCoalesce1(big))
-      val small = ScalarSuites.boundedRank(df, sort)
-      assert(big.exceptAll(small).count() == 0 &&
-        small.exceptAll(big).count() == 0)
-    } finally spark.conf.unset(ScalarSuites.BoundedRankMaxRowsConf)
+    val small = ScalarSuites.rank(df, sort, maxRows = Some(300L))
+    assert(hasCoalesce1(small))
+    // no bound, a bound past SingleTaskMaxRows, or groups → no collapse
+    val unbounded = ScalarSuites.rank(df, sort)
+    val over = ScalarSuites.rank(df, sort,
+      maxRows = Some(ScalarSuites.SingleTaskMaxRows + 1))
+    val grouped = ScalarSuites.rank(df.withColumn("g", lit(1)), sort,
+      groupCols = Seq("g"), maxRows = Some(300L)).drop("g")
+    for (f <- Seq(unbounded, over, grouped)) {
+      assert(!hasCoalesce1(f))
+      assert(f.exceptAll(small).count() == 0 && small.exceptAll(f).count() == 0)
+    }
+  }
+
+  test("rank: the range path agrees with row_number with AQE on and off, and refuses exchange reuse off") {
+    // its stats branch and output branch must read ONE range exchange;
+    // two executions would sample their bounds twice. 10k unique keys
+    // over 6 input partitions, with a payload column only the output
+    // branch reads (the stats branch prunes it, yet reuse must hold)
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val df = (1 to 10000).map(i => (i.toLong, i * 7919L % 10007L, s"p$i"))
+      .toDF("id", "v", "payload").repartition(6)
+    val want = df.withColumn("rank",
+      row_number().over(Window.orderBy(col("v"), col("id"))).cast("long"))
+    for (aqe <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      try {
+        val got = ScalarSuites.rank(df, Seq(col("v"), col("id")))
+        assert(got.exceptAll(want).count() == 0 &&
+          want.exceptAll(got).count() == 0, s"AQE $aqe")
+        spark.conf.set("spark.sql.exchange.reuse", "false")
+        intercept[IllegalArgumentException](
+          ScalarSuites.rank(df, Seq(col("v"), col("id"))))
+      } finally {
+        spark.conf.unset("spark.sql.exchange.reuse")
+        spark.conf.unset("spark.sql.adaptive.enabled")
+      }
+    }
   }
 
   test("q98 SQL surface: spark.sql text agrees with an independent DataFrame formulation") {

@@ -63,8 +63,8 @@ class PlanSpec extends AnyFunSuite {
       "KMV sketch frame — both sides are one k-length array per source, " +
       "bounded by source count, never by corpus size"),
     "q162_stupid_backoff" -> "single-row N-total aggregate frame cross-joined in",
-    // r16: the rank operators (globalRank/groupedRank) are single lazy
-    // Catalyst plans now — the old RDD hop truncated the inspected plan
+    // r16: the rank operators (now the one ScalarSuites.rank) are single
+    // lazy Catalyst plans — the old RDD hop truncated the inspected plan
     // at `Scan ExistingRDD`, hiding everything upstream of a rank from
     // this gate. Three queries' pre-existing single-row cross joins
     // became VISIBLE (not new): they get the same entries their plan
@@ -197,13 +197,13 @@ class PlanSpec extends AnyFunSuite {
   test("NO query plans a no-key (global) window — all registered queries") {
     // the q49 hazard class: Window.partitionBy()/Window.orderBy() with no
     // partition keys funnels everything through one partition. Even
-    // semantically-global ranks (q60) use ScalarSuites.globalRank — the
-    // single-plan range-exchange + per-partition-offsets formulation
-    // (r16) — or, for count-guarded dimension-sized frames
-    // (rankWithKnownCount) and guard-bounded dictionaries (the
-    // q121/q141 bitset branch), boundedRank's explicit coalesce(1),
-    // which is not a Window at all — so this invariant holds over the
-    // ENTIRE query surface with no exception list.
+    // semantically-global ranks (q60) use ScalarSuites.rank: its range
+    // path (one range exchange + per-partition offsets folded over the
+    // stats rows, no window) or, for frames with a known row bound
+    // (q60's count in hand, the q121/q141 bitset branch's guarded
+    // dictionary, limit(k) lists), its single-task sort, an explicit
+    // coalesce(1) that is not a Window at all — so this invariant holds
+    // over the ENTIRE query surface with no exception list.
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
@@ -232,16 +232,16 @@ class PlanSpec extends AnyFunSuite {
     //      only (r17): the frame entering the window is an aggregated
     //      contraction — one row per distinct grouping combination,
     //      value-bounded, never corpus-bounded (q177's per-(source,
-    //      margin) counts; groupedRank's internal per-(bucket, group)
+    //      margin) counts; ScalarSuites.rank's internal per-(run, group)
     //      run stats). A join or generate BETWEEN the aggregate and the
     //      window would re-expand the frame, so the walk stops at the
     //      first non-unary node.
-    // Full per-group rankings, group totals, and running sums over
-    // corpus rows use ScalarSuites.groupedRank instead (q124/q128/q134:
-    // hash-bucket or range exchange — executor-bounded sorts whatever
+    // Full per-group rankings and running sums over corpus rows use
+    // ScalarSuites.rank instead (q124/q128/q134 on its hash-bucket
+    // path, q139 on its range path — executor-bounded sorts whatever
     // the skew).
     //
-    // groupedRank's internal offsets windows rename their keys to
+    // rank's internal offsets windows rename their keys to
     // __gr_g<i>; the rename is NOT an exemption (the r16 ADVICE
     // name-laundering concern): __gr_g*-keyed windows are held to the
     // SAME above-an-Aggregate requirement as the named low-card keys.
@@ -280,12 +280,13 @@ class PlanSpec extends AnyFunSuite {
       s"unpruned low-cardinality-key windows in: ${offenders.mkString(", ")}")
   }
 
-  /** boundedRank call sites that are RUNTIME-COUNT-guarded rather than
-    * plan-visible: rankWithKnownCount routes a frame here only when the
-    * caller's already-computed count is <= graft.rank.boundedMaxRows
-    * (the guard's routing is unit-tested in OpsSpec). Everything else
-    * must carry the bound IN the plan (a GlobalLimit or an Aggregate
-    * below the coalesce(1)).
+  /** Single-task-sort call sites of ScalarSuites.rank that are
+    * RUNTIME-COUNT-guarded rather than plan-visible: rank takes its
+    * coalesce(1) body here only because the caller's already-computed
+    * count, passed as `maxRows`, is <= ScalarSuites.SingleTaskMaxRows
+    * (the routing is unit-tested in OpsSpec). Everything else must
+    * carry the bound IN the plan (a GlobalLimit or an Aggregate below
+    * the coalesce(1)).
     */
   private val boundedRankCountGuarded: Map[String, String] = Map(
     "q60_rank_distributions" -> ("customer frame; n = cc.count() is in " +

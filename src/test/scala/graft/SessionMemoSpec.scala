@@ -172,6 +172,7 @@ class SessionMemoSpec extends AnyFunSuite {
       "q160_kmv_distinct", "q155_phash_neardup", "q70_ivf_probe_indexed",
       "q80_compact_roundtrip", "q172_hybrid_query_rrf", "q175_ce_rerank")
     SessionMemo.invalidate()
+    val before = heldIds()
     val first = queries.map(rows)
     // the memo frames and scratch dirs this run left behind
     def cached(df: org.apache.spark.sql.DataFrame) =
@@ -192,8 +193,27 @@ class SessionMemoSpec extends AnyFunSuite {
     assert(!frames.exists(cached), "invalidate left a memo frame persisted")
     assert(!persistedIds().contains(fusedRdd), "the fused top-10 checkpoint is still persisted")
     assert(!Files.exists(ivfDir) && !Files.exists(compactDir), "an on-disk memo dir is left")
+    // and no RDD the run persisted outlives its collection, checkpoints
+    // the memo builds read included (the q102 triangle graph)
+    val left = Iterator.fill(10)(heldIds() -- before).find(_.isEmpty)
+      .getOrElse(heldIds() -- before)
+    assert(left.isEmpty, s"persisted RDDs left after invalidate: ${left.toSeq.sorted.mkString(", ")}")
 
     assert(queries.map(rows) == first, "a re-run after invalidate changed an answer")
+  }
+
+  test("q153 and q171 release every superseded checkpoint round before they return") {
+    // their loops checkpoint one frame per round and unpersist the one
+    // before; Dataset.unpersist alone leaves a checkpoint RDD persisted,
+    // so without SessionMemo.unpersist the rounds stay until a GC
+    for (q <- Seq("q153_bpe_train", "q171_kcenter_coreset")) {
+      SessionMemo.invalidate()
+      val before = persistedIds()
+      rows(q)
+      val left = spark.sparkContext.getPersistentRDDs
+        .filter { case (id, r) => !before(id) && r.isCheckpointed }.keys
+      assert(left.isEmpty, s"$q left checkpoint RDDs: ${left.toSeq.sorted.mkString(", ")}")
+    }
   }
 
   test("concurrent queries over shared memos equal a sequential run and build each memo once") {

@@ -1486,4 +1486,31 @@ class StreamingSpec extends AnyFunSuite {
       assert(state.lastBatch == 1L) // ...but the stream guard is on batchId
     } finally { q.stop(); state.unpersist() }
   }
+
+  test("pagerank maintenance at ingest: each batch releases the state generation and scratch it supersedes") {
+    import spark.implicits._
+    // every batch checkpoints a new state generation plus per-batch
+    // scratch; a generation or scratch frame that is not released
+    // leaves its checkpoint RDD persisted, batch after batch
+    val corpus = Seq(1L -> "red green blue cyan magenta yellow black white",
+      2L -> "red green blue cyan magenta yellow black grey", 3L -> "one two three")
+    val dir = java.nio.file.Files.createTempDirectory("prg_leak").toString
+    corpus.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val outDir = java.nio.file.Files.createTempDirectory("prg_leak_out").toString + "/r"
+    // count only what this test persists: earlier tests' leftovers may
+    // be cleaned up while it runs
+    val first = spark.sparkContext.getPersistentRDDs.keys.maxOption.getOrElse(-1) + 1
+    val state = StreamingOps.buildRepGraphState(spark, dir)
+    def persisted(): Int = spark.sparkContext.getPersistentRDDs.keys.count(_ >= first)
+    try {
+      val counts = (0L to 2L).map { b =>
+        StreamingOps.maintainBatch(state,
+          Seq((10L + b) -> "red green blue cyan magenta yellow black white",
+            (20L + b) -> s"fresh words batch $b here now").toDF("doc_id", "text"),
+          b, outDir, 10L, 12)
+        persisted()
+      }
+      assert(counts(2) == counts(0), s"persisted RDDs after batches 1..3: ${counts.mkString(", ")}")
+    } finally state.unpersist()
+  }
 }
