@@ -15,5 +15,4 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 ARTIFACT="${1:-STRESS_local.json}"
 shift || true
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  exec sbt -batch "runMain graft.Stress /tmp/graft-stress $ARTIFACT $*"
+exec sbt -batch "runMain graft.Stress /tmp/graft-stress $ARTIFACT $*"

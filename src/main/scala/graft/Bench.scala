@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: one timed pass over every SparkEntry query at
-  * SPARK_GRAFT_SF_DIR, after a warmup pass at sf0.001 (JVM classloading +
-  * whole-stage-codegen compilation would otherwise be billed to whichever
-  * query happens to run first). Prints one JSON line.
+/** Benchmark main: probe-gated timed sweeps over every SparkEntry query
+  * (or the ones named on argv) at SPARK_GRAFT_SF_DIR, after a warmup
+  * pass at sf0.001 (JVM classloading + whole-stage-codegen compilation
+  * would otherwise be billed to whichever query happens to run first).
+  * Prints one JSON line.
   */
 object Bench {
 
@@ -128,25 +129,14 @@ object Bench {
     * never goes quiet, the artifact says so (clean_sweeps < passes)
     * instead of shipping polluted numbers as facts. A query that throws
     * in any sweep is reported as -1 (NOT its elapsed-until-crash time)
-    * so a regression can't masquerade as a fast run. `only` non-empty
-    * restricts to that subset (Stress's targeted mode) — one timing
-    * protocol, no duplicated loop.
+    * so a regression can't masquerade as a fast run. `names` comes from
+    * [[QueryRun.names]]: every query, or a targeted subset.
     */
   def timeAll(spark: SparkSession, sfDir: String,
       warmDir: String = "/root/testdata/sf0.001",
-      only: Set[String] = Set.empty, passes: Int = 1): Run = {
-    // fail loudly on unknown names: a typo in a targeted stress run must
-    // not produce a success-looking empty artifact
-    val unknown = only.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
-    Seq(warmDir, sfDir).distinct.foreach { dir =>
-      names.foreach { name =>
-        try SparkEntry.queries(name)(spark, dir).count()
-        catch { case _: Throwable => () }
-      }
-    }
+      names: Seq[String] = QueryRun.names(Nil), passes: Int = 1): Run = {
+    Seq(warmDir, sfDir).distinct.foreach(dir =>
+      names.foreach(QueryRun.run(spark, _, dir)))
     probeOnce(spark) // probe warmup (its own codegen/classloading)
     val maxSweeps = passes + 3
     val loads = scala.collection.mutable.ArrayBuffer(loadSample())
@@ -172,14 +162,7 @@ object Bench {
     }
     while (sweeps.size < maxSweeps &&
         (sweeps.size < passes || cleanCount() < passes)) {
-      sweeps += names.map { name =>
-        val t0 = System.nanoTime()
-        val t = try {
-          SparkEntry.queries(name)(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-        name -> t
-      }.toMap
+      sweeps += names.map(n => n -> QueryRun.run(spark, n, sfDir)).toMap
       loads += loadSample()
       probes += probe(spark)
     }
@@ -222,22 +205,16 @@ object Bench {
     * regression can't ship inside a flat-looking total.
     */
   def benchDiff(results: Seq[(String, Double)],
-      baselinePath: String): Option[(String, Seq[String])] = {
-    val p = java.nio.file.Paths.get(baselinePath)
-    if (!java.nio.file.Files.exists(p)) return None
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(
-      java.nio.file.Files.readString(p).trim.linesIterator.toList.last)
-    val old = root.get("queries")
-    val offenders = results.collect {
-      case (q, t) if t < 0 => s"$q:crashed"
-      case (q, t) if old.has(q) && old.get(q).asDouble >= 0 &&
-          t > 2 * old.get(q).asDouble && t - old.get(q).asDouble > 2.0 =>
-        String.format(java.util.Locale.ROOT, "%s:%.2f->%.2f",
-          q, Double.box(old.get(q).asDouble), Double.box(t))
+      baselinePath: String): Option[(String, Seq[String])] =
+    QueryRun.baseline(baselinePath).map { old =>
+      val offenders = results.collect {
+        case (q, t) if t < 0 => s"$q:crashed"
+        case (q, t) if old.has(q) && old.get(q).asDouble >= 0 &&
+            t > 2 * old.get(q).asDouble && t - old.get(q).asDouble > 2.0 =>
+          s"$q:${QueryRun.num(old.get(q).asDouble, 2)}->${QueryRun.num(t, 2)}"
+      }
+      (if (offenders.isEmpty) "PASS" else "FAIL", offenders)
     }
-    Some((if (offenders.isEmpty) "PASS" else "FAIL", offenders))
-  }
 
   /** Post-sweep OFFENDER RE-MEASUREMENT — the response to a measured
     * failure mode the probe gate cannot see (round-14 instrumented
@@ -261,25 +238,32 @@ object Bench {
     val names = offenders.filterNot(_.endsWith(":crashed"))
       .map(_.takeWhile(_ != ':')).distinct
       .filter(SparkEntry.queries.contains)
-    if (names.isEmpty) return (run, Seq.empty)
     val results = run.results.toMap
     val requal = scala.collection.mutable.ArrayBuffer.empty[String]
     val updated = names.map { n =>
-      val t = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(n)(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-      }
+      val t = (1 to 3).map(_ => QueryRun.run(spark, n, sfDir))
       val best = if (t.exists(_ < 0)) -1.0 else math.min(t.min, results(n))
       if (best >= 0 && best < results(n))
-        requal += String.format(java.util.Locale.ROOT, "%s:%.3f->%.3f",
-          n, Double.box(results(n)), Double.box(best))
+        requal += s"$n:${QueryRun.num(results(n))}->${QueryRun.num(best)}"
       n -> best
     }.toMap
     val merged = run.results.map { case (n, v) =>
       n -> updated.getOrElse(n, v) }
     (run.copy(results = merged), requal.toSeq)
+  }
+
+  /** The regression gate Bench and Stress share: [[benchDiff]] against
+    * `baselinePath`, one [[requalify]] of its offenders, and the verdict
+    * over the requalified results. Returns the run, the verdict (None
+    * without a baseline file) and the requalified entries.
+    */
+  def gate(spark: SparkSession, dir: String, run: Run, baselinePath: String)
+      : (Run, Option[(String, Seq[String])], Seq[String]) = {
+    val diff = benchDiff(run.results, baselinePath)
+    val (run2, requal) = requalify(spark, dir, run,
+      diff.fold(Seq.empty[String])(_._2))
+    (run2, if (requal.isEmpty) diff else benchDiff(run2.results, baselinePath),
+      requal)
   }
 
   /** Per-query seconds at 3 decimals (1 ms resolution — run-to-run noise
@@ -292,54 +276,35 @@ object Bench {
     */
   def jsonLine(run: Run, sfDir: String, passes: Int = 1,
       diff: Option[(String, Seq[String])] = None,
-      requalified: Seq[String] = Seq.empty,
-      extraFields: Seq[(String, String)] = Seq.empty): String = {
-    // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
-    // comma-decimal locale (de_DE, fr_FR) would emit 0,123 — invalid JSON
-    def r3(v: Double): String =
-      if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = run.results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
+      requalified: Seq[String] = Seq.empty): String = {
+    import QueryRun.{num, str, strs}
+    val qs = run.results.map { case (k, v) => str(k) + ":" + num(v) }
       .mkString("{", ",", "}")
-    val probes = run.probes.map(r3).mkString("[", ",", "]")
     val total = run.results.map(_._2).filter(_ >= 0).sum
     // probes/sweeps/clean_sweeps are the artifact's own contention
     // evidence: clean_sweeps < the target means the measurement window
     // never went quiet and the numbers carry a documented asterisk
     val diffFields = diff.map { case (verdict, offenders) =>
-      val offs = offenders.map(o => "\"" + o + "\"").mkString("[", ",", "]")
-      s""""bench_diff":"$verdict","bench_regressed":$offs,"""
+      s""""bench_diff":"$verdict","bench_regressed":${strs(offenders)},"""
     }.getOrElse("")
-    val requalField = if (requalified.isEmpty) "" else
-      s""""requalified":${requalified.map(o => "\"" + o + "\"")
-        .mkString("[", ",", "]")},"""
-    // the standing watch list rides in every artifact (see [[FlipWatch]])
-    val flipField = s""""flip_watch":${FlipWatch.map(o => "\"" + o + "\"")
-      .mkString("[", ",", "]")},"""
+    val requalField =
+      if (requalified.isEmpty) "" else s""""requalified":${strs(requalified)},"""
     // machine-load evidence beside the probes (same indices): loadavg-1m
     // and MemAvailable MB at each probe point — see [[loadSample]]
     val loadFields = if (run.loads.isEmpty) "" else {
-      val la = run.loads.map(l => r3(l._1)).mkString("[", ",", "]")
+      val la = run.loads.map(l => num(l._1)).mkString("[", ",", "]")
       val mm = run.loads.map(_._2.toString).mkString("[", ",", "]")
       s""""loadavg":$la,"mem_avail_mb":$mm,"""
     }
-    // caller-supplied run descriptors (e.g. a Spark-conf override under
-    // A/B test) — values must already be JSON-encoded
-    val extra = extraFields.map { case (k, v) => s""""$k":$v,""" }.mkString
-    s"""{"queries":$qs,"sf":"$sfDir","protocol":"${protocol(passes)}","probes":$probes,"sweeps":${run.sweeps},"clean_sweeps":${run.cleanSweeps},"probe_idle_ref":${r3(IdleProbeRef)},"clean_sweeps_abs":${cleanSweepsAbs(run)},$loadFields$extra$diffFields$requalField$flipField"unit":"sec","metric":"total","value":${r3(total)}}"""
+    // the standing watch list rides in every artifact (see [[FlipWatch]])
+    s"""{"queries":$qs,"sf":${str(sfDir)},"protocol":"${protocol(passes)}","probes":${run.probes.map(num(_)).mkString("[", ",", "]")},"sweeps":${run.sweeps},"clean_sweeps":${run.cleanSweeps},"probe_idle_ref":${num(IdleProbeRef)},"clean_sweeps_abs":${cleanSweepsAbs(run)},$loadFields$diffFields$requalField"flip_watch":${strs(FlipWatch)},"unit":"sec","metric":"total","value":${num(total)}}"""
   }
 
+  /** Usage: runMain graft.Bench [queryName...] */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // targeted runs (comma-separated query names) for before/after
-    // measurement of one optimization without a full sweep
-    val only = sys.env.get("GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val spark = graft.core.GraftSession
-      .builder("graft-bench", s"local[$cpus]", shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = QueryRun.names(args.toSeq)
+    val spark = QueryRun.session("graft-bench")
     // 2 clean whole-sweep passes (probe-gated, up to 5 total): a single
     // pass over a 70+ query sweep shows one-off ~2.5x GC/page-cache
     // outliers (r5 driver run: q52 0.5→3.4 s, q69 3.0→6.6 s), and the
@@ -348,38 +313,26 @@ object Bench {
     // cross-sweep min is the stable noise-floor estimate; probes/
     // clean_sweeps in the artifact say whether it was reached.
     val passes = 2
-    val run = timeAll(spark, sfDir, only = only, passes = passes)
+    val run = timeAll(spark, sfDir, names = names, passes = passes)
     System.err.println(s"[bench] sweeps=${run.sweeps} clean=${run.cleanSweeps} " +
-      s"probes=${run.probes.map(p => f"$p%.3f").mkString(",")}")
-    // the regression gate only applies to full sweeps — a targeted run's
-    // result set would read as mass removals and prove nothing
-    val baseline = sys.env.getOrElse("GRAFT_BENCH_BASELINE", "BENCH_BASELINE.json")
-    val diff0 = if (only.isEmpty) benchDiff(run.results, baseline) else None
+      s"probes=${run.probes.map(QueryRun.num(_)).mkString(",")}")
     // offenders get one targeted re-measurement (see [[requalify]]) —
     // a real regression reproduces and stays flagged; an
     // execution-level flip requalifies with both values recorded
-    val (run2, requal) = diff0 match {
-      case Some((_, offs)) if offs.nonEmpty => requalify(spark, sfDir, run, offs)
-      case _ => (run, Seq.empty[String])
-    }
-    val diff = if (requal.isEmpty) diff0 else benchDiff(run2.results, baseline)
+    val (run2, diff, requal) = gate(spark, sfDir, run,
+      sys.env.getOrElse("GRAFT_BENCH_BASELINE", "BENCH_BASELINE.json"))
     diff.foreach { case (v, offs) =>
       System.err.println(s"[bench] bench_diff=$v ${offs.mkString(" ")} " +
         s"requalified=${requal.mkString(" ")}")
     }
-    val line = jsonLine(run2, sfDir, passes, diff, requal,
-      extraFields = graft.core.GraftSession.advisoryOverride
-        .map(v => "advisory_partition" -> ("\"" + v + "\"")).toSeq)
-    println(line)
     // the stdout line is harvested through a fixed-size tail window and
     // with 118 queries the per-query map loses its head (BENCH_r06 kept
     // only the last 69 queries) — also land the COMPLETE artifact as a
     // file, the way the stress runner does, so round-over-round
     // comparison always has every query
     val outFile = sys.env.getOrElse("GRAFT_BENCH_OUT", "BENCH_FULL.json")
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outFile), line + "\n")
-    catch { case e: Throwable =>
+    try QueryRun.emit(jsonLine(run2, sfDir, passes, diff, requal), Some(outFile))
+    catch { case e: java.io.IOException =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
@@ -22,39 +22,29 @@ import graft.ops.Dedup
   */
 object CcBench {
 
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   private def run(name: String, pairs: DataFrame,
       propMaxIters: Int, starMaxIters: Int = 50): Unit = {
-    val (propagation, tProp) = time {
-      val (df, rounds) = Dedup.connectedComponentsWithRounds(pairs, propMaxIters)
-      val n = df.count() // materialize under the timer
-      (df, rounds, n)
+    // each variant's frame is counted under the timer, to materialize it
+    def timed(variant: String)(cc: => (DataFrame, Int)): DataFrame = {
+      val ((df, rounds, n), secs) = QueryRun.time {
+        val (df, rounds) = cc
+        (df, rounds, df.count())
+      }
+      println(s"$name $variant ${QueryRun.num(secs, 2)} s, rounds=$rounds, labels=$n")
+      df
     }
-    println(f"$name propagation: ${tProp}%.2f s, rounds=${propagation._2}, labels=${propagation._3}")
-    val (star, tStar) = time {
-      val (df, rounds) = Dedup.connectedComponentsStarWithRounds(pairs, starMaxIters)
-      val n = df.count()
-      (df, rounds, n)
-    }
-    println(f"$name star:        ${tStar}%.2f s, rounds=${star._2}, labels=${star._3}")
-    val diff = propagation._1.exceptAll(star._1).count() +
-      star._1.exceptAll(propagation._1).count()
+    val propagation = timed("propagation:")(
+      Dedup.connectedComponentsWithRounds(pairs, propMaxIters))
+    val star = timed("star:       ")(
+      Dedup.connectedComponentsStarWithRounds(pairs, starMaxIters))
+    val diff = propagation.exceptAll(star).count() +
+      star.exceptAll(propagation).count()
     println(s"$name label diff (must be 0 when both converged): $diff")
   }
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("dup")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark: SparkSession = graft.core.GraftSession
-      .builder("graft-ccbench", s"local[$cpus]", shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryRun.session("graft-ccbench")
     mode match {
       case "dup" =>
         val dir = "/tmp/graft-stress"

@@ -14,7 +14,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
 
-
   /** q69 needs bespoke treatment: the interesting plan is the PER-ROUND
     * propagation step inside connectedComponents' loop (invisible from
     * the final frame, whose lineage is truncated by the checkpoints).
@@ -146,26 +145,24 @@ object Explain {
     } finally thresholds.unpersist()
   }
 
-  private def writeArtifacts(sfDir: String, outDir: String, only: Seq[String]): Unit = {
-    // the SAME session config every real run uses — artifacts generated
-    // under a drifting hand-built config would be claims, not facts
-    val spark = graft.core.GraftSession.builder("graft-explain", "local[4]")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** Writes `names`' plans; the bespoke q69 and pre-checkpoint
+    * artifacts rewrite or append to their own files, so they belong to
+    * full runs only (`full`). */
+  private def writeArtifacts(spark: SparkSession, sfDir: String,
+      outDir: String, names: Seq[String], full: Boolean): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // EVERY registered query gets an artifact — the plan-shape record is
     // the 100×-scale insurance, and a partial set invites "was this one
     // skipped because its plan is embarrassing?" (q69's generic artifact
     // is overwritten below by the bespoke per-round one, which is the
     // plan that actually matters for the iterative kernel).
-    val names = if (only.nonEmpty) only else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
       // EXECUTE before explaining: the artifact must show the AQE-final
       // plan (isFinalPlan=true) — the runtime join-strategy choices are
       // the facts being committed; an unexecuted initial plan would show
       // strategies AQE may replace
-      df.collect()
+      val (df, _) = QueryRun.attempt(spark, name, sfDir, QueryRun.Collect)
+        .fold(e => throw e, identity)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(
@@ -173,45 +170,37 @@ object Explain {
         s"== $name (sfDir=$sfDir, executed: AQE-final plan) ==\n\n" + txt)
       println(s"wrote $outDir/$name.txt")
     }
-    // the bespoke artifacts rewrite or append to their own files, so they
-    // belong to full runs only
-    if (only.isEmpty) {
+    if (full) {
       writeQ69Artifact(spark, sfDir, outDir)
       appendPreCheckpointPlans(spark, sfDir, outDir)
     }
-    spark.stop()
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("write")) {
-      writeArtifacts(
-        args.lift(1).getOrElse("/root/testdata/sf0.01"),
-        args.lift(2).getOrElse("explain"),
-        args.drop(3).toSeq)
-      return
-    }
+  def main(argv: Array[String]): Unit = {
+    val write = argv.headOption.contains("write")
+    val args = if (write) argv.drop(1) else argv
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = args.drop(1)
-    val spark = graft.core.GraftSession.builder("graft-explain", "local[4]")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val targets: Seq[String] =
-      if (names.nonEmpty) names.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    targets.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => println(s"== $name: unknown query ==")
-        case Some(fn) =>
-          val df = fn(spark, sfDir)
-          if (names.nonEmpty) {
-            println(s"== $name ==")
-            df.explain("formatted")
-          } else {
-            val p = df.queryExecution.executedPlan.toString
-            val lines = p.linesIterator.toSeq
-            def c(s: String) = lines.count(_.contains(s))
-            val pushed = lines.filter(_.contains("PushedFilters: [")).exists(!_.contains("PushedFilters: []"))
-            println(f"$name%-30s wscg=${c("WholeStageCodegen")}%2d exchanges=${c("Exchange")}%2d bhj=${c("BroadcastHashJoin")}%2d smj=${c("SortMergeJoin")}%2d pushedFilters=$pushed")
-          }
+    val only = args.drop(if (write) 2 else 1).toSeq
+    val names = QueryRun.names(only)
+    // the SAME session config every real run uses (artifacts generated
+    // under a drifting hand-built config would be claims, not facts),
+    // pinned to local[4] rather than QueryRun.cpus: the committed
+    // explain/ plans print partition counts and AQE choices that depend
+    // on the thread count, so they must regenerate identically on any host
+    val spark = QueryRun.session("graft-explain", cpus = 4)
+    if (write)
+      writeArtifacts(spark, sfDir, args.lift(1).getOrElse("explain"), names,
+        full = only.isEmpty)
+    else names.foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      if (only.nonEmpty) {
+        println(s"== $name ==")
+        df.explain("formatted")
+      } else {
+        val lines = df.queryExecution.executedPlan.toString.linesIterator.toSeq
+        def c(s: String) = lines.count(_.contains(s))
+        val pushed = lines.filter(_.contains("PushedFilters: [")).exists(!_.contains("PushedFilters: []"))
+        println(f"$name%-30s wscg=${c("WholeStageCodegen")}%2d exchanges=${c("Exchange")}%2d bhj=${c("BroadcastHashJoin")}%2d smj=${c("SortMergeJoin")}%2d pushedFilters=$pushed")
       }
     }
     spark.stop()

@@ -8,24 +8,17 @@ package graft
 object RunQuery {
   def main(args: Array[String]): Unit = {
     if (args.isEmpty || args(0) == "list") {
-      SparkEntry.queries.keys.toSeq.sorted.foreach(println)
+      QueryRun.names(Nil).foreach(println)
       return
     }
-    val name = args(0)
+    val Seq(name) = QueryRun.names(args.take(1).toSeq)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val n = if (args.length > 2) args(2).toInt else 20
-    SparkEntry.queries.get(name) match {
-      case None =>
-        System.err.println(s"unknown query '$name' — try: runMain graft.RunQuery list")
-        sys.exit(1)
-      case Some(fn) =>
-        val spark = graft.core.GraftSession.local("graft-run",
-          Runtime.getRuntime.availableProcessors())
-        try {
-          val df = fn(spark, sfDir).persist()
-          df.show(n, truncate = false)
-          println(s"rows: ${df.count()}") // served from the persisted result
-        } finally spark.stop()
-    }
+    val n = args.lift(2).fold(20)(_.toInt)
+    val spark = QueryRun.session("graft-run")
+    try {
+      val df = SparkEntry.queries(name)(spark, sfDir).persist()
+      df.show(n, truncate = false)
+      println(s"rows: ${df.count()}") // served from the persisted result
+    } finally spark.stop()
   }
 }

@@ -63,47 +63,34 @@ object ShuffleAudit {
 
   def main(args: Array[String]): Unit = {
     val dst = args.headOption.getOrElse("/tmp/graft-stress")
-    val artifact = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.GraftSession
-      .builder("graft-shuffle-audit", s"local[$cpus]",
-        shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryRun.session("graft-shuffle-audit")
     Stress.generateIfAbsent(spark, "/root/testdata/sf0.1", dst)
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = QueryRun.names(Nil)
     // warm pass: session memos (contraction, sketches, quantizers,
     // exact-kNN) build here, so the audited plans are the steady-state
     // serving shapes, not one-time index builds
-    names.foreach { n =>
-      try SparkEntry.queries(n)(spark, dst).count()
-      catch { case _: Throwable => () }
-    }
+    names.foreach(QueryRun.run(spark, _, dst))
+    // ToRdd drives THIS DataFrame's own QueryExecution: df.count() would
+    // plan and execute a separate aggregate QueryExecution, leaving
+    // every metric on the inspected plan at 0 (measured) — toRdd
+    // consumes the same physical plan whose metrics we then read,
+    // without collecting result rows to the driver
     val measured = names.map { n =>
-      val cell: Either[String, (Double, Double, Double, Int, Int)] = try {
-        val df = SparkEntry.queries(n)(spark, dst)
-        // drive THIS DataFrame's own QueryExecution: df.count() would
-        // plan and execute a separate aggregate QueryExecution, leaving
-        // every metric on the inspected plan at 0 (measured) — toRdd
-        // consumes the same physical plan whose metrics we then read,
-        // without collecting result rows to the driver
-        df.queryExecution.toRdd.count()
-        val nodes = allNodes(df.queryExecution.executedPlan)
-          .filterNot(_.isInstanceOf[ReusedExchangeExec])
-        val shufWrite = metricSum(nodes,
-          _.isInstanceOf[ShuffleExchangeLike], "shuffleBytesWritten")
-        val bcast = metricSum(nodes,
-          _.isInstanceOf[BroadcastExchangeLike], "dataSize")
-        val spill = metricSum(nodes, _ => true, "spillSize")
-        val nShuf = nodes.count(_.isInstanceOf[ShuffleExchangeLike])
-        val nBcast = nodes.count(_.isInstanceOf[BroadcastExchangeLike])
-        Right((shufWrite / 1048576.0, bcast / 1048576.0,
-          spill / 1048576.0, nShuf, nBcast))
-      } catch { case e: Throwable =>
-        Left(e.getClass.getSimpleName)
-      }
-      n -> cell
+      n -> QueryRun.attempt(spark, n, dst, QueryRun.ToRdd).fold(
+        e => Left(e.getClass.getSimpleName),
+        { case (df, _) =>
+          val nodes = allNodes(df.queryExecution.executedPlan)
+            .filterNot(_.isInstanceOf[ReusedExchangeExec])
+          val shufWrite = metricSum(nodes,
+            _.isInstanceOf[ShuffleExchangeLike], "shuffleBytesWritten")
+          val bcast = metricSum(nodes,
+            _.isInstanceOf[BroadcastExchangeLike], "dataSize")
+          val spill = metricSum(nodes, _ => true, "spillSize")
+          val nShuf = nodes.count(_.isInstanceOf[ShuffleExchangeLike])
+          val nBcast = nodes.count(_.isInstanceOf[BroadcastExchangeLike])
+          Right((shufWrite / 1048576.0, bcast / 1048576.0,
+            spill / 1048576.0, nShuf, nBcast))
+        })
     }
     val rows = measured.map {
       case (n, Right((shuf, bc, sp, nShuf, nBcast))) =>
@@ -114,19 +101,14 @@ object ShuffleAudit {
     val diff = shuffleDiff(measured,
       sys.env.getOrElse("GRAFT_SHUFFLE_BASELINE", "SHUFFLE_r13.json"))
     val diffFields = diff.map { case (verdict, offenders) =>
-      val offs = offenders.map(o => "\"" + o + "\"").mkString("[", ",", "]")
-      s""""shuffle_diff":"$verdict","shuffle_regressed":$offs,"""
+      s""""shuffle_diff":"$verdict","shuffle_regressed":${QueryRun.strs(offenders)},"""
     }.getOrElse("")
     diff.foreach { case (v, offs) =>
       System.err.println(s"[shuffle] shuffle_diff=$v ${offs.mkString(" ")}")
     }
-    val line = s"""{"metric":"shuffle_audit_20x","cpus":$cpus,$diffFields""" +
-      s""""corpus":"$dst","queries":{${rows.mkString(",")}}}"""
-    println(line)
-    artifact.foreach { path =>
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(path), line + "\n")
-    }
+    QueryRun.emit(s"""{"metric":"shuffle_audit_20x","cpus":${QueryRun.cpus},$diffFields""" +
+      s""""corpus":${QueryRun.str(dst)},"queries":{${rows.mkString(",")}}}""",
+      args.lift(1))
     spark.stop()
   }
 
@@ -146,28 +128,22 @@ object ShuffleAudit {
     */
   private[graft] def shuffleDiff(
       measured: Seq[(String, Either[String, (Double, Double, Double, Int, Int)])],
-      baselinePath: String): Option[(String, Seq[String])] = {
-    val p = java.nio.file.Paths.get(baselinePath)
-    if (!java.nio.file.Files.exists(p)) return None
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(
-      java.nio.file.Files.readString(p).trim.linesIterator.toList.last)
-    val old = root.get("queries")
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    val offenders = measured.collect {
-      case (q, Left(err)) => Seq(s"$q:error:$err")
-      case (q, Right((shuf, _, spill, _, _)))
-          if old.has(q) && old.get(q).has("shuffle_write_mb") =>
-        val oldShuf = old.get(q).get("shuffle_write_mb").asDouble
-        val oldSpill = old.get(q).get("spill_mb").asDouble
-        val shufBad = shuf > 2 * oldShuf && shuf - oldShuf > 16.0
-        val spillBad = spill > 1.0 && oldSpill <= 1.0
-        (if (shufBad)
-          Seq(s"$q:shuffle:${fmt(oldShuf)}->${fmt(shuf)}mb") else Seq.empty) ++
-          (if (spillBad)
-            Seq(s"$q:spill:${fmt(oldSpill)}->${fmt(spill)}mb") else Seq.empty)
-    }.flatten
-    Some((if (offenders.isEmpty) "PASS" else "FAIL", offenders))
-  }
+      baselinePath: String): Option[(String, Seq[String])] =
+    QueryRun.baseline(baselinePath).map { old =>
+      def mb(v: Double): String = QueryRun.num(v, 1)
+      val offenders = measured.collect {
+        case (q, Left(err)) => Seq(s"$q:error:$err")
+        case (q, Right((shuf, _, spill, _, _)))
+            if old.has(q) && old.get(q).has("shuffle_write_mb") =>
+          val oldShuf = old.get(q).get("shuffle_write_mb").asDouble
+          val oldSpill = old.get(q).get("spill_mb").asDouble
+          val shufBad = shuf > 2 * oldShuf && shuf - oldShuf > 16.0
+          val spillBad = spill > 1.0 && oldSpill <= 1.0
+          (if (shufBad)
+            Seq(s"$q:shuffle:${mb(oldShuf)}->${mb(shuf)}mb") else Seq.empty) ++
+            (if (spillBad)
+              Seq(s"$q:spill:${mb(oldSpill)}->${mb(spill)}mb") else Seq.empty)
+      }.flatten
+      (if (offenders.isEmpty) "PASS" else "FAIL", offenders)
+    }
 }

@@ -1,9 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.streaming.StreamingOps
 
 /** Streaming-surface scale stress: drives the two ingest twins
   * (`qualityScoreAtIngest`, `contaminationSpansAtIngest`) over the 20×
@@ -49,21 +50,18 @@ object StreamStress {
     (): Unit
   }
 
-  private def fmt(d: Double): String = f"$d%.3f"
-
   /** Run one streaming surface over the chunked input; returns the
     * measurement fields as (key, json-value) pairs.
     */
   private[graft] def runStream(spark: SparkSession, inDir: String, nRows: Long,
       filesPerTrigger: Int = 1)(
       start: DataFrame => StreamingQuery): Seq[(String, String)] = {
+    import QueryRun.num
     val schema = spark.read.parquet(inDir).schema
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerTrigger).parquet(inDir)
     val q = start(src)
-    val t0 = System.nanoTime()
-    try q.processAllAvailable() finally q.stop()
-    val secs = (System.nanoTime() - t0) / 1e9
+    val (_, secs) = QueryRun.time(try q.processAllAvailable() finally q.stop())
     // arrival order retained in batch_secs: a max that is always batch 0
     // is a JIT/codegen warm-up artifact, not data skew — the two need
     // different fixes, so the artifact must distinguish them
@@ -73,88 +71,151 @@ object StreamStress {
     val durs = inOrder.sorted
     val p50 = if (durs.isEmpty) 0.0 else durs(durs.length / 2)
     Seq(
-      "sec" -> fmt(secs),
+      "sec" -> num(secs),
       "rows" -> nRows.toString,
-      "rows_per_sec" -> fmt(nRows / secs),
+      "rows_per_sec" -> num(nRows / secs),
       "batches" -> durs.length.toString,
-      "batch_p50_sec" -> fmt(p50),
-      "batch_max_sec" -> fmt(if (durs.isEmpty) 0.0 else durs.last),
-      "batch_secs" -> inOrder.map(fmt).mkString("[", ",", "]"))
+      "batch_p50_sec" -> num(p50),
+      "batch_max_sec" -> num(if (durs.isEmpty) 0.0 else durs.last),
+      "batch_secs" -> inOrder.map(num(_)).mkString("[", ",", "]"))
   }
 
-  def main(args: Array[String]): Unit = {
-    val dst = args.headOption.getOrElse("/tmp/graft-stress")
-    val artifact = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.GraftSession
-      .builder("graft-stream-stress", s"local[$cpus]",
-        shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Stress.generateIfAbsent(spark, "/root/testdata/sf0.1", dst)
+  /** One surface along the trigger-size knob: `setup` builds the
+    * surface's index once, outside the timed streams, and returns it
+    * with its release; each (suffix, files per trigger) point then runs
+    * `start(index, dir)` as its own stream, writing under its own
+    * `dir` = workDir/name+suffix. Returns one measurement per point.
+    */
+  private[graft] def curve[A](spark: SparkSession, workDir: String,
+      name: String, in: String, n: Long, points: Seq[(String, Int)])(
+      setup: => (A, () => Unit))(
+      start: (A, String) => DataFrame => StreamingQuery)
+      : Seq[(String, Seq[(String, String)])] = {
+    val (index, release) = setup
+    try points.map { case (suffix, files) =>
+      (name + suffix) ->
+        runStream(spark, in, n, files)(start(index, s"$workDir/$name$suffix"))
+    } finally release()
+  }
 
-    val nBatches = 8
-    val inDir = "/tmp/graft-stream-in"
-    val workDir = "/tmp/graft-stream-out"
-    rmrf(inDir); rmrf(workDir)
+  /** Per-REQUEST hybrid retrieval (q172's twin): each arriving query
+    * runs rarest-8-term BM25 against the persisted postings plus exact
+    * dense cosine against the corpus side, RRF-fused — rows here are
+    * QUERIES, so rows_per_sec is requests/s. Unlike the row-linear
+    * ivf/adc surfaces, per-batch work scales SUPERLINEARLY in batch size
+    * through the (query, rep) aggregation state, so the saturated point
+    * is not the throughput-optimal end of this curve.
+    */
+  private[graft] def hybridCurve(spark: SparkSession, dst: String,
+      workDir: String, in: String, n: Long, points: Seq[(String, Int)]) =
+    curve(spark, workDir, "hybrid_rrf_ingest", in, n, points) {
+      val hyb = StreamingOps.buildHybridServingIndex(spark, dst)
+      (hyb, () => hyb.unpersist())
+    } { (hyb, dir) => s =>
+      StreamingOps.hybridRrfAtIngest(s, hyb, s"$dir/out", s"$dir/ckpt")
+    }
+
+  /** The ANN-backed hybrid twin (q174's): same lexical side and fusion,
+    * dense list from the COMPRESSED ADC index (`nCentroids` = 0 sizes it
+    * by the √N serving rule) instead of the exact per-batch corpus scan
+    * — rows are queries, directly comparable to [[hybridCurve]]'s.
+    */
+  private[graft] def hybridAnnCurve(spark: SparkSession, dst: String,
+      workDir: String, in: String, n: Long, points: Seq[(String, Int)],
+      nCentroids: Int, nProbe: Int) =
+    curve(spark, workDir, "hybrid_ann_ingest", in, n, points) {
+      val hyb = StreamingOps.buildHybridServingIndex(spark, dst)
+      val pq = StreamingOps.buildPqServingIndex(spark, dst, nCentroids)
+      ((hyb, pq), () => { hyb.unpersist(); pq.unpersist() })
+    } { case ((hyb, pq), dir) => s =>
+      StreamingOps.hybridAnnAtIngest(s, hyb, pq, s"$dir/out", s"$dir/ckpt",
+        nProbe = nProbe)
+    }
+
+  /** Writes `df` as `nBatches` parquet files at `path` (replacing it),
+    * the chunked input a file-source stream replays; returns its rows.
+    */
+  private def writeInput(df: DataFrame, path: String, nBatches: Int): Long = {
+    rmrf(path)
+    df.repartition(nBatches).write.mode("overwrite").parquet(path)
+    df.sparkSession.read.parquet(path).count()
+  }
+
+  /** The hybrid-retrieval twins' QUERY rows (query_id, text, embedding)
+    * — a request workload, not the corpus: q172's %50 set (ids past the
+    * original doc range arrive dense-only, the replicated-corpus
+    * absent-text regime). Returns the row count.
+    */
+  private[graft] def writeHybridQueries(spark: SparkSession, dst: String,
+      path: String, nBatches: Int): Long = {
     val docs = spark.read.parquet(s"$dst/documents.parquet")
-    docs.filter(col("doc_id") % 100 =!= 0).select("doc_id", "text")
-      .repartition(nBatches)
-      .write.mode("overwrite").parquet(inDir)
-    val nTrain = spark.read.parquet(inDir).count()
-    // the ANN-serving twin consumes embedding queries, not documents:
-    // stream the ENTIRE 20x embedding corpus as arriving queries
-    // against the persisted IVF index built over the same corpus
-    val embIn = "/tmp/graft-stream-emb-in"
-    rmrf(embIn)
-    spark.read.parquet(s"$dst/embeddings.parquet")
-      .select("vec_id", "embedding")
-      .repartition(nBatches)
-      .write.mode("overwrite").parquet(embIn)
-    val nEmb = spark.read.parquet(embIn).count()
-    // the hybrid-retrieval twin consumes QUERY rows (query_id, text,
-    // embedding) — a request workload, not the corpus: q172's %50 set
-    // (ids past the original doc range arrive dense-only, the
-    // replicated-corpus absent-text regime)
-    val hybIn = "/tmp/graft-stream-hyb-in"
-    rmrf(hybIn)
-    spark.read.parquet(s"$dst/embeddings.parquet")
+    writeInput(spark.read.parquet(s"$dst/embeddings.parquet")
       .filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("query_id"), col("embedding"))
       .join(docs.select(col("doc_id").as("query_id"), col("text")),
         Seq("query_id"), "left_outer")
-      .select("query_id", "text", "embedding")
-      .repartition(nBatches)
-      .write.mode("overwrite").parquet(hybIn)
-    val nHyb = spark.read.parquet(hybIn).count()
+      .select("query_id", "text", "embedding"), path, nBatches)
+  }
+
+  /** Surfaces as JSON members: `"name":{"sec":…,…}` joined by commas. */
+  private[graft] def fields(surfaces: Seq[(String, Seq[(String, String)])]): String =
+    surfaces.map { case (name, fs) =>
+      QueryRun.str(name) +
+        fs.map { case (k, v) => QueryRun.str(k) + ":" + v }.mkString(":{", ",", "}")
+    }.mkString(",")
+
+  def main(args: Array[String]): Unit = {
+    val dst = args.headOption.getOrElse("/tmp/graft-stress")
+    val spark = QueryRun.session("graft-stream-stress")
+    Stress.generateIfAbsent(spark, "/root/testdata/sf0.1", dst)
+
+    val nBatches = 8
+    val workDir = "/tmp/graft-stream-out"
+    rmrf(workDir)
+    val docs = spark.read.parquet(s"$dst/documents.parquet")
+    val inDir = "/tmp/graft-stream-in"
+    val nTrain = writeInput(docs.filter(col("doc_id") % 100 =!= 0)
+      .select("doc_id", "text"), inDir, nBatches)
+    // the ANN-serving twin consumes embedding queries, not documents:
+    // stream the ENTIRE 20x embedding corpus as arriving queries
+    // against the persisted IVF index built over the same corpus
+    val embIn = "/tmp/graft-stream-emb-in"
+    val nEmb = writeInput(spark.read.parquet(s"$dst/embeddings.parquet")
+      .select("vec_id", "embedding"), embIn, nBatches)
+    val hybIn = "/tmp/graft-stream-hyb-in"
+    val nHyb = writeHybridQueries(spark, dst, hybIn, nBatches)
     // the calibrated-admission twin consumes (doc_id, text, source) —
     // the same training stream as inDir plus the source dimension its
     // per-source thresholds key on
     val calIn = "/tmp/graft-stream-cal-in"
-    rmrf(calIn)
-    docs.filter(col("doc_id") % 100 =!= 0)
-      .select("doc_id", "text", "source")
-      .repartition(nBatches)
-      .write.mode("overwrite").parquet(calIn)
+    writeInput(docs.filter(col("doc_id") % 100 =!= 0)
+      .select("doc_id", "text", "source"), calIn, nBatches)
     // the CDC twin consumes CHANGE rows (key, payload, seq, op): a
     // deterministic changelog over the training docs — every 8th key a
     // tombstone, the rest upserts, seq unique per key — so the measured
     // surface includes the DELETE path (anti-join + version rewrite +
     // vacuum), not just upserts
     val cdcIn = "/tmp/graft-stream-cdc-in"
-    rmrf(cdcIn)
-    docs.filter(col("doc_id") % 100 =!= 0)
+    val nCdc = writeInput(docs.filter(col("doc_id") % 100 =!= 0)
       .select(col("doc_id").as("k"), col("text").as("v"),
         col("doc_id").as("seq"),
-        when(col("doc_id") % 8 === 0, "delete").otherwise("upsert").as("op"))
-      .repartition(nBatches)
-      .write.mode("overwrite").parquet(cdcIn)
-    val nCdc = spark.read.parquet(cdcIn).count()
+        when(col("doc_id") % 8 === 0, "delete").otherwise("upsert").as("op")),
+      cdcIn, nBatches)
+    // serving surfaces along the batch-size knob: 1-file triggers
+    // stream 2.5k rows/batch, where the micro-batch fixed cost — offset
+    // log, per-batch planning, sink commit, measured ~0.85 s even for
+    // the trivial quality surface's 12.4k-row batches — dominates and
+    // docs/s reports the floor, not the probe; saturated (all 8 files
+    // in one trigger) amortizes it fully. Throughput-vs-latency is the
+    // operator's real knob at scale, so the artifact records a small
+    // CURVE (1/4/8 files per trigger), not just the endpoints: the
+    // mid-point says how fast the floor amortizes, which is what picks
+    // the trigger size in production.
+    val points = Seq("" -> 1, "_f4" -> 4, "_saturated" -> nBatches)
 
-    val benchGrams = graft.streaming.StreamingOps.buildBenchGramIndex(
+    val benchGrams = StreamingOps.buildBenchGramIndex(
       docs.filter(col("doc_id") % 100 === 0))
-    val dsirRatios = graft.streaming.StreamingOps.buildDsirRatioTable(spark, dst)
+    val dsirRatios = StreamingOps.buildDsirRatioTable(spark, dst)
     try {
       // UNMEASURED warm pass of the heavy surface: the first stream a
       // fresh JVM runs pays whole-stage-codegen JIT + page-cache warm-up
@@ -162,7 +223,7 @@ object StreamStress {
       // really this ordering artifact — 53.9 s first position vs 25.8 s
       // third, for the SAME plan modulo one coalesce)
       runStream(spark, inDir, nTrain) { s =>
-        graft.streaming.StreamingOps.contaminationSpansAtIngest(
+        StreamingOps.contaminationSpansAtIngest(
           s, benchGrams, s"$workDir/warm_out", s"$workDir/warm_ckpt")
       }
       // the rewrite surface JITs a distinct plan (contraction + token
@@ -170,7 +231,7 @@ object StreamStress {
       // steady state (batch_secs, round 10) — warm it too so the
       // measured max reflects skew, not first-compilation
       runStream(spark, inDir, nTrain) { s =>
-        graft.streaming.StreamingOps.decontaminateRewriteAtIngest(
+        StreamingOps.decontaminateRewriteAtIngest(
           s, benchGrams, s"$workDir/warm_rw_out", s"$workDir/warm_rw_ckpt")
       }
       // contention evidence, the Bench discipline: a CPU-bound probe
@@ -181,7 +242,7 @@ object StreamStress {
       val probeBefore = Bench.probe(spark)
       val surfaces = Seq(
         "quality_score_ingest" -> runStream(spark, inDir, nTrain) { s =>
-          graft.streaming.StreamingOps.qualityScoreAtIngest(s)
+          StreamingOps.qualityScoreAtIngest(s)
             .writeStream
             .option("checkpointLocation", s"$workDir/q_ckpt")
             .outputMode("append")
@@ -189,11 +250,11 @@ object StreamStress {
             .start()
         },
         "importance_score_ingest" -> runStream(spark, inDir, nTrain) { s =>
-          graft.streaming.StreamingOps.importanceScoreAtIngest(
+          StreamingOps.importanceScoreAtIngest(
             s, dsirRatios, s"$workDir/d_out", s"$workDir/d_ckpt")
         },
         "decontaminate_rewrite_ingest" -> runStream(spark, inDir, nTrain) { s =>
-          graft.streaming.StreamingOps.decontaminateRewriteAtIngest(
+          StreamingOps.decontaminateRewriteAtIngest(
             s, benchGrams, s"$workDir/dr_out", s"$workDir/dr_ckpt")
         },
         // default path = parallel per-batch writes since r12 (the r11
@@ -201,198 +262,64 @@ object StreamStress {
         // coalesced variant stays measured so the tidy-output cost is a
         // recorded fact, not a remembered one
         "contamination_spans_ingest" -> runStream(spark, inDir, nTrain) { s =>
-          graft.streaming.StreamingOps.contaminationSpansAtIngest(
+          StreamingOps.contaminationSpansAtIngest(
             s, benchGrams, s"$workDir/s_out", s"$workDir/s_ckpt")
         },
         "contamination_spans_ingest_coalesced" ->
           runStream(spark, inDir, nTrain) { s =>
-            graft.streaming.StreamingOps.contaminationSpansAtIngest(
+            StreamingOps.contaminationSpansAtIngest(
               s, benchGrams, s"$workDir/s2_out", s"$workDir/s2_ckpt",
               coalescePerBatch = true)
-          },
-        "ivf_probe_ingest" -> {
-          // build-once persisted index over the 20x embeddings (the
-          // fit + bucketed write pay once, outside the timed stream).
-          // nCentroids derives from the √N serving rule inside the twin
-          // (141 at this corpus); pre-building here keeps the fit out
-          // of the timed stream
+          }) ++
+        // build-once persisted index over the 20x embeddings (the fit +
+        // bucketed write pay once, outside the timed streams); its
+        // centroid count is the √N serving rule the twin derives too
+        // (141 at this corpus)
+        curve(spark, workDir, "ivf_probe_ingest", embIn, nEmb, points) {
           graft.ops.Similarity.ivfIndexTable(spark, dst,
-            graft.streaming.StreamingOps.servingCentroids(nEmb))
-          runStream(spark, embIn, nEmb) { s =>
-            graft.streaming.StreamingOps.ivfProbeAtIngest(
-              s, spark, dst, s"$workDir/iv_out", s"$workDir/iv_ckpt")
-          }
-        },
-        // the same serving surface along the batch-size knob: 1-file
-        // triggers stream 2.5k rows/batch, where the micro-batch fixed
-        // cost — offset log, per-batch planning, sink commit, measured
-        // ~0.85 s even for the trivial quality surface's 12.4k-row
-        // batches — dominates and docs/s reports the floor, not the
-        // probe; saturated (all 8 files in one trigger) amortizes it
-        // fully. Throughput-vs-latency is the operator's real knob at
-        // scale, so the artifact records a small CURVE (1/4/8 files
-        // per trigger), not just the endpoints: the mid-point says how
-        // fast the floor amortizes, which is what picks the trigger
-        // size in production.
-        "ivf_probe_ingest_f4" ->
-          runStream(spark, embIn, nEmb, filesPerTrigger = 4) { s =>
-            graft.streaming.StreamingOps.ivfProbeAtIngest(
-              s, spark, dst, s"$workDir/iv4_out", s"$workDir/iv4_ckpt")
-          },
-        "ivf_probe_ingest_saturated" ->
-          runStream(spark, embIn, nEmb, filesPerTrigger = nBatches) { s =>
-            graft.streaming.StreamingOps.ivfProbeAtIngest(
-              s, spark, dst, s"$workDir/iv2_out", s"$workDir/iv2_ckpt")
-          },
+            StreamingOps.servingCentroids(nEmb))
+          ((), () => ())
+        } { (_, dir) => s =>
+          StreamingOps.ivfProbeAtIngest(s, spark, dst, s"$dir/out", s"$dir/ckpt")
+        } ++
         // the COMPRESSED-index serving twin at the same √N geometry:
         // ADC ranking over 8-byte PQ codes vs the float-cosine path
         // above — the memory-bounded tier measured at serving
         // geometry (the r12 verdict's blind spot: ADC had only ever
-        // run at the fixture's 8-centroid oracle shape). Same curve.
-        "adc_probe_ingest" -> {
-          val pqIdx = graft.streaming.StreamingOps.buildPqServingIndex(
-            spark, dst)
-          try runStream(spark, embIn, nEmb) { s =>
-            graft.streaming.StreamingOps.adcProbeAtIngest(
-              s, pqIdx, s"$workDir/ad_out", s"$workDir/ad_ckpt")
-          } finally pqIdx.unpersist()
-        },
-        "adc_probe_ingest_f4" -> {
-          val pqIdx = graft.streaming.StreamingOps.buildPqServingIndex(
-            spark, dst)
-          try runStream(spark, embIn, nEmb, filesPerTrigger = 4) { s =>
-            graft.streaming.StreamingOps.adcProbeAtIngest(
-              s, pqIdx, s"$workDir/ad4_out", s"$workDir/ad4_ckpt")
-          } finally pqIdx.unpersist()
-        },
-        "adc_probe_ingest_saturated" -> {
-          val pqIdx = graft.streaming.StreamingOps.buildPqServingIndex(
-            spark, dst)
-          try runStream(spark, embIn, nEmb, filesPerTrigger = nBatches) { s =>
-            graft.streaming.StreamingOps.adcProbeAtIngest(
-              s, pqIdx, s"$workDir/ad2_out", s"$workDir/ad2_ckpt")
-          } finally pqIdx.unpersist()
-        },
+        // run at the fixture's 8-centroid oracle shape)
+        curve(spark, workDir, "adc_probe_ingest", embIn, nEmb, points) {
+          val pq = StreamingOps.buildPqServingIndex(spark, dst)
+          (pq, () => pq.unpersist())
+        } { (pq, dir) => s =>
+          StreamingOps.adcProbeAtIngest(s, pq, s"$dir/out", s"$dir/ckpt")
+        } ++ Seq(
         "bpe_encode_ingest" -> {
           // trained merge table built once (the driver-held model)
           val bpeModel = graft.ops.TextOps.bpeMergeTable(spark, dst)
           runStream(spark, inDir, nTrain) { s =>
-            graft.streaming.StreamingOps.bpeEncodeAtIngest(
+            StreamingOps.bpeEncodeAtIngest(
               s, bpeModel, s"$workDir/bp_out", s"$workDir/bp_ckpt")
           }
-        },
-        "semdedup_admit_ingest" -> {
-          // corpus model + persisted assignment frame built once,
-          // outside the timed stream (the static-index discipline).
-          // Same serving geometry as the ivf surface: ~sqrt(20k)
-          // clusters bound the per-arrival dominance comparisons at
-          // ~N/141 instead of the fixture default's N/8
-          val semIdx = graft.streaming.StreamingOps.buildSemdedupIndex(
-            spark, dst,
-            nCentroids = graft.streaming.StreamingOps.servingCentroids(nEmb))
-          try runStream(spark, embIn, nEmb) { s =>
-            graft.streaming.StreamingOps.semdedupAdmitAtIngest(
-              s, semIdx, s"$workDir/sd_out", s"$workDir/sd_ckpt")
-          } finally semIdx.unpersist()
-        },
-        // the admission surface's batch-size curve (the ivf variant's
-        // rationale: 2.5k-row batches report the micro-batch floor,
-        // not the dominance join)
-        "semdedup_admit_ingest_f4" -> {
-          val semIdx = graft.streaming.StreamingOps.buildSemdedupIndex(
-            spark, dst,
-            nCentroids = graft.streaming.StreamingOps.servingCentroids(nEmb))
-          try runStream(spark, embIn, nEmb, filesPerTrigger = 4) { s =>
-            graft.streaming.StreamingOps.semdedupAdmitAtIngest(
-              s, semIdx, s"$workDir/sd4_out", s"$workDir/sd4_ckpt")
-          } finally semIdx.unpersist()
-        },
-        "semdedup_admit_ingest_saturated" -> {
-          val semIdx = graft.streaming.StreamingOps.buildSemdedupIndex(
-            spark, dst,
-            nCentroids = graft.streaming.StreamingOps.servingCentroids(nEmb))
-          try runStream(spark, embIn, nEmb, filesPerTrigger = nBatches) { s =>
-            graft.streaming.StreamingOps.semdedupAdmitAtIngest(
-              s, semIdx, s"$workDir/sd2_out", s"$workDir/sd2_ckpt")
-          } finally semIdx.unpersist()
-        },
-        // per-REQUEST hybrid retrieval (q172's twin): each arriving
-        // query runs rarest-8-term BM25 against the persisted postings
-        // plus exact dense cosine against the 50k-vector corpus side,
-        // RRF-fused — rows here are QUERIES, so rows_per_sec is
-        // requests/s. Same trigger-size curve rationale as ivf/adc.
-        "hybrid_rrf_ingest" -> {
-          val hybIdx = graft.streaming.StreamingOps
-            .buildHybridServingIndex(spark, dst)
-          try runStream(spark, hybIn, nHyb) { s =>
-            graft.streaming.StreamingOps.hybridRrfAtIngest(
-              s, hybIdx, s"$workDir/h_out", s"$workDir/h_ckpt")
-          } finally hybIdx.unpersist()
-        },
-        "hybrid_rrf_ingest_f4" -> {
-          val hybIdx = graft.streaming.StreamingOps
-            .buildHybridServingIndex(spark, dst)
-          try runStream(spark, hybIn, nHyb, filesPerTrigger = 4) { s =>
-            graft.streaming.StreamingOps.hybridRrfAtIngest(
-              s, hybIdx, s"$workDir/h4_out", s"$workDir/h4_ckpt")
-          } finally hybIdx.unpersist()
-        },
-        // unlike the row-linear ivf/adc surfaces, per-batch work here
-        // scales SUPERLINEARLY in batch size through the (query, rep)
-        // aggregation state, so the saturated point is not the
-        // throughput-optimal end of this curve — the artifact records
-        // that fact rather than assuming the ivf-shaped monotonicity
-        "hybrid_rrf_ingest_saturated" -> {
-          val hybIdx = graft.streaming.StreamingOps
-            .buildHybridServingIndex(spark, dst)
-          try runStream(spark, hybIn, nHyb, filesPerTrigger = nBatches) { s =>
-            graft.streaming.StreamingOps.hybridRrfAtIngest(
-              s, hybIdx, s"$workDir/h2_out", s"$workDir/h2_ckpt")
-          } finally hybIdx.unpersist()
-        },
-        // the ANN-backed hybrid twin (q174's): same lexical side and
-        // fusion, dense list from the COMPRESSED ADC index at √N
-        // serving geometry instead of the exact per-batch corpus scan —
-        // the surface that converts SCALE.md's "swaps to the ADC tier
-        // at serving scale" from prose into a measured number. Same
-        // trigger-size curve; rows are queries, so rows_per_sec is
-        // requests/s, directly comparable to hybrid_rrf_ingest's.
-        "hybrid_ann_ingest" -> {
-          val hybIdx = graft.streaming.StreamingOps
-            .buildHybridServingIndex(spark, dst)
-          val pqIdx = graft.streaming.StreamingOps.buildPqServingIndex(
-            spark, dst, nCentroids = graft.streaming.StreamingOps
-              .servingOperatingCentroids(nEmb))
-          try runStream(spark, hybIn, nHyb) { s =>
-            graft.streaming.StreamingOps.hybridAnnAtIngest(
-              s, hybIdx, pqIdx, s"$workDir/ha_out", s"$workDir/ha_ckpt",
-              nProbe = graft.streaming.StreamingOps.ServingOperatingNProbe)
-          } finally { hybIdx.unpersist(); pqIdx.unpersist() }
-        },
-        "hybrid_ann_ingest_f4" -> {
-          val hybIdx = graft.streaming.StreamingOps
-            .buildHybridServingIndex(spark, dst)
-          val pqIdx = graft.streaming.StreamingOps.buildPqServingIndex(
-            spark, dst, nCentroids = graft.streaming.StreamingOps
-              .servingOperatingCentroids(nEmb))
-          try runStream(spark, hybIn, nHyb, filesPerTrigger = 4) { s =>
-            graft.streaming.StreamingOps.hybridAnnAtIngest(
-              s, hybIdx, pqIdx, s"$workDir/ha4_out", s"$workDir/ha4_ckpt",
-              nProbe = graft.streaming.StreamingOps.ServingOperatingNProbe)
-          } finally { hybIdx.unpersist(); pqIdx.unpersist() }
-        },
-        "hybrid_ann_ingest_saturated" -> {
-          val hybIdx = graft.streaming.StreamingOps
-            .buildHybridServingIndex(spark, dst)
-          val pqIdx = graft.streaming.StreamingOps.buildPqServingIndex(
-            spark, dst, nCentroids = graft.streaming.StreamingOps
-              .servingOperatingCentroids(nEmb))
-          try runStream(spark, hybIn, nHyb, filesPerTrigger = nBatches) { s =>
-            graft.streaming.StreamingOps.hybridAnnAtIngest(
-              s, hybIdx, pqIdx, s"$workDir/ha2_out", s"$workDir/ha2_ckpt",
-              nProbe = graft.streaming.StreamingOps.ServingOperatingNProbe)
-          } finally { hybIdx.unpersist(); pqIdx.unpersist() }
-        },
+        }) ++
+        // corpus model + persisted assignment frame built once, outside
+        // the timed stream (the static-index discipline). Same serving
+        // geometry as the ivf surface: ~sqrt(20k) clusters bound the
+        // per-arrival dominance comparisons at ~N/141 instead of the
+        // fixture default's N/8
+        curve(spark, workDir, "semdedup_admit_ingest", embIn, nEmb, points) {
+          val sem = StreamingOps.buildSemdedupIndex(spark, dst,
+            nCentroids = StreamingOps.servingCentroids(nEmb))
+          (sem, () => sem.unpersist())
+        } { (sem, dir) => s =>
+          StreamingOps.semdedupAdmitAtIngest(s, sem, s"$dir/out", s"$dir/ckpt")
+        } ++
+        hybridCurve(spark, dst, workDir, hybIn, nHyb, points) ++
+        // the surface that converts SCALE.md's "swaps to the ADC tier at
+        // serving scale" from prose into a measured number, at the
+        // committed operating point (ANN_DECISION.json)
+        hybridAnnCurve(spark, dst, workDir, hybIn, nHyb, points,
+          StreamingOps.servingOperatingCentroids(nEmb),
+          StreamingOps.ServingOperatingNProbe) ++ Seq(
         // incremental graph maintenance (q147's twin): the corpus docs
         // stream into a rep-graph state seeded with the 1% holdout
         // (doc_id % 100 == 0 — the decontamination bench set), so the
@@ -407,10 +334,9 @@ object StreamStress {
           docs.filter(col("doc_id") % 100 === 0)
             .select("doc_id", "text")
             .write.mode("overwrite").parquet(s"$seedDir/documents.parquet")
-          val prgState = graft.streaming.StreamingOps
-            .buildRepGraphState(spark, seedDir)
+          val prgState = StreamingOps.buildRepGraphState(spark, seedDir)
           try runStream(spark, inDir, nTrain) { s =>
-            graft.streaming.StreamingOps.pagerankMaintainAtIngest(
+            StreamingOps.pagerankMaintainAtIngest(
               s, prgState, s"$workDir/pr_out", s"$workDir/pr_ckpt")
           } finally prgState.unpersist()
         },
@@ -419,10 +345,9 @@ object StreamStress {
         // arriving doc gated by within-source rank calibration as a
         // pure per-row comparison — rows_per_sec is admission decisions/s
         "calibrated_admit_ingest" -> {
-          val thresholds = graft.streaming.StreamingOps
-            .buildCalibrationThresholds(spark, dst)
+          val thresholds = StreamingOps.buildCalibrationThresholds(spark, dst)
           try runStream(spark, calIn, nTrain) { s =>
-            graft.streaming.StreamingOps.calibratedAdmitAtIngest(
+            StreamingOps.calibratedAdmitAtIngest(
               s, thresholds, s"$workDir/ca_out", s"$workDir/ca_ckpt")
           } finally thresholds.unpersist()
         },
@@ -433,7 +358,7 @@ object StreamStress {
         // all-in table-maintenance cost including the full-table
         // rewrite per commit (the documented non-file-level-COW shape)
         "cdc_upsert_delete_ingest" -> runStream(spark, cdcIn, nCdc) { s =>
-          graft.streaming.StreamingOps.cdcUpsertStream(
+          StreamingOps.cdcUpsertStream(
             s, s"$workDir/cdc_table", s"$workDir/cdc_ckpt",
             key = "k", seqCol = "seq", keepVersions = 2,
             opCol = Some("op"))
@@ -441,29 +366,25 @@ object StreamStress {
         "phash_match_ingest" -> {
           // corpus index over the full 20x docs (reps = sf0.1-sized
           // after the exact-text contraction inside the builder)
-          val phashIdx = graft.streaming.StreamingOps
+          val phashIdx = StreamingOps
             .buildMediaPhashIndex(docs.select("doc_id", "text"))
           try runStream(spark, inDir, nTrain) { s =>
-            graft.streaming.StreamingOps.phashMatchAtIngest(
+            StreamingOps.phashMatchAtIngest(
               s, phashIdx, s"$workDir/p_out", s"$workDir/p_ckpt")
           } finally phashIdx.unpersist()
         })
       val probeAfter = Bench.probe(spark)
       // serving-geometry approximation number beside the throughput
-      // curves: recall@10 of the ANN-fused answers (ha_out) vs the
-      // exact-fused ones (h_out) over the same query stream
-      val annRecall = fusedRecall(spark, s"$workDir/h_out", s"$workDir/ha_out")
-      val line = surfaces.map { case (name, fields) =>
-        "\"" + name + "\":{" +
-          fields.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",") +
-          "}"
-      }.mkString(
-        s"""{"metric":"stream_stress_20x","cpus":$cpus,"n_batches":$nBatches,""" +
-          s""""hybrid_ann_recall10":${fmt(annRecall)},""" +
-          s""""probes":[${fmt(probeBefore)},${fmt(probeAfter)}],""",
-        ",", "}")
-      println(line)
-      artifact.foreach(f => Files.writeString(Paths.get(f), line + "\n"))
+      // curves: recall@10 of the ANN-fused answers vs the exact-fused
+      // ones over the same query stream (the 1-file points)
+      val annRecall = fusedRecall(spark, s"$workDir/hybrid_rrf_ingest/out",
+        s"$workDir/hybrid_ann_ingest/out")
+      import QueryRun.num
+      QueryRun.emit(
+        s"""{"metric":"stream_stress_20x","cpus":${QueryRun.cpus},"n_batches":$nBatches,""" +
+          s""""hybrid_ann_recall10":${num(annRecall)},""" +
+          s""""probes":[${num(probeBefore)},${num(probeAfter)}],${fields(surfaces)}}""",
+        args.lift(1))
     } finally { benchGrams.unpersist(); dsirRatios.unpersist(); (): Unit }
     spark.stop()
   }

@@ -103,42 +103,27 @@ object Stress {
 
   def main(args: Array[String]): Unit = {
     val dst = args.headOption.getOrElse("/tmp/graft-stress")
-    val artifact = args.lift(1)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.GraftSession
-      .builder("graft-stress", s"local[$cpus]", shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = QueryRun.names(args.drop(2).toSeq)
+    val spark = QueryRun.session("graft-stress")
     generateIfAbsent(spark, "/root/testdata/sf0.1", dst)
     // 2 clean probe-gated sweeps: the 20x sweep is long enough that
     // single passes show one-off GC/page-cache outliers on heavy
     // queries (see Bench.timeAll) — the regression gate needs the
     // noise floor, and the probes say whether it was reached
-    val run = Bench.timeAll(spark, dst, only = only, passes = 2)
+    val run = Bench.timeAll(spark, dst, names = names, passes = 2)
     System.err.println(s"[stress] sweeps=${run.sweeps} clean=${run.cleanSweeps}")
     // offender re-measurement against the prior round's artifact (the
     // external scripts/stress_diff.py gate's own tolerance, via
-    // Bench.benchDiff): see Bench.requalify for the measured
-    // execution-flip failure mode this answers. Opt-in by env so
-    // targeted runs and baseline-less first runs are unaffected.
-    val (run2, requal) = sys.env.get("GRAFT_STRESS_BASELINE") match {
-      case Some(b) if only.isEmpty =>
-        Bench.benchDiff(run.results, b) match {
-          case Some((_, offs)) if offs.nonEmpty =>
-            val r = Bench.requalify(spark, dst, run, offs)
-            System.err.println(s"[stress] requalified=${r._2.mkString(" ")}")
-            r
-          case _ => (run, Seq.empty[String])
-        }
-      case _ => (run, Seq.empty[String])
-    }
-    val line = Bench.jsonLine(run2, dst, passes = 2, requalified = requal,
-      extraFields = graft.core.GraftSession.advisoryOverride
-        .map(v => "advisory_partition" -> ("\"" + v + "\"")).toSeq)
-    println(line)
-    artifact.foreach(f => Files.writeString(Paths.get(f), line + "\n"))
+    // Bench.gate): see Bench.requalify for the measured execution-flip
+    // failure mode this answers. Opt-in by env so baseline-less first
+    // runs are unaffected; the verdict itself is stress_diff.py's.
+    val (run2, _, requal) = sys.env.get("GRAFT_STRESS_BASELINE")
+      .fold((run, Option.empty[(String, Seq[String])], Seq.empty[String]))(
+        Bench.gate(spark, dst, run, _))
+    if (requal.nonEmpty)
+      System.err.println(s"[stress] requalified=${requal.mkString(" ")}")
+    QueryRun.emit(Bench.jsonLine(run2, dst, passes = 2, requalified = requal),
+      args.lift(1))
     spark.stop()
   }
 }
@@ -155,86 +140,45 @@ object Stress {
   * Usage: runMain graft.ZipfStress [corpusDir] [artifactPath]
   */
 object ZipfStress {
-  val RetrievalQueries: Set[String] = Set(
+  val RetrievalQueries: Seq[String] = Seq(
     "q158_bm25_topk", "q170_hybrid_rrf", "q172_hybrid_query_rrf",
     "q174_hybrid_ann_rrf")
 
   def main(args: Array[String]): Unit = {
+    import QueryRun.{num, str}
     val dst = args.headOption.getOrElse("/tmp/graft-stress-zipf")
-    val artifact = args.lift(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.GraftSession
-      .builder("graft-zipf-stress", s"local[$cpus]",
-        shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryRun.session("graft-zipf-stress")
     Stress.generateZipfIfAbsent(spark, "/root/testdata/sf0.1", dst)
-    val run = Bench.timeAll(spark, dst, only = RetrievalQueries, passes = 2)
+    val run = Bench.timeAll(spark, dst, names = QueryRun.names(RetrievalQueries),
+      passes = 2)
     System.err.println(s"[zipf] sweeps=${run.sweeps} clean=${run.cleanSweeps}")
-    val qs = run.results.map { case (k, v) =>
-      "\"" + k + "\":" + (if (v < 0) "-1"
-        else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)))
-    }.mkString("{", ",", "}")
+    val qs = run.results.map { case (k, v) => str(k) + ":" + num(v) }
+      .mkString("{", ",", "}")
     // serving twins at the f4 trigger point (the measured peak of the
     // hybrid curve in STREAM_STRESS_r13) — exact-dense vs ANN-dense on
     // the SAME query stream and corpus, one number each
-    val nBatches = 8
-    val hybIn = "/tmp/graft-zipf-hyb-in"
-    StreamStress.rmrf(hybIn)
     val workDir = "/tmp/graft-zipf-out"
     StreamStress.rmrf(workDir)
-    val docs = spark.read.parquet(s"$dst/documents.parquet")
-    spark.read.parquet(s"$dst/embeddings.parquet")
-      .filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-      .join(docs.select(col("doc_id").as("query_id"), col("text")),
-        Seq("query_id"), "left_outer")
-      .select("query_id", "text", "embedding")
-      .repartition(nBatches)
-      .write.mode("overwrite").parquet(hybIn)
-    val nHyb = spark.read.parquet(hybIn).count()
-    val streams = Seq(
-      "hybrid_rrf_ingest_f4" -> {
-        val hybIdx = graft.streaming.StreamingOps
-          .buildHybridServingIndex(spark, dst)
-        try StreamStress.runStream(spark, hybIn, nHyb, filesPerTrigger = 4) {
-          s => graft.streaming.StreamingOps.hybridRrfAtIngest(
-            s, hybIdx, s"$workDir/h_out", s"$workDir/h_ckpt")
-        } finally hybIdx.unpersist()
-      },
-      "hybrid_ann_ingest_f4" -> {
-        val hybIdx = graft.streaming.StreamingOps
-          .buildHybridServingIndex(spark, dst)
-        val pqIdx = graft.streaming.StreamingOps.buildPqServingIndex(
-          spark, dst)
-        try StreamStress.runStream(spark, hybIn, nHyb, filesPerTrigger = 4) {
-          s => graft.streaming.StreamingOps.hybridAnnAtIngest(
-            s, hybIdx, pqIdx, s"$workDir/ha_out", s"$workDir/ha_ckpt")
-        } finally { hybIdx.unpersist(); pqIdx.unpersist() }
-      })
-    val streamJson = streams.map { case (name, fields) =>
-      "\"" + name + "\":{" +
-        fields.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",") + "}"
-    }.mkString(",")
+    val hybIn = "/tmp/graft-zipf-hyb-in"
+    val nHyb = StreamStress.writeHybridQueries(spark, dst, hybIn, nBatches = 8)
+    val f4 = Seq("_f4" -> 4)
+    val streams = StreamStress.hybridCurve(spark, dst, workDir, hybIn, nHyb, f4) ++
+      StreamStress.hybridAnnCurve(spark, dst, workDir, hybIn, nHyb, f4,
+        nCentroids = 0, nProbe = 2)
     // recall@10 of the ANN-fused serving answer vs the exact-fused one,
     // over the SAME query stream at SERVING geometry (√N centroids) —
     // the committed approximation number for the tier swap (the spec's
     // 0.65/0.70 figures are the deliberately coarse fixture geometry)
     val recall = StreamStress.fusedRecall(spark,
-      s"$workDir/h_out", s"$workDir/ha_out")
-    val line =
-      s"""{"metric":"zipf_retrieval_stress","cpus":$cpus,"corpus":"$dst",""" +
-        s""""hybrid_ann_recall10":${String.format(
-          java.util.Locale.ROOT, "%.3f", Double.box(recall))},""" +
+      s"$workDir/hybrid_rrf_ingest_f4/out", s"$workDir/hybrid_ann_ingest_f4/out")
+    QueryRun.emit(
+      s"""{"metric":"zipf_retrieval_stress","cpus":${QueryRun.cpus},"corpus":${str(dst)},""" +
+        s""""hybrid_ann_recall10":${num(recall)},""" +
         s""""protocol":"${Bench.protocol(2)}","sweeps":${run.sweeps},""" +
         s""""clean_sweeps":${run.cleanSweeps},""" +
-        s""""probes":${run.probes.map(p => String.format(
-          java.util.Locale.ROOT, "%.3f", Double.box(p)))
-          .mkString("[", ",", "]")},""" +
-        s""""queries":$qs,$streamJson}"""
-    println(line)
-    artifact.foreach(f => Files.writeString(Paths.get(f), line + "\n"))
+        s""""probes":${run.probes.map(num(_)).mkString("[", ",", "]")},""" +
+        s""""queries":$qs,${StreamStress.fields(streams)}}""",
+      args.lift(1))
     spark.stop()
   }
 }

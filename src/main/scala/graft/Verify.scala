@@ -1,17 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [queryName...] — every
+  * registered query, or only the named ones (a targeted dump).
   */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession
-      .builder("graft-verify", s"local[$cpus]", shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir) = args.take(2)
+    val names = QueryRun.names(args.drop(2).toSeq)
+    val spark = QueryRun.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // queries run CONCURRENTLY on the shared session (SparkSession is
     // thread-safe; each job writes its own directory) — per-job fixed
@@ -20,43 +19,16 @@ object Verify {
     // small and the pool bounds how many are in flight.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(8, Runtime.getRuntime.availableProcessors()))
-    // GRAFT_VERIFY_ONLY: comma-separated names for a targeted dump
-    // (Bench's GRAFT_BENCH_ONLY discipline — fail loudly on typos so a
-    // targeted check can't silently dump nothing). Absent = all queries
-    // (the driver's mode).
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val unknown = only.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val tasks = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
+    names.map { name =>
       pool.submit(new Runnable {
         def run(): Unit =
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          }
+          QueryRun.run(spark, name, sfDir, QueryRun.Parquet(s"$outDir/$name"))
       })
-    }
-    tasks.foreach(_.get())
+    }.foreach(_.get())
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${QueryRun.str(k)}: ${QueryRun.str(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

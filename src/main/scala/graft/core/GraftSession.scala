@@ -67,28 +67,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
     if (derived > 0) b.config("spark.sql.shuffle.partitions", derived.toString)
-    // AQE advisory-partition-size experiment knob (NOTES r14→r15): the
-    // 64 MB default advisory target coalesces this workload's 5-13 MB
-    // exchanges to 4-10 partitions, so many stages run at a fraction of
-    // local[32] parallelism — the leading suspect for the execution-flip
-    // mode. Env-driven so A/B sweeps need no code flip; the harness
-    // mains record the override in the artifact line. Absent env =
-    // Spark's default, i.e. the shipping configuration.
-    advisoryOverride.foreach(v =>
-      b.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", v))
     extraConf.foreach { case (k, v) => b.config(k, v) }
     b
-  }
-
-  /** The active advisory-partition-size override, if any (e.g. "8m") —
-    * read by the harness mains to stamp A/B artifacts. */
-  def advisoryOverride: Option[String] =
-    sys.env.get("GRAFT_ADVISORY_PARTITION").filter(_.nonEmpty)
-
-  def local(appName: String = "graft-test", threads: Int = 4): SparkSession = {
-    val s = builder(appName, s"local[$threads]", shufflePartitions = threads)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
   }
 }

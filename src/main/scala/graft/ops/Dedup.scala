@@ -1014,6 +1014,9 @@ object Dedup {
       var iters = 0
       while (!converged && iters < maxIters) {
         val (next, nextSum) = checkpointWithSum(propagateOnce(edges, labels))
+        // the witness materialized `next`, so the round it read from is
+        // superseded (k-center's one-action-behind release)
+        SessionMemo.unpersist(labels)
         labels = next
         converged = nextSum == prevSum
         prevSum = nextSum
@@ -1111,6 +1114,7 @@ object Dedup {
         .filter(col("u") =!= col("v")).distinct()
         .localCheckpoint(eager = false)
       val w2 = witness(small)
+      SessionMemo.unpersist(edges)
       edges = small
       converged = w2 == w
       w = w2
@@ -1785,9 +1789,12 @@ object Dedup {
     // (pagerankLoopBody).
     var pr = repInfo.select(col("rep"), lit(Scale / n).as("pr"))
       .localCheckpoint(true)
-    for (_ <- 1 to iters)
-      pr = pagerankRepStep(pr, redges, repInfo, base)
+    for (_ <- 1 to iters) {
+      val next = pagerankRepStep(pr, redges, repInfo, base)
         .select("rep", "pr").localCheckpoint(true)
+      SessionMemo.unpersist(pr)
+      pr = next
+    }
     // returned LAZY (r17): the loop's inputs are already materialized
     // (per-iteration eager checkpoints + the persisted graph memo), so
     // the final frame's lineage is one broadcast join + sort deep — the
@@ -1959,7 +1966,10 @@ object Dedup {
     val base = (Scale * 15L / 100L) / n
     val p0 = Scale / n
     val tol = p0 / tolDiv
-    var pr = repInfo.select(col("rep"), lit(p0).as("pr")).localCheckpoint(true)
+    // `prCk` is the checkpoint `pr` projects: the frame to release once
+    // the next eager checkpoint has materialized
+    var prCk = repInfo.select(col("rep"), lit(p0).as("pr")).localCheckpoint(true)
+    var pr = prCk
     var it = 0
     var resid = Long.MaxValue
     while (it < maxIters && resid > tol) {
@@ -1972,6 +1982,8 @@ object Dedup {
       resid = next
         .agg(max(abs(col("pr") - col("prev"))).as("r"))
         .head().getLong(0)
+      SessionMemo.unpersist(prCk)
+      prCk = next
       pr = next.select("rep", "pr")
       it += 1
     }

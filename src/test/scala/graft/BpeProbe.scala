@@ -19,9 +19,7 @@ package graft
   */
 object BpeProbe {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.local("bpeprobe",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryRun.session("bpeprobe")
     val dir = args.headOption.getOrElse("/tmp/graft-stress-zipf")
     val depths = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else Seq(8, 64, 256)
@@ -33,10 +31,8 @@ object BpeProbe {
     var prevDepth = 0
     var prevSec = 0.0
     depths.foreach { m =>
-      val t0 = System.nanoTime()
-      val emitted = graft.ops.TextOps.q153BpeTrain(spark, dir, merges = m)
-        .count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val (emitted, dt) = QueryRun.time(
+        graft.ops.TextOps.q153BpeTrain(spark, dir, merges = m).count())
       val marginal =
         if (prevDepth > 0 && m > prevDepth) (dt - prevSec) / (m - prevDepth)
         else dt / m
@@ -88,10 +84,8 @@ object BpeProbe {
         var prevD = 0
         var prevT = 0.0
         Seq(16, 64).foreach { depth =>
-          val t0 = System.nanoTime()
-          val n = graft.ops.TextOps.q153BpeTrain(spark, wideDir,
-            merges = depth).count()
-          val dt = (System.nanoTime() - t0) / 1e9
+          val (n, dt) = QueryRun.time(graft.ops.TextOps.q153BpeTrain(
+            spark, wideDir, merges = depth).count())
           val marginal = if (prevD > 0) (dt - prevT) / (depth - prevD)
             else dt / depth
           println(f"[bpeprobe] widevocab $label%-8s depth $depth%3d: $dt%7.2f s total, $n%3d emitted, ${dt / depth}%.3f s/merge mean, $marginal%.3f s/merge marginal")

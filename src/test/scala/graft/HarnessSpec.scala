@@ -44,11 +44,15 @@ class HarnessSpec extends AnyFunSuite {
 
   test("artifact line carries the probe-floor fields and requalified entries as valid JSON") {
     val run = Bench.Run(Seq("q20_wordcount" -> 1.5), Seq(0.05, 0.2), 1, 0)
-    val line = Bench.jsonLine(run, "/tmp/x", passes = 1,
+    // the corpus path comes from argv: a quote or backslash in it must
+    // not break the line
+    val sfDir = "/tmp/x\"y\\z"
+    val line = Bench.jsonLine(run, sfDir, passes = 1,
       diff = Some(("FAIL", Seq("q20_wordcount:0.50->1.50"))),
       requalified = Seq("q20_wordcount:9.000->1.500"))
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(line)
+    assert(root.get("sf").asText == sfDir)
     assert(root.get("probe_idle_ref").asDouble == Bench.IdleProbeRef)
     // probes (0.05, 0.2): the trailing probe exceeds the absolute floor
     assert(root.get("clean_sweeps_abs").asInt == 0)
@@ -57,22 +61,20 @@ class HarnessSpec extends AnyFunSuite {
     assert(root.get("queries").get("q20_wordcount").asDouble == 1.5)
   }
 
-  test("artifact line embeds machine-load evidence parallel to the probes, and extra fields") {
+  test("artifact line embeds machine-load evidence parallel to the probes") {
     val run = Bench.Run(Seq("q20_wordcount" -> 1.5), Seq(0.05, 0.08), 1, 1,
       loads = Seq((0.12, 98304L), (31.5, 97123L)))
-    val line = Bench.jsonLine(run, "/tmp/x", passes = 1,
-      extraFields = Seq("advisory_partition" -> "\"8m\""))
+    val line = Bench.jsonLine(run, "/tmp/x", passes = 1)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(line)
     assert(root.get("loadavg").size == root.get("probes").size)
     assert(root.get("loadavg").get(1).asDouble == 31.5)
     assert(root.get("mem_avail_mb").get(0).asLong == 98304L)
-    assert(root.get("advisory_partition").asText == "8m")
     // legacy Runs (no loads) must not emit the fields at all rather
     // than emit empty arrays that read as "sampled, saw nothing"
     val bare = Bench.jsonLine(
       Bench.Run(Seq("q20_wordcount" -> 1.5), Seq(0.05, 0.08), 1, 1), "/tmp/x")
-    assert(!bare.contains("loadavg") && !bare.contains("advisory_partition"))
+    assert(!bare.contains("loadavg"))
     assert(mapper.readTree(bare).get("queries") != null)
   }
 
@@ -112,5 +114,39 @@ class HarnessSpec extends AnyFunSuite {
     // second of two sweeps clean: probes (0.3, 0.08, 0.08)
     assert(Bench.cleanSweepsAbs(
       Bench.Run(Seq.empty, Seq(0.3, 0.08, 0.08), 2, 1)) == 1)
+  }
+
+  test("an unknown query name fails in every preset before any session work") {
+    val e = intercept[IllegalArgumentException](
+      QueryRun.names(Seq("q20_wordcount", "no_such_query")))
+    assert(e.getMessage.contains("no_such_query") && !e.getMessage.contains("q20_wordcount"))
+    assert(QueryRun.names(Seq("q20_wordcount", "q02_filter_project")) ==
+      Seq("q02_filter_project", "q20_wordcount"))
+    assert(QueryRun.names(Nil) == SparkEntry.queries.keys.toSeq.sorted)
+    // the mains check their names before they build a session, so none
+    // of these touches the shared test session
+    val mains: Seq[Array[String] => Unit] = Seq(Bench.main, Verify.main, Stress.main,
+      Explain.main, RunQuery.main)
+    val argv = Seq(Array("no_such_query"), Array(TestSpark.sf, "/tmp/x", "no_such_query"),
+      Array("/tmp/x", "/tmp/x.json", "no_such_query"), Array("write", TestSpark.sf, "/tmp/x", "no_such_query"),
+      Array("no_such_query"))
+    mains.zip(argv).foreach { case (main, args) =>
+      intercept[IllegalArgumentException](main(args))
+    }
+    assert(!spark.sparkContext.isStopped)
+  }
+
+  test("stream measurements are valid JSON under a decimal-comma default locale") {
+    val in = java.nio.file.Files.createTempDirectory("harness_stream").toString
+    spark.range(0, 100, 1, 2).toDF("id").write.mode("overwrite").parquet(s"$in/in")
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    val fields = try StreamStress.runStream(spark, s"$in/in", 100L) { s =>
+      s.writeStream.format("noop").option("checkpointLocation", s"$in/ckpt").start()
+    } finally java.util.Locale.setDefault(saved)
+    val json = fields.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(root.isObject && root.get("rows").asLong == 100L && root.get("batches").asInt == 2)
+    assert(root.get("batch_secs").size == 2 && root.get("sec").asDouble > 0.0)
   }
 }

@@ -12,15 +12,12 @@ import org.apache.spark.sql.functions._
   */
 object KcenterProbe {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.local("kcenterprobe",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryRun.session("kcenterprobe")
     val dir = args.headOption.getOrElse("/tmp/graft-stress")
     val k = args.lift(1).map(_.toInt).getOrElse(128)
     def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[kcprobe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val (r, secs) = QueryRun.time(f)
+      println(s"[kcprobe] $label: ${QueryRun.num(secs, 2)} s")
       r
     }
     val n = graft.core.Tables.embeddings(spark, dir).count()

@@ -20,9 +20,7 @@ import graft.core.Tables
   */
 object Q101Probe {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.local("q101probe",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryRun.session("q101probe")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
 
     def keysOf(named: DataFrame): DataFrame = named
@@ -49,9 +47,7 @@ object Q101Probe {
 
     def timeMin(label: String)(mk: => DataFrame): Unit = {
       val n = mk.count() // warm
-      val t = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); mk.count(); (System.nanoTime() - t0) / 1e9
-      }.min
+      val t = (1 to 3).map(_ => QueryRun.time(mk.count())._2).min
       println(f"[q101probe] $label%-38s ${t}%6.2f s  rows $n")
     }
 

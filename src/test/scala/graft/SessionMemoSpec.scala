@@ -202,16 +202,22 @@ class SessionMemoSpec extends AnyFunSuite {
     assert(queries.map(rows) == first, "a re-run after invalidate changed an answer")
   }
 
-  test("q153 and q171 release every superseded checkpoint round before they return") {
-    // their loops checkpoint one frame per round and unpersist the one
+  test("iterative queries release every superseded checkpoint round") {
+    // each loop checkpoints one frame per round and releases the one
     // before; Dataset.unpersist alone leaves a checkpoint RDD persisted,
-    // so without SessionMemo.unpersist the rounds stay until a GC
-    for (q <- Seq("q153_bpe_train", "q171_kcenter_coreset")) {
+    // so without SessionMemo.unpersist the rounds stay until a GC. The
+    // only checkpoints left are the ones the returned frame reads.
+    for (q <- Seq("q69_dedup_components", "q71_dedup_components_star", "q137_pagerank",
+        "q147_pagerank_converged", "q153_bpe_train", "q171_kcenter_coreset")) {
       SessionMemo.invalidate()
       val before = persistedIds()
-      rows(q)
+      val df = SparkEntry.queries(q)(spark, sf)
+      df.collect()
+      val read = df.queryExecution.analyzed.collectWithSubqueries {
+        case r: LogicalRDD => r.rdd.id
+      }.toSet
       val left = spark.sparkContext.getPersistentRDDs
-        .filter { case (id, r) => !before(id) && r.isCheckpointed }.keys
+        .filter { case (id, r) => !before(id) && !read(id) && r.isCheckpointed }.keys
       assert(left.isEmpty, s"$q left checkpoint RDDs: ${left.toSeq.sorted.mkString(", ")}")
     }
   }

@@ -12,9 +12,7 @@ import scala.jdk.CollectionConverters._
   */
 object SweepGcProbe {
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.GraftSession.local("sweepgc",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryRun.session("sweepgc")
     val dir = args.headOption.getOrElse("/tmp/graft-stress")
     def gcMs: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -42,7 +40,7 @@ object SweepGcProbe {
     }
     def compileMs: Long = java.lang.management.ManagementFactory
       .getCompilationMXBean.getTotalCompilationTime
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = QueryRun.names(Nil)
     // total executor task run time per query — wall ≫ taskTime means
     // the cores were IDLE (scheduler/IO/lock stall), wall ≈ taskTime/32
     // means genuine compute
@@ -134,10 +132,7 @@ object SweepGcProbe {
     }
     stageSubmit.clear()
     Seq("/root/testdata/sf0.001", dir).foreach { d =>
-      names.foreach { n =>
-        try SparkEntry.queries(n)(spark, d).count()
-        catch { case _: Throwable => () }
-      }
+      names.foreach(QueryRun.run(spark, _, d))
     }
     println(f"[sweepgc] warmed; storage ${storageMb}%.0f MB")
     val (ccUsed0, ccMax0) = codeCache
@@ -186,8 +181,7 @@ object SweepGcProbe {
       // toRdd-driven first cut here read q121 at 94 s because it BUILT
       // the 4e9-row expansion Bench's count path never does — the
       // ShuffleAudit scope note re-learned the hard way)
-      val ok = try { SparkEntry.queries(n)(spark, dir).count(); true }
-        catch { case _: Throwable => false }
+      val ok = QueryRun.run(spark, n, dir) >= 0
       done = true
       if (inBracket(n)) { captureTasks.set(false); launchReport(n) }
       if ((System.nanoTime() - t0) / 1e9 > 3.0)
