@@ -67,22 +67,6 @@ object Bench {
     */
   val FlipWatch: Seq[String] = Seq("q49_collocations", "q52_hash_sample")
 
-  /** This machine's measured idle probe floor (seconds): every committed
-    * clean artifact since r12 bottoms out at 0.050-0.085 s, so 0.090 is
-    * the upper edge of idle. Recorded in the artifact (`probe_idle_ref`)
-    * and used for `clean_sweeps_abs`, the ABSOLUTE twin of the relative
-    * gate: the r13 discarded sweep showed a contention burst can inflate
-    * BOTH sweeps' middles while the bracketing probes stay mutually
-    * consistent — relative-clean, absolutely contended. clean_sweeps_abs
-    * < clean_sweeps is that exact signature. The constant is
-    * machine-specific and would rot on a host move, which is why it's
-    * informational (embedded, compared by the reader/diff script) rather
-    * than a run-abort: the artifact says what the floor was ASSUMED to
-    * be, so a cross-round comparison can recalibrate instead of
-    * silently trusting it.
-    */
-  val IdleProbeRef = 0.090
-
   /** One calibration probe: a fixed CPU-bound codegen'd job (~50-80 ms
     * at local[32]) whose cost depends only on machine load — no I/O, no
     * shuffle, no data. When a co-tenant process steals cores, the probe
@@ -172,14 +156,6 @@ object Bench {
     }
     Run(results, probes.toSeq, sweeps.size, cleanCount(), loads.toSeq)
   }
-
-  /** Sweeps clean in the ABSOLUTE sense: both bracketing probes under
-    * [[IdleProbeRef]] * [[ProbeSlack]]. See IdleProbeRef for why this
-    * exists alongside the relative gate. */
-  def cleanSweepsAbs(run: Run): Int =
-    (0 until run.sweeps).count(i =>
-      run.probes(i) <= IdleProbeRef * ProbeSlack &&
-        run.probes(i + 1) <= IdleProbeRef * ProbeSlack)
 
   /** Timing-protocol version, embedded in every artifact so cross-round
     * totals are never silently compared across protocol changes (the
@@ -297,7 +273,7 @@ object Bench {
       s""""loadavg":$la,"mem_avail_mb":$mm,"""
     }
     // the standing watch list rides in every artifact (see [[FlipWatch]])
-    s"""{"queries":$qs,"sf":${str(sfDir)},"protocol":"${protocol(passes)}","probes":${run.probes.map(num(_)).mkString("[", ",", "]")},"sweeps":${run.sweeps},"clean_sweeps":${run.cleanSweeps},"probe_idle_ref":${num(IdleProbeRef)},"clean_sweeps_abs":${cleanSweepsAbs(run)},$loadFields$diffFields$requalField"flip_watch":${strs(FlipWatch)},"unit":"sec","metric":"total","value":${num(total)}}"""
+    s"""{"queries":$qs,"sf":${str(sfDir)},"protocol":"${protocol(passes)}","probes":${run.probes.map(num(_)).mkString("[", ",", "]")},"sweeps":${run.sweeps},"clean_sweeps":${run.cleanSweeps},$loadFields$diffFields$requalField"flip_watch":${strs(FlipWatch)},"unit":"sec","metric":"total","value":${num(total)}}"""
   }
 
   /** Usage: runMain graft.Bench [queryName...] */

@@ -21,7 +21,7 @@ object QueryRun {
     * threads, logging at WARN. */
   def session(app: String, cpus: Int = cpus): SparkSession = {
     val spark = graft.core.GraftSession
-      .builder(app, s"local[$cpus]", shufflePartitions = cpus).getOrCreate()
+      .builder(app, s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

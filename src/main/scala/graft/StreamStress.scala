@@ -257,20 +257,10 @@ object StreamStress {
           StreamingOps.decontaminateRewriteAtIngest(
             s, benchGrams, s"$workDir/dr_out", s"$workDir/dr_ckpt")
         },
-        // default path = parallel per-batch writes since r12 (the r11
-        // artifact separated the variants: 7.1k vs 4.9k docs/s); the
-        // coalesced variant stays measured so the tidy-output cost is a
-        // recorded fact, not a remembered one
         "contamination_spans_ingest" -> runStream(spark, inDir, nTrain) { s =>
           StreamingOps.contaminationSpansAtIngest(
             s, benchGrams, s"$workDir/s_out", s"$workDir/s_ckpt")
-        },
-        "contamination_spans_ingest_coalesced" ->
-          runStream(spark, inDir, nTrain) { s =>
-            StreamingOps.contaminationSpansAtIngest(
-              s, benchGrams, s"$workDir/s2_out", s"$workDir/s2_ckpt",
-              coalescePerBatch = true)
-          }) ++
+        }) ++
         // build-once persisted index over the 20x embeddings (the fit +
         // bucketed write pay once, outside the timed streams); its
         // centroid count is the √N serving rule the twin derives too

@@ -46,15 +46,6 @@ object GraftExtensions {
     throw new IllegalArgumentException(
       s"$name: unexpected arguments (${got.length}); see function usage")
 
-  // n <= 0 would otherwise surface as a raw per-row `i % 0`
-  // ArithmeticException (n = 0) or NegativeArraySizeException (n < 0)
-  // deep inside eval/codegen, far from the call site
-  private def checkCells(n: Int): Int = {
-    if (n < 1) throw new IllegalArgumentException(
-      s"byte_fold_cells: n must be >= 1, got $n")
-    n
-  }
-
   /** All custom-expression SQL registrations. Input-type misuse is an
     * ANALYSIS error via each expression's ExpectsInputTypes contract;
     * arity/shape misuse fails here at function resolution.
@@ -100,18 +91,6 @@ object GraftExtensions {
       "strip_accents(text) - NFD accent fold (combining marks removed)") {
       case Seq(t) => StripAccents(t)
       case other  => badArgs("strip_accents", other)
-    },
-    reg("byte_fold_cells",
-      "byte_fold_cells(payload, n) - fold binary payload bytes into n cells (cell i sums unsigned bytes at positions = i mod n); n a literal int") {
-      case Seq(p, Literal(n: Int, IntegerType)) => ByteFoldCells(p, checkCells(n))
-      case Seq(p, n) if n.resolved && n.foldable &&
-          n.dataType == IntegerType && n.eval() != null =>
-        ByteFoldCells(p, checkCells(n.eval().asInstanceOf[Int]))
-      case Seq(_, n) =>
-        throw new IllegalArgumentException(
-          "byte_fold_cells: n must be a constant non-null INT, got " +
-            (if (n.resolved) n.dataType.simpleString else n.sql))
-      case other => badArgs("byte_fold_cells", other)
     },
     reg("dhash_bands",
       "dhash_bands(payload) - 8 dHash row-gradient band values of a binary payload (72-cell byte fold, bit c of band r set iff cell(r,c+1) > cell(r,c))") {

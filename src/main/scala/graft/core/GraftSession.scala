@@ -39,11 +39,8 @@ object GraftSession {
   def builder(
       appName: String = "graft",
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitions: Int = -1,
       extraConf: Map[String, String] = Map.empty): SparkSession.Builder = {
-    val derived =
-      if (shufflePartitions > 0) shufflePartitions
-      else deriveShufflePartitions(master)
+    val derived = deriveShufflePartitions(master)
     val b = SparkSession
       .builder()
       .appName(appName)

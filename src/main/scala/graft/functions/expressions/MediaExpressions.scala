@@ -7,76 +7,25 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Codegen'd byte-fold "resize" over a binary payload: cell i of the
-  * result sums the UNSIGNED byte values at payload positions ≡ i
-  * (mod `cells`) — the q155/q156 dHash grid (the decode/resize stub a
-  * real pipeline swaps for codec+grayscale+resize), as ONE native loop.
-  *
-  * Why a custom Catalyst Expression: the composable formulation
-  * (hex-encode the payload, explode one row per byte, parse each
-  * hex pair, two aggregations to fold and re-assemble the grid) turns
-  * a per-row O(bytes) fold into a corpus×bytes row explosion with
-  * string parsing — measured 12 s/micro-batch on the 20× phash ingest
-  * stress (1k docs/s) where the fold itself is microseconds per
-  * document. Same arithmetic, bit-identical cells, zero shuffle: the
-  * whole fingerprint pipeline collapses to a map pass. The DuckDB
-  * oracle keeps the hex-pair formulation — same unsigned-byte sums —
-  * which is exactly the two-formulation check the gate wants.
-  *
-  * Null contract: null in → null out (UnaryExpression default). The
-  * `cells` count is a class parameter (plan-time constant), so the
-  * generated loop's modulus is a JIT-visible literal.
-  */
-case class ByteFoldCells(child: Expression, cells: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "byte_fold_cells"
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    val acc = new Array[Long](cells)
-    var i = 0
-    while (i < bytes.length) {
-      acc(i % cells) += (bytes(i) & 0xff).toLong
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(acc)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      s"""
-         |long[] $acc = new long[$cells];
-         |for (int $i = 0; $i < $b.length; $i++) {
-         |  $acc[$i % $cells] += (long) ($b[$i] & 0xff);
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($acc);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** The full dHash fingerprint fused into ONE expression: fold the
-  * payload bytes into the 8×9 cell grid, then emit the 8 row-gradient
-  * band values (bit c of band r set iff cell(r,c+1) > cell(r,c)) — one
-  * native pass per row.
+  * payload bytes into the 8×9 cell grid (cell i sums the UNSIGNED
+  * byte values at positions ≡ i mod 72 — the q155/q156 decode/resize
+  * stub a real pipeline swaps for codec+grayscale+resize), then emit
+  * the 8 row-gradient band values (bit c of band r set iff
+  * cell(r,c+1) > cell(r,c)) — one native pass per row.
   *
-  * Why fused rather than composed over [[ByteFoldCells]]: the composed
-  * form references the cell array 128 times (64 comparisons × 2
-  * element_at), and CollapseProject inlines the fold into EVERY
-  * reference — measured ~16 s per ingest micro-batch re-running the
-  * byte fold 128× per row (conditional branches defeat codegen's
-  * common-subexpression sharing). Fusing makes the fingerprint one
-  * O(bytes + 72) evaluation. Arithmetic identical to the composed
-  * form and to the oracle's hex-pair CTE formulation — the JVM spec
-  * reference and the DuckDB gate both check it from independent
-  * formulations.
+  * Why one custom Catalyst Expression: the composable formulation
+  * (hex-encode the payload, explode one row per byte, parse each hex
+  * pair, two aggregations to fold and re-assemble the grid) turns a
+  * per-row O(bytes) fold into a corpus×bytes row explosion — measured
+  * 12 s/micro-batch on the 20× phash ingest stress. A fold expression
+  * composed with 64 `element_at` comparisons references the cell
+  * array 128 times, and CollapseProject inlines the fold into EVERY
+  * reference — measured ~16 s per ingest micro-batch (conditional
+  * branches defeat codegen's common-subexpression sharing). Fusing
+  * makes the fingerprint one O(bytes + 72) evaluation. The JVM spec
+  * reference and the DuckDB gate's hex-pair CTE formulation both
+  * check it from independent formulations.
   */
 case class DHashBands(child: Expression) extends UnaryExpression {
 
@@ -134,10 +83,6 @@ case class DHashBands(child: Expression) extends UnaryExpression {
 }
 
 object MediaExpressions {
-  /** Column API for [[ByteFoldCells]]. */
-  def byteFoldCells(payload: Column, cells: Int): Column =
-    Bridge.column(ByteFoldCells(Bridge.expression(payload), cells))
-
   /** Column API for [[DHashBands]]. */
   def dhashBands(payload: Column): Column =
     Bridge.column(DHashBands(Bridge.expression(payload)))

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{SessionMemo, Tables}
+import graft.core.{BroadcastGate, SessionMemo, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.Round._
 
@@ -417,34 +417,13 @@ object Dedup {
     * (ra, rb, na, nb, common), per-rep sorted member-id lists
     * (rep, mids) for closed-form member expansion, and two MEASURED
     * counts — total docs (= Σ|mids|, the member-list frames' broadcast
-    * payload, driving [[memberListGated]]'s plan choice) and rep count
+    * payload, driving [[BroadcastGate]]'s plan choice) and rep count
     * (nDocs/nReps is the mean member-expansion factor, driving q121's
     * pre-expansion rebalance).
     */
   private[graft] final case class ContainmentFrames(
       membership: DataFrame, groups: DataFrame, pairs: DataFrame,
       memberLists: DataFrame, nDocs: Long, nReps: Long)
-
-  /** Session conf key bounding the doc count under which the per-rep
-    * member-list frame is `broadcast()` in the q121 member expansion;
-    * above it the expansion joins take a pinned SHUFFLE_HASH on the rep
-    * key. Same measured-size discipline as the phash band index
-    * ([[graft.ops.Multimodal]] BroadcastRepLimitConf): the member-list
-    * payload is one long per corpus doc (~8 B + row overhead), so at
-    * the default 1M docs the broadcast is ~10 MB resident per
-    * executor; at 100 TB the membership is O(corpus) and the gate
-    * degrades to an exchange on `rep` instead of a driver OOM.
-    */
-  private[graft] val ContainmentBroadcastDocLimitConf =
-    "spark.graft.containment.broadcastDocLimit"
-  private[graft] val ContainmentBroadcastDocLimitDefault = 1000000L
-
-  private def memberListGated(df: DataFrame, nDocs: Long): DataFrame = {
-    val limit = df.sparkSession.conf
-      .getOption(ContainmentBroadcastDocLimitConf).map(_.toLong)
-      .getOrElse(ContainmentBroadcastDocLimitDefault)
-    if (nDocs <= limit) broadcast(df) else df.hint("shuffle_hash")
-  }
 
   private val repPairMemo = SessionMemo[ContainmentFrames](
       "containment", "documents") { f =>
@@ -474,7 +453,7 @@ object Dedup {
       .persist(lvl)
     // the materializing counts double as MEASURED plan inputs —
     // nDocs is the broadcast payload (one long per doc) for
-    // memberListGated, nDocs/nReps the mean expansion factor for
+    // BroadcastGate, nDocs/nReps the mean expansion factor for
     // q121's rebalance gate; both frames persist here anyway
     val nDocs = membership.count()
     val nReps = memberLists.count()
@@ -555,10 +534,10 @@ object Dedup {
     // frame that is ~0.4% of the output, for a pipeline that runs
     // fused end-to-end.
     val out = allPairs
-      .join(memberListGated(f.memberLists
+      .join(BroadcastGate(f.memberLists
         .select(col("rep").as("ra"), col("mids").as("mids_a")), f.nDocs),
         Seq("ra"))
-      .join(memberListGated(f.memberLists
+      .join(BroadcastGate(f.memberLists
         .select(col("rep").as("rb"), col("mids").as("mids_b")), f.nDocs),
         Seq("rb"))
       .withColumn("ida", explode(col("mids_a")))

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{SessionMemo, Tables}
+import graft.core.{BroadcastGate, SessionMemo, Tables}
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed metadata.
   *
@@ -126,36 +126,6 @@ object Multimodal {
 
   private[graft] val BandsN = 8
 
-  /** Session conf key bounding the rep count under which the corpus
-    * band index is `broadcast()` in the phash family's joins; above it
-    * the joins take a SHUFFLE_HASH hint on their equality keys instead.
-    * The index is rep-count-sized (9 longs/rep, ~80 B with row
-    * overhead; the exploded band form is 8 narrower rows/rep) — at the
-    * default 1M reps the largest broadcast frame is ~80 MB, resident on
-    * every executor. At 100 TB the distinct-media rep set is
-    * O(corpus) — billions of reps — where an unconditional broadcast
-    * hint OOMs the driver; (band, bv) and the rep-id verify keys are
-    * perfectly good shuffle-hash keys, so the gate degrades to an
-    * exchange, not a failure. Both plan shapes are PlanSpec-gated.
-    */
-  private[graft] val BroadcastRepLimitConf =
-    "spark.graft.phash.broadcastRepLimit"
-  private[graft] val BroadcastRepLimitDefault = 1000000L
-
-  /** The measured-size strategy choice: broadcast a rep-count-sized
-    * index frame only when the memoized index's MEASURED rep count is
-    * under the configured limit (the count is free — the memo
-    * materializes with a `.count()`); otherwise pin a shuffle hash
-    * join so a stats misestimate can't flip the plan back to a
-    * driver-killing broadcast (or to a needless sort-merge).
-    */
-  private[graft] def sizeGated(df: DataFrame, repCount: Long): DataFrame = {
-    val limit = df.sparkSession.conf
-      .getOption(BroadcastRepLimitConf).map(_.toLong)
-      .getOrElse(BroadcastRepLimitDefault)
-    if (repCount <= limit) broadcast(df) else df.hint("shuffle_hash")
-  }
-
   /** dHash band vectors of a (doc_id, text) frame — (doc_id,
     * bands: array&lt;long&gt;[8]) — the pure pipeline (decode fold →
     * grid → gradient bits; steps 1-2 of the q155 scaladoc), as ONE
@@ -190,7 +160,7 @@ object Multimodal {
       val f = phashBandsOf(repDocs.select(col("doc_id"), col("text")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // the materializing count doubles as the measured size the
-      // broadcast-vs-shuffle gate ([[sizeGated]]) decides on
+      // broadcast-vs-shuffle gate ([[BroadcastGate]]) decides on
       (f, f.count())
     }
 
@@ -238,17 +208,17 @@ object Multimodal {
     bands
       .select(col("doc_id").as("doc_a"), col("band"), col("bv"))
       // the blocking join's build side is the rep-count-sized band
-      // frame — size-gated ([[sizeGated]]): broadcast under the
+      // frame — size-gated ([[BroadcastGate]]): broadcast under the
       // measured rep limit so the candidate space is generated
       // map-side (and the strategy can't flip on a size misestimate),
       // shuffle hash join on (band, bv) above it
-      .join(sizeGated(bands.select(col("doc_id").as("doc_b"),
+      .join(BroadcastGate(bands.select(col("doc_id").as("doc_b"),
         col("band"), col("bv")), reps), Seq("band", "bv"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
-      .join(sizeGated(bandVec.select(col("doc_id").as("doc_a"),
+      .join(BroadcastGate(bandVec.select(col("doc_id").as("doc_a"),
         col("bands").as("ba")), reps), Seq("doc_a"))
-      .join(sizeGated(bandVec.select(col("doc_id").as("doc_b"),
+      .join(BroadcastGate(bandVec.select(col("doc_id").as("doc_b"),
         col("bands").as("bb")), reps), Seq("doc_b"))
       .withColumn("hamming", hamExpr)
       .filter(col("hamming") <= lit(maxHamming.toLong))
@@ -322,9 +292,9 @@ object Multimodal {
       // verify sides are rep-count-sized — same measured-size gate as
       // q155: broadcast under the limit, shuffle hash join on the rep
       // keys above it
-      .join(sizeGated(bandVec.select(col("doc_id").as("query_id"),
+      .join(BroadcastGate(bandVec.select(col("doc_id").as("query_id"),
         col("bands").as("ba")), reps), Seq("query_id"))
-      .join(sizeGated(bandVec.select(col("doc_id").as("cand_id"),
+      .join(BroadcastGate(bandVec.select(col("doc_id").as("cand_id"),
         col("bands").as("bb")), reps), Seq("cand_id"))
       .withColumn("hamming", hamExpr)
       .withColumn("rk", row_number().over(w).cast("long"))

@@ -2473,18 +2473,14 @@ object TextOps {
     * and cost is pure scheduler latency, the same extra stage makes it
     * ~2× SLOWER (0.48 vs 0.25 s/merge). So: vocabulary ≥
     * [[BpeDeltaMinVocab]] → delta, below → recount, decided from one
-    * cached-count job on the materialized vocabulary;
-    * [[BpeRecountConf]] forces either path (the probe's A/B lever).
+    * cached-count job on the materialized vocabulary. `deltaMinVocab`
+    * moves that threshold: 0 always takes the delta, `Long.MaxValue`
+    * always the recount (the both-paths spec and BpeProbe's A/B), so
+    * the decision code itself runs either way.
     * `merges` is a constant (a tokenizer trains tens of thousands of
     * merges, each this same bounded step; the gated default is 3 to
     * keep the oracle's unrolled CTEs honest).
     */
-  /** Session conf forcing q153's merge-step path: "1" = full recount,
-    * "0" = delta maintenance, unset = cost-based auto (vocabulary size
-    * vs [[BpeDeltaMinVocab]]). The forced settings are BpeProbe's A/B
-    * lever; production leaves it unset. */
-  val BpeRecountConf = "graft.bpe.recount"
-
   /** Distinct-word threshold above which q153's delta-maintained merge
     * step beats the full recount (BpeProbe r16: recount wins ~2× at
     * 20k words, delta wins 1.55×-and-widening at 1M; the crossover is
@@ -2492,7 +2488,11 @@ object TextOps {
     * scheduler-bound stage, ~low hundreds of thousands on this box). */
   val BpeDeltaMinVocab = 200000L
 
-  def q153BpeTrain(s: SparkSession, d: String, merges: Int = 3): DataFrame = {
+  def q153BpeTrain(s: SparkSession, d: String, merges: Int = 3): DataFrame =
+    bpeTrain(s, d, merges, BpeDeltaMinVocab)
+
+  private[graft] def bpeTrain(s: SparkSession, d: String, merges: Int,
+      deltaMinVocab: Long): DataFrame = {
     import s.implicits._
     // adjacent-pair strings of a space-joined symbol sequence; the
     // size guard comes BEFORE the transform (Spark's sequence(1, 0)
@@ -2512,18 +2512,13 @@ object TextOps {
           expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
           .as("seq"),
         col("freq"))
-    // cost-based path pick (scaladoc above; forced by BpeRecountConf):
-    // materialize the vocabulary once, and when the conf doesn't force
-    // a path, one cached-count job decides — small vocabulary →
-    // recount (per-merge cost is scheduler latency; the delta's extra
-    // stage only hurts), large → delta (the recount's per-merge
-    // vocabulary-wide explode+agg dominates)
+    // cost-based path pick (scaladoc above): materialize the
+    // vocabulary once, and one cached-count job decides — small
+    // vocabulary → recount (per-merge cost is scheduler latency; the
+    // delta's extra stage only hurts), large → delta (the recount's
+    // per-merge vocabulary-wide explode+agg dominates)
     val wordsCk = words0.localCheckpoint(true)
-    val recount = s.conf.getOption(BpeRecountConf) match {
-      case Some("1") => true
-      case Some("0") => false
-      case _ => wordsCk.count() < BpeDeltaMinVocab
-    }
+    val recount = wordsCk.count() < deltaMinVocab
     // loop state: vocabulary rows (kind=w) + the maintained pair-count
     // table (kind=p) in one checkpointed frame — one materialization
     // job per merge covers both (built from the cached vocabulary, so

@@ -780,8 +780,7 @@ object StreamingOps {
     * overhead is one batch-local md5 groupBy.
     */
   def contaminationSpansAtIngest(docs: DataFrame, benchGrams: DataFrame,
-      outDir: String, checkpointDir: String,
-      coalescePerBatch: Boolean = false)
+      outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -803,15 +802,12 @@ object StreamingOps {
           .select(col("train_doc"), col("bench_doc"), col("n_seeds"),
             col("longest_run"))
           .withColumn("batch_id", lit(batchId))
-        // default is PARALLEL writes (coalescePerBatch = false): the r10
-        // mirrored-order probe read the coalesce(1) as a wash, but the
-        // r11 stream-stress separated the variants cleanly — 7.1k docs/s
-        // parallel vs 4.9k coalesced at 20× (the single-task reduce side
-        // serializes the span agg's tail every batch). Opt back into
-        // coalesce(1) only for tidy one-file-per-batch output on LOW
-        // ingest rates; at scale, compact afterwards (Layout.compact).
-        (if (coalescePerBatch) report.coalesce(1) else report)
-          .write.mode("append").parquet(outDir)
+        // PARALLEL writes, no coalesce(1): the r11 stream-stress read
+        // 7.1k docs/s parallel vs 4.9k coalesced at 20× (the
+        // single-task reduce side serializes the span agg's tail every
+        // batch). For one file per batch, compact afterwards
+        // (Layout.compact).
+        report.write.mode("append").parquet(outDir)
         (): Unit
       }
       .start()
@@ -943,8 +939,8 @@ object StreamingOps {
     * The index side is rep-count-sized (corpus-scale): the probe is an
     * equality hash join on (band, value) and the member join is
     * rep-keyed — both size-gated on the index's MEASURED rep count
-    * ([[graft.ops.Multimodal.sizeGated]]): broadcast under the
-    * configured limit, pinned shuffle hash join above it.
+    * ([[graft.core.BroadcastGate]]): broadcast under its row limit,
+    * pinned shuffle hash join above it.
     */
   private[graft] def phashMatchBatch(batch: DataFrame,
       index: MediaPhashIndex, maxHamming: Int): DataFrame = {
@@ -973,9 +969,9 @@ object StreamingOps {
       // the probe target is corpus-rep-sized: size-gated on the
       // index's measured rep count (broadcast under the limit, pinned
       // shuffle hash join on (band, bv) above it) — the same
-      // Multimodal.sizeGated choice as batch q155/q156, so no ingest
+      // BroadcastGate choice as batch q155/q156, so no ingest
       // batch can force a corpus-sized broadcast
-      .join(graft.ops.Multimodal.sizeGated(index.bands, index.repCount),
+      .join(graft.core.BroadcastGate(index.bands, index.repCount),
         Seq("band", "bv"))
       .withColumn("hamming", graft.ops.Multimodal.hamExpr)
       .filter(col("hamming") <= lit(maxHamming.toLong))
@@ -983,7 +979,7 @@ object StreamingOps {
     matches
       .join(fps.select(col("fp"), col("ids")), Seq("fp"))
       .select(explode(col("ids")).as("doc_id"), col("rep"), col("hamming"))
-      .join(graft.ops.Multimodal.sizeGated(index.members, index.repCount),
+      .join(graft.core.BroadcastGate(index.members, index.repCount),
         Seq("rep"))
       .select(col("doc_id"), col("rep").as("match_rep"), col("hamming"),
         col("members"))

@@ -21,8 +21,10 @@ import graft.functions.TextFunctions.tokens
   *    reference never registers (`WordCount.java:41-42`), without a row
   *    per token occurrence;
   *  - total-order sort in UTF-8 BYTE order (`Text.Comparator`, §2.6):
-  *    sort on `encode(word, "UTF-8")` (BinaryType sorts byte-wise) —
-  *    plain string orderBy would diverge for supplementary-plane chars;
+  *    Spark's default UTF8_BINARY string order compares the UTF-8
+  *    bytes, so a plain sort on `word` is that order (code-point order,
+  *    not Java's UTF-16 order — WordCountSpec pins the supplementary
+  *    plane against U+E000..U+FFFF on every sorting path);
   *  - TSV output `word\tcount`, fail-if-output-exists
   *    (`TextOutputFormat` + `FileOutputFormat.checkOutputSpecs`,
   *    `WordCount.java:35,39`) = SaveMode.ErrorIfExists;
@@ -48,12 +50,9 @@ object WordCountJob {
       .groupBy("word")
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("count"))
 
-  /** The reference's sort key: the word's UTF-8 bytes. */
-  private def byteOrder = encode(col("word"), "UTF-8")
-
   /** word → count, sorted by UTF-8 byte order of the word. */
   def count(spark: SparkSession, input: DataFrame): DataFrame =
-    counts(input).orderBy(byteOrder)
+    counts(input).orderBy("word")
 
   def run(spark: SparkSession, in: String, out: String, singleFile: Boolean = true): Unit = {
     val counted = counts(spark.read.text(in))
@@ -62,8 +61,8 @@ object WordCountJob {
     // (round-robin `repartition(1)` would add a local sort per upstream
     // task, `sortBeforeRepartition`)
     val sorted =
-      if (singleFile) counted.repartition(1, col("word")).sortWithinPartitions(byteOrder)
-      else counted.orderBy(byteOrder)
+      if (singleFile) counted.repartition(1, col("word")).sortWithinPartitions("word")
+      else counted.orderBy("word")
     sorted.select(concat_ws("\t", col("word"), col("count")).as("value"))
       .write.mode(SaveMode.ErrorIfExists).text(out)
   }

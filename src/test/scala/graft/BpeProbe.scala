@@ -77,22 +77,20 @@ object BpeProbe {
       // whole vocabulary); the delta's decays with merge depth as the
       // argmax pair gets rarer and `affected` shrinks — the regime a
       // 30k-merge production train lives in almost immediately
-      Seq("delta" -> "0", "recount" -> "1").foreach { case (label, v) =>
-        spark.conf.set(graft.ops.TextOps.BpeRecountConf, v)
+      Seq("delta" -> 0L, "recount" -> Long.MaxValue).foreach { case (label, minVocab) =>
         // warm once per path (codegen + page cache), then time
-        graft.ops.TextOps.q153BpeTrain(spark, wideDir, merges = 2).count()
+        graft.ops.TextOps.bpeTrain(spark, wideDir, 2, minVocab).count()
         var prevD = 0
         var prevT = 0.0
         Seq(16, 64).foreach { depth =>
-          val (n, dt) = QueryRun.time(graft.ops.TextOps.q153BpeTrain(
-            spark, wideDir, merges = depth).count())
+          val (n, dt) = QueryRun.time(graft.ops.TextOps.bpeTrain(
+            spark, wideDir, depth, minVocab).count())
           val marginal = if (prevD > 0) (dt - prevT) / (depth - prevD)
             else dt / depth
           println(f"[bpeprobe] widevocab $label%-8s depth $depth%3d: $dt%7.2f s total, $n%3d emitted, ${dt / depth}%.3f s/merge mean, $marginal%.3f s/merge marginal")
           prevD = depth; prevT = dt
         }
       }
-      spark.conf.unset(graft.ops.TextOps.BpeRecountConf)
     }
     spark.stop()
   }

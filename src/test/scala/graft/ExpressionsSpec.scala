@@ -388,19 +388,6 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(one("SELECT float_dot(CAST(array(1.0, 2.0) AS array<float>), CAST(array(3.0, 4.0) AS array<float>)) AS r")
       .getDouble(0) == 11.0)
     assert(one("SELECT strip_accents('çafé') AS r").getString(0) == "cafe")
-    // byte_fold_cells: hand-computed fold ("abcde" into 2 cells:
-    // a+c+e = 97+99+101 = 297, b+d = 98+100 = 198) and Column-twin parity
-    assert(one("SELECT byte_fold_cells(encode('abcde', 'UTF-8'), 2) AS r")
-      .getSeq[Long](0) == Seq(297L, 198L))
-    val bfSql = one("SELECT byte_fold_cells(encode('abcde', 'UTF-8'), 3) AS r")
-      .getSeq[Long](0)
-    val bfCol = spark.range(1)
-      .select(graft.functions.expressions.MediaExpressions
-        .byteFoldCells(org.apache.spark.sql.functions
-          .encode(org.apache.spark.sql.functions.lit("abcde"), "UTF-8"), 3)
-        .as("r"))
-      .head().getSeq[Long](0)
-    assert(bfSql == bfCol && bfSql == Seq(97L + 100L, 98L + 101L, 99L))
     // dhash_bands ≡ the composed fold-then-compare formulation (the
     // fused expression must be bit-identical to what it fused)
     val text = "the quick brown fox jumps over the lazy dog " * 4
@@ -431,18 +418,6 @@ class ExpressionsSpec extends AnyFunSuite {
     }
     intercept[Exception] {
       spark.sql("SELECT token_shingles(array('a'), 'two')").collect()
-    }
-    // byte_fold_cells rejects non-positive cell counts at RESOLUTION
-    // (n = 0 would otherwise reach the generated `i % 0` as a raw
-    // per-row ArithmeticException; n < 0 a NegativeArraySizeException)
-    for (bad <- Seq(0, -3)) {
-      val e = intercept[Exception] {
-        spark.sql(s"SELECT byte_fold_cells(encode('a', 'UTF-8'), $bad)").collect()
-      }
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-      assert(msgs(e).exists(_.contains("n must be >= 1")),
-        s"expected a clear n>=1 rejection for n=$bad, got: $e")
     }
   }
 

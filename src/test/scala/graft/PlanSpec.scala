@@ -151,7 +151,6 @@ class PlanSpec extends AnyFunSuite {
     // the shape that survives a corpus-sized rep set at 100 TB, where
     // an unconditional broadcast() hint OOMs the driver. Both shapes
     // are asserted here so neither can silently regress.
-    import graft.ops.Multimodal
     for (name <- Seq("q155_phash_neardup", "q156_phash_topk")) {
       val small = SparkEntry.queries(name)(spark, sf)
         .queryExecution.executedPlan.toString
@@ -160,38 +159,47 @@ class PlanSpec extends AnyFunSuite {
       assert(!small.contains("ShuffledHashJoin"),
         s"$name small regime: no gated join should take the shuffle path")
     }
-    // force the large regime: a zero rep limit makes the measured
-    // count exceed it, so the gate must pick shuffle hash joins
-    spark.conf.set(Multimodal.BroadcastRepLimitConf, "0")
-    try {
+    // force the large regime: Spark's broadcast threshold at -1 turns
+    // broadcasting off, so the gate must pick shuffle hash joins
+    withoutBroadcast {
       for (name <- Seq("q155_phash_neardup", "q156_phash_topk")) {
         val large = SparkEntry.queries(name)(spark, sf)
           .queryExecution.executedPlan.toString
         assert(large.contains("ShuffledHashJoin"),
           s"$name large regime: gated joins must take the shuffle-hash path")
       }
-    } finally spark.conf.unset(Multimodal.BroadcastRepLimitConf)
+    }
+  }
+
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` at -1, then
+    * restores the previous setting. */
+  private def withoutBroadcast(f: => Unit): Unit = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try f finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("q121 member-list expansion joins flip on the measured-size broadcast gate") {
     // The member-expansion joins attach per-rep member-id LISTS and
     // explode map-side, so the quadratic member blow-up never crosses
     // an exchange. Under the doc limit the list frames broadcast;
-    // above it (forced here with a zero limit) the gate must degrade
-    // to pinned shuffle-hash joins on the rep keys — the shape that
-    // survives a corpus-sized membership at 100 TB.
-    import graft.ops.Dedup
+    // above it (forced here with broadcasting off) the gate must
+    // degrade to pinned shuffle-hash joins on the rep keys — the shape
+    // that survives a corpus-sized membership at 100 TB.
     val small = SparkEntry.queries("q121_containment_exact")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(small.contains("BroadcastHashJoin"),
       s"q121 small regime: member-list joins should broadcast:\n$small")
-    spark.conf.set(Dedup.ContainmentBroadcastDocLimitConf, "0")
-    try {
+    withoutBroadcast {
       val large = SparkEntry.queries("q121_containment_exact")(spark, sf)
         .queryExecution.executedPlan.toString
       assert(large.contains("ShuffledHashJoin"),
         s"q121 large regime: gated joins must take the shuffle-hash path:\n$large")
-    } finally spark.conf.unset(Dedup.ContainmentBroadcastDocLimitConf)
+    }
   }
 
   test("NO query plans a no-key (global) window — all registered queries") {

@@ -2463,17 +2463,15 @@ class TextDedupSimSpec extends AnyFunSuite {
     // greedy merging — itself reaches the argmax
     val k = 10
     val want = refBpe(words, k)
-    // BOTH merge-step paths against the reference: the cost-based auto
-    // pick would route this tiny fixture to the recount, so the
-    // delta-maintained path (the large-vocabulary production path) is
-    // forced explicitly — the paths-agree pin behind the r16 rewrite
-    for (forced <- Seq("1", "0")) {
-      spark.conf.set(TextOps.BpeRecountConf, forced)
-      try {
-        val got = TextOps.q153BpeTrain(spark, dir, merges = k).collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-        assert(got == want, s"path recount=$forced: got $got\nwant $want")
-      } finally spark.conf.unset(TextOps.BpeRecountConf)
+    // BOTH merge-step paths against the reference: the cost-based pick
+    // would route this tiny fixture to the recount, so the threshold
+    // is moved to force each path — 0 takes the delta-maintained path
+    // (the large-vocabulary production path), Long.MaxValue the
+    // recount — the paths-agree pin behind the r16 rewrite
+    for (minVocab <- Seq(Long.MaxValue, 0L)) {
+      val got = TextOps.bpeTrain(spark, dir, k, minVocab).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+      assert(got == want, s"path deltaMinVocab=$minVocab: got $got\nwant $want")
     }
     // the corpus genuinely exercised both regimes
     assert(want.exists(_._2 == "a a") && want.exists(_._2 == "aa aa"))

@@ -30,15 +30,19 @@ class WordCountSpec extends AnyFunSuite {
     counts.toSeq.sortBy(_._1)(utf8).map { case (w, c) => s"$w\t$c\n" }.mkString
   }
 
-  private def runJob(lines: Seq[String]): Seq[String] = {
+  /** The job's output lines; with `singleFile = false`, its part files
+    * concatenated in filename order. */
+  private def runJob(lines: Seq[String], singleFile: Boolean = true): Seq[String] = {
     val in = Files.createTempDirectory("wc_in")
     val out = Files.createTempDirectory("wc_out_parent").resolve("out")
     Files.write(in.resolve("input.txt"), lines.asJava)
-    WordCountJob.run(spark, in.toString, out.toString)
-    val part = Files.list(out).iterator().asScala
+    WordCountJob.run(spark, in.toString, out.toString, singleFile)
+    val parts = Files.list(out).iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-")).toSeq
-    assert(part.size == 1, "single-file sink must produce exactly one part file")
-    Files.readAllLines(part.head).asScala.toSeq
+      .sortBy(_.getFileName.toString)
+    assert(!singleFile || parts.size == 1,
+      "single-file sink must produce exactly one part file")
+    parts.flatMap(p => Files.readAllLines(p).asScala)
   }
 
   test("golden: counts, tabs-in-tokens, multi-space, empty lines") {
@@ -52,11 +56,19 @@ class WordCountSpec extends AnyFunSuite {
   }
 
   test("collation: supplementary-plane chars sort in UTF-8 byte order, not UTF-16") {
-    // U+FFFD < U+1F600 in UTF-8 byte order; UTF-16 code-unit order says
-    // the opposite (surrogates) — SURVEY §2.6 (verified against Hadoop
-    // Text.Comparator semantics).
-    val got = runJob(Seq("� 😀 zz"))
-    assert(got == Seq("zz\t1", "�\t1", "😀\t1"))
+    // UTF-8 byte order is code-point order: U+E000..U+FFFF < U+1F600 <
+    // U+10FFFF. UTF-16 code-unit order puts the supplementary plane
+    // (surrogates D800-DFFF) first — SURVEY §2.6 (verified against
+    // Hadoop Text.Comparator semantics). Checked on every sorting path.
+    import spark.implicits._
+    val want = "zz" +: Seq(0xE9, 0x4E2D, 0xE000, 0xFFFD, 0xFFFF, 0x1F600, 0x10FFFF)
+      .map(cp => new String(Character.toChars(cp)))
+    val line = want.reverse.mkString(" ")
+    val tsv = want.map(w => s"$w\t1")
+    assert(runJob(Seq(line)) == tsv)
+    assert(runJob(Seq(line), singleFile = false) == tsv)
+    assert(WordCountJob.count(spark, Seq(line).toDF("value"))
+      .collect().map(_.getString(0)).toSeq == want)
   }
 
   test("gzipped input decompresses transparently (TextInputFormat codec parity)") {
@@ -75,20 +87,13 @@ class WordCountSpec extends AnyFunSuite {
   }
 
   test("scale path: multi-part output concatenates to the same global order") {
-    val in = Files.createTempDirectory("wc_in_mp")
-    val out = Files.createTempDirectory("wc_out_mp_parent").resolve("out")
     val words = (1 to 500).map(i => f"w$i%03d")
     val rng = new scala.util.Random(7)
-    Files.write(in.resolve("input.txt"),
-      rng.shuffle(words ++ words).grouped(10).map(_.mkString(" ")).toSeq.asJava)
     // singleFile = false: global orderBy range-partitions; part files in
     // filename order concatenate to the same total order as the 1-file
     // path (the reference's copyMerge idiom, SURVEY §7.4)
-    WordCountJob.run(spark, in.toString, out.toString, singleFile = false)
-    val parts = Files.list(out).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-")).toSeq
-      .sortBy(_.getFileName.toString)
-    val concat = parts.flatMap(p => Files.readAllLines(p).asScala)
+    val concat = runJob(rng.shuffle(words ++ words).grouped(10)
+      .map(_.mkString(" ")).toSeq, singleFile = false)
     assert(concat == words.map(w => s"$w\t2"))
   }
 
