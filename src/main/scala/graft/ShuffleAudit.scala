@@ -45,18 +45,6 @@ object ShuffleAudit {
     here ++ p.subqueries.flatMap(allNodes)
   }
 
-  /** Test hook: dump the traversed node classes plus any nonzero
-    * shuffle/broadcast byte metrics for one executed plan.
-    */
-  private[graft] def debugNodes(p: SparkPlan): Unit =
-    allNodes(p).foreach { n =>
-      val hits = n.metrics.filter { case (k, m) =>
-        (k == "shuffleBytesWritten" || k == "dataSize") && m.value > 0 }
-      println(n.getClass.getSimpleName + (if (hits.nonEmpty)
-        "  " + hits.map { case (k, m) => s"$k=${m.value}" }.mkString(",")
-      else ""))
-    }
-
   private def metricSum(nodes: Seq[SparkPlan],
       pred: SparkPlan => Boolean, name: String): Long =
     nodes.filter(pred).flatMap(_.metrics.get(name)).map(_.value).sum

@@ -23,9 +23,6 @@ import graft.functions.expressions._
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.registrations.foreach(ext.injectFunction)
-    // optimizer rules: rewrite rewritable builtin shapes onto the
-    // codegen'd custom expressions (see each rule's scaladoc)
-    ext.injectOptimizerRule(_ => IntersectCountRewrite)
     // the word-count aggregate onto the fused map-side counter, and the
     // strategy that plans the counter and the Final-mode sum above it
     ext.injectOptimizerRule(_ => TokenCountRewrite)

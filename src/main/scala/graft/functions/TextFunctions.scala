@@ -33,9 +33,6 @@ object TextFunctions {
   /** Number of tokens in a document. */
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** Distinct tokens (set semantics, order not meaningful). */
-  def distinctTokens(text: Column): Column = array_distinct(tokens(text))
-
   /** Total characters across tokens (i.e. excluding separator spaces). */
   def tokenChars(toks: Column): Column =
     aggregate(transform(toks, t => length(t).cast("long")), lit(0L), (a, b) => a + b)
@@ -127,7 +124,6 @@ object TextFunctions {
     */
   val BandHashWidth: Int = 16
   def bandOffset(b: Int): Int = 1 + 2 * b
-  def bandOffsetCol(b: Column): Column = lit(1) + b * lit(2)
 
   /** Token 3-gram shingles ("w1 w2 w3") over the ordered token sequence;
     * empty array for documents shorter than 3 tokens. Evaluated by the

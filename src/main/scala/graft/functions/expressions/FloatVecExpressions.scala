@@ -1,11 +1,12 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StructField, StructType}
 
 /** Codegen'd dot product over two `array<float>` columns, accumulating in
   * double left-to-right.
@@ -250,52 +251,67 @@ case class AdcLookupSum(lut: Expression, codes: Expression, k: Int)
     copy(lut = newLeft, codes = newRight)
 }
 
-/** Codegen'd PQ ENCODE: the per-subspace argmin code array for a
-  * micro-unit vector against literal codebooks —
-  * codes[m] = argmin_c Σ_i (mvec[m·subDim+i] − books[m][c][i])²,
-  * ties to the SMALLER code (strict less-than keeps the first).
+/** Codegen'd NEAREST-CODEWORD kernel — the one argmin behind IVF
+  * assignment, PQ encode and k-center assignment. For each codebook m
+  * it returns the index of the codeword nearest to the micro-unit
+  * vector's slice that starts at m·subDim, and that distance:
+  * code[m] = argmin_c Σ_i (mvec[m·subDim+i] − books[m][c][i])², with
+  * d2[m] the minimum. Exact integer squared L2; the strict `<` keeps the
+  * SMALLER index on ties (the `least()`-of-(d2, index)-structs order
+  * and the oracle's (d2, id) windows). Each slice reads
+  * min(codeword length, remaining) elements — the prefix fold of
+  * [[LongVecDist2]] on a length mismatch. A single-codebook model
+  * (IVF centroids, k-center exemplars) is `books = Array(model)`.
   *
-  * Why a custom Expression: the composable form (an `array` of PqM
-  * `least`-of-PqSubK-struct chains over `slice`s) exceeds the
-  * whole-stage-codegen method budget, so Spark demotes that Project to
-  * INTERPRETED eval — ~0.23 ms/row through the Catalyst tree walker
-  * (256 interpreted dist2-over-slice evals + struct allocations per
-  * row). Measured consequence: the ADC probe's postings broadcast
-  * built its child on ONE task (a 20× corpus is a single parquet
-  * split) and that interpreted encode was 5.6 s of q169's 7.4 s.
-  * This expression is the same arithmetic as one tight primitive
-  * loop — bit-identical codes (exact integer d2, same tie rule),
-  * inside codegen.
+  * Why a custom Expression: the composable forms scale with the model.
+  * An `array` of PqM `least`-of-PqSubK-struct chains exceeds the
+  * whole-stage-codegen method budget, so Spark runs that Project
+  * interpreted (5.6 s of q169's 7.4 s at 20×) or Janino rejects it on a
+  * full-row action (q168). A single `least()` chain carries a k·dims
+  * literal tree in the plan, and its analysis and codegen cost grows
+  * with k (a 128-centroid fit sat >35 minutes in plan optimization and
+  * codegen at 20×); the broadcast cross join + `row_number` window
+  * that replaced it above 32 centroids costs a shuffle per Lloyd
+  * iteration. Here the
+  * model rides as ONE reference object and each row is one primitive
+  * loop — a pure map pass at every model size.
   *
-  * Null contract: null if the input vector is null. Subvector slices
-  * read min(subDim, remaining) elements — same prefix fold as
-  * [[LongVecDist2]] on a length mismatch.
+  * Null contract: null if the input vector is null.
   */
-case class PqEncodeCodes(child: Expression,
+case class NearestCode(child: Expression,
     books: Array[Array[Array[Long]]], subDim: Int)
     extends UnaryExpression {
-  require(books.nonEmpty && subDim > 0)
+  require(books.nonEmpty && books.forall(_.nonEmpty) && subDim > 0,
+    "NearestCode: every codebook needs a codeword, and subDim > 0")
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  /** struct&lt;code: array&lt;bigint&gt;, d2: array&lt;bigint&gt;&gt;,
+    * one entry per codebook.
+    */
+  override def dataType: DataType = {
+    val perBook = ArrayType(LongType, containsNull = false)
+    StructType(Seq(StructField("code", perBook, nullable = false),
+      StructField("d2", perBook, nullable = false)))
+  }
 
-  override def prettyName: String = "pq_encode_codes"
+  override def prettyName: String = "nearest_code"
 
   override def nullSafeEval(v: Any): Any = {
     val mv = v.asInstanceOf[ArrayData]
-    val m = books.length
-    val out = new Array[Long](m)
+    val code = new Array[Long](books.length)
+    val d2 = new Array[Long](books.length)
     var s = 0
-    while (s < m) {
+    while (s < books.length) {
       val bm = books(s)
+      val base = s * subDim
+      val rem = math.max(0, mv.numElements() - base)
       var best = Long.MaxValue
       var bc = 0L
       var c = 0
       while (c < bm.length) {
         val cv = bm(c)
+        val n = math.min(cv.length, rem)
         var d = 0L
         var i = 0
-        val base = s * subDim
-        val n = math.min(subDim, math.max(0, mv.numElements() - base))
         while (i < n) {
           val t = mv.getLong(base + i) - cv(i)
           d += t * t
@@ -304,17 +320,19 @@ case class PqEncodeCodes(child: Expression,
         if (d < best) { best = d; bc = c.toLong }
         c += 1
       }
-      out(s) = bc
+      code(s) = bc
+      d2(s) = best
       s += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
+    InternalRow(UnsafeArrayData.fromPrimitiveArray(code),
+      UnsafeArrayData.fromPrimitiveArray(d2))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val booksRef = ctx.addReferenceObj("pqBooks", books, "long[][][]")
+    val booksRef = ctx.addReferenceObj("books", books, "long[][][]")
     nullSafeCodeGen(ctx, ev, v => {
-      val out = ctx.freshName("out")
+      val code = ctx.freshName("code")
+      val d2 = ctx.freshName("d2")
       val s = ctx.freshName("s")
       val c = ctx.freshName("c")
       val i = ctx.freshName("i")
@@ -325,17 +343,20 @@ case class PqEncodeCodes(child: Expression,
       val bm = ctx.freshName("bm")
       val cv = ctx.freshName("cv")
       val base = ctx.freshName("base")
+      val rem = ctx.freshName("rem")
       val n = ctx.freshName("n")
+      val ua = classOf[UnsafeArrayData].getName
       s"""
-         |long[] $out = new long[${books.length}];
+         |long[] $code = new long[${books.length}];
+         |long[] $d2 = new long[${books.length}];
          |for (int $s = 0; $s < ${books.length}; $s++) {
          |  long[][] $bm = $booksRef[$s];
-         |  long $best = Long.MAX_VALUE; long $bc = 0L;
          |  int $base = $s * $subDim;
-         |  int $n = java.lang.Math.min($subDim,
-         |    java.lang.Math.max(0, $v.numElements() - $base));
+         |  int $rem = java.lang.Math.max(0, $v.numElements() - $base);
+         |  long $best = Long.MAX_VALUE; long $bc = 0L;
          |  for (int $c = 0; $c < $bm.length; $c++) {
          |    long[] $cv = $bm[$c];
+         |    int $n = java.lang.Math.min($cv.length, $rem);
          |    long $d = 0L;
          |    for (int $i = 0; $i < $n; $i++) {
          |      long $t = $v.getLong($base + $i) - $cv[$i];
@@ -343,105 +364,11 @@ case class PqEncodeCodes(child: Expression,
          |    }
          |    if ($d < $best) { $best = $d; $bc = (long) $c; }
          |  }
-         |  $out[$s] = $bc;
+         |  $code[$s] = $bc;
+         |  $d2[$s] = $best;
          |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** [[PqEncodeCodes]]'s distance twin (r17): per subspace the ARGMIN
-  * DISTANCE (the per-subspace reconstruction error q168 reports as
-  * d2_sub) instead of the argmin index — the identical tight loop
-  * emitting `best` where the codes twin emits `bc`. Exists because
-  * q168's original array-of-`least`-of-struct chains (PqM × PqSubK
-  * inlined dist2 comparisons) exceeded Janino's method-size limit in
-  * the explode's consume path, silently dropping the whole encode
-  * stage to interpreted execution on every full-row action (Verify,
-  * any index write) — the exact failure mode the codes twin was built
-  * for, observed as `CodeGenerator: Failed to compile` in every r16
-  * Verify log. Same arithmetic, ties and null/prefix contract as
-  * [[PqEncodeCodes]].
-  */
-case class PqEncodeDists(child: Expression,
-    books: Array[Array[Array[Long]]], subDim: Int)
-    extends UnaryExpression {
-  require(books.nonEmpty && subDim > 0)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "pq_encode_dists"
-
-  override def nullSafeEval(v: Any): Any = {
-    val mv = v.asInstanceOf[ArrayData]
-    val m = books.length
-    val out = new Array[Long](m)
-    var s = 0
-    while (s < m) {
-      val bm = books(s)
-      var best = Long.MaxValue
-      var c = 0
-      while (c < bm.length) {
-        val cv = bm(c)
-        var d = 0L
-        var i = 0
-        val base = s * subDim
-        val n = math.min(subDim, math.max(0, mv.numElements() - base))
-        while (i < n) {
-          val t = mv.getLong(base + i) - cv(i)
-          d += t * t
-          i += 1
-        }
-        if (d < best) best = d
-        c += 1
-      }
-      out(s) = best
-      s += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val booksRef = ctx.addReferenceObj("pqBooks", books, "long[][][]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val out = ctx.freshName("out")
-      val s = ctx.freshName("s")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      val best = ctx.freshName("best")
-      val bm = ctx.freshName("bm")
-      val cv = ctx.freshName("cv")
-      val base = ctx.freshName("base")
-      val n = ctx.freshName("n")
-      s"""
-         |long[] $out = new long[${books.length}];
-         |for (int $s = 0; $s < ${books.length}; $s++) {
-         |  long[][] $bm = $booksRef[$s];
-         |  long $best = Long.MAX_VALUE;
-         |  int $base = $s * $subDim;
-         |  int $n = java.lang.Math.min($subDim,
-         |    java.lang.Math.max(0, $v.numElements() - $base));
-         |  for (int $c = 0; $c < $bm.length; $c++) {
-         |    long[] $cv = $bm[$c];
-         |    long $d = 0L;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      long $t = $v.getLong($base + $i) - $cv[$i];
-         |      $d += $t * $t;
-         |    }
-         |    if ($d < $best) { $best = $d; }
-         |  }
-         |  $out[$s] = $best;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray($out);
+         |${ev.value} = new ${classOf[GenericInternalRow].getName}(new Object[] {
+         |  $ua.fromPrimitiveArray($code), $ua.fromPrimitiveArray($d2) });
        """.stripMargin
     })
   }
@@ -453,7 +380,7 @@ case class PqEncodeDists(child: Expression,
 /** Codegen'd PQ LOOKUP-TABLE build: the flattened per-query ADC table —
   * entry m·k + c = Σ_i (qm[m·subDim+i] − books[m][c][i])², consumed by
   * [[AdcLookupSum]]. Same codegen rationale, arithmetic and null/prefix
-  * contract as [[PqEncodeCodes]] (the array-of-256-dist2 composable
+  * contract as [[NearestCode]] (the array-of-256-dist2 composable
   * form also falls out of whole-stage codegen).
   */
 case class PqLutFlat(child: Expression,
@@ -535,89 +462,6 @@ case class PqLutFlat(child: Expression,
     copy(child = newChild)
 }
 
-/** Codegen'd NEAREST-CENTER assignment for the k-center family: the
-  * (d2, rk) lexicographic argmin of a micro-unit vector against the
-  * literal center list — returns [d2c, rk] as a 2-element array.
-  * centers(i) is the rank-(i+1) exemplar's micro-vector (rank order),
-  * so the strict `<` keeps the EARLIER-selected center on distance
-  * ties — exactly the `least()`-of-(d2, rk)-structs chain it replaces
-  * and the oracle's (d2, rk) window ordering.
-  *
-  * Why a custom Expression: the composable `least()` chain is k
-  * struct allocations + a k-deep comparison tree PER ROW and a k·dims
-  * literal tree in the PLAN. Measured at 20× (KcenterProbe, NOTES
-  * r14): unlike q169's PqEncodeCodes case the chain does NOT fall out
-  * of whole-stage codegen even at k=512 (expression splitting holds),
-  * but this loop is still 1.5-1.7× faster per pass with a per-row
-  * profile flat in k, and the model rides as ONE reference object —
-  * plan analysis/codegen cost independent of k, which is what keeps
-  * data-pruning k (10²–10⁴ exemplars) viable. Same exact-integer
-  * arithmetic, same prefix fold on a length mismatch as
-  * [[LongVecDist2]]; null vector → null.
-  */
-case class KcenterNearest(child: Expression, centers: Array[Array[Long]])
-    extends UnaryExpression {
-  require(centers.nonEmpty, "KcenterNearest: empty center list")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "kcenter_nearest"
-
-  override def nullSafeEval(v: Any): Any = {
-    val mv = v.asInstanceOf[ArrayData]
-    var best = Long.MaxValue
-    var brk = 0L
-    var c = 0
-    while (c < centers.length) {
-      val cv = centers(c)
-      val n = math.min(cv.length, mv.numElements())
-      var d = 0L
-      var i = 0
-      while (i < n) {
-        val t = mv.getLong(i) - cv(i)
-        d += t * t
-        i += 1
-      }
-      if (d < best) { best = d; brk = c + 1L }
-      c += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(Array(best, brk))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centersRef = ctx.addReferenceObj("kcCenters", centers, "long[][]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      val n = ctx.freshName("n")
-      val cv = ctx.freshName("cv")
-      val best = ctx.freshName("best")
-      val brk = ctx.freshName("brk")
-      s"""
-         |long $best = Long.MAX_VALUE; long $brk = 0L;
-         |for (int $c = 0; $c < $centersRef.length; $c++) {
-         |  long[] $cv = $centersRef[$c];
-         |  int $n = java.lang.Math.min($cv.length, $v.numElements());
-         |  long $d = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $t = $v.getLong($i) - $cv[$i];
-         |    $d += $t * $t;
-         |  }
-         |  if ($d < $best) { $best = $d; $brk = (long) ($c + 1); }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray(new long[] { $best, $brk });
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object FloatVecExpressions {
   /** Column API for [[FloatDot]]. */
   def floatDot(a: Column, b: Column): Column =
@@ -635,22 +479,13 @@ object FloatVecExpressions {
   def adcLookupSum(lut: Column, codes: Column, k: Int): Column =
     Bridge.column(AdcLookupSum(Bridge.expression(lut), Bridge.expression(codes), k))
 
-  /** Column API for [[PqEncodeCodes]]. */
-  def pqEncodeCodes(mvec: Column, books: Array[Array[Array[Long]]],
+  /** Column API for [[NearestCode]]. */
+  def nearestCode(mvec: Column, books: Array[Array[Array[Long]]],
       subDim: Int): Column =
-    Bridge.column(PqEncodeCodes(Bridge.expression(mvec), books, subDim))
-
-  /** Column API for [[PqEncodeDists]]. */
-  def pqEncodeDists(mvec: Column, books: Array[Array[Array[Long]]],
-      subDim: Int): Column =
-    Bridge.column(PqEncodeDists(Bridge.expression(mvec), books, subDim))
+    Bridge.column(NearestCode(Bridge.expression(mvec), books, subDim))
 
   /** Column API for [[PqLutFlat]]. */
   def pqLutFlat(qm: Column, books: Array[Array[Array[Long]]],
       subDim: Int): Column =
     Bridge.column(PqLutFlat(Bridge.expression(qm), books, subDim))
-
-  /** Column API for [[KcenterNearest]]. */
-  def kcenterNearest(mvec: Column, centers: Array[Array[Long]]): Column =
-    Bridge.column(KcenterNearest(Bridge.expression(mvec), centers))
 }

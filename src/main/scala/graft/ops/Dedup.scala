@@ -241,6 +241,15 @@ object Dedup {
     cross.unionByName(within).orderBy("contained_doc", "container_doc")
   }
 
+  /** Threshold as exact scaled integer (t = tScaled/10000): the prefix
+    * size and the qualify test must NOT go through floating point —
+    * `(1−0.8)·n` computes as `0.19999…·n`, which floors one short
+    * whenever (1−t)·n is a whole number, silently breaking the
+    * completeness proof for every doc size divisible by 5.
+    */
+  private def containmentScale(threshold: Double): Long =
+    math.round(threshold * 10000)
+
   /** PREFIX-FILTERED containment pairs — the EXACT-recall upgrade path
     * the q113 scaladoc promised, implemented because the measurement
     * demanded it (ContainmentRecallProbe, NOTES r7: LSH candidate
@@ -273,23 +282,6 @@ object Dedup {
     * The LSH path (q113) stays the cheap approximate screen; this is
     * the exhaustive auditor you run when recall is the contract.
     */
-  /** Threshold as exact scaled integer (t = tScaled/10000): the prefix
-    * size and the qualify test must NOT go through floating point —
-    * `(1−0.8)·n` computes as `0.19999…·n`, which floors one short
-    * whenever (1−t)·n is a whole number, silently breaking the
-    * completeness proof for every doc size divisible by 5.
-    */
-  private def containmentScale(threshold: Double): Long =
-    math.round(threshold * 10000)
-
-  def containmentCandidatePairs(s: SparkSession, d: String,
-      threshold: Double = 0.8): DataFrame =
-    containmentCandidatesOn(
-      Tables.documents(s, d)
-        .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
-        .filter(size(col("toks")) > 0),
-      containmentScale(threshold))
-
   private def containmentCandidatesOn(docs: DataFrame, tS: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tok = docs.select(col("doc_id"), size(col("toks")).cast("long").as("n"),
@@ -312,7 +304,7 @@ object Dedup {
   }
 
   /** EXACT containment pairs (q121): [[q113ContainmentPairs]]'s verify
-    * shape over [[containmentCandidatePairs]]'s provably-complete
+    * shape over [[containmentCandidatesOn]]'s provably-complete
     * candidates. Same output contract as q113 (contained/container by
     * smaller token set, ties to smaller id, r4 containment); unlike
     * q113 the oracle is INDEPENDENT brute-force all-pairs containment
@@ -1801,8 +1793,9 @@ object Dedup {
     * graph is near-dup-density-sized — the difference between joining
     * 52M rows per iteration and joining thousands.
     *
-    * Member-level semantics preserved exactly (the member step is kept
-    * as [[pagerankStep]], the spec's reference): for a member b of rep
+    * Member-level semantics preserved exactly (TextDedupSimSpec's
+    * "q137/q147 contraction exactness" test pins this step against a
+    * JVM member-level fold on a dup-heavy graph): for a member b of rep
     * r with c_r copies,
     *   deg(b)     = Σ_{r'~r} c_{r'} + (c_r − 1)
     *   share(b)   = pr_r div deg_r                      (identical ∀ b)
@@ -1878,24 +1871,6 @@ object Dedup {
         (lit(base) + expr("((coalesce(c_cross, CAST(0 AS BIGINT)) + " +
           "coalesce(c_within, CAST(0 AS BIGINT))) * 85) div 100")).as("pr"),
         col("prev"))
-  }
-
-  /** One MEMBER-level integer power iteration — the REFERENCE
-    * formulation the rep-level step must reproduce bit-for-bit
-    * (spec-pinned on a dup-bearing fixture; also the residual-curve
-    * probe's step). Production runs [[pagerankRepStep]].
-    */
-  private[graft] def pagerankStep(pr: DataFrame, docs: DataFrame,
-      edges: DataFrame, deg: DataFrame, base: Long): DataFrame = {
-    val share = pr.join(deg, Seq("doc_id"))
-      .select(col("doc_id"), expr("pr div deg").as("sh"))
-    val pushed = edges.join(share, edges("doc_a") === share("doc_id"))
-      .select(col("doc_b").as("doc_id"), col("sh"))
-    val contrib = pushed.groupBy("doc_id").agg(sum("sh").as("c"))
-    docs.join(contrib, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        (lit(base) + expr("(coalesce(c, CAST(0 AS BIGINT)) * 85) div 100"))
-          .as("pr"))
   }
 
   /** CONVERGENT PageRank (q147) — [[q137Pagerank]]'s integer formulation

@@ -273,62 +273,26 @@ object Similarity {
       b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     graft.functions.expressions.FloatVecExpressions.longDist2(a, b)
 
-  /** Above this model size, assignment switches from the literal
-    * `least(...)` expression to a broadcast-frame argmin. The literal
-    * form embeds nCentroids·dims array literals in ONE expression tree
-    * and the driver's optimize/codegen pass over it stopped scaling:
-    * the 128-centroid fit over the 20× stress corpus sat >35 minutes
-    * in driver-side plan work (the "Truncated the string
-    * representation of a plan" warning was its last sign of life)
-    * where the frame form fits in seconds. Small models keep the
-    * literal path — it is the committed q48/q70/q163 plan shape and
-    * avoids a join entirely.
-    */
-  private[graft] val AssignLiteralMax = 32
-
   /** Adds (d2c, centroid) — the quantizer argmin with the distance
-    * kept — to a frame carrying (vec_id, mvec, ...): for small models
-    * ONE literal `least(...)` over per-centroid (dist2, id) structs —
-    * lexicographic struct ordering breaks equal distances to the
-    * smaller centroid id, each leaf a codegen'd native loop; for large
-    * models a broadcast
-    * centroid-frame `row_number` argmin (the oracle's `af` CTE
-    * formulation, identical (d2, centroid) lexicographic tie rule)
-    * above [[AssignLiteralMax]].
+    * kept — to a frame carrying (vec_id, mvec, ...): one codegen'd
+    * [[graft.functions.expressions.NearestCode]] pass with the model as
+    * its single codebook, equal distances to the smaller centroid id
+    * (the oracle's `af` CTE (d2, centroid) order). A pure map pass at
+    * every model size: no join, no window, no shuffle. The argmin pair
+    * lands as its own projection read by both fields, so the loop runs
+    * once per row (see [[withKcenterAssignment]]). `centroid` stays
+    * non-nullable — a null mvec gets centroid 0 and a null d2c: a
+    * nullable centroid lets the optimizer infer `isnotnull(centroid)`
+    * from every join on centroid and push it below this projection,
+    * which runs the kernel a second time per row.
     */
   private[graft] def withAssignment(e: DataFrame,
       cents: Array[Array[Long]]): DataFrame =
-    if (cents.length <= AssignLiteralMax) {
-      val scored = cents.zipWithIndex.map { case (cv, i) =>
-        struct(dist2(col("mvec"), lit(cv)), lit(i.toLong))
-      }
-      val best =
-        if (scored.length == 1) scored.head
-        else least(scored.toIndexedSeq: _*)
-      e.withColumn("d2c", best.getField("col1"))
-        .withColumn("centroid", best.getField("col2"))
-    } else {
-      val s = e.sparkSession
-      import s.implicits._
-      val cdf = cents.zipWithIndex.toSeq
-        .map { case (c, i) => (i.toLong, c.toSeq) }
-        .toDF("c_id", "cvec")
-      // the argmin window partitions by a PER-ROW id, not vec_id: the
-      // literal path maps rows 1:1, so this path must too — keyed on
-      // vec_id, a micro-batch carrying a repeated vec_id (at-least-once
-      // redelivery into the streaming twins, or an upstream id
-      // collision) would silently collapse to one row, a behavior
-      // change across the AssignLiteralMax boundary.
-      val w = Window.partitionBy("__rid")
-        .orderBy(col("d2c"), col("c_id"))
-      e.withColumn("__rid", monotonically_increasing_id())
-        .crossJoin(broadcast(cdf))
-        .withColumn("d2c", dist2(col("mvec"), col("cvec")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .withColumnRenamed("c_id", "centroid")
-        .drop("rn", "cvec", "__rid")
-    }
+    e.withColumn("nc", graft.functions.expressions.FloatVecExpressions
+        .nearestCode(col("mvec"), Array(cents), cents.head.length))
+      .withColumn("d2c", col("nc.d2").getItem(0))
+      .withColumn("centroid", coalesce(col("nc.code").getItem(0), lit(0L)))
+      .drop("nc")
 
   /** Fit-or-fetch the memoized deterministic quantizer over the
     * embeddings at `d`: returns the driver-held centroid model (row i =
@@ -602,9 +566,8 @@ object Similarity {
       threshold: Double = 0.4): DataFrame = {
     val (cents, nIters, _) = quantize(s, d, nCentroids)
     // both sides of the dominance self-join read this frame; without
-    // the checkpoint the assignment (a crossJoin+window shuffle above
-    // AssignLiteralMax, a wide least() expression below) evaluates
-    // twice per run — the streaming twin persists the same frame
+    // the checkpoint the embedding scan and the assignment pass
+    // evaluate twice per run — the streaming twin persists the same frame
     // (buildSemdedupIndex) for exactly this reason. eager=false: the
     // self-join's first materialization is the computing action.
     val base = assignWithDist(cents)(Tables.embeddings(s, d))
@@ -1170,9 +1133,9 @@ object Similarity {
     */
   private[graft] val PqM = 16
 
-  /** Codebook size per subspace. ≤ [[AssignLiteralMax]] so encode and
-    * LUT construction stay on the literal map-side path — no join, no
-    * shuffle anywhere in the encode.
+  /** Codebook size per subspace: 16 codes = 4 bits, so PqM codes fill
+    * 64 bits. Encode and LUT construction are map-side kernels over the
+    * literal codebooks — no join, no shuffle anywhere in the encode.
     */
   private[graft] val PqSubK = 16
 
@@ -1206,28 +1169,23 @@ object Similarity {
     * code = argmin_c d2(slice_m(mvec), codebook_m[c]) with ties to the
     * smaller code, d2_sub the argmin distance (the per-subspace
     * reconstruction error), n_iters the subspace fit's residual-stop
-    * count. Pure MAP pass — the codebooks ride INSIDE the codegen'd
-    * [[graft.functions.expressions.PqEncodeCodes]] /
-    * [[graft.functions.expressions.PqEncodeDists]] twins (r17; the
-    * original array-of-`least`-of-struct chain — PqM·PqSubK inlined
-    * dist2 comparisons in the explode's consume — blew Janino's
-    * method-size limit on every FULL-ROW action, so Verify and any
-    * index write ran the whole encode stage interpreted while count()
-    * quietly pruned the failure away; same failure q169's postings
-    * build hit and fixed in r13). Bit-identical codes and distances
-    * (exact integer d2, ties to the smaller code), and nothing
-    * shuffles.
+    * count. Pure MAP pass — codes and distances come from ONE codegen'd
+    * [[graft.functions.expressions.NearestCode]] call per row, the
+    * codebooks riding inside it (the original array-of-`least`-of-struct
+    * chain — PqM·PqSubK inlined dist2 comparisons in the explode's
+    * consume — blew Janino's method-size limit on every FULL-ROW
+    * action, so Verify and any index write ran the whole encode stage
+    * interpreted while count() quietly pruned the failure away).
+    * Nothing shuffles.
     */
   private[graft] def pqEncodeFrame(s: SparkSession, d: String): DataFrame = {
     val (books, nIters, subDim) = pqCodebooks(s, d)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), microVec(col("embedding")).as("mvec"))
-    e.select(col("vec_id"),
-        pqCodeArray(books, subDim).as("codes"),
-        graft.functions.expressions.FloatVecExpressions
-          .pqEncodeDists(col("mvec"), books, subDim).as("dists"))
-      .select(col("vec_id"), col("dists"),
-        posexplode(col("codes")).as(Seq("m", "code")))
+    e.select(col("vec_id"), graft.functions.expressions.FloatVecExpressions
+        .nearestCode(col("mvec"), books, subDim).as("pq"))
+      .select(col("vec_id"), col("pq.d2").as("dists"),
+        posexplode(col("pq.code")).as(Seq("m", "code")))
       .select(col("vec_id"), col("m").cast("long").as("subspace"),
         col("code"),
         element_at(col("dists"), col("m") + 1).as("d2_sub"),
@@ -1252,8 +1210,7 @@ object Similarity {
     *
     * Plan shape: per query the flattened LUT (PqM·PqSubK BIGINT
     * entries) is ONE map-side array column built from literal
-    * codebooks; per candidate the code array likewise (PqSubK ≤
-    * AssignLiteralMax keeps both on the literal path). Candidates come
+    * codebooks; per candidate the code array likewise. Candidates come
     * from the coarse equality join on centroid, the query LUT rides in
     * by a broadcast equality join (query-batch-sized), and the ADC
     * distance is the codegen'd [[graft.functions.expressions
@@ -1280,10 +1237,9 @@ object Similarity {
     val q = e.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("query_id"), col("mvec").as("qm"))
     // the compressed postings computed in-plan: ONE pass over the
-    // corpus yields both the coarse assignment (the literal argmin at
-    // the fixture's 8 centroids; the broadcast-frame argmin above
-    // AssignLiteralMax) and the PQ code array, all map-side — the
-    // batch formulation of the index the serving twin persists
+    // corpus yields both the coarse assignment and the PQ code array,
+    // all map-side — the batch formulation of the index the serving
+    // twin persists
     val postings = withAssignment(e, cents)
       .select(col("vec_id").as("cand_id"), col("centroid"),
         pqCodeArray(books, subDim).as("codes"))
@@ -1296,19 +1252,15 @@ object Similarity {
 
   /** Per-candidate PQ code array (subspace-major, one code per
     * subspace) as a MAP-SIDE column over a frame carrying `mvec` —
-    * the q168 per-subspace argmins flattened to one array&lt;long&gt;.
-    * The codebooks ride INSIDE the codegen'd [[graft.functions
-    * .expressions.PqEncodeCodes]] expression: no join, no shuffle
-    * anywhere in the encode. (The first form — an `array` of PqM
-    * `least`-of-struct chains — fell out of whole-stage codegen on
-    * method size and its interpreted eval was 5.6 s of q169's 7.4 s
-    * at 20×, single-tasked inside the postings broadcast build; the
-    * expression is the same exact-integer arithmetic and tie rule.)
+    * the q168 per-subspace argmins, the `code` field of
+    * [[graft.functions.expressions.NearestCode]] over the PqM
+    * codebooks. The codebooks ride INSIDE the expression: no join, no
+    * shuffle anywhere in the encode.
     */
   private[graft] def pqCodeArray(books: Array[Array[Array[Long]]],
       subDim: Int): org.apache.spark.sql.Column =
     graft.functions.expressions.FloatVecExpressions
-      .pqEncodeCodes(col("mvec"), books, subDim)
+      .nearestCode(col("mvec"), books, subDim).getField("code")
 
   /** Per-query flattened ADC lookup table (subspace-major: entry
     * m·PqSubK + c = d2(query_m, codebook_m[c])) as a map-side column
@@ -1916,51 +1868,33 @@ object Similarity {
   }
 
   /** Adds (d2c, rk) — the nearest-coreset-center argmin — to a frame
-    * carrying (…, mvec): ONE codegen'd tight loop over the flattened
-    * centers array ([[graft.functions.expressions.KcenterNearest]] —
-    * the PqEncodeCodes move), distance ties to the earlier-selected
-    * center, mirroring the oracle's (d2, rk) window. Pure map pass —
-    * the model rides inside the expression as a reference object. vs
-    * the composable `least()`-of-k-structs chain it replaced
-    * ([[withKcenterAssignmentLiteral]], kept as the spec's
-    * bit-identity twin), measured at 20× (KcenterProbe, NOTES r14):
-    * the q169-style interpreted demotion does NOT reproduce here —
-    * Spark's expression splitting keeps even the k=512 chain inside
-    * whole-stage codegen on a flat frame — but the loop is still
-    * 1.5-1.7× faster per pass, its per-row profile is flat in k
-    * (0.09 s at k=128 → 0.10 s at k=512 over 20k vectors), and the
-    * plan carries ONE reference object instead of a k·dims literal
-    * tree (the literal chain's analysis/codegen cost grows with k;
-    * its struct allocations per row grow with k). The `kn` argmin
-    * pair lands as its own projection: both field reads reference it,
-    * and CollapseProject keeps a non-cheap multi-use alias
-    * un-inlined, so the loop runs once per row.
+    * carrying (…, mvec): ONE codegen'd tight loop with the centers as
+    * the single codebook of [[graft.functions.expressions.NearestCode]]
+    * (rk = index + 1, centers in rank order), distance ties to the
+    * earlier-selected center, mirroring the oracle's (d2, rk) window.
+    * Pure map pass — the model rides inside the expression as a
+    * reference object. vs the composable `least()`-of-k-structs chain,
+    * measured at 20× (KcenterProbe, NOTES r14): the q169-style
+    * interpreted demotion does NOT reproduce here — Spark's expression
+    * splitting keeps even the k=512 chain inside whole-stage codegen on
+    * a flat frame — but the loop is still 1.5-1.7× faster per pass, its
+    * per-row profile is flat in k (0.09 s at k=128 → 0.10 s at k=512
+    * over 20k vectors), and the plan carries ONE reference object
+    * instead of a k·dims literal tree. The `kn` argmin pair lands as
+    * its own projection: both field reads reference it, and
+    * CollapseProject keeps a non-cheap multi-use alias un-inlined, so
+    * the loop runs once per row.
     */
   private def withKcenterAssignment(frame: DataFrame,
       centers: Vector[(Long, Long, Option[Long], Array[Long])])
-      : DataFrame =
+      : DataFrame = {
+    val model = centers.map(_._4).toArray
     frame
       .withColumn("kn", graft.functions.expressions.FloatVecExpressions
-        .kcenterNearest(col("mvec"), centers.map(_._4).toArray))
-      .withColumn("d2c", col("kn").getItem(0))
-      .withColumn("rk", col("kn").getItem(1))
+        .nearestCode(col("mvec"), Array(model), model.head.length))
+      .withColumn("d2c", col("kn.d2").getItem(0))
+      .withColumn("rk", col("kn.code").getItem(0) + 1L)
       .drop("kn")
-
-  /** The composable form of [[withKcenterAssignment]] — a literal
-    * `least(...)` over k (d2, rk) structs. Retained ONLY as the
-    * independent arithmetic twin for the spec's bit-identity pin (and
-    * as documentation of the shape the codegen'd expression replaced);
-    * production call sites use the expression.
-    */
-  private[graft] def withKcenterAssignmentLiteral(frame: DataFrame,
-      centers: Vector[(Long, Long, Option[Long], Array[Long])])
-      : DataFrame = {
-    val scored = centers.map { case (rk, _, _, mv) =>
-      struct(dist2(col("mvec"), lit(mv)), lit(rk))
-    }
-    val best = if (scored.length == 1) scored.head else least(scored: _*)
-    frame.withColumn("d2c", best.getField("col1"))
-      .withColumn("rk", best.getField("col2"))
   }
 
   /** CORESET ASSIGNMENT + COVERAGE-DRIFT flags (q173) — the consumer

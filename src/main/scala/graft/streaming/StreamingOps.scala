@@ -200,16 +200,12 @@ object StreamingOps {
       lateness: String = "10 minutes", retentionMillis: Long = 3600000L)
       : Dataset[CandPair] = {
     import docs.sparkSession.implicits._
-    import graft.functions.TextFunctions.{shingles3, tokens}
     val banded = docs
       .withWatermark("ts", lateness)
       .withColumn("hs", hsOf(col("text")))
       .filter(size(col("hs")) >= 1)
       .select(col("doc_id"), col("ts"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => array_min(transform(col("hs"),
-            h => h.substr(graft.functions.TextFunctions.bandOffsetCol(b),
-              lit(graft.functions.TextFunctions.BandHashWidth)))))))
+        posexplode(array((0 until bands).map(sigAt(col("hs"), _)): _*)))
       .toDF("doc_id", "ts", "band", "sig")
       .select(col("band"), col("sig"), col("doc_id"), col("ts"))
       .as[BandedDoc]

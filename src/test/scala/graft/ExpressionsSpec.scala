@@ -310,14 +310,19 @@ class ExpressionsSpec extends AnyFunSuite {
     val df = Seq(
       (Seq[String]("a", null, "b", null), Seq[String](null, "b", "c")),
       (Seq[String]("a", null), Seq[String]("a", "b")),
-      (Seq[String]("x"), Seq[String](null)))
+      (Seq[String]("x"), Seq[String](null)),
+      (Seq[String]("a", "b", "c"), Seq[String]("b", "c", "d")),
+      (Seq.empty[String], Seq[String]("x")),
+      (Seq[String]("a", "a", null), Seq[String](null, "a")))
       .toDF("a", "b")
-    val diff = df.select(
+    val got = df.select(
       graft.functions.expressions.TextExpressions
         .arrayIntersectCount(col("a"), col("b")).as("fast"),
       size(array_intersect(col("a"), col("b"))).as("spec"))
-      .filter(col("fast") =!= col("spec")).count()
-    assert(diff == 0L)
+      .as[(Int, Int)].collect().toSeq
+    assert(got.forall { case (fast, spec) => fast == spec }, got)
+    // hand-checked: a null element present on both sides counts once
+    assert(got.map(_._1) == Seq(2, 1, 0, 2, 0, 2))
   }
 
   test("TokenShingles edge cases: short arrays") {
@@ -421,80 +426,137 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
-  test("optimizer rule: size(array_intersect) on string arrays rewrites to array_intersect_count") {
-    import spark.implicits._
-    val df = Seq(
-      (Seq("a", "b", "c"), Seq("b", "c", "d")),
-      (Seq.empty[String], Seq("x")),
-      (Seq("a", "a", null), Seq(null, "a")))
-      .toDF("x", "y")
-      // repartition keeps ConvertToLocalRelation from folding the whole
-      // projection before the plan string can be inspected
-      .repartition(1)
-      .select(org.apache.spark.sql.functions
-        .expr("size(array_intersect(x, y)) AS n"))
-    // the rewrite fired...
-    assert(df.queryExecution.optimizedPlan.toString.contains("array_intersect_count"),
-      df.queryExecution.optimizedPlan.toString)
-    // ...and the answers are the builtin's (null element in both → 1)
-    assert(df.as[Int].collect().toSeq == Seq(2, 0, 2))
-    // non-string arrays stay on the builtin (the expression is
-    // string-typed; silently rewriting ints would be an analysis break)
-    val ints = Seq((Seq(1, 2), Seq(2, 3))).toDF("x", "y")
-      .repartition(1)
-      .select(org.apache.spark.sql.functions
-        .expr("size(array_intersect(x, y)) AS n"))
-    assert(!ints.queryExecution.optimizedPlan.toString.contains("array_intersect_count"))
-    assert(ints.as[Int].collect().toSeq == Seq(1))
-  }
+  private def microVecs = graft.core.Tables.embeddings(spark, TestSpark.sf)
+    .select(col("vec_id"),
+      graft.ops.Similarity.microVec(col("embedding")).as("mvec"))
 
-  test("KcenterNearest ≡ least()-of-(d2, rk)-structs chain at k=6 and k=64 on fixture embeddings") {
-    import graft.ops.Similarity
-    val e = graft.core.Tables.embeddings(spark, TestSpark.sf)
-      .select(col("vec_id"), Similarity.microVec(col("embedding")).as("mvec"))
-    for (k <- Seq(6, 64)) {
-      // deterministic center list straight off the corpus (first k by
-      // vec_id) — duplicate vectors in the dup-heavy fixture exercise
-      // the tie-to-earlier-rank rule at both sizes
-      val centers = e.orderBy("vec_id").limit(k)
-        .collect().map(_.getSeq[Long](1).toArray)
-      val scored = centers.zipWithIndex.map { case (mv, i) =>
-        struct(Similarity.dist2(col("mvec"), lit(mv)), lit(i + 1L))
+  test("NearestCode ≡ per-subspace least()-of-(d2, idx) chains: PQ codebooks, and one codebook at k=6 and k=64") {
+    import graft.functions.expressions.FloatVecExpressions.nearestCode
+    val e = microVecs
+    // every codebook ends in a copy of its first codeword, so each row
+    // nearest to codeword 0 ties with the copy: the tie rule is exercised
+    val books = graft.ops.Similarity.pqCodebooks(spark, TestSpark.sf)._1
+      .map(b => b :+ b.head)
+    val subDim = graft.ops.Similarity.pqCodebooks(spark, TestSpark.sf)._3
+    // one codebook straight off the corpus: the first k − 1 vectors by
+    // vec_id, then a copy of the first
+    val models = Seq(6, 64).map { k =>
+      val first = e.orderBy("vec_id").limit(k - 1).collect()
+        .map(_.getSeq[Long](1).toArray)
+      s"k=$k" -> (first :+ first.head)
+    }
+    bothEvalModes { mode =>
+      for (m <- books.indices) {
+        val spec = NearestTwins.leastChain(col("mvec"), books(m), m * subDim, Some(subDim))
+        val diff = e.select(nearestCode(col("mvec"), books, subDim).as("nc"),
+            spec.as("spec"))
+          .filter(!(col("nc.code")(m) <=> col("spec.col2")) ||
+            !(col("nc.d2")(m) <=> col("spec.col1")))
+          .count()
+        assert(diff == 0L, s"$mode: PQ subspace $m diverges from least() chain")
+        assert(e.filter(nearestCode(col("mvec"), books, subDim)("code")(m) === 0L)
+          .count() > 0L, s"$mode: no tie in PQ subspace $m")
       }
-      val specBest = if (scored.length == 1) scored.head
-        else least(scored.toIndexedSeq: _*)
-      val diff = e.select(
-          graft.functions.expressions.FloatVecExpressions
-            .kcenterNearest(col("mvec"), centers).as("kn"),
-          specBest.getField("col1").as("d2_spec"),
-          specBest.getField("col2").as("rk_spec"))
-        .filter(col("kn").getItem(0) =!= col("d2_spec") ||
-          col("kn").getItem(1) =!= col("rk_spec"))
-        .count()
-      assert(diff == 0L, s"k=$k: codegen argmin diverges from least() chain")
+      for ((label, model) <- models) {
+        val spec = NearestTwins.leastChain(col("mvec"), model)
+        val cmp = e.select(
+            nearestCode(col("mvec"), Array(model), model.head.length).as("nc"),
+            spec.as("spec"))
+        assert(cmp.filter(!(col("nc.code")(0) <=> col("spec.col2")) ||
+          !(col("nc.d2")(0) <=> col("spec.col1"))).count() == 0L,
+          s"$mode $label: kernel diverges from least() chain")
+        assert(cmp.filter(size(col("nc.code")) =!= 1).count() == 0L)
+        assert(cmp.filter(col("nc.code")(0) === 0L).count() > 0L,
+          s"$mode $label: no tie")
+      }
     }
   }
 
-  test("KcenterNearest hand computation: tie to earlier rank, length-mismatch prefix fold, null in → null out") {
+  test("NearestCode hand computation: ties to the smaller index, prefix fold, null in → null out") {
     import spark.implicits._
-    // centers: rk1 = origin, rk2 = (3,4), rk3 = duplicate origin
-    val centers = Array(Array(0L, 0L), Array(3L, 4L), Array(0L, 0L))
-    val got = Seq(
-        Tuple1(Array(0L, 0L)),   // tie between rk1 and rk3 → rk1
-        Tuple1(Array(3L, 4L)),   // exact hit on rk2
-        Tuple1(Array(3L)))       // shorter vector: prefix fold (d2 to rk2 = 0 over 1 dim)
+    import graft.functions.expressions.FloatVecExpressions.nearestCode
+    // one codebook: 0 = origin, 1 = (3,4), 2 = duplicate origin
+    val one = Array(Array(Array(0L, 0L), Array(3L, 4L), Array(0L, 0L)))
+    // two codebooks over 2-wide slices
+    val two = Array(
+      Array(Array(0L, 0L), Array(1L, 1L)),
+      Array(Array(5L, 5L), Array(2L, 2L)))
+    val vecs = Seq(
+        Some(Array(0L, 0L)),       // one: tie 0 vs 2 → 0
+        Some(Array(3L, 4L)),       // one: exact hit on 1
+        Some(Array(3L)),           // one: prefix fold, (3) vs (3,4) → 1, d2 0
+        Some(Array(1L, 1L, 2L, 2L)), // two: exact hits 1, 1
+        Some(Array(1L, 0L, 3L)),   // two: slice 0 ties 0 vs 1 at 1; slice 1 folds to (3): 4 vs 1
+        None)
       .toDF("mvec")
-      .select(graft.functions.expressions.FloatVecExpressions
-        .kcenterNearest(col("mvec"), centers).as("kn")).collect()
-      .map(r => r.getSeq[Long](0).toList)
-    assert(got(0) == List(0L, 1L), s"tie rule: ${got(0)}")
-    assert(got(1) == List(0L, 2L), s"exact hit: ${got(1)}")
-    assert(got(2) == List(0L, 2L), s"prefix fold: ${got(2)}")
-    val nul = Seq(Tuple1(Option.empty[Array[Long]])).toDF("mvec")
-      .select(graft.functions.expressions.FloatVecExpressions
-        .kcenterNearest(col("mvec"), centers).as("kn"))
-      .collect()
-    assert(nul.head.isNullAt(0), "null vector must give null assignment")
+    bothEvalModes { mode =>
+      def run(books: Array[Array[Array[Long]]])
+          : Seq[Option[(Seq[Long], Seq[Long])]] =
+        vecs.select(nearestCode(col("mvec"), books, 2)).collect().toSeq
+          .map(r => Option(r.getStruct(0))
+            .map(nc => (nc.getSeq[Long](0), nc.getSeq[Long](1))))
+      val g1 = run(one)
+      assert(g1.take(3) == Seq(
+        Some((Seq(0L), Seq(0L))), Some((Seq(1L), Seq(0L))),
+        Some((Seq(1L), Seq(0L)))), mode)
+      val g2 = run(two)
+      assert(g2.slice(3, 5) == Seq(
+        Some((Seq(1L, 1L), Seq(0L, 0L))), Some((Seq(0L, 1L), Seq(1L, 1L)))), mode)
+      // a slice past the vector's end reads nothing: every codeword
+      // sits at distance 0, so the first one wins
+      assert(g2(0) == Some((Seq(0L, 0L), Seq(0L, 0L))), mode)
+      assert(g1(5).isEmpty && g2(5).isEmpty, s"$mode: null vector must give null")
+    }
+  }
+
+  test("PqLutFlat ≡ array of per-(subspace, codeword) dist2 over slices on fixture vectors") {
+    import graft.functions.expressions.FloatVecExpressions.pqLutFlat
+    val (books, _, subDim) = graft.ops.Similarity.pqCodebooks(spark, TestSpark.sf)
+    val q = microVecs.filter(col("vec_id") % 5 === 0).select(col("mvec").as("qm"))
+    val spec = array((for (m <- books.indices; cw <- books(m)) yield
+      graft.ops.Similarity.dist2(slice(col("qm"), m * subDim + 1, subDim),
+        lit(cw))): _*)
+    // the built-ins form is evaluated once, under the session defaults
+    val want = q.select(col("qm"), spec.as("spec")).collect()
+      .map(r => r.getSeq[Long](0) -> r.getSeq[Long](1)).toMap
+    assert(want.size > 10 && want.values.forall(_.length == books.length * books(0).length))
+    bothEvalModes { mode =>
+      val got = q.select(col("qm"), pqLutFlat(col("qm"), books, subDim).as("lut"))
+        .collect().map(r => r.getSeq[Long](0) -> r.getSeq[Long](1)).toMap
+      assert(got == want, mode)
+    }
+    import spark.implicits._
+    val nul = Seq(Tuple1(Option.empty[Array[Long]])).toDF("qm")
+      .select(pqLutFlat(col("qm"), books, subDim)).collect()
+    assert(nul.head.isNullAt(0))
+  }
+
+  test("AdcLookupSum ≡ aggregate over element_at(lut, m·k + code) on fixture LUTs and codes") {
+    import spark.implicits._
+    import graft.functions.expressions.FloatVecExpressions.{adcLookupSum, nearestCode, pqLutFlat}
+    val (books, _, subDim) = graft.ops.Similarity.pqCodebooks(spark, TestSpark.sf)
+    val k = books(0).length
+    val e = microVecs
+    val pairs = e.filter(col("vec_id") % 25 === 0)
+      .select(pqLutFlat(col("mvec"), books, subDim).as("lut"))
+      .crossJoin(e.filter(col("vec_id") % 7 === 0)
+        .select(nearestCode(col("mvec"), books, subDim)("code").as("codes")))
+    val spec = aggregate(transform(col("codes"),
+        (c, m) => element_at(col("lut"), (m * k + c + 1).cast("int"))),
+      lit(0L), (acc, x) => acc + x)
+    bothEvalModes { mode =>
+      val cmp = pairs.select(adcLookupSum(col("lut"), col("codes"), k).as("fast"),
+        spec.as("spec"))
+      assert(cmp.count() > 100L, mode)
+      assert(cmp.filter(!(col("fast") <=> col("spec"))).count() == 0L, mode)
+      // hand case: lut = [10, 11 | 20, 21] at k = 2, codes (1, 0) → 11 + 20
+      val hand = Seq((Option(Array(10L, 11L, 20L, 21L)), Option(Array(1L, 0L))),
+          (None, Option(Array(0L, 0L))))
+        .toDF("lut", "codes")
+        .select(adcLookupSum(col("lut"), col("codes"), 2))
+        .as[Option[Long]].collect().toSeq
+      assert(hand == Seq(Some(31L), None), mode)
+    }
   }
 
   /** Runs `body` under both evaluation paths of a custom expression:

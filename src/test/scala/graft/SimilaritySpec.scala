@@ -520,6 +520,25 @@ class SimilaritySpec extends AnyFunSuite {
       "a cluster lost all members — dominance order violated")
   }
 
+  test("IVF assignment at nCentroids = 64: one map pass, row-for-row equal to the window argmin") {
+    val e = graft.core.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), Similarity.microVec(col("embedding")).as("mvec"))
+    val (cents, _, _) = Similarity.quantize(spark, sf, 64)
+    assert(cents.length == 64)
+    val got = Similarity.withAssignment(e, cents)
+    val plan = got.queryExecution.executedPlan.toString
+    assert(!plan.contains("Window") && !plan.contains("NestedLoopJoin") &&
+      !plan.contains("Cartesian") && !plan.contains("Exchange"), plan)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "centroid", "d2c").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    val want = rows(NearestTwins.windowArgmin(e, cents))
+    assert(want.length == e.count())
+    assert(rows(got) == want)
+    // the fit spreads the corpus: many clusters are used
+    assert(want.map(_._2).distinct.size > 32)
+  }
+
   private def jvmMicro(emb: Array[Float]): Array[Long] =
     emb.map(v => math.floor(v.toDouble * 1e6 + 0.5).toLong)
 
