@@ -1,5 +1,8 @@
 package graft.core
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Cheap content fingerprint for a parquet table under a fixture dir:
@@ -26,16 +29,19 @@ import org.apache.spark.sql.SparkSession
 object Fingerprint {
 
   def of(spark: SparkSession, dir: String, table: String): String = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+    val path = new Path(s"$dir/$table.parquet")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (fs.exists(path)) {
-      val it = fs.listFiles(path, true)
-      while (it.hasNext) {
-        val st = it.next()
-        entries += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
-      }
-    }
+    // getFileStatus/listStatus, not listFiles: its LocatedFileStatus
+    // reads each file's permission, which the local filesystem without
+    // libhadoop gets by forking `ls -ld` (Spark's HadoopFSUtils avoids
+    // it the same way). The entries are those of listFiles(path, true).
+    def walk(st: FileStatus): Unit =
+      if (st.isFile) entries += s"${st.getPath}:${st.getLen}:${st.getModificationTime}"
+      else fs.listStatus(st.getPath).foreach(walk)
+    val root = try Some(fs.getFileStatus(path))
+      catch { case _: FileNotFoundException => None }
+    root.foreach(walk)
     java.util.UUID
       .nameUUIDFromBytes(entries.sorted.mkString("|").getBytes("UTF-8"))
       .toString

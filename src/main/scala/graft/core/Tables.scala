@@ -2,14 +2,15 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated fixture tables (TESTDATA.md).
   *
   * Each table is a single parquet file under `<dir>/<name>.parquet`.
-  * Schemas are read from the parquet footer (the fixtures are
-  * driver-controlled and stable); filters and column pruning push down to
-  * the scan via the parquet data source (verify with
+  * Schemas are read from the parquet footer once per session and table
+  * [[Fingerprint]], so later reads plan without Spark's schema-inference
+  * job. Filters and column pruning push
+  * down to the scan via the parquet data source (verify with
   * `.explain("formatted")` → `PushedFilters`, `ReadSchema`).
   */
 object Tables {
@@ -17,8 +18,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas: Map[String, SessionMemo[StructType]] =
+    all.map(t => t -> SessionMemo[StructType](s"schema.$t", t)(_ => ())).toMap
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemas(name)(spark, dir)(spark.read.parquet(path).schema)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

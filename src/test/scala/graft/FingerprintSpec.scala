@@ -50,6 +50,27 @@ class FingerprintSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
+  /** The fingerprint as it was taken with `listFiles(path, true)`. */
+  private def listFilesFingerprint(dir: String, table: String): String = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(path, true)
+    val entries = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}").toSeq
+    java.util.UUID.nameUUIDFromBytes(entries.sorted.mkString("|").getBytes("UTF-8")).toString
+  }
+
+  test("fingerprint is byte-identical to the listFiles-derived one, single-file and directory tables") {
+    assert(Fingerprint.of(spark, TestSpark.sf, "documents") ==
+      listFilesFingerprint(TestSpark.sf, "documents"))
+    // a directory table as Spark writes it: part files, .crc files, _SUCCESS
+    // and a partition subdirectory
+    val dir = Files.createTempDirectory("fp_spec_dir").toString
+    spark.range(50).selectExpr("id", "id % 2 AS k").repartition(2)
+      .write.partitionBy("k").parquet(s"$dir/docs.parquet")
+    assert(Fingerprint.of(spark, dir, "docs") == listFilesFingerprint(dir, "docs"))
+  }
+
   test("distinct missing local dirs share the empty fingerprint (benign: reads fail first)") {
     // Missing dir ⇒ empty listing ⇒ the well-known empty fingerprint.
     // Benign because any read of the same dir throws before a memo
